@@ -46,8 +46,7 @@ def digest(matches) -> str:
 
 def spark_matches(out, names) -> list[tuple]:
     """Collect a match DataFrame as canonical tuples (outside any timed
-    region).  Sentinel rows of truncated keys (``match_seq = -1``) are
-    kept, so they show up as mismatches."""
+    region)."""
     from pyspark.sql import functions as F
 
     pdf = out.select(

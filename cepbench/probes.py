@@ -18,12 +18,13 @@ def nproc() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def host_record(spark) -> dict:
+def host_record(spark, load1: float) -> dict:
+    """The host and Spark set-up of a run; ``load1`` is the 1-minute
+    load average when the run started."""
     import pandas
     import pyarrow
     import pyspark
 
-    load1 = os.getloadavg()[0]
     conf = spark.sparkContext.getConf().getAll()
     keep = ("spark.master", "spark.driver.memory", "spark.sql.shuffle.partitions",
             "spark.sql.adaptive.enabled", "spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -75,12 +76,6 @@ def last_execution_id(spark) -> int:
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
     return max(execs.apply(i).executionId() for i in range(execs.size()))
-
-
-def execution_ids(spark) -> list[int]:
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    return sorted(execs.apply(i).executionId() for i in range(execs.size()))
 
 
 def plan_metrics(spark, execution_id: int) -> list[tuple[str, dict]]:
@@ -181,6 +176,12 @@ def stream_layer(progress: list) -> dict:
         ),
         "stream.state_rows": med([o.numRowsTotal for o in ops]),
         "stream.keys_updated": med([o.numRowsUpdated for o in ops]),
+        "stream.microbatch_p50_ms": med([p.durationMs.get("triggerExecution", 0) for p in progress]),
+        "stream.events_per_s": (
+            1e3 * sum(p.numInputRows for p in progress)
+            / sum(p.durationMs.get("triggerExecution", 0) for p in progress)
+            if progress else 0.0
+        ),
     }
 
 

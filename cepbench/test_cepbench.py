@@ -2,8 +2,9 @@
 
     python3 -m pytest cepbench -q
 
-The smoke tests start one local Spark session and run every workload
-at a tiny size, in both the untraced and the traced mode.
+The smoke tests run every workload at a tiny size, in both the
+untraced and the traced mode; each run starts and stops its own local
+Spark session.
 """
 
 import json
@@ -89,28 +90,41 @@ def test_parse_metric():
         ["total (min, med, max (stageId: taskId))\n", ""]))["total"] == 60.0
 
 
-@pytest.fixture(scope="module")
-def spark(tmp_path_factory):
+@pytest.fixture
+def restore_env():
+    """``run`` sets the Spark scratch and JVM variables in the
+    environment; put them back for the tests that follow."""
     saved = dict(os.environ)
-    session = run.start_session(str(tmp_path_factory.mktemp("cepbench")))
-    yield session
-    run.stop_session(session)
+    yield
     os.environ.clear()
     os.environ.update(saved)
 
 
 @pytest.mark.parametrize("workload", sorted(WORKLOADS))
-def test_smoke(spark, tmp_path, workload):
+def test_smoke(restore_env, tmp_path, workload):
     with open(os.path.join(run.ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     for trace, listed in ((False, "end_to_end"), (True, "per_layer")):
         work = tmp_path / f"trace{int(trace)}"
         work.mkdir()
-        result = run.run(spark, workload, seed=1, seconds=0, trace=trace,
-                         work=str(work), scale=TINY)
+        result = run.run(workload, seed=1, seconds=0, trace=trace,
+                         work=str(work), scale=TINY, setups=2)
         assert result["correct"], result["info"]
         assert result["failed"] == 0 and result["attempted"] > 0
         assert set(result["metrics"]) == {m["name"] for m in spec[listed]}
+        assert len(result["info"]["setups_s"]) == 2
         if trace:
             dispatched = result["metrics"]["fastpath.dispatched"]["value"]
             assert dispatched == (1.0 if WORKLOADS[workload].fastpath else 0.0)
+
+
+def test_new_session_after_run(restore_env, tmp_path):
+    """A run stops its JVM; a later session in the same process must
+    launch a new one rather than reuse the dead gateway."""
+    run.run("kernel_long_keys", seed=1, seconds=0, trace=False,
+            work=str(tmp_path), scale=TINY, setups=1)
+    spark = run.start_session(str(tmp_path / "after"))
+    try:
+        assert spark.range(3).count() == 3
+    finally:
+        run.stop_session(spark)
