@@ -20,6 +20,7 @@ last consuming edge was a TAKE (reference DST.py:294-300).
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Callable, Mapping, Optional
 
 __all__ = ["Automaton", "Edge", "TAKE", "IGNORE", "EPS", "ANY_TYPE"]
@@ -91,14 +92,62 @@ class Automaton:
         return [s for s in states if self.outputs[s] is not None]
 
     # -- runtime accessors --------------------------------------------
-    def out_edges(self, state: int) -> list[Edge]:
-        return self.edges[state]
-
-    def is_final(self, state: int) -> bool:
-        return self.outputs[state] is not None
-
     def n_states(self) -> int:
         return len(self.edges)
+
+    # Engine tables: functions of the finished automaton, built on first
+    # use and cached, so the MatchEngine of every key only reads them.
+
+    @cached_property
+    def spawn_types(self) -> Optional[frozenset]:
+        """Event types a fresh run can consume via a TAKE/IGNORE edge in
+        the start's ε-closure; for any other type the spawn contributes
+        nothing and the engine skips it.  None = wildcard (always spawn)."""
+        seen = {self.start}
+        stack = [self.start]
+        types: set = set()
+        while stack:
+            s = stack.pop()
+            for e in self.edges[s]:
+                if e.kind == EPS:
+                    if e.dst not in seen:
+                        seen.add(e.dst)
+                        stack.append(e.dst)
+                elif e.ev_type is None or e.ev_type == ANY_TYPE:
+                    return None
+                else:
+                    types.add(e.ev_type)
+        return frozenset(types)
+
+    @cached_property
+    def dig_table(self) -> list:
+        """Per state: None or (accepting_state, eps_seen_mask), what
+        ``MatchEngine._dig_accept``'s dynamic ε-closure search returns
+        for a just-consumed configuration.  A TAKE resets eps_seen to
+        {state}, so the outcome depends on the state alone."""
+        edges = self.edges
+        outputs = self.outputs
+
+        def dig(start: int):
+            visited = {start}
+
+            def rec(state: int, mask: int):
+                visited.add(state)
+                for e in edges[state]:
+                    dst = e.dst
+                    if dst in visited or e.kind != EPS or mask & (1 << dst):
+                        continue
+                    nmask = mask | (1 << dst)
+                    if outputs[dst] is not None:
+                        return (dst, nmask)
+                    found = rec(dst, nmask)
+                    if found is not None:
+                        return found
+                return None
+
+            return rec(start, 1 << start)
+
+        return [dig(s) for s in range(len(edges))]
 
     def dump(self) -> str:  # pragma: no cover - debug aid
         lines = [f"start={self.start} env={self.init_env} names={self.names}"]

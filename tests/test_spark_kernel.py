@@ -345,7 +345,7 @@ def test_records_matches_to_dict_records():
 
     import pandas as pd
 
-    from reflinkcep_spark.operators.cep import records
+    from reflinkcep_spark.cep.keyed import records
 
     pdf = pd.DataFrame(
         {
@@ -388,7 +388,7 @@ def test_frame_matches_list_of_dicts_constructor():
     case (object-dtype empty, the list-of-dicts constructor's result)."""
     import pandas as pd
 
-    from reflinkcep_spark.operators.cep import frame
+    from reflinkcep_spark.cep.keyed import frame
 
     cols = ["user_id", "match_seq", "start_ord", "end_ord", "a", "b"]
     rows = [

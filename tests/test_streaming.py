@@ -344,7 +344,7 @@ def test_load_engine_coerces_legacy_eps_tuple():
 
     from reflinkcep_spark.cep.compiler import compile_query
     from reflinkcep_spark.cep.runtime import MatchEngine
-    from reflinkcep_spark.streaming.cep import _load_engine, _save_engine
+    from reflinkcep_spark.cep.keyed import _load_engine, _save_engine
 
     q = Query.from_yaml(Q_SEQ)
     aut = compile_query(q)

@@ -20,11 +20,8 @@ import pytest
 
 from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern
-from reflinkcep_spark.streaming.cep import (
-    _load_engine,
-    _save_engine,
-    match_pattern_stream,
-)
+from reflinkcep_spark.cep.keyed import _load_engine, _save_engine
+from reflinkcep_spark.streaming.cep import match_pattern_stream
 
 SCHEMA = "user_id int, id int, stamp long, event_type string, value int"
 
