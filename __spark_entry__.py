@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def _shipped(fn: Callable[[SparkSession, str], DataFrame]):
     """The harness calls us with ITS SparkSession; make sure the
     package is importable on that session's Python workers before any
-    kernel (applyInPandas) plan executes."""
+    kernel (mapInPandas) plan executes."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from reflinkcep_spark.session import ensure_package_shipped

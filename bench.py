@@ -145,7 +145,7 @@ def _setup_bucketed_events(spark, sf_dir: str) -> None:
 def _cep_spending_burst_bucketed(spark, sf_dir):
     """cep_spending_burst's exact query + projection, reading the
     pre-bucketed event log with pre_partitioned=True: Scan → Sort →
-    FlatMapGroupsInPandas, zero exchanges (tests/test_bucketed_sink.py
+    Window → MapInPandas, zero exchanges (tests/test_bucketed_sink.py
     asserts the plan; this entry measures it)."""
     from reflinkcep_spark.cep.query import Query
     from reflinkcep_spark.operators import match_pattern

@@ -21,7 +21,7 @@ last consuming edge was a TAKE (reference DST.py:294-300).
 from __future__ import annotations
 
 from functools import cached_property
-from typing import Callable, Mapping, Optional
+from typing import Callable, Optional
 
 __all__ = ["Automaton", "Edge", "TAKE", "IGNORE", "EPS", "ANY_TYPE"]
 
@@ -32,7 +32,9 @@ _TRUE = lambda attrs, env: True  # noqa: E731
 
 
 class Edge:
-    """One transition.  ``pred`` is ``fn(attrs, env) -> truthy``."""
+    """One transition.  ``pred`` is ``fn(attrs, env) -> truthy``; an
+    edge applies to an event when its type guard admits the event's
+    type (see :attr:`Automaton.edges_by_type`) and ``pred`` holds."""
 
     __slots__ = ("kind", "ev_type", "pred", "dst", "sink", "update")
 
@@ -51,17 +53,6 @@ class Edge:
         self.dst = dst
         self.sink = sink  # capture name (TAKE only)
         self.update = update  # fn(attrs, env) -> new env (TAKE only)
-
-    def matches(self, ev_type: Optional[str], attrs: Mapping, env: Mapping) -> bool:
-        """Type-guard + predicate (reference Predicte.evaluate, DST.py:116-126)."""
-        if (
-            ev_type is not None
-            and self.ev_type is not None
-            and self.ev_type != ANY_TYPE
-            and self.ev_type != ev_type
-        ):
-            return False
-        return bool(self.pred(attrs, env))
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         k = ("take", "ignore", "eps")[self.kind]
@@ -118,6 +109,23 @@ class Automaton:
                 else:
                     types.add(e.ev_type)
         return frozenset(types)
+
+    @cached_property
+    def edges_by_type(self) -> list:
+        """Per state: ``({event_type: edges}, wildcard_edges)``, the
+        candidate edges for an event of that type in declaration order
+        — EPS, wildcard (``None``/``ANY_TYPE``) and same-type edges;
+        ``wildcard_edges`` serves types no edge names.  The key ``None``
+        (an untyped event, which every type guard admits) holds all of
+        the state's edges."""
+        table = []
+        for es in self.edges:
+            wild = [e for e in es if e.ev_type is None or e.ev_type == ANY_TYPE]
+            by_type = {None: es}
+            for t in {e.ev_type for e in es} - {None, ANY_TYPE}:
+                by_type[t] = [e for e in es if e in wild or e.ev_type == t]
+            table.append((by_type, wild))
+        return table
 
     @cached_property
     def dig_table(self) -> list:

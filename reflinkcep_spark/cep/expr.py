@@ -7,8 +7,8 @@ these with a builtins-stripped ``eval``; genjava.py:371-379 rewrites
 ``and/or/not`` into Java).  We do the same two things, Spark-first:
 
 * ``compile_predicate`` / ``compile_update`` — validated, sandboxed,
-  pre-compiled Python evaluators for the NFA kernel (the slow path that
-  runs inside ``applyInPandas``).
+  pre-compiled Python evaluators for the NFA kernels (the slow path that
+  runs inside ``mapInPandas`` / ``applyInPandasWithState``).
 * ``to_sql`` — translate the same expression into an ANSI-SQL boolean
   expression so qualifying patterns can run entirely inside Catalyst
   (``F.expr``) and inside the DuckDB oracle.

@@ -49,15 +49,12 @@ def records(pdf: pd.DataFrame, cols: Sequence[str]) -> list[dict]:
     return [dict(zip(cols, row)) for row in zip(*columns)]
 
 
-def frame(
-    rows: list[dict], cols: Sequence[str], empty: pd.DataFrame | None = None
-) -> pd.DataFrame:
+def frame(rows: list[dict], cols: Sequence[str]) -> pd.DataFrame:
     """``pd.DataFrame(rows, columns=cols)`` without list-of-dicts
     inference: every row carries every column, so a dict-of-lists frame
-    is identical (pinned in tests/test_spark_kernel.py).  ``empty`` is
-    the caller's cached zero-row frame — most keys emit no match."""
+    is identical (pinned in tests/test_spark_kernel.py)."""
     if not rows:
-        return empty if empty is not None else pd.DataFrame(columns=list(cols))
+        return pd.DataFrame(columns=list(cols))
     return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
 
 
@@ -353,10 +350,13 @@ class KeyedPlan:
         # property the plan cannot guarantee, so it is checked per key.
         self.check_stamps = self.within_col is not None and self.within is not None
 
-    def events(self, pdf: pd.DataFrame) -> list[tuple]:
-        """One key's rows as ``(event_type, record)`` in ``order_by``
-        order — the input :meth:`KeyMatcher.feed` takes."""
-        pdf = pdf.sort_values(self.order_by, kind="mergesort")
+    def events(self, pdf: pd.DataFrame, ordered: bool = False) -> list[tuple]:
+        """Rows as ``(event_type, record)`` in ``order_by`` order — the
+        input :meth:`KeyMatcher.feed` takes.  ``ordered``: ``pdf`` is
+        already in that order (the batch kernel's input is sorted by
+        Spark), so it is not sorted again."""
+        if not ordered:
+            pdf = pdf.sort_values(self.order_by, kind="mergesort")
         recs = records(pdf, self.attr_cols)
         if self.type_col is not None:
             return list(zip(pdf[self.type_col].tolist(), recs))

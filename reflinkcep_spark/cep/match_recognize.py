@@ -7,7 +7,7 @@ heavily) and translate it onto the existing pattern AST + Spark kernel
 at all (patterns enter via YAML only), so this is strictly
 beyond-reference; the translation targets are the same audited
 primitives every other CEP query uses (``Query`` AST →
-``operators.match_pattern`` grouped kernel, ONE exchange on the
+``operators.match_pattern`` batch kernel, ONE exchange on the
 partition key).
 
 Supported subset
@@ -165,8 +165,8 @@ Supported subset
 
 Scale shape: identical to every kernel CEP query — project to the
 referenced columns, ONE exchange on the partition key, Arrow-batched
-``applyInPandas``; the measures projection is plain column algebra on
-the kernel's output.
+``mapInPandas`` over each sorted partition; the measures projection is
+plain column algebra on the kernel's output.
 """
 
 from __future__ import annotations
@@ -1325,12 +1325,13 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
 def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     """Materialize PREV/NEXT physical-navigation columns as lag/lead
     window columns BEFORE the kernel.  Plan shape: the window needs the
-    same hash(partition key) distribution the kernel's grouped map
-    does, so repartition ONCE here and assert ``pre_partitioned`` to
-    the kernel — Exchange → Sort → Window → FlatMapGroupsInPandas, one
-    exchange total, exactly the no-navigation plan's count.  A caller
-    that already asserted ``pre_partitioned=True`` (bucketed log) keeps
-    its zero-exchange plan: the window reuses the bucket clustering."""
+    same hash(partition key) distribution and (key, order) sort as the
+    kernel's own row_number() window, so repartition ONCE here and
+    assert ``pre_partitioned`` to the kernel — Exchange → Sort → Window
+    → MapInPandas, one exchange and one sort total, exactly the
+    no-navigation plan's count.  A caller that already asserted
+    ``pre_partitioned=True`` (bucketed log) keeps its zero-exchange
+    plan: the window reuses the bucket clustering."""
     nav = t.get("nav_columns") or {}
     if not nav:
         return df, kernel_kwargs
@@ -1344,14 +1345,17 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
         )
         df = df.repartition(n_parts, t["partition_by"])
         kernel_kwargs["pre_partitioned"] = True
-    w = Window.partitionBy(t["partition_by"]).orderBy(t["order_by"])
+    # The kernel's order (NULLs last), so both windows share one sort.
+    w = Window.partitionBy(t["partition_by"]).orderBy(
+        F.col(t["order_by"]).asc_nulls_last()
+    )
     # Tied order values would make PREV/NEXT adjacency nondeterministic:
-    # the window sort breaks ties arbitrarily while the kernel's stable
-    # mergesort keeps arrival order, so "the previous row" could differ
-    # between the two — and between runs.  SQL:2016 leaves tied ORDER BY
-    # implementation-dependent; we raise instead (in-plan rail folded
-    # into the lag evaluation: duplicates sort adjacent, one comparison
-    # per row inside the window projection already being computed).
+    # the window sort (which also feeds the kernel) breaks ties
+    # arbitrarily, so "the previous row" could differ between runs.
+    # SQL:2016 leaves tied ORDER BY implementation-dependent; we raise
+    # instead (in-plan rail folded into the lag evaluation: duplicates
+    # sort adjacent, one comparison per row inside the window
+    # projection already being computed).
     dup = F.lag(F.col(t["order_by"]), 1).over(w) == F.col(t["order_by"])
     rail = F.raise_error(
         F.lit(

@@ -127,6 +127,7 @@ class MatchEngine:
         self.within = within
         # per-automaton tables (cep/automaton.py), built once and shared
         self._spawn_types = automaton.spawn_types
+        self._edges_by_type = automaton.edges_by_type
         self._dig_table = automaton.dig_table
         self.reset()
 
@@ -139,7 +140,7 @@ class MatchEngine:
         self, ev_type: Optional[str], attrs: Mapping, stamp=None
     ) -> list[Match]:
         aut = self.aut
-        edges = aut.edges
+        edges_by_type = self._edges_by_type
         outputs = aut.outputs
         pos = self.pos
         self.pos = pos + 1
@@ -170,7 +171,8 @@ class MatchEngine:
             k, cfg = worklist[i]
             i += 1
             env = cfg.env
-            for e in edges[cfg.state]:
+            by_type, wild = edges_by_type[cfg.state]
+            for e in by_type.get(ev_type, wild):
                 kind = e.kind
                 if kind == EPS:
                     dst = e.dst
@@ -182,7 +184,7 @@ class MatchEngine:
                     )
                     worklist.insert(i, (k, nc))
                 else:
-                    if not e.matches(ev_type, attrs, env):
+                    if not e.pred(attrs, env):
                         continue
                     if kind == TAKE:
                         new_env = e.update(attrs, env) if e.update else env

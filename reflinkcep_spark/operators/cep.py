@@ -2,18 +2,25 @@
 
 Physical strategy
 -----------------
-The pattern kernel is a *grouped-map* operator:
+The pattern kernel is one sorted pass per partition:
 
-    df.repartition(keys).groupBy(keys).applyInPandas(run_nfa, schema)
+    df.repartition(n, keys)
+      .withColumn(pos, row_number() over (partition by keys order by order_by))
+      .mapInPandas(kernel, schema)
 
 Each key's substream is matched independently — the one shuffle on the
 partition key is the only data movement, and parallelism scales with
 the number of keys (users/sessions/devices), which is exactly the axis
-that grows with data size.  Within a group, rows are sorted by the
-order column and fed through the NFA run-set engine
+that grows with data size.  The Window sorts each partition by (keys,
+order_by) and its ``pos == 1`` marks where a key starts.  The Python
+side takes one Arrow batch at a time, splits it at key starts and feeds
+each complete key through the NFA run-set engine
 (:mod:`reflinkcep_spark.cep.runtime`) by the per-key matcher the stream
-kernel shares (:mod:`reflinkcep_spark.cep.keyed`); Arrow carries the
-batch across the JVM↔Python boundary once in each direction.
+kernel shares (:mod:`reflinkcep_spark.cep.keyed`); a key that runs past
+the end of a batch carries over to the next one.  Spark's per-group
+framing (one Python call per key) is gone: the cost per key is the
+matcher alone, and Arrow carries each batch across the JVM↔Python
+boundary once in each direction.
 
 For patterns with a pure-Catalyst equivalent (plain filters, strict
 sequences), :mod:`reflinkcep_spark.operators.fastpath` avoids Python
@@ -36,12 +43,14 @@ nothing, mirroring the reference's omitted-key rule (DST.py:302-311).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from reflinkcep_spark.cep.keyed import (
     KeyedPlan,
@@ -55,6 +64,9 @@ from reflinkcep_spark.cep.keyed import (
 from reflinkcep_spark.cep.query import Query
 
 __all__ = ["match_pattern", "MatchLimitExceeded"]
+
+# Each row's 1-based position within its key, in order_by order.
+_POS = "__cep_pos"
 
 
 def match_pattern(
@@ -157,8 +169,10 @@ def match_pattern(
         ``sinks.write_bucketed(events, ..., key=partition_by)`` and
         read back via ``spark.table`` — so the kernel skips its
         explicit repartition and the whole plan runs WITHOUT ANY
-        shuffle: Scan → Sort (within buckets) → FlatMapGroupsInPandas
-        (verified in tests/test_bucketed_sink.py).  This is the
+        shuffle: bucketed Scan → Sort (within buckets) → Window →
+        MapInPandas (verified in tests/test_bucketed_sink.py).  The
+        Window's clustering requirement is what keeps the scan
+        bucketed, so a bucket's files stay in one task.  This is the
         standing-event-log shape at 100 TB: bucket the log once on
         the CEP key at ingest, then every pattern query over it is
         shuffle-free.  Parallelism equals the bucket count, so size
@@ -213,13 +227,12 @@ def match_pattern(
 
     # Column pruning before the shuffle: ship only what the kernel reads.
     projected = df.select(*keys, *attr_cols)
+    if _POS in projected.columns:
+        raise ValueError(f"input column {_POS!r}: the name is reserved for the kernel")
     out_schema = output_schema(
         projected.schema, keys, attr_cols, order_by, query.names
     )
     out_columns = [f.name for f in out_schema.fields]
-    # Zero-match groups are the common case; hand them one cached
-    # empty frame instead of re-running the DataFrame constructor.
-    empty_out = pd.DataFrame(columns=out_columns)
     plan = KeyedPlan(
         query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
         within=within, within_col=within_col,
@@ -228,30 +241,49 @@ def match_pattern(
         anchor_start=anchor_start, anchor_end=anchor_end,
     )
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_values = {k: pdf.iloc[0][k] for k in keys} if len(pdf) else {}
-        events = plan.events(pdf)
+    def run_group(key_values: dict, events: list) -> list[dict]:
+        """One key's complete input → its output rows."""
         matcher = KeyMatcher(plan, key_values, last_pos=len(events) - 1)
-        rows = matcher.feed(events) + matcher.finish()
-        return frame(rows, out_columns, empty_out)
+        return matcher.feed(events) + matcher.finish()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # One partition's rows, sorted by (keys, order_by); _POS == 1
+        # starts a key.  The open key's events carry across batches and
+        # run once the next key starts or the partition ends.
+        key_values: dict = {}
+        events: list = []
+        for pdf in batches:
+            batch = plan.events(pdf, ordered=True)
+            key_cols = [pdf[k].tolist() for k in keys]
+            rows: list = []
+            done = 0
+            for s in np.flatnonzero(pdf[_POS].to_numpy() == 1).tolist():
+                events += batch[done:s]
+                if events:
+                    rows += run_group(key_values, events)
+                key_values = {k: col[s] for k, col in zip(keys, key_cols)}
+                events = []
+                done = s
+            events += batch[done:]
+            if rows:
+                yield frame(rows, out_columns)
+        if events:
+            rows = run_group(key_values, events)
+            if rows:
+                yield frame(rows, out_columns)
 
     # Pin the kernel's parallelism: AQE's size-based partition
     # coalescing sees a few MB of shuffled events and would squash the
     # exchange to 1-2 partitions, serializing the Python NFA onto 1-2
     # cores (measured 32→2 tasks at sf0.1).  An explicit repartition
-    # with a fixed count is exempt from coalescing, and groupBy reuses
-    # its hash partitioning, so there is still exactly ONE shuffle.
-    if keys and pre_partitioned:
-        # Caller-asserted key-clustered input (bucketed table): groupBy
-        # alone satisfies FlatMapGroupsInPandas' required distribution
-        # from the scan's bucket partitioning — zero exchanges.
-        grouped = projected.groupBy(*keys)
-    elif keys:
+    # with a fixed count is exempt from coalescing, and the Window
+    # reuses its hash partitioning, so there is exactly ONE shuffle.
+    if keys and not pre_partitioned:
         n_parts = int(
             projected.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        grouped = projected.repartition(n_parts, *keys).groupBy(*keys)
-    else:
+        projected = projected.repartition(n_parts, *keys)
+    elif not keys:
         # Total-order CEP over an unkeyed stream is inherently ONE
         # group = one task = one core, regardless of cluster size.
         # Loud at plan time so nobody ships it against 100 TB silently.
@@ -265,5 +297,14 @@ def match_pattern(
             UserWarning,
             stacklevel=2,
         )
-        grouped = projected.groupBy()
-    return grouped.applyInPandas(run_group, schema=out_schema)
+    # The Window requires clustering on the keys (a bucketed scan keeps
+    # its bucketing, where sortWithinPartitions would have the planner
+    # drop it) and sorts each partition by (keys, order_by), NULLs last
+    # as the per-key sort always did; row_number() marks key starts.
+    ordered = projected.withColumn(
+        _POS,
+        F.row_number().over(
+            Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
+        ),
+    )
+    return ordered.mapInPandas(kernel, schema=out_schema)

@@ -765,8 +765,8 @@ def cep_funnel_within_time(spark, sf_dir):
     execution of the relaxed 3-step chain.
 
     Scale shape: identical to every kernel CEP row — ONE exchange on
-    the match key, Arrow-batched FlatMapGroupsInPandas, state bounded
-    per key by the live run-set (within pruning is itself the state
+    the match key, Arrow-batched MapInPandas over each key-sorted
+    partition, state bounded per key by the live run-set (within pruning is itself the state
     bound on hot keys)."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
@@ -828,7 +828,7 @@ def cep_sql_error_runs(spark, sf_dir):
     gaps-and-islands idiom over the user's row sequence.
 
     Scale shape: identical to every kernel CEP row — ONE exchange on
-    the match key into Arrow-batched applyInPandas; SQL selection is a
+    the match key into Arrow-batched mapInPandas; SQL selection is a
     per-key post-pass over that key's matches, no extra exchange."""
     from reflinkcep_spark.cep.match_recognize import match_recognize
 
@@ -946,7 +946,7 @@ def cep_sql_prev_ascent(spark, sf_dir):
     selects one maximal non-overlapping run per eligible start.
 
     Scale shape: the lag column rides the kernel's key partitioning —
-    Exchange → Sort → Window → FlatMapGroupsInPandas, ONE exchange
+    Exchange → Sort → Window → MapInPandas, ONE exchange
     total (plan-asserted in tests/test_match_recognize.py); the oracle
     is the LAG + gaps-and-islands idiom."""
     from reflinkcep_spark.cep.match_recognize import match_recognize
@@ -1675,7 +1675,7 @@ def cep_sql_alternation(spark, sf_dir):
 
     Scale shape: identical to every kernel CEP row — project to the
     referenced columns, ONE exchange on user_id, Arrow-batched
-    FlatMapGroupsInPandas, per-key state bounded by the live run-set
+    MapInPandas, per-key state bounded by the live run-set
     (runs die within three events here).
 
     Oracle: lead(event_type, 1..2) + lead(event_id, 2) over the same

@@ -4,8 +4,8 @@ Centralized so tests, the driver entry point and bench all run with the
 same scale-minded defaults:
 
 * AQE on (runtime shuffle-partition coalescing, skew-join splitting),
-* Arrow on (the CEP kernel is an ``applyInPandas`` operator — Arrow
-  batches are the JVM↔Python transport),
+* Arrow on (the CEP kernels are ``mapInPandas`` / ``applyInPandasWithState``
+  operators — Arrow batches are the JVM↔Python transport),
 * modest shuffle parallelism sized for local[32] test runs; a real
   cluster deployment overrides via ``extra_conf`` / spark-submit conf.
 """

@@ -24,7 +24,7 @@ AUDITED = [
     ("cep_high_purchases", "CEP spat fast path: pure filter, no Python"),
     ("cep_signup_to_purchase", "CEP relaxed pair fast path: window, no Python"),
     ("cep_funnel_3step", "CEP 3-step relaxed chain fast path: windows, no Python"),
-    ("cep_spending_burst", "CEP NFA kernel: one exchange into applyInPandas"),
+    ("cep_spending_burst", "CEP NFA kernel: one exchange into mapInPandas"),
     ("dedup_minhash_lsh", "signature fold + bucket-group candidates"),
     ("dedup_clusters_one_round", "pointer-jumping CC, ONE round (audit-only rounds=1 unit of the registered dedup_clusters): every exchange below is over a PAIR-GRAPH-sized frame (labels/edges, ~2 longs per row) — neighbor edge-join unioned with the label frame into ONE map-combined min-agg (the round-13 rewrite: the self row IS the closed neighborhood, so the old label merge join and its two exchanges are gone), plus the jump self-join; the corpus is never shuffled, and per-round lazy localCheckpoint truncates lineage so the 4-round plan is 4x this unit, nothing compounding (checkpointed RDDs surface as ExistingRDD with unknown partitioning, so join sides re-exchange — the price of bounded lineage; the repartition+persist alternative measured slower and re-opens the r10 CacheManager trap)"),
     ("dedup_ngram_jaccard", "inverted index: one posting shuffle, row-wise sizes"),
@@ -49,7 +49,7 @@ AUDITED = [
     ("sim_ann_ivf", "IVF ANN: literal centroids, broadcast probe join"),
     ("doc_pack_sequences", "sequence packing: sharded window prefix sum, rollup reuses partitioning"),
     ("doc_length_outliers", "length outliers: 20-row percentile stats broadcast, corpus unshuffled"),
-    ("cep_error_runs_skiptolast", "SkipToLast kernel: one exchange into applyInPandas"),
+    ("cep_error_runs_skiptolast", "SkipToLast kernel: one exchange into mapInPandas"),
     ("q_running_order_totals", "running totals: one keyed exchange, single window pass"),
     ("q_balance_quartiles", "ntile quartiles: partitioned window, agg reuses partitioning"),
     ("doc_split_assign", "split assignment: pure projection, one tiny-key agg exchange"),
@@ -118,11 +118,11 @@ AUDITED = [
     ("text_gopher_rules", "Gopher format rules (pre-staged r15): pure per-row split/filter/fold column algebra, ZERO exchanges, whole-stage codegen"),
     ("text_boilerplate", "jusText unit-level boilerplate classification (pre-staged r15): unit split + per-unit stopword-density gates + per-doc counters, ONE in-row fold pipeline, ZERO exchanges"),
     ("q_events_zorder_stats", "Z-order layout audit (pre-staged r15): one-row MIN broadcast, then the 42-term Morton key as a zero-exchange codegen projection; the rollup's COUNT DISTINCT makes it a two-level keyed agg (tile,user -> tile), both map-side combinable over <= tiles*users cells — the file-skipping metadata table"),
-    ("cep_funnel_within_time", "TIME-based within() funnel (pre-staged r15): identical physical shape to every kernel CEP row — ONE exchange on the match key, sort within buckets, Arrow-batched FlatMapGroupsInPandas (fast path bypassed by construction: the 48h stamp bound needs kernel pruning); within pruning bounds per-key live state by the 48-hour event rate"),
-    ("cep_sql_error_runs", "MATCH_RECOGNIZE greedy E+ maximal runs (pre-staged r15): the SQL:2016 front end translates onto the SAME kernel plan as every CEP row — ONE exchange on the partition key into Arrow-batched FlatMapGroupsInPandas; SQL match selection is a per-key post-pass, zero extra exchanges; the measures projection is codegen element_at/size column algebra"),
+    ("cep_funnel_within_time", "TIME-based within() funnel (pre-staged r15): identical physical shape to every kernel CEP row — ONE exchange on the match key, sort within buckets, Arrow-batched MapInPandas (fast path bypassed by construction: the 48h stamp bound needs kernel pruning); within pruning bounds per-key live state by the 48-hour event rate"),
+    ("cep_sql_error_runs", "MATCH_RECOGNIZE greedy E+ maximal runs (pre-staged r15): the SQL:2016 front end translates onto the SAME kernel plan as every CEP row — ONE exchange on the partition key into Arrow-batched MapInPandas; SQL match selection is a per-key post-pass, zero extra exchanges; the measures projection is codegen element_at/size column algebra"),
     ("cep_sql_funnel", "MATCH_RECOGNIZE reluctant filler funnel S G*? P (pre-staged r15): same ONE-exchange kernel shape; SKIP TO NEXT ROW selection per key in the kernel post-pass, COUNT(G.*) gap measure from the capture array in the codegen projection"),
-    ("cep_sql_prev_ascent", "MATCH_RECOGNIZE DEFINE navigation (pre-staged r16): PREV(value) ascending runs — the lag window column rides the kernel's key partitioning (Exchange -> Sort -> Window -> FlatMapGroupsInPandas), ONE exchange total, same count as a navigation-free MATCH_RECOGNIZE"),
-    ("cep_sql_alternation", "MATCH_RECOGNIZE ordered alternation (pre-staged r17): PATTERN (H | E{3}) + CLASSIFIER/MATCH_NUMBER/SUBSET measures — the alt node compiles into the same one-exchange kernel plan (Exchange -> FlatMapGroupsInPandas -> codegen measures projection), zero extra exchanges for the extra branch"),
+    ("cep_sql_prev_ascent", "MATCH_RECOGNIZE DEFINE navigation (pre-staged r16): PREV(value) ascending runs — the lag window column rides the kernel's key partitioning (Exchange -> Sort -> Window -> MapInPandas), ONE exchange total, same count as a navigation-free MATCH_RECOGNIZE"),
+    ("cep_sql_alternation", "MATCH_RECOGNIZE ordered alternation (pre-staged r17): PATTERN (H | E{3}) + CLASSIFIER/MATCH_NUMBER/SUBSET measures — the alt node compiles into the same one-exchange kernel plan (Exchange -> Sort -> Window -> MapInPandas -> codegen measures projection), zero extra exchanges for the extra branch"),
 ]
 
 
@@ -139,6 +139,7 @@ def summarize(plan: str) -> str:
             re.findall(r"\bExchange (?:RoundRobinPartitioning|rangepartitioning|SinglePartition)", plan)
         ),
         "FlatMapGroupsInPandas": len(re.findall(r"FlatMapGroupsInPandas", plan)),
+        "MapInPandas": len(re.findall(r"(?<!Flat)MapInPandas", plan)),
         "ArrowEvalPython": len(re.findall(r"ArrowEvalPython|BatchEvalPython", plan)),
         "WholeStageCodegen spans": len(re.findall(r"WholeStageCodegen", plan)),
     }

@@ -3,8 +3,8 @@
 through the Spark batch kernel and compare with the reference engine.
 
 The fast pytest corpus checks the pure-Python runtime; this script
-pushes every enumerated query through the real applyInPandas kernel
-(shuffle → per-key sort → NFA → Arrow round trip) on a 2-key frame.
+pushes every enumerated query through the real mapInPandas kernel
+(shuffle → (key, order) sort → NFA → Arrow round trip) on a 2-key frame.
 Matches are compared per key as ordered capture-id sequences.
 
 Also stride-samples the reference-scale four-division enumeration
@@ -47,7 +47,7 @@ def main() -> int:
     ap.add_argument(
         "--no-fastpath",
         action="store_true",
-        help="force every case through the applyInPandas NFA kernel "
+        help="force every case through the mapInPandas NFA kernel "
         "(by default the planner may dispatch to Catalyst fast paths, "
         "which is what production does but leaves the kernel itself "
         "unexercised for those combos)",

@@ -94,14 +94,28 @@ def test_unbucketed_baseline_does_exchange(spark, tmp_path, no_broadcast):
 
 def test_bucketed_cep_kernel_runs_shuffle_free(spark, tmp_path):
     """The standing-event-log shape: events bucketed on the CEP key run
-    match_pattern(pre_partitioned=True) with ZERO exchanges — Scan →
-    Sort → FlatMapGroupsInPandas — and emit exactly the matches of the
-    default (repartitioning) path."""
+    match_pattern(pre_partitioned=True) with ZERO exchanges — bucketed
+    Scan → Sort → Window → MapInPandas — and emit exactly the matches
+    of the default (repartitioning) path.  Every bucket is written as
+    several files, so a scan that dropped its bucketing would split a
+    key's rows across tasks and break the per-key match sets."""
+    from collections import Counter
+
     from reflinkcep_spark.cep.query import Pattern
     from reflinkcep_spark.operators import match_pattern
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    write_bucketed(ev, "t_ev_cep", "user_id", buckets=8, path=str(tmp_path / "ev"))
+    # three writer tasks, each holding rows of every bucket, write one
+    # file per bucket each
+    write_bucketed(
+        ev.repartition(3), "t_ev_cep", "user_id", buckets=8,
+        path=str(tmp_path / "ev"),
+    )
+    files = Counter(
+        re.search(r"_(\d{5})(?:\.c\d+)?\.", f.name).group(1)
+        for f in (tmp_path / "ev").glob("part-*")
+    )
+    assert files and min(files.values()) >= 2, files
     q = (
         Pattern.begin("a", event="error", where="value > 5")
         .one_or_more()
@@ -116,7 +130,8 @@ def test_bucketed_cep_kernel_runs_shuffle_free(spark, tmp_path):
         fast = match_pattern(spark.table("t_ev_cep"), q, pre_partitioned=True, **kw)
         plan = _formatted_plan(fast)
         assert _n_shuffles(plan) == 0, plan
-        assert "FlatMapGroupsInPandas" in plan
+        assert "Bucketed: true" in plan, plan
+        assert "MapInPandas" in plan
 
         base = match_pattern(ev, q, **kw)
         key = ["user_id", "match_seq", "start_ord", "end_ord"]

@@ -222,7 +222,7 @@ def test_fastpath_declines_relaxed(spark):
 
 def test_fastpath_spat_plan_is_pythonless(spark):
     """The dispatched plan for a single spat must not contain the
-    Python evaluator (no ArrowEvalPython/FlatMapGroupsInPandas)."""
+    Python evaluator (no ArrowEvalPython or the kernel's MapInPandas)."""
     query = Query.from_yaml(Q_SPAT)
     df = _df(spark, STREAM)
     out = match_pattern(
@@ -231,4 +231,5 @@ def test_fastpath_spat_plan_is_pythonless(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInPandas" not in plan
     assert "Filter" in plan

@@ -602,7 +602,7 @@ def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path):
     """The 100-TB composition: MATCH_RECOGNIZE over an event log
     bucketed on the partition key runs WITHOUT ANY shuffle — the SQL
     front end inherits the kernel's pre_partitioned path (Scan → Sort →
-    FlatMapGroupsInPandas), so a standing bucketed log serves SQL row-
+    Window → MapInPandas), so a standing bucketed log serves SQL row-
     pattern queries shuffle-free, exactly like the YAML surface."""
     import re
 
@@ -629,7 +629,7 @@ def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path):
             )
         )
         assert len(re.findall(r"(?<!Broadcast)Exchange", plan)) == 0, plan
-        assert "FlatMapGroupsInPandas" in plan
+        assert "MapInPandas" in plan
         # and the result is still right: maximal error runs per user
         got = sorted(tuple(r) for r in out.collect())
         want = []
@@ -884,7 +884,7 @@ def test_forward_variable_navigation_is_null(spark):
 
 def test_navigation_plan_has_single_exchange(spark):
     """The lag window rides the kernel's key partitioning: Exchange →
-    Sort → Window → FlatMapGroupsInPandas, ONE exchange total — the
+    Sort → Window → MapInPandas, ONE exchange total — the
     same count as a navigation-free MATCH_RECOGNIZE."""
     import re as _re
 
@@ -902,7 +902,9 @@ def test_navigation_plan_has_single_exchange(spark):
     # formatted mode prints each node in the tree AND a detail section —
     # count the detail headers, one per physical node
     assert len(_re.findall(r"^\(\d+\) Exchange", plan, _re.M)) == 1, plan
-    assert "FlatMapGroupsInPandas" in plan and "Window" in plan
+    # the lag window and the kernel's row_number() share one sort
+    assert len(_re.findall(r"^\(\d+\) Sort", plan, _re.M)) == 1, plan
+    assert "MapInPandas" in plan and "Window" in plan
 
 
 def test_all_rows_per_match_hides_navigation_columns(spark):

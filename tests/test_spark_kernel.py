@@ -1,14 +1,17 @@
 """Spark batch kernel: plumbing parity with the pure-Python engine.
 
 The golden tests already pin the match semantics; here we check that
-the grouped-map kernel (shuffle → per-key sort → NFA → Arrow round
-trip) reproduces the same matches per key, on synthetic multi-key
-frames and on the driver's events table.
+the batch kernel (shuffle → per-partition (key, order) sort → Arrow
+batches split at key starts → NFA → Arrow round trip) reproduces the
+same matches per key, on synthetic multi-key frames cut into small
+Arrow batches and on the test data's events table.
 """
 
 import pytest
 
 from reflinkcep_spark import Query, run_pattern
+from reflinkcep_spark.cep.compiler import compile_query
+from reflinkcep_spark.cep.runtime import MatchEngine
 from reflinkcep_spark.operators import match_pattern
 
 from tests.cep_cases import GOLDEN_CASES
@@ -32,45 +35,130 @@ def _events_df(spark, pairs, n_keys=3):
     return spark.createDataFrame(rows, "user_id int, id long, type string, name long, price long")
 
 
-def _expected_per_key(qyaml, pairs):
-    query = Query.from_yaml(qyaml)
+# The parity test's keys: two key columns, a NULL in either one, and a
+# user_id two keys share, so only the whole tuple tells keys apart.
+KEYS = [(0, "a"), (0, "b"), (1, None), (None, "a"), (2, "c")]
+
+Q_RUN = """
+type: query
+patseq:
+  type: lpat-inf
+  name: run
+  event: e
+  cndt: {expr: price > 0}
+  loop: {contiguity: strict, from: 1}
+context:
+  schema: {e: []}
+"""
+
+Q_HOT = """
+type: query
+patseq:
+  type: lpat-inf
+  name: a
+  event: e
+  cndt: {expr: "True"}
+  loop: {contiguity: nd-relaxed, from: 1}
+context:
+  schema: {e: []}
+"""
+
+# Beyond the golden slice, two keys whose end matters: a $-anchored SQL
+# run over 12 events (every key spans batches), and a hot key whose
+# live run-set (95 runs after event 6, 191 after event 7) trips the
+# limit on its 7th event — the last row of a batch for the first key
+# of each partition; the key's other rows arrive in the next batch.
+BOUNDARY_CASES = [
+    ("anchor_end", Q_RUN, [(0, p) for p in (1, 1, 0, 1, 1, 1, 0, 1, 1, 1, 1, 1)],
+     dict(sql_skip=("past_last", None), anchor_end=True)),
+    ("truncate_at_batch_end", Q_HOT, [(1, 1)] * 12,
+     dict(max_active_runs=100, on_limit="truncate")),
+]
+
+
+@pytest.fixture
+def small_batches(spark):
+    """Arrow batches of 7 rows over 2 kernel partitions: keys share a
+    partition, start mid-batch and run past the end of a batch."""
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+        "spark.sql.shuffle.partitions": "2",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        spark.conf.set(k, v)
+
+
+def _expected_per_key(query, pairs, kwargs):
+    """A bare MatchEngine over one key's stream: each match's captured
+    ids by name, cut where the live run-set first exceeds
+    ``max_active_runs`` (None stands for the truncate sentinel); under
+    ``anchor_end`` the greedy past-last-row pick of ``E+`` — the
+    longest match that ends on the key's last row."""
     stream = [("e", {"id": i + 1, "name": n, "price": p}) for i, (n, p) in enumerate(pairs)]
-    return run_pattern(query, stream)
+    engine = MatchEngine(compile_query(query), query.strategy)
+    limit = kwargs.get("max_active_runs")
+    want = []
+    for ev_type, attrs in stream:
+        for m in engine.feed(ev_type, attrs):
+            want.append({n: [stream[i][1]["id"] for i in ps] for n, ps in m.captures.items()})
+        if limit is not None and len(engine.runs) > limit:
+            return want + [None]
+    if kwargs.get("anchor_end"):
+        at_end = [m for m in want if m["run"][-1] == len(stream)]
+        return [max(at_end, key=lambda m: len(m["run"]))]
+    return want
 
 
 @pytest.mark.parametrize(
-    "name,qyaml,stream,expected",
-    KERNEL_CASES,
-    ids=[c[0] for c in KERNEL_CASES],
+    "name,qyaml,stream,kwargs",
+    [c[:3] + (dict(),) for c in KERNEL_CASES] + BOUNDARY_CASES,
+    ids=[c[0] for c in KERNEL_CASES + BOUNDARY_CASES],
 )
-def test_kernel_matches_pure_engine(spark, name, qyaml, stream, expected):
+def test_kernel_matches_pure_engine(spark, small_batches, name, qyaml, stream, kwargs):
     query = Query.from_yaml(qyaml, name=name)
-    df = _events_df(spark, stream)
+    rows = [
+        (u, r, i + 1, "e", n, p) for u, r in KEYS for i, (n, p) in enumerate(stream)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "user_id int, region string, id long, type string, name long, price long",
+    )
     out = match_pattern(
         df,
         query,
         order_by="id",
-        partition_by="user_id",
+        partition_by=["user_id", "region"],
         type_col="type",
         allow_fastpath=False,
+        **kwargs,
     )
-    rows = out.collect()
-    want_one_key = _expected_per_key(qyaml, stream)
+    by_key: dict = {}
+    for r in out.collect():
+        by_key.setdefault((r["user_id"], r["region"]), []).append(r)
+    want_one_key = _expected_per_key(query, stream, kwargs)
 
-    assert {r["user_id"] for r in rows} == ({0, 1, 2} if want_one_key else set())
-    for k in (0, 1, 2):
-        got = sorted(
-            (r for r in rows if r["user_id"] == k), key=lambda r: r["match_seq"]
-        )
+    assert set(by_key) == (set(KEYS) if want_one_key else set())
+    for got in by_key.values():
+        # the truncate sentinel (match_seq -1) comes last
+        got.sort(key=lambda r: (r["match_seq"] < 0, r["match_seq"]))
         assert len(got) == len(want_one_key)
-        for row, want in zip(got, want_one_key):
-            for cap_name, evs in want.items():
-                got_ids = [e["id"] for e in row[cap_name]]
-                assert got_ids == [e["id"] for e in evs]
+        for seq, (row, want) in enumerate(zip(got, want_one_key)):
+            if want is None:
+                assert row["match_seq"] == -1 and row["start_ord"] is None
+                assert all(row[n] is None for n in query.names)
+                continue
+            assert row["match_seq"] == seq
+            ids = [i for evs in want.values() for i in evs]
+            assert (row["start_ord"], row["end_ord"]) == (min(ids), max(ids))
             # captures absent from the match must be NULL columns
             for cap_name in query.names:
-                if cap_name not in want:
-                    assert row[cap_name] is None
+                cell = row[cap_name]
+                got_ids = None if cell is None else [e["id"] for e in cell]
+                assert got_ids == want.get(cap_name)
 
 
 def test_kernel_on_events_table(spark):
@@ -401,10 +489,6 @@ def test_frame_matches_list_of_dicts_constructor():
     want = pd.DataFrame(rows, columns=cols)
     got = frame(rows, cols)
     pd.testing.assert_frame_equal(got, want)
-    # zero rows: identical empty frame whether or not a cache is passed
+    # zero rows: identical empty frame
     want0 = pd.DataFrame([], columns=cols)
-    empty = pd.DataFrame(columns=cols)
-    pd.testing.assert_frame_equal(frame([], cols, empty), want0)
     pd.testing.assert_frame_equal(frame([], cols), want0)
-    # the cached object is returned as-is (no copy per group)
-    assert frame([], cols, empty) is empty
