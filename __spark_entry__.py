@@ -6,10 +6,10 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Engine: ``reflinkcep_spark`` — CEP pattern matching (the reference's
-full operator surface) as a grouped-map NFA kernel with Catalyst fast
-paths, plus the relational operator set and training-data-pipeline
-operators (dedup / similarity search / text analysis / multimodal
-plumbing).  See SURVEY.md §2 for the inventory and
+full operator surface) as a partition-at-a-time ``mapInPandas`` NFA
+kernel with Catalyst fast paths, plus the relational operator set and
+training-data-pipeline operators (dedup / similarity search / text
+analysis / multimodal plumbing).  See SURVEY.md §2 for the inventory and
 reflinkcep_spark/queries/ for every query definition.
 """
 

@@ -1038,10 +1038,9 @@ def duplicate_clusters(
     round 13, two exchanges/round saved, measured 7.08→6.36 s
     median-of-3 at sf0.1), and the jump self-join; each side
     re-exchanged because checkpointed RDDs carry unknown partitioning
-    (see the PLANS.md ``dedup_clusters_one_round`` entry for the
-    audited per-round counters; a repartition+persist variant that
-    would preserve partitioning measured SLOWER end-to-end and
-    re-opens the round-10 CacheManager substitution trap) — ALL over
+    (a repartition+persist variant that would preserve partitioning
+    measured SLOWER end-to-end and re-opens the round-10 CacheManager
+    substitution trap) — ALL over
     PAIR-graph-sized frames (edges ≪ corpus after capping/LSH),
     independent of corpus size: the corpus itself is never shuffled.
     """

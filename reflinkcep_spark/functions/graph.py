@@ -62,9 +62,8 @@ def pagerank_fixedpoint(
     reference re-derives the full upstream plan: at iters=2 the
     registered doc_link_pagerank query re-scanned (and re-exploded)
     the documents table 14 TIMES — one derivation per reference to
-    ``e``/``base``/``outdeg``/``pr`` in the unrolled loop (round-14
-    optimization; plans/r14/doc_link_pagerank_{before,after}.txt:
-    14 scans → 1).  Same trade as every lazy-checkpoint site in this
+    ``e``/``base``/``outdeg``/``pr`` in the unrolled loop (14 scans
+    → 1 with the pins).  Same trade as every lazy-checkpoint site in this
     package: lineage is destroyed, so an executor loss during the
     consuming job retries the job instead of recomputing the subtree.
 

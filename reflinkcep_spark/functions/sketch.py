@@ -295,8 +295,7 @@ def bloom_gate(
     (The previous shape broadcast the sparse (w, bits) frame twice —
     once per hash — as two hash joins, which re-derived the whole
     benchmark-side pipeline per broadcast: 2 gram closures, 6
-    exchanges; round-14 optimization, FP-for-FP output identical —
-    plans/r14/doc_bloom_decontam_{before,after}.txt.)  A gram is
+    exchanges; the output is FP-for-FP identical.)  A gram is
     flagged iff BOTH its bits are set; per-doc counts therefore
     include the filter's deterministic false positives, identically
     on any engine sharing md5 (the registered query's oracle checks

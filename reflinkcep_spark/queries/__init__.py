@@ -3,195 +3,16 @@
 Each sub-module defines ``QUERIES`` (name → fn(spark, sf_dir) → DF) and
 ``ORACLES`` (name → equivalent ANSI SQL for DuckDB).  Names without an
 oracle are non-SQL-expressible operators checked rows-only.
-
-Ordering matters: the driver's correctness gate checks the FIRST 50
-entries of ``queries()`` per round (the registry holds more — run
-``len(all_queries())`` for the live total; don't trust hard-coded
-counts).  ``_PRIORITY`` pins the queries that most need a fresh driver
-row to the front — newly added queries first, then the family whose
-latest green rows are one round stale — and the freshly-confirmed
-queries absorb the overflow at the tail.
 """
 
 from reflinkcep_spark.queries import cep_queries, pipeline, relational, temporal
 
 _MODULES = (pipeline, temporal, cep_queries, relational)
 
-# Round-14 queue: REGISTERED this round (doc_snapshot_diff,
-# doc_link_pagerank, sim_jl_project, multimodal_wav_stats,
-# multimodal_ppm_stats) -- all pre-staged + oracle-green since rounds
-# 11-12; now covered by the full check_oracles replay.  Registry
-# 125 + 5 - 6 = 124 (the six pre-named retirement candidates moved to
-# RETIRED, coverage arguments re-confirmed -- see the RETIRED block).
-# Window: 24 promoted 2-round-stale PLANNED_SITOUTS first, then the 5
-# new, then 21 r12-stale heavy keepers -- see the window comment above
-# PLANNED_SITOUTS.
-# The round-14 registrations (descriptions kept for the audit trail;
-# oracle pin: tests/test_check_oracles.py::
-# test_prestaged_round14_queries_match_oracles):
-#   doc_snapshot_diff   (pipeline.py + functions/snapshot.py -- CDC
-#                        snapshot reconciliation: ONE full-outer id
-#                        join over scan-projected digests, delta-only
-#                        output; pair its registration with a
-#                        retirement per the capacity note below)
-#   doc_link_pagerank   (pipeline.py + functions/graph.py -- scaled-
-#                        integer PageRank over a derived link graph,
-#                        the second fixed-point iterative algorithm;
-#                        same pairing note)
-#   sim_jl_project      (pipeline.py + functions/similarity.py --
-#                        integer Johnson-Lindenstrauss 64->16
-#                        embedding compression, exact long-format
-#                        output, zero-exchange projection; same
-#                        pairing note)
-#   multimodal_wav_stats (pipeline.py + functions/multimodal.py --
-#                        end-to-end WAV decode with an oracle: PCM
-#                        synthesized from doc_id, real RIFF write +
-#                        real wave-reader parse in mapInPandas,
-#                        integer stats DuckDB recomputes from the
-#                        formula; same pairing note)
-#   multimodal_ppm_stats (pipeline.py + functions/multimodal.py --
-#                        the IMAGE twin, added round 12: synthetic P6
-#                        pixels from doc_id -> real PPM bytes -> the
-#                        repo's real netpbm parser + nearest-neighbor
-#                        resample -> integer stats incl. a position-
-#                        sensitive checksum, DuckDB recomputes from
-#                        the formula; same pairing note)
-#
-# Round-15 queue (implemented round 12, locally oracle-verified at
-# sf0.001 AND sf0.01, pinned by tests/test_check_oracles.py::
-# test_prestaged_round15_queries_match_oracles):
-#   doc_cms_estimates   (pipeline.py + functions/sketch.py -- Count-
-#                        Min frequency estimates beside ground truth:
-#                        the third mergeable-sketch family; cells
-#                        merge with +, small width makes collision
-#                        overestimates visible; streaming register
-#                        twin doc_cms_registers_stream already wired)
-#   q_scd2_user_status  (temporal.py -- SCD2 dimension-history build
-#                        from the event log: gaps-and-islands over ONE
-#                        user-keyed exchange)
-#   doc_domain_caps     (pipeline.py + functions/web.py -- per-domain
-#                        document quota with TWO-PHASE ranking so a
-#                        power-law mega-host never funnels through one
-#                        task; oracle derives the domain independently
-#                        from the URL formula)
-#   text_gopher_rules   (pipeline.py + functions/text.py -- Gopher
-#                        format rules, exact-integer cross-multiplied
-#                        thresholds, counters emitted beside flags)
-#   q_events_zorder_stats (temporal.py + functions/packing.py --
-#                        Z-order/Morton layout key as 42-term codegen
-#                        algebra + per-tile min/max file-skipping
-#                        stats; in-plan domain rails)
-#   multimodal_avi_stats (pipeline.py + functions/multimodal.py --
-#                        the VIDEO round-trip completing the trio:
-#                        real RIFF write + real container walk,
-#                        odd-length frames exercise word alignment,
-#                        checksum position-sensitive in frame order
-#                        AND intra-frame offset)
-#   dedup_incremental   (pipeline.py + functions/dedup.py -- the
-#                        ASYMMETRIC ingest dedup: frozen corpus as
-#                        ~16-byte digests, new shard classified
-#                        new/dup_of_corpus/dup_in_batch; shard-by-
-#                        shard == whole-history invariant pinned)
-#   text_boilerplate    (pipeline.py + functions/text.py -- jusText
-#                        unit-level boilerplate classification:
-#                        stopword-density + length gates as exact
-#                        integer cross-multiplies, per-doc counters,
-#                        zero exchanges; streaming twin
-#                        text_boilerplate_stream wired round 13)
-#   cep_funnel_within_time (cep_queries.py -- the TIME-based
-#                        ``within()``, Flink's actual semantics:
-#                        within_col threads unix_micros(ts) through
-#                        the kernel while event_id stays the order
-#                        column; 48-hour bound, oracle-verified at
-#                        sf0.001/0.01/0.1 (added round 13); streaming
-#                        twin cep_funnel_within_time_stream wired,
-#                        batch/stream equality pinned)
-#   cep_sql_error_runs  (cep_queries.py + cep/match_recognize.py --
-#                        the SQL:2016 MATCH_RECOGNIZE front end's
-#                        flagship: greedy E+ maximal error runs under
-#                        AFTER MATCH SKIP PAST LAST ROW, a selection
-#                        semantics no Flink-style skip strategy emits;
-#                        oracle is gaps-and-islands; verified at
-#                        sf0.001/0.01/0.1, added round 13)
-#   cep_sql_funnel      (cep_queries.py + cep/match_recognize.py --
-#                        reluctant filler-variable funnel S G*? P with
-#                        SKIP TO NEXT ROW and a COUNT(G.*) gap
-#                        measure; oracle is the next-qualifying-row
-#                        window idiom; verified at 3 SFs, round 13)
-#
-# Capacity after the round-14 rotation: registry 124; with the
-# 50-slot window and the hard 2-round staleness ceiling the capacity
-# bound is 3 x 50 = 150 registered queries, so rotation stays feasible
-# (124/3 = 41.3 average slots per round) with margin 26 -- maintained
-# by the retire-a-near-duplicate-shape-per-addition policy started
-# round 12 (see RETIRED below).
-#
-# The eleven-entry round-15 queue is SPLIT (decided round 14; the
-# committed plan with named retirement pairs is the ROUND-15 ROTATION
-# PLAN comment above PLANNED_SITOUTS): round 15 registers the three
-# CEP rows (cep_funnel_within_time, cep_sql_error_runs,
-# cep_sql_funnel -- the round-13 feature work) plus doc_cms_estimates,
-# q_scd2_user_status, text_boilerplate (streaming twins already
-# wired); round 16 registers doc_domain_caps, text_gopher_rules,
-# q_events_zorder_stats, multimodal_avi_stats, dedup_incremental,
-# plus the round-14 DEFINE-navigation query cep_sql_prev_ascent --
-# pairing registrations with retirements per the capacity policy both
-# times.
-#
-# Retired queries (round 12 onward): removed from the driver contract
-# (queries()/oracle_sql()) to keep rotation capacity margin >= 25, but
-# the functions and their oracle SQL stay in the modules and every one
-# is still VALUE-checked against DuckDB by pytest
-# (tests/test_retired_queries.py), so operator coverage is unchanged --
-# the slot is what's reclaimed, not the check.  Chosen round 12: six
-# near-duplicate cheap scan/agg shapes whose plan shape is exercised by
-# a registered sibling:
-#   q_events_tumbling      -- same one-shuffle F.window() agg plan as
-#                             the registered q_events_sliding; batch fn
-#                             also pinned by the streaming twin's
-#                             batch-equality test (test_streaming_entry)
-#   q_asof_next_error      -- forward as-of: same union+window single-
-#                             shuffle asof_join plan as the registered
-#                             q_asof_last_click; direction covered by
-#                             tests/test_asof.py::test_asof_forward_direction
-#   q_late_lines_by_status -- join + conditional-sum agg; shape covered
-#                             by q1_pricing_summary / q_promo_revenue_share
-#   q_part_supplier_counts -- anti-join (q_customers_without_orders) +
-#                             count_distinct (q_distinct_counts) combo
-#   doc_hash_sample        -- md5-bucket deterministic sampling; the
-#                             same bucket trick rides inside the
-#                             registered doc_split_leakage
-#   text_token_histogram   -- token-count bucket agg; near-dup of
-#                             text_profile stats; also unit-tested
-#                             directly (test_token_histogram_buckets)
-# Added round 14 (the six candidates pre-named in the round-13 plan;
-# every coverage argument re-confirmed at retirement time):
-#   doc_top_terms          -- per-term tf/df ranking; fully subsumed by
-#                             the registered text_tfidf_search (same tf
-#                             agg, same df join, PLUS the two-phase
-#                             ranked-retrieval stage; green r13)
-#   doc_mixture_sample     -- per-source Bernoulli mixture draw; the
-#                             registered doc_mixture_rebalance computes
-#                             the same per-source rate algebra and
-#                             doc_token_budget the same capped take
-#                             (both in the r14 window)
-#   q_orders_by_month      -- calendar-bucket count agg; the bucket-agg
-#                             plan shape is q_events_sliding's (in the
-#                             r14 window) over F.window instead of
-#                             date_trunc -- one Exchange, partial aggs
-#   q_distinct_counts      -- plain multi-column count_distinct scan;
-#                             the expand-based distinct agg plan rides
-#                             inside registered rows (q_order_count_
-#                             distribution, doc_vocab_coverage) and the
-#                             retired q_part_supplier_counts check
-#   doc_length_outliers    -- percentile-threshold trim; percentile
-#                             machinery is q_balance_quartiles (ntile,
-#                             r14 window) + q_quantity_percentiles
-#                             (percentile_disc agg); the length stage
-#                             itself rides in doc_curation_funnel
-#   q_scalar_functions     -- scalar-expression scan with no join/agg;
-#                             exercised by queries/exact.py unit tests
-#                             and by every registered scan's projection
+# Retired queries: left out of queries() / oracle_sql() because a
+# registered sibling exercises the same plan shape.  Their functions
+# and oracle SQL stay in the modules, and tests/test_retired_queries.py
+# still checks every one against DuckDB.
 RETIRED = (
     "q_events_tumbling",
     "q_asof_next_error",
@@ -199,7 +20,6 @@ RETIRED = (
     "q_part_supplier_counts",
     "doc_hash_sample",
     "text_token_histogram",
-    # round 14
     "doc_top_terms",
     "doc_mixture_sample",
     "q_orders_by_month",
@@ -208,209 +28,18 @@ RETIRED = (
     "q_scalar_functions",
 )
 
-# Front of the driver's 50-entry check window (round 14 rotation),
-# executed exactly as pre-planned in round 13: FIRST the twenty-four
-# 2-round-stale PLANNED_SITOUTS surviving from the round-13 plan
-# (r11-vintage rows, at the hard ceiling; doc_mixture_sample was the
-# 25th -- retired instead), then the five queries registered this
-# round (pre-staged + oracle-verified since rounds 11-12:
-# doc_snapshot_diff, doc_link_pagerank, sim_jl_project,
-# multimodal_wav_stats, multimodal_ppm_stats -- never driver-checked),
-# then twenty-one r12-vintage heavy / plan-sensitive keepers: the
-# eight r12-row CEP queries, dedup_clusters + the two md5 sketch rows
-# + dedup_canonical_quality, the five ANN rows, sim_embedding_neardup,
-# multimodal_bytes, doc_decontam, doc_pack_sequences,
-# text_dedup_xdoc_fuzzy.  Window arithmetic: 124 registered queries;
-# 24 promoted + 5 new + 50 r13-vintage + 48 surviving r12-vintage
-# rows compete for 50 slots, so TWENTY-SEVEN r12-green queries sit
-# out and go two rounds stale at round 14 -- promote (or retire)
-# every PLANNED_SITOUT FIRST in the round-15 rotation.
-#
-# ROUND-15 ROTATION PLAN (pre-computed round 14 from the post-r14
-# staleness simulation; execute exactly):
-# 1. PROMOTE all 27 PLANNED_SITOUTS below (r12 rows, at the hard
-#    ceiling at r15 -- mandatory).
-# 2. REGISTER the six-entry round-15 half of the split queue (the
-#    round-13 feature rows first): cep_funnel_within_time,
-#    cep_sql_error_runs, cep_sql_funnel, doc_cms_estimates,
-#    q_scd2_user_status, text_boilerplate.  PAIR each with the named
-#    retirement (re-confirm each coverage argument at retirement
-#    time, then move to RETIRED):
-#      cep_funnel_within_time -> retire q_small_quantity_revenue
-#        (scan-filter-sum on lineitem; the shape is q6_revenue_delta
-#        minus the delta arm, also q1_pricing_summary's agg)
-#      cep_sql_error_runs     -> retire q_binational_volume
-#        (two-nation join+agg; the multi-join volume shape is
-#        q5_nation_revenue / q_nation_market_share)
-#      cep_sql_funnel         -> retire q_large_quantity_orders
-#        (group-agg + HAVING threshold; the shape is
-#        q_order_count_distribution / q_big_building_buyers)
-#      doc_cms_estimates      -> retire q_excess_inventory_suppliers
-#        (agg-subquery threshold join; the shape is
-#        q_min_cost_suppliers / q_above_nation_avg)
-#      q_scd2_user_status     -> retire q_user_sessions
-#        (per-user gaps-and-islands sessionization; q_session_windows
-#        keeps the operator registered and SCD2 is the same islands
-#        idiom with richer output)
-#      text_boilerplate       -> retire q_promo_revenue_share
-#        (conditional-sum revenue ratio; the shape is q1_pricing_
-#        summary's conditional aggs + retired q_late_lines_by_status)
-#    Registry 124 + 6 - 6 = 124; margin stays 26.
-# 3. KEEP in the window these SEVENTEEN heavy / plan-sensitive
-#    r13-vintage rows (27 + 6 + 17 = 50; pre-computed round 14 from
-#    the post-r14 staleness simulation -- recompute only if the r14
-#    driver row set differs): the eight dedup rows (dedup_exact_groups,
-#    dedup_minhash_lsh, dedup_ngram_jaccard, dedup_scrub_spans,
-#    dedup_semantic, dedup_simhash, dedup_substring_spans,
-#    dedup_winnow_pairs), doc_pack_ffd, text_lm_quality, and the seven
-#    most plan-sensitive CEP rows (cep_spending_burst [NFA kernel],
-#    cep_view_combos_ndrelaxed [nd-relaxed], cep_nested_funnel_relaxed,
-#    cep_error_pairs_skippast, cep_error_streaks_skip,
-#    cep_view_click_runs [gpat-inf], cep_view_click_cycles
-#    [gpat-times]).
-# 4. NAME the remaining TWENTY-FOUR r13-vintage queries as round-15
-#    PLANNED_SITOUTS (47 surviving r13-row queries - 6 retired in
-#    step 2 - 17 kept = 24; 2-stale at r16, legal once):
-#    q1_pricing_summary, q6_revenue_delta, q_big_building_buyers,
-#    q_late_ship_priority, q_order_count_distribution,
-#    q_segment_opportunity, q_disjunctive_revenue, q_top_supplier,
-#    q_nation_market_share, q_min_cost_suppliers, q_important_parts,
-#    doc_hll_registers, doc_bloom_decontam, doc_span_merge, sim_kmeans,
-#    text_tfidf_search, cep_conversion_rate,
-#    cep_error_then_purchase_grouped, cep_error_triples,
-#    cep_high_purchase_chains, cep_optional_click_prefix,
-#    cep_signup_abandoned, cep_signup_any_purchase,
-#    cep_signup_to_purchase.
-# Round-16 consequence: those ~33 sit-outs + the six-entry round-16
-# queue half (doc_domain_caps, text_gopher_rules,
-# q_events_zorder_stats, multimodal_avi_stats, dedup_incremental,
-# cep_sql_prev_ascent -- the DEFINE-navigation query added round 14)
-# fill ~39 slots; pair the six registrations with retirements chosen
-# at round-16 planning time.  124 + 6 - 6 = 124 keeps margin 26.
-# Round-17 queue seed (built in the round-14 continuation):
-# cep_sql_alternation -- PATTERN (H | E{3}) with CLASSIFIER /
-# MATCH_NUMBER / SUBSET-union measures, 3-SF oracle-green at build
-# time (176 / 1,673 / 17,014 rows), suite-pinned
-# (test_prestaged_round17_queries_match_oracles), AUDITED + PROBES
-# entries in place; pair its registration with a retirement at
-# round-17 planning time.
-# Before this rotation every promoted query was verified green in its
-# latest CORRECTNESS row (r11) and every demoted query green in
-# CORRECTNESS_r13.json (scripts/window_audit.py run before and after).
 
-# Machine-readable sit-out plan: queries whose latest driver row is
-# EXPECTED to be exactly 2 rounds stale at the NEXT driver run, because
-# the 50-slot window can't hold every candidate.
-# scripts/window_audit.py exits 0 only when observed staleness matches
-# this plan exactly -- any unplanned-stale query, any planned one that
-# is stale-and-red, or ANY row more than 2 rounds stale (planned or
-# not -- the hard ceiling added round 11) is a rotation bug and exits
-# nonzero.  Chosen round 14 (exactly as pre-named in the round-13
-# plan): the twenty-seven r12-green rows not kept in the window and
-# not retired -- cheap scan/agg/window relational shapes, the
-# sub-second text/doc pipeline rows, and the four r12 registrations
-# whose plan shapes have heavier registered siblings.
-PLANNED_SITOUTS = (
-    "doc_curation_funnel",
-    "doc_importance_weights",
-    "doc_split_leakage",
-    "doc_winnow_robust",
-    "dedup_url_canonical",
-    "q_asof_last_click",
-    "q_range_join_clicks",
-    "q_session_windows",
-    "q_skew_salted_events",
-    "text_dedup_paragraphs",
-    "text_dedup_paragraphs_global",
-    "doc_quality_calibration",
-    "text_quality_buckets",
-    "text_profile",
-    "text_bigram_lift",
-    "doc_winnow_fingerprints",
-    "q3_top_orders",
-    "q5_nation_revenue",
-    "q_top_customers_per_nation",
-    "q_rollup_order_priority",
-    "q_customers_without_orders",
-    "q_orders_without_items",
-    "q_parts_with_cheap_suppliers",
-    "q_quantity_percentiles",
-    "q_above_nation_avg",
-    "q_running_order_totals",
-    "q_product_profit",
-)
-
-_PRIORITY = (
-    # 2-rounds-stale round-13 sit-outs (last row r11) -- first, per plan
-    "text_repetition",
-    "text_language",
-    "doc_rolling_fingerprint",
-    "doc_mixture_upsample",
-    "doc_source_stats",
-    "doc_pii_scrub",
-    "doc_chunk_overlap",
-    "doc_vocab_coverage",
-    "doc_split_assign",
-    "doc_global_shuffle",
-    "doc_token_budget",
-    "text_dedup_paragraphs_fuzzy",
-    "doc_contamination_matrix",
-    "doc_mixture_rebalance",
-    "q_events_sliding",
-    "q_events_props_json",
-    "q_cube_lineitem_flags",
-    "q_grouping_sets",
-    "q_pivot_status_priority",
-    "q_unpivot_balances",
-    "q_balance_quartiles",
-    "q_waiting_suppliers",
-    "q_returned_item_customers",
-    "q_local_supplier_volume",
-    # new in round 14 (never driver-checked; pre-staged rounds 11-12)
-    "doc_snapshot_diff",
-    "doc_link_pagerank",
-    "sim_jl_project",
-    "multimodal_wav_stats",
-    "multimodal_ppm_stats",
-    # r12-stale keepers: CEP family (the eight r12-row queries)
-    "cep_high_purchases",
-    "cep_funnel_3step",
-    "cep_funnel_within",
-    "cep_error_runs",
-    "cep_purchase_then_error",
-    "cep_error_runs_skiptolast",
-    "cep_signup_purchase_skipfirst",
-    "cep_purchase_no_immediate_error",
-    # r12-stale keepers: dedup / sketch / ANN / Python-kernel shapes
-    "dedup_clusters",
-    "dedup_minhash_lsh_md5",
-    "dedup_simhash_md5",
-    "dedup_canonical_quality",
-    "sim_cosine_topk",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "sim_ann_pq",
-    "sim_embedding_neardup",
-    "multimodal_bytes",
-    "doc_decontam",
-    "doc_pack_sequences",
-    "text_dedup_xdoc_fuzzy",
-)
-
-
-def _ordered(merged):
+def _drop_retired(merged):
     for name in RETIRED:
         merged.pop(name, None)
-    out = {name: merged[name] for name in _PRIORITY if name in merged}
-    out.update((k, v) for k, v in merged.items() if k not in out)
-    return out
+    return merged
 
 
 def all_queries():
     merged = {}
     for mod in _MODULES:
         merged.update(mod.QUERIES)
-    return _ordered(merged)
+    return _drop_retired(merged)
 
 
 # Lazily-built oracle SQL, cached by query name: an ORACLES value may
@@ -429,4 +58,4 @@ def all_oracles():
                     _ORACLE_CACHE[name] = sql()
                 sql = _ORACLE_CACHE[name]
             merged[name] = sql
-    return _ordered(merged)
+    return _drop_retired(merged)

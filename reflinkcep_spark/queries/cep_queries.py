@@ -255,9 +255,6 @@ FROM s WHERE event_type = 'view' AND t1 = 'click' AND t2 = 'view' AND t3 = 'clic
 
 # --- iterative condition + until: spending bursts --------------------
 
-# Shared by the driver query and bench.py's bucketed-events variant
-# (identical query + projection over a pre-bucketed event log, so the
-# zero-exchange path is a measured number, not just a plan property).
 SPENDING_BURST_YAML = """
 type: query
 patseq:
@@ -749,7 +746,7 @@ WHERE s.event_type = 'signup' AND b.next_err IS NOT NULL
 
 
 # cep_funnel_within_time is implemented and locally oracle-verified but
-# NOT yet registered: round-15 queue (see queries/__init__.py).
+# NOT registered in queries().
 def cep_funnel_within_time(spark, sf_dir):
     """The 3-step funnel bounded to complete within 48 HOURS of its
     first event — the TIME-based ``within()`` (Flink's actual
@@ -815,8 +812,7 @@ WHERE s.event_type = 'signup' AND b.next_err IS NOT NULL
 # --- MATCH_RECOGNIZE: the SQL:2016 row-pattern front end --------------
 
 # cep_sql_error_runs / cep_sql_funnel are implemented and locally
-# oracle-verified but NOT yet registered: round-15 queue (see
-# queries/__init__.py).
+# oracle-verified but NOT registered in queries().
 def cep_sql_error_runs(spark, sf_dir):
     """MAXIMAL consecutive error runs per user via the SQL
     ``MATCH_RECOGNIZE`` front end (cep/match_recognize.py): greedy
@@ -1562,8 +1558,7 @@ WHERE s.event_type = 'signup' AND b.nxt_type = 'error'
 
 # --- strict negation / notNext (registered round 10) --------------------
 #
-# Pre-staged and oracle-verified in round 9; registered in the round-10
-# rotation per the plan in queries/__init__.py.
+# Pre-staged and oracle-verified in round 9; registered in round 10.
 
 def cep_purchase_no_immediate_error(spark, sf_dir):
     """Strict negation — Flink CEP's ``notNext``, completing the

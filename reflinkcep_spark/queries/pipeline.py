@@ -86,18 +86,6 @@ def dedup_clusters(spark, sf_dir):
     return dedup.duplicate_clusters(pairs, check_convergence=True)
 
 
-def dedup_clusters_one_round(spark, sf_dir):
-    """Audit-only variant (NOT registered): dedup_clusters with
-    rounds=1, so PLANS.md records the exact physical shape of ONE
-    pointer-jumping round — the unit the scale claim multiplies.  The
-    registered query's 4-round plan is this shape repeated behind lazy
-    localCheckpoint truncation points (functions/dedup.py:709), so
-    auditing the unit is the honest per-round counter record; the full
-    unrolled plan would bury the counters in checkpoint boilerplate."""
-    pairs = dedup.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5, n=3)
-    return dedup.duplicate_clusters(pairs, rounds=1)
-
-
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE pairs AS ({SQL_NGRAM_JACCARD}),
 edges AS (
@@ -1678,7 +1666,7 @@ def text_bigram_lift(spark, sf_dir):
     # to materialize at any corpus scale), and take the token total as
     # Σn over it instead of a separate corpus-wide count.  Together: 4
     # scan→tokenize passes become 2 (one for unigram counts, one for
-    # bigrams; plans/r14/text_bigram_lift_{before,after}.txt).
+    # bigrams).
     ucnt = uni.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     ucnt = ucnt.localCheckpoint(eager=False)
     tot = ucnt.agg(F.sum("n").alias("N"))
@@ -1824,7 +1812,7 @@ GROUP BY c.doc_id
 # --- token-budget quota sample (registered round 8) --------------------
 #
 # doc_token_budget was pre-staged (written + oracle-verified) in
-# round 7 and registered in the round-8 rotation (queries/__init__.py).
+# round 7 and registered in round 8.
 
 def doc_token_budget(spark, sf_dir):
     """Token-budgeted mixture building: per source, the deterministic
@@ -2035,8 +2023,7 @@ GROUP BY b.vec_id, b.cell
 
 # --- DSIR importance weighting (registered round 10) --------------------
 #
-# Pre-staged and oracle-verified in round 9; registered in the round-10
-# rotation per the plan in queries/__init__.py.
+# Pre-staged and oracle-verified in round 9; registered in round 10.
 
 def doc_importance_weights(spark, sf_dir):
     """DSIR data selection (Xie et al. 2023): hashed-bigram importance
@@ -2101,8 +2088,7 @@ FROM toks d LEFT JOIN scored s USING (doc_id)
 
 # --- intra-document paragraph dedup (registered round 10) ---------------
 #
-# Pre-staged and oracle-verified in round 9; registered in the round-10
-# rotation per the plan in queries/__init__.py.
+# Pre-staged and oracle-verified in round 9; registered in round 10.
 
 def text_dedup_paragraphs(spark, sf_dir):
     """Intra-document repetition removal (RefinedWeb/MassiveText exact
@@ -2151,8 +2137,7 @@ FROM toks t LEFT JOIN agg a USING (doc_id)
 
 # --- quality-aware canonicalization (registered round 10) ---------------
 #
-# Pre-staged and oracle-verified in round 9; registered in the round-10
-# rotation per the plan in queries/__init__.py.
+# Pre-staged and oracle-verified in round 9; registered in round 10.
 
 def dedup_canonical_quality(spark, sf_dir):
     """Quality-aware canonical-doc selection: resolve the n-gram-
@@ -2228,8 +2213,7 @@ FROM r WHERE rn = 1
 
 # --- CCNet quality tiers (registered round 10) --------------------------
 #
-# Pre-staged and oracle-verified in round 9; registered in the round-10
-# rotation per the plan in queries/__init__.py.
+# Pre-staged and oracle-verified in round 9; registered in round 10.
 
 def text_quality_buckets(spark, sf_dir):
     """CCNet-style head/middle/tail quality tiers (Wenzek et al. 2020)
@@ -2277,9 +2261,8 @@ GROUP BY 1
 
 # --- fuzzy intra-document paragraph dedup (registered round 11) -----
 #
-# text_dedup_paragraphs_fuzzy was pre-staged in round 10 and REGISTERED in the
-# round-11 rotation (QUERIES/ORACLES below; window plan in
-# queries/__init__.py).
+# text_dedup_paragraphs_fuzzy was pre-staged in round 10 and REGISTERED in
+# round 11.
 
 def text_dedup_paragraphs_fuzzy(spark, sf_dir):
     """NEAR-duplicate intra-doc unit removal (Gopher's duplicate-line
@@ -2345,9 +2328,8 @@ FROM toks t LEFT JOIN agg a USING (doc_id)
 
 # --- per-source contamination matrix (registered round 11) ----------
 #
-# doc_contamination_matrix was pre-staged in round 10 and REGISTERED in the
-# round-11 rotation (QUERIES/ORACLES below; window plan in
-# queries/__init__.py).
+# doc_contamination_matrix was pre-staged in round 10 and REGISTERED in
+# round 11.
 
 def doc_contamination_matrix(spark, sf_dir):
     """Per-(source × benchmark) contamination matrix: docs 0-24 stand
@@ -2402,9 +2384,8 @@ GROUP BY source, bench
 
 # --- token-exact mixture rebalancing (registered round 11) ----------
 #
-# doc_mixture_rebalance was pre-staged in round 10 and REGISTERED in the
-# round-11 rotation (QUERIES/ORACLES below; window plan in
-# queries/__init__.py).
+# doc_mixture_rebalance was pre-staged in round 10 and REGISTERED in
+# round 11.
 
 def doc_mixture_rebalance(spark, sf_dir):
     """Token-count-exact mixture rebalancing: re-cut the corpus to a
@@ -2452,8 +2433,7 @@ WHERE c.cum_tok <= w.src_budget
 # --- URL-canonical dedup (registered round 12) ---------------------------
 #
 # dedup_url_canonical was pre-staged + oracle-verified round 11 and
-# REGISTERED in the round-12 rotation (see queries/__init__.py).
-# Register it in the round-12 rotation.
+# REGISTERED in round 12.
 
 def dedup_url_canonical(spark, sf_dir):
     """URL-level dedup groups (functions/web.py — RefinedWeb's first
@@ -2567,7 +2547,7 @@ FROM canon GROUP BY 1
 
 
 # doc_domain_caps is implemented and locally oracle-verified but NOT
-# yet registered: round-14/15 queue (see queries/__init__.py).
+# registered in queries().
 # The cap is a module constant so the Spark query and the SQL oracle
 # share ONE definition (the CMS_PROBE_TERMS convention).
 _DOMAIN_CAP = 10
@@ -2696,8 +2676,7 @@ FROM toks t LEFT JOIN agg a USING (doc_id)
 # --- cross-document NEAR-dup paragraph removal (registered round 12) -----
 #
 # text_dedup_xdoc_fuzzy was pre-staged + oracle-verified round 11 and
-# REGISTERED in the round-12 rotation.  (Short name by design: the
-# bench summary line has a 1.9 kB rail — bench.py:~28.)
+# REGISTERED in round 12.
 
 def text_dedup_xdoc_fuzzy(spark, sf_dir):
     """CROSS-document NEAR-dup unit removal (functions/text.py
@@ -2938,12 +2917,10 @@ CROSS JOIN tot t
 """
 
 
-# --- round-13 queue (PRE-STAGED; see queries/__init__.py) ----------------
+# --- registered round 13 -------------------------------------------------
 #
-# Four operators implemented and locally oracle-verified but NOT
-# registered: the round-12 rotation is already planned at 5
-# registrations + 26 sit-outs (window arithmetic in
-# queries/__init__.py).  Register these in round 13.  Pinned by
+# Four operators pre-staged and oracle-verified in round 12 and
+# registered in round 13.  Pinned by
 # tests/test_check_oracles.py::test_prestaged_round13_queries_match_oracles.
 
 def doc_hll_registers(spark, sf_dir):
@@ -3190,7 +3167,7 @@ GROUP BY cluster
 """
 
 
-# --- round-14 seed (PRE-STAGED; see queries/__init__.py) -----------------
+# --- registered round 14 -------------------------------------------------
 
 def doc_snapshot_diff(spark, sf_dir):
     """CDC-style snapshot reconciliation
@@ -3390,8 +3367,7 @@ FROM documents
 """
 
 
-# multimodal_ppm_stats is implemented and locally oracle-verified but
-# NOT yet registered: round-14/15 queue (see queries/__init__.py).
+# multimodal_ppm_stats: pre-staged round 12, registered round 14.
 def multimodal_ppm_stats(spark, sf_dir):
     """End-to-end netpbm decode with an ORACLE
     (functions/multimodal.py:ppm_roundtrip_stats): per document, a
@@ -3444,7 +3420,7 @@ FROM g
 
 
 # text_gopher_rules is implemented and locally oracle-verified but NOT
-# yet registered: round-14/15 queue (see queries/__init__.py).
+# registered in queries().
 def text_gopher_rules(spark, sf_dir):
     """Gopher document-format rules
     (functions/text.py:gopher_format_flags): per document, the six
@@ -3508,7 +3484,7 @@ FROM c
 
 
 # dedup_incremental is implemented and locally oracle-verified but NOT
-# yet registered: round-14/15 queue (see queries/__init__.py).
+# registered in queries().
 def dedup_incremental(spark, sf_dir):
     """Incremental ingest dedup (functions/dedup.py:incremental_dedup)
     — the ASYMMETRIC production shape: docs 0-399 are the frozen
@@ -3575,7 +3551,7 @@ JOIN first_in_batch f USING (text_hash)
 
 
 # multimodal_avi_stats is implemented and locally oracle-verified but
-# NOT yet registered: round-14/15 queue (see queries/__init__.py).
+# NOT registered in queries().
 def multimodal_avi_stats(spark, sf_dir):
     """End-to-end AVI container decode with an ORACLE
     (functions/multimodal.py:avi_roundtrip_stats) — the VIDEO member
@@ -3606,7 +3582,7 @@ FROM documents
 
 
 # text_boilerplate is implemented and locally oracle-verified but NOT
-# yet registered: round-14/15 queue (see queries/__init__.py).
+# registered in queries().
 def text_boilerplate(spark, sf_dir):
     """jusText-style unit-level boilerplate classification
     (functions/text.py:boilerplate_profile): 8-token units gated on
@@ -3669,7 +3645,7 @@ _CMS_WIDTH, _CMS_DEPTH = 32, 2
 
 
 # doc_cms_estimates is implemented and locally oracle-verified but NOT
-# yet registered: round-14/15 queue (see queries/__init__.py).
+# registered in queries().
 def doc_cms_estimates(spark, sf_dir):
     """Count-Min sketch frequency estimates beside ground truth
     (functions/sketch.py:cms_estimates): per (source, probe term), the

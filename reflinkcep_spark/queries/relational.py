@@ -1451,7 +1451,7 @@ ORDER BY s_name
 #
 # q_min_cost_suppliers, q_important_parts, and q_local_supplier_volume
 # were pre-staged (written + oracle-verified) in round 7 and registered
-# in the round-8 rotation (see queries/__init__.py).
+# in round 8.
 
 def q_min_cost_suppliers(spark, sf_dir):
     """For every ECONOMY part, the EUROPE supplier(s) quoting the

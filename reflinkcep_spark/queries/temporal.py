@@ -364,7 +364,7 @@ GROUP BY 1
 # --- SCD2 history construction ----------------------------------------
 
 # q_scd2_user_status is implemented and locally oracle-verified but
-# NOT yet registered: round-14/15 queue (see queries/__init__.py).
+# NOT registered in queries().
 def q_scd2_user_status(spark, sf_dir):
     """Slowly-changing-dimension (type 2) history build from a change
     log — the warehouse operation that turns an event stream into
@@ -453,7 +453,7 @@ FROM i GROUP BY user_id, version
 # --- Z-order layout audit ---------------------------------------------
 
 # q_events_zorder_stats is implemented and locally oracle-verified but
-# NOT yet registered: round-14/15 queue (see queries/__init__.py).
+# NOT registered in queries().
 def q_events_zorder_stats(spark, sf_dir):
     """Z-order data-layout audit (functions/packing.py:zorder_key —
     the Delta/Iceberg ``ZORDER BY`` primitive as engine-portable

@@ -109,6 +109,13 @@ def match_pattern_stream(
     * only here: ``idle_timeout_ms`` drops a key's run-set after that
       much processing-time inactivity, and ``event_time_col`` (below).
 
+    ``idle_timeout_ms`` runs the state under Spark's processing-time
+    timeout, and once the input is used up Spark keeps starting no-data
+    micro-batches to look for expired keys.  So with it set, a query under
+    ``trigger(availableNow=True)`` never terminates, and its
+    ``processAllAvailable()`` never returns: the caller must stop the
+    query itself.
+
     ``event_time_col`` enables the watermark-gated reorder buffer (see
     module docstring): pass the timestamp column AND apply
     ``df.withWatermark(event_time_col, delay)`` before calling.

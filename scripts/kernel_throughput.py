@@ -13,8 +13,8 @@ engine is timed over MEDIAN-OF-5 interleaved passes (ours/reference
 alternating, so a load burst hits both engines rather than one), the
 spread (max/min) is reported beside the median, and a 1-minute load
 average above ``--max-load`` (default 8.0 on this 32-cpu box) prints a
-DO-NOT-TRUST warning — the SCALING.md don't-probe-under-load lesson,
-operationalized.  Match counts are asserted identical on every pass.
+DO-NOT-TRUST warning: a probe taken under load is not comparable.
+Match counts are asserted identical on every pass.
 
 Usage: python3 scripts/kernel_throughput.py [N_EVENTS] [--max-load L]
 """
@@ -113,8 +113,7 @@ def main() -> int:
     if load1 > max_load:
         print(
             f"WARNING: 1-min load {load1:.1f} > {max_load:.1f} — box is busy; "
-            "DO NOT TRUST this probe for cross-round comparison "
-            "(SCALING.md: don't probe under load)"
+            "DO NOT TRUST this probe for cross-round comparison"
         )
 
     events = gen(n)

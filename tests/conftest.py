@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -16,3 +17,25 @@ def spark():
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def drain_stream(q, timeout_s=120):
+    """Wait until streaming query ``q`` has processed all its input,
+    then stop it.
+
+    A query that terminates on its own (``availableNow`` without state
+    timeouts) ends the wait.  Under ``idle_timeout_ms`` Spark keeps
+    starting no-data micro-batches once the input is used up, so such a
+    query never terminates and ``processAllAvailable`` never returns;
+    the first no-data batch marks the input as processed, because a
+    batch takes new data whenever the source has any."""
+    deadline = time.monotonic() + timeout_s
+    try:
+        while q.isActive and not any(p.numInputRows == 0 for p in q.recentProgress):
+            assert time.monotonic() < deadline, "stream did not drain its input"
+            time.sleep(0.1)
+        err = q.exception()
+        if err is not None:
+            raise err
+    finally:
+        q.stop()

@@ -59,10 +59,8 @@ def test_int32_vs_int64_is_same_kind():
 
 
 def test_prestaged_round14_queries_match_oracles(spark):
-    """Round-14 seed queue (the registration-capacity note in
-    queries/__init__.py applies: pair future registrations with
-    retirements).  Same contract as the round-12/13 pins — those
-    queues graduated into the registry and are now covered by the
+    """Round-14 seed queue.  Same contract as the round-12/13 pins —
+    those queues graduated into the registry and are now covered by the
     full check_oracles replay; pin every queued query oracle-green at
     sf0.001 so round-14 registration is a dict edit, not a debugging
     session."""
@@ -101,8 +99,7 @@ def test_prestaged_round14_queries_match_oracles(spark):
 
 
 def test_prestaged_round15_queries_match_oracles(spark):
-    """Round-14/15 queue additions built in round 12 (the registration-
-    capacity pairing note in queries/__init__.py applies): Count-Min
+    """Round-14/15 queue additions built in round 12: Count-Min
     estimates, SCD2 history build, per-domain caps, Gopher format
     rules.  Same contract as the earlier queue pins: oracle-green at
     sf0.001 every pytest run, so registration is a dict edit."""
@@ -163,11 +160,10 @@ def test_prestaged_round15_queries_match_oracles(spark):
 
 
 def test_prestaged_round16_queries_match_oracles(spark):
-    """Round-16 queue addition built in round 14 (the queue split in
-    queries/__init__.py): the MATCH_RECOGNIZE DEFINE-navigation query.
-    Same contract as the earlier queue pins — oracle-green at sf0.001
-    every pytest run (3-SF verified at build time: 343 / 3,309 /
-    33,053 rows), so registration is a dict edit."""
+    """Round-16 queue addition built in round 14: the MATCH_RECOGNIZE
+    DEFINE-navigation query.  Same contract as the earlier queue pins —
+    oracle-green at sf0.001 every pytest run (3-SF verified at build
+    time: 343 / 3,309 / 33,053 rows), so registration is a dict edit."""
     import duckdb
 
     from reflinkcep_spark.queries.cep_queries import (

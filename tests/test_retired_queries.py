@@ -1,12 +1,11 @@
 """Value coverage for RETIRED queries.
 
-Retirement (queries/__init__.py:RETIRED, round 12) reclaims a driver
-window SLOT, not the check: every retired query's function and oracle
-SQL stay in their module, and this test replays the full driver-style
-compare (row count + sorted columns + dtype-kind + exact values)
+Retirement (queries/__init__.py:RETIRED) drops a query from
+``queries()`` / ``oracle_sql()``, not the check: every retired query's
+function and oracle SQL stay in their module, and this test replays the
+full oracle compare (row count + sorted columns + dtype-kind + exact values)
 against DuckDB at sf0.001 each pytest run.  A retired operator that
-regresses therefore still fails CI — it just no longer consumes one of
-the 50 per-round driver slots.
+regresses therefore still fails CI.
 """
 
 import os

@@ -114,7 +114,7 @@ def test_unknown_target_rejected_at_build_time():
 
 
 def test_spark_kernel_runs_parameterized_strategy(spark):
-    """The grouped-map kernel must reproduce the pure-engine matches
+    """The batch NFA kernel must reproduce the pure-engine matches
     for a parameterized strategy (which can never fast-path)."""
     from reflinkcep_spark.operators import match_pattern
 

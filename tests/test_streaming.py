@@ -15,6 +15,7 @@ import pytest
 from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern
 from reflinkcep_spark.streaming import match_pattern_stream
+from tests.conftest import drain_stream
 
 Q_SEQ = """
 type: query
@@ -50,6 +51,47 @@ def _rows(n_keys=3):
 
 
 SCHEMA = "user_id int, id long, type string, name long, price long"
+
+
+def _write_parts(spark, src, chunks, first=0):
+    """One parquet file per chunk (``part{first}``, ``part{first+1}``…)
+    with strictly increasing mtimes, so ``maxFilesPerTrigger=1`` replays
+    them in order, one micro-batch each."""
+    src.mkdir(exist_ok=True)
+    for i, chunk in enumerate(chunks, first):
+        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
+            str(src / f"part{i}")
+        )
+        t = time.time() + i
+        for root, _dirs, files in os.walk(src / f"part{i}"):
+            for f in files:
+                os.utime(os.path.join(root, f), (t, t))
+
+
+def _stream_writer(spark, src, query, checkpoint, **kw):
+    """A writer that replays ``src`` through ``match_pattern_stream``,
+    one file per micro-batch."""
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/part*")
+    )
+    out = match_pattern_stream(
+        stream, query, order_by="id", partition_by="user_id",
+        type_col="type", **kw,
+    )
+    return (
+        out.writeStream.outputMode("append")
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+    )
+
+
+def _run_stream(spark, src, query, sink, checkpoint, **kw):
+    """Replay ``src`` into the memory table ``sink``; returns its rows."""
+    writer = _stream_writer(spark, src, query, checkpoint, **kw)
+    drain_stream(writer.format("memory").queryName(sink).start())
+    return spark.table(sink).collect()
 
 
 def _canon(rows):
@@ -97,37 +139,15 @@ def test_stream_skip_strategy_state(spark, tmp_path):
     )
     assert want
 
-    src = tmp_path / "src"
-    src.mkdir()
     by_order = sorted(rows, key=lambda r: r[1])
-    for i in range(0, len(by_order), 4):
-        spark.createDataFrame(by_order[i : i + 4], SCHEMA).coalesce(1).write.parquet(
-            str(src / f"part{i}")
-        )
-        t = time.time() + i
-        for root, _dirs, files in os.walk(src / f"part{i}"):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
+    # 2 ids x 2 keys per file
+    chunks = [by_order[i : i + 4] for i in range(0, len(by_order), 4)]
+    _write_parts(spark, tmp_path / "src", chunks)
+    got = _run_stream(
+        spark, tmp_path / "src", query, f"stream_skip_{os.getpid()}",
+        tmp_path / "ckpt",
     )
-    out = match_pattern_stream(
-        stream, query, order_by="id", partition_by="user_id", type_col="type"
-    )
-    sink = f"stream_skip_{os.getpid()}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _canon_caps(spark.table(sink).collect(), ["errs"]) == want
+    assert _canon_caps(got, ["errs"]) == want
 
 
 Q_ITER = """
@@ -165,37 +185,15 @@ def test_stream_iterative_condition_state(spark, tmp_path):
     )
     assert want
 
-    src = tmp_path / "src"
-    src.mkdir()
     by_order = sorted(rows, key=lambda r: r[1])
-    for i in range(0, len(by_order), 4):  # 2 ids x 2 keys per file
-        spark.createDataFrame(by_order[i : i + 4], SCHEMA).coalesce(1).write.parquet(
-            str(src / f"part{i}")
-        )
-        t = time.time() + i
-        for root, _dirs, files in os.walk(src / f"part{i}"):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
+    # 2 ids x 2 keys per file
+    chunks = [by_order[i : i + 4] for i in range(0, len(by_order), 4)]
+    _write_parts(spark, tmp_path / "src", chunks)
+    got = _run_stream(
+        spark, tmp_path / "src", query, f"stream_iter_{os.getpid()}",
+        tmp_path / "ckpt",
     )
-    out = match_pattern_stream(
-        stream, query, order_by="id", partition_by="user_id", type_col="type"
-    )
-    sink = f"stream_iter_{os.getpid()}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _canon_caps(spark.table(sink).collect(), ["run"]) == want
+    assert _canon_caps(got, ["run"]) == want
 
 
 def _canon_caps(rows, names):
@@ -220,44 +218,61 @@ def test_stream_matches_batch(spark, tmp_path, idle_timeout_ms):
     assert want  # the case must be non-trivial
 
     # Split each key's stream into 3 chronological files.
-    src = tmp_path / "src"
-    src.mkdir()
     by_order = sorted(rows, key=lambda r: r[1])
-    cuts = [by_order[0:8], by_order[8:16], by_order[16:24]]
-    for i, chunk in enumerate(cuts):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
-            str(src / f"part{i}")
+    _write_parts(
+        spark, tmp_path / "src",
+        [by_order[0:8], by_order[8:16], by_order[16:24]],
+    )
+    got = _canon(
+        _run_stream(
+            spark, tmp_path / "src", query,
+            f"stream_cep_{os.getpid()}_{1 if idle_timeout_ms else 0}",
+            tmp_path / "ckpt", idle_timeout_ms=idle_timeout_ms,
         )
-        t = time.time() + i  # strictly increasing mtimes => batch order
-        for root, _dirs, files in os.walk(src / f"part{i}"):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
     )
-    out = match_pattern_stream(
-        stream,
-        query,
-        order_by="id",
-        partition_by="user_id",
-        type_col="type",
-        idle_timeout_ms=idle_timeout_ms,
-    )
-    sink = f"stream_cep_{os.getpid()}_{1 if idle_timeout_ms else 0}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = _canon(spark.table(sink).collect())
     assert got == want
+
+
+def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
+    """A stream stopped between micro-batches and restarted on the same
+    checkpoint resumes every key's run-set and ``match_seq``: the rows
+    of both runs together equal one uninterrupted run and the batch
+    kernel on the whole input, with no match lost or emitted twice."""
+    query = Query.from_yaml(Q_SEQ)
+    rows = _rows()
+    want = _canon(
+        match_pattern(
+            spark.createDataFrame(rows, SCHEMA), query, order_by="id",
+            partition_by="user_id", type_col="type", allow_fastpath=False,
+        ).collect()
+    )
+    # Per key, ids 1-3 | 4-5 | 6-8.  The first run ends after id 5 with
+    # the burst (1, 3) matched and a run holding burst event 3 still
+    # open; after the restart, ids 6 and 8 complete it as (3, 6) → 8.
+    by_id = sorted(rows, key=lambda r: r[1])
+    cuts = [by_id[0:9], by_id[9:15], by_id[15:24]]
+    src = tmp_path / "src"
+
+    # The memory sink cannot recover from a checkpoint; the file sink
+    # can, and its output directory holds the rows of every run.
+    def run(name):
+        out = tmp_path / name
+        writer = _stream_writer(spark, src, query, tmp_path / f"ckpt_{name}")
+        drain_stream(writer.format("parquet").start(str(out)))
+        return spark.read.parquet(str(out)).collect()
+
+    _write_parts(spark, src, cuts[:2])
+    first = run("restarted")
+    _write_parts(spark, src, cuts[2:], first=2)
+    both = run("restarted")
+    full = run("uninterrupted")
+
+    seen = set(map(str, first))
+    second = [r for r in both if str(r) not in seen]
+    assert first and len(second) == len(both) - len(first) > 0
+    assert (3, 6) in {tuple(e["id"] for e in r["burst"]) for r in second}
+    assert sorted(map(str, both)) == sorted(map(str, full))
+    assert _canon(both) == want
 
 
 Q_SKIP_TO_LAST = """
@@ -302,37 +317,15 @@ def test_stream_parameterized_skip_state(spark, tmp_path):
     )
     assert want
 
-    src = tmp_path / "src"
-    src.mkdir()
     by_order = sorted(rows, key=lambda r: r[1])
-    for i in range(0, len(by_order), 4):
-        spark.createDataFrame(by_order[i : i + 4], SCHEMA).coalesce(1).write.parquet(
-            str(src / f"part{i}")
-        )
-        t = time.time() + i
-        for root, _dirs, files in os.walk(src / f"part{i}"):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
+    # 2 ids x 2 keys per file
+    chunks = [by_order[i : i + 4] for i in range(0, len(by_order), 4)]
+    _write_parts(spark, tmp_path / "src", chunks)
+    got = _run_stream(
+        spark, tmp_path / "src", query, f"stream_skipto_{os.getpid()}",
+        tmp_path / "ckpt",
     )
-    out = match_pattern_stream(
-        stream, query, order_by="id", partition_by="user_id", type_col="type"
-    )
-    sink = f"stream_skipto_{os.getpid()}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _canon_caps(spark.table(sink).collect(), ["b", "c"]) == want
+    assert _canon_caps(got, ["b", "c"]) == want
 
 
 def test_load_engine_coerces_legacy_eps_tuple():

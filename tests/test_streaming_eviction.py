@@ -23,6 +23,7 @@ import time
 from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern
 from reflinkcep_spark.streaming import match_pattern_stream
+from tests.conftest import drain_stream
 
 Q_PAIR = """
 type: query
@@ -71,7 +72,7 @@ def _run_stream(spark, src, schema, tmp_path, sink, **kw):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain_stream(q)
     return spark.table(sink).collect()
 
 

@@ -6,9 +6,9 @@ per key — run pruning (cep/runtime.py) drops runs by ``stamp - first >
 within`` and assumes monotone stamps.  Before round 14 the precondition
 was only documented: real data where event order and event time
 disagree yielded silently dropped or spurious matches.  Both kernels
-now CHECK it — the batch kernel with a vectorized per-group pass, the
-streaming kernel per event with the last stamp persisted in the key's
-state so regressions ACROSS micro-batches are caught too.
+now CHECK it through ``KeyMatcher``'s per-event check (cep/keyed.py),
+with the last stamp persisted in the key's state so regressions ACROSS
+micro-batches are caught too.
 """
 
 from __future__ import annotations
