@@ -27,11 +27,14 @@ def drain_stream(q, timeout_s=120):
     timeouts) ends the wait.  Under ``idle_timeout_ms`` Spark keeps
     starting no-data micro-batches once the input is used up, so such a
     query never terminates and ``processAllAvailable`` never returns;
-    the first no-data batch marks the input as processed, because a
-    batch takes new data whenever the source has any."""
+    a no-data batch marks the input as processed, because a batch takes
+    new data whenever the source has any.  The query's first batch is
+    the exception: a query restarted on a checkpoint first re-runs the
+    batch its last run left unfinished, which may be a no-data batch
+    planned before the new input arrived."""
     deadline = time.monotonic() + timeout_s
     try:
-        while q.isActive and not any(p.numInputRows == 0 for p in q.recentProgress):
+        while q.isActive and not any(p.numInputRows == 0 for p in q.recentProgress[1:]):
             assert time.monotonic() < deadline, "stream did not drain its input"
             time.sleep(0.1)
         err = q.exception()

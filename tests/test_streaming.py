@@ -7,6 +7,7 @@ survive the state store round trip for matches that span batches.
 Results are compared with the batch kernel on the unsplit input.
 """
 
+import datetime
 import os
 import time
 
@@ -51,15 +52,17 @@ def _rows(n_keys=3):
 
 
 SCHEMA = "user_id int, id long, type string, name long, price long"
+TS_SCHEMA = "user_id int, id long, ts timestamp, type string, name long, price long"
+DELAY_S = 60
 
 
-def _write_parts(spark, src, chunks, first=0):
+def _write_parts(spark, src, chunks, first=0, schema=SCHEMA):
     """One parquet file per chunk (``part{first}``, ``part{first+1}``…)
     with strictly increasing mtimes, so ``maxFilesPerTrigger=1`` replays
     them in order, one micro-batch each."""
     src.mkdir(exist_ok=True)
     for i, chunk in enumerate(chunks, first):
-        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
+        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
             str(src / f"part{i}")
         )
         t = time.time() + i
@@ -68,14 +71,17 @@ def _write_parts(spark, src, chunks, first=0):
                 os.utime(os.path.join(root, f), (t, t))
 
 
-def _stream_writer(spark, src, query, checkpoint, **kw):
+def _stream_writer(spark, src, query, checkpoint, schema=SCHEMA, **kw):
     """A writer that replays ``src`` through ``match_pattern_stream``,
-    one file per micro-batch."""
+    one file per micro-batch (under a ``DELAY_S`` watermark in
+    event-time mode)."""
     stream = (
-        spark.readStream.schema(SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src) + "/part*")
     )
+    if "event_time_col" in kw:
+        stream = stream.withWatermark(kw["event_time_col"], f"{DELAY_S} seconds")
     out = match_pattern_stream(
         stream, query, order_by="id", partition_by="user_id",
         type_col="type", **kw,
@@ -233,6 +239,54 @@ def test_stream_matches_batch(spark, tmp_path, idle_timeout_ms):
     assert got == want
 
 
+def _restart_runs(spark, tmp_path, query, cuts, stop_after, **kw):
+    """Replay ``cuts`` (one file each) twice: stopped after the first
+    ``stop_after`` files and restarted on the same checkpoint once the
+    rest are added, and uninterrupted.  Both runs must give the same
+    rows, each run of the restarted stream some of them, and none
+    twice.  Returns the rows after the restart, and all rows.
+
+    The memory sink cannot recover from a checkpoint; the file sink
+    can, and its output directory holds the rows of every run."""
+    src = tmp_path / "src"
+    schema = kw.get("schema", SCHEMA)
+
+    def run(name):
+        out = tmp_path / name
+        writer = _stream_writer(spark, src, query, tmp_path / f"ckpt_{name}", **kw)
+        drain_stream(writer.format("parquet").start(str(out)))
+        return spark.read.parquet(str(out)).collect()
+
+    _write_parts(spark, src, cuts[:stop_after], schema=schema)
+    first = run("restarted")
+    _write_parts(spark, src, cuts[stop_after:], first=stop_after, schema=schema)
+    both = run("restarted")
+    full = run("uninterrupted")
+
+    seen = set(map(str, first))
+    second = [r for r in both if str(r) not in seen]
+    assert first and len(second) == len(both) - len(first) > 0
+    assert sorted(map(str, both)) == sorted(map(str, full))
+    return second, both
+
+
+def _batch(spark, rows, query, schema=SCHEMA, **kw):
+    return match_pattern(
+        spark.createDataFrame(rows, schema), query, order_by="id",
+        partition_by="user_id", type_col="type", allow_fastpath=False, **kw,
+    ).collect()
+
+
+def _split_by_id(rows, *bounds):
+    """Per key, one chunk of ids up to each bound, then the rest."""
+    by_id = sorted(rows, key=lambda r: r[1])
+    out, lo = [], 0
+    for hi in bounds:
+        out.append([r for r in by_id if lo < r[1] <= hi])
+        lo = hi
+    return out + [[r for r in by_id if r[1] > lo]]
+
+
 def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     """A stream stopped between micro-batches and restarted on the same
     checkpoint resumes every key's run-set and ``match_seq``: the rows
@@ -240,39 +294,123 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     kernel on the whole input, with no match lost or emitted twice."""
     query = Query.from_yaml(Q_SEQ)
     rows = _rows()
-    want = _canon(
-        match_pattern(
-            spark.createDataFrame(rows, SCHEMA), query, order_by="id",
-            partition_by="user_id", type_col="type", allow_fastpath=False,
-        ).collect()
-    )
+    want = _canon(_batch(spark, rows, query))
     # Per key, ids 1-3 | 4-5 | 6-8.  The first run ends after id 5 with
     # the burst (1, 3) matched and a run holding burst event 3 still
     # open; after the restart, ids 6 and 8 complete it as (3, 6) → 8.
-    by_id = sorted(rows, key=lambda r: r[1])
-    cuts = [by_id[0:9], by_id[9:15], by_id[15:24]]
-    src = tmp_path / "src"
-
-    # The memory sink cannot recover from a checkpoint; the file sink
-    # can, and its output directory holds the rows of every run.
-    def run(name):
-        out = tmp_path / name
-        writer = _stream_writer(spark, src, query, tmp_path / f"ckpt_{name}")
-        drain_stream(writer.format("parquet").start(str(out)))
-        return spark.read.parquet(str(out)).collect()
-
-    _write_parts(spark, src, cuts[:2])
-    first = run("restarted")
-    _write_parts(spark, src, cuts[2:], first=2)
-    both = run("restarted")
-    full = run("uninterrupted")
-
-    seen = set(map(str, first))
-    second = [r for r in both if str(r) not in seen]
-    assert first and len(second) == len(both) - len(first) > 0
+    second, both = _restart_runs(
+        spark, tmp_path, query, _split_by_id(rows, 3, 5), 2,
+    )
     assert (3, 6) in {tuple(e["id"] for e in r["burst"]) for r in second}
-    assert sorted(map(str, both)) == sorted(map(str, full))
     assert _canon(both) == want
+
+
+def test_stream_restart_under_idle_timeout(spark, tmp_path):
+    """The same restart with the state under a processing-time timeout
+    that never fires: the timeout changes how Spark stores the state,
+    and the open run must still survive the restart."""
+    query = Query.from_yaml(Q_SEQ)
+    rows = _rows()
+    want = _canon(_batch(spark, rows, query))
+    second, both = _restart_runs(
+        spark, tmp_path, query, _split_by_id(rows, 3, 5), 2,
+        idle_timeout_ms=600_000,
+    )
+    assert (3, 6) in {tuple(e["id"] for e in r["burst"]) for r in second}
+    assert _canon(both) == want
+
+
+def test_stream_restart_keeps_the_within_bound(spark, tmp_path):
+    """A run opened before the restart is still bounded by ``within``
+    after it: the open burst (3, 6) spans 3 → 8 = 5 ids, past the bound
+    of 4, and must not complete, while (6, 7) → 8 does."""
+    query = Query.from_yaml(Q_SEQ)
+    rows = _rows()
+    want = _canon(_batch(spark, rows, query, within=4))
+    second, both = _restart_runs(
+        spark, tmp_path, query, _split_by_id(rows, 3, 5), 2, within=4,
+    )
+    bursts = {tuple(e["id"] for e in r["burst"]) for r in both}
+    assert (3, 6) not in bursts
+    assert (6, 7) in {tuple(e["id"] for e in r["burst"]) for r in second}
+    assert _canon(both) == want
+
+
+def test_stream_restart_keeps_data_variables(spark, tmp_path):
+    """A run's data-variable environment (the running sum ``X``) is
+    part of the checkpointed state: per key, ids 1-2 | 3-5 | 6-7 with a
+    stop after id 5, and the run opened at id 5 (``X`` = 3) completes
+    as (5, 6) only if its sum survived the restart."""
+    query = Query.from_yaml(Q_ITER)
+    pairs = [(1, 2), (1, 1), (1, 2), (1, 9), (1, 3), (1, 3), (1, 1)]
+    rows = [
+        (k, i + 1, "e", n, p) for k in range(2) for i, (n, p) in enumerate(pairs)
+    ]
+    want = _canon_caps(_batch(spark, rows, query), ["run"])
+    second, both = _restart_runs(
+        spark, tmp_path, query, _split_by_id(rows, 2, 5), 2,
+    )
+    assert (5, 6) in {tuple(e["id"] for e in r["run"]) for r in second}
+    assert _canon_caps(both, ["run"]) == want
+
+
+def test_stream_restart_keeps_skip_strategy_state(spark, tmp_path):
+    """SkipPastLastEvent's cleared run-set is checkpointed like any
+    other: per key, ids 1-3 | 4-5 | 6-7 with a stop after id 5.  The
+    match (1, 2) cleared the runs opened at ids 2 and 3; a restart that
+    brought them back would emit extra matches after it."""
+    query = Query.from_yaml(Q_SKIP)
+    pairs = [(1, 0), (1, 1), (1, 2), (2, 0), (1, 3), (1, 4), (1, 5)]
+    rows = [
+        (k, i + 1, "e", n, p) for k in range(2) for i, (n, p) in enumerate(pairs)
+    ]
+    want = _canon_caps(_batch(spark, rows, query), ["errs"])
+    second, both = _restart_runs(
+        spark, tmp_path, query, _split_by_id(rows, 3, 5), 2,
+    )
+    assert _canon_caps(both, ["errs"]) == want
+
+
+Q_PAIR = """
+type: query
+patseq:
+  type: combine
+  contiguity: relaxed
+  left: {type: spat, name: a, event: e, cndt: {expr: name == 1}}
+  right: {type: spat, name: b, event: e, cndt: {expr: name == 9}}
+context:
+  schema: {e: [id, name, price]}
+"""
+
+
+def test_stream_restart_keeps_parked_events(spark, tmp_path):
+    """Event-time mode parks events above the watermark in the key's
+    state; a restart must keep them.  Per key, one file each of ids
+    1-3 | 4-6 | 7-9, then 10-12 after the restart, 30 s apart under a
+    60 s delay: the watermark reaches id 4 in the third batch and id 7
+    in the fourth, so ids 5-7, parked at the stop, feed only after the
+    restart and complete (6) → 7.  Ids past the last watermark stay
+    parked in both runs."""
+    query = Query.from_yaml(Q_PAIR)
+    base = datetime.datetime(2024, 1, 1)
+    names = [1, 7, 1, 9, 7, 1, 9, 1, 9, 7, 1, 9]
+    rows = [
+        (k, i + 1, base + datetime.timedelta(seconds=30 * i), "e", n, 0)
+        for k in range(2)
+        for i, n in enumerate(names)
+    ]
+    by_id = sorted(rows, key=lambda r: r[1])
+    cuts = [by_id[i : i + 6] for i in range(0, len(by_id), 6)]
+    want = _canon_caps(
+        _batch(spark, [r for r in rows if r[1] <= 7], query, TS_SCHEMA),
+        ["a", "b"],
+    )
+    second, both = _restart_runs(
+        spark, tmp_path, query, cuts, 3, schema=TS_SCHEMA,
+        event_time_col="ts",
+    )
+    assert {(r["a"][0]["id"], r["b"][0]["id"]) for r in second} == {(6, 7)}
+    assert _canon_caps(both, ["a", "b"]) == want
 
 
 Q_SKIP_TO_LAST = """
