@@ -8,8 +8,11 @@ pattern A¬B matches an A with no B after it inside the match window
 
 Physical strategy mirrors :mod:`reflinkcep_spark.operators.asof` —
 tag + union + ONE ordered window pass per key.  Each left row learns
-the order-key of the first right row strictly after it
-(``first(right_on) over (rows following)``); the absence test is then a
+the order-key of the first right row strictly after it: the window
+reads the key's rows in reverse order, so that row is the ``last``
+right row over the running frame ``(unbounded preceding, -1)``, which
+Spark updates per row (a ``(1, unbounded following)`` frame would be
+recomputed for every row: O(n²) per key).  The absence test is then a
 pure per-row filter.  Cost = one shuffle on the key + one sort: the
 floor for any per-key order-sensitive operator, and the same shape
 whether the span is 30 seconds or unbounded.
@@ -66,15 +69,16 @@ def not_followed_by(
             rhs = rhs.withColumn(c, F.lit(None).cast(dict(lhs.dtypes)[c]))
     unioned = lhs.unionByName(rhs)
 
-    # Right rows sort BEFORE left rows at equal `on` (__side 0 < 1), so
-    # the strictly-following frame (1, unbounded) never contains a
+    # Reverse order: the frame (unbounded preceding, -1) holds the rows
+    # after this one, the nearest last.  Right rows sort AFTER left rows
+    # at equal `on` (__side 1 > 0), so the frame never contains a
     # same-instant right row — that's the strictly-after contract.
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(on).asc(), F.col("__side").asc())
-        .rowsBetween(1, Window.unboundedFollowing)
+        .orderBy(F.col(on).desc(), F.col("__side").desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    nxt: Column = F.first(
+    nxt: Column = F.last(
         F.when(F.col("__side") == 0, F.col(on)), ignorenulls=True
     ).over(w)
 
@@ -130,7 +134,7 @@ def not_next(
             raise ValueError(f"column {c!r} already exists in left frame")
 
     # NULL cond is "not the negated event", never "skip this row": the
-    # window below reads the FIRST following side-0 row, so its flag
+    # window below reads the NEAREST following side-0 row, so its flag
     # must be non-null or a null-cond event would be silently passed
     # over and a later event's flag read in its place.
     rhs = (
@@ -145,17 +149,19 @@ def not_next(
     lhs = lhs.withColumn("__neg", F.lit(None).cast("boolean"))
     unioned = lhs.unionByName(rhs)
 
-    # Stream rows sort BEFORE probe rows at equal `on` (__side 0 < 1):
-    # a probe row's own stream twin is never in its following frame,
-    # so "next" means strictly-after — Flink's contract between steps.
+    # Reverse order: the frame (unbounded preceding, -1) holds the rows
+    # after this one, the nearest last.  Stream rows sort AFTER probe
+    # rows at equal `on` (__side 1 > 0): a probe row's own stream twin
+    # is never in its frame, so "next" means strictly-after — Flink's
+    # contract between steps.
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(on).asc(), F.col("__side").asc())
-        .rowsBetween(1, Window.unboundedFollowing)
+        .orderBy(F.col(on).desc(), F.col("__side").desc())
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
     stream_only = lambda col: F.when(F.col("__side") == 0, col)  # noqa: E731
-    nxt_on = F.first(stream_only(F.col(on)), ignorenulls=True).over(w)
-    nxt_neg = F.first(stream_only(F.col("__neg")), ignorenulls=True).over(w)
+    nxt_on = F.last(stream_only(F.col(on)), ignorenulls=True).over(w)
+    nxt_neg = F.last(stream_only(F.col("__neg")), ignorenulls=True).over(w)
 
     out = unioned.select(
         *left.columns,

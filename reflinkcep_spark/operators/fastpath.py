@@ -15,9 +15,10 @@ Python, no Arrow transfer):
    length.
 4. **Mixed strict/relaxed ``spat`` chains** of any length
    (``a · b ∘ c`` …) → backward propagation of "the first event the
-   automaton cannot skip" as nested structs through window ``min``
-   (relaxed links) / ``lead`` (strict links); one sort, L-1 window
-   passes, no join.
+   automaton cannot skip" as nested structs over the key's rows in
+   reverse order: a running ``last(ignorenulls)`` (relaxed links) or
+   ``lag`` (strict links); one sort shared by every link window, each
+   linear in the key's length, no join.
 5. **All-nd-relaxed ``spat`` chains** (``a ⊙ b ⊙ c``,
    ``followedByAny``) → a cascade of equi-joins on the partition keys
    with a range predicate per link (every increasing tuple of
@@ -25,12 +26,14 @@ Python, no Arrow transfer):
 
 Output schema matches the kernel's
 (keys | match_seq | start_ord | end_ord | per-name capture arrays), so
-``match_pattern`` can dispatch transparently.  Match *sets* are
-identical to the kernel; emission order (hence ``match_seq``
-numbering) can differ for shape 3, where the kernel orders by
-completion event and the fast path by start.  Fast paths decline
-(return ``None``) whenever after-match skip strategies or iterative
-state would change results — those run in the kernel.
+``match_pattern`` can dispatch transparently.  Like the kernel, the
+window plans (shapes 1-4) order a key's rows with NULL ``order_by``
+values last.  Match *sets* are identical to the kernel; emission
+order (hence ``match_seq`` numbering) can differ for shape 3, where
+the kernel orders by completion event and the fast path by start.
+Fast paths decline (return ``None``) whenever after-match skip
+strategies or iterative state would change results — those run in
+the kernel.
 
 Equivalence with the kernel is asserted over the golden corpus in
 tests/test_fastpath.py.
@@ -192,17 +195,24 @@ def _plan_relaxed_chain(
 
     Plan: propagate BACKWARD from the last leaf.  For each leaf
     ``l ≥ 1`` compute per-row ``__m{l}`` = the resolution of link
-    ``l-1`` seen from this row: ``min`` over the following frame of a
-    ``(ord, hit, event, tail)`` struct restricted to blocking rows
-    (relaxed), or ``lead(…, 1)`` (strict).  The ``tail`` field carries
-    the already-computed ``__m{l+1}`` of the RESOLVING row, so one
-    chained struct per start row encodes the entire (unique) run.
-    L-1 window passes over one sort, no join, no Python.
+    ``l-1`` seen from this row, as an ``(ord, hit, event, tail)``
+    struct.  Every link window reads the key's rows in REVERSE order
+    (``order_by`` descending, NULLs first: the kernel feeds NULL stamps
+    last), so the rows after this one are the rows already seen: a
+    relaxed link is the ``last`` non-null blocking struct over the
+    running frame ``(unbounded preceding, -1)`` — the nearest blocking
+    row after this one — and a strict link is ``lag(…, 1)``.  Spark
+    updates a running frame per row, so each link costs O(n) per key
+    (a ``(1, unbounded following)`` frame is recomputed for every row:
+    O(n²)).  The ``tail`` field carries the already-computed
+    ``__m{l+1}`` of the RESOLVING row, so one chained struct per start
+    row encodes the entire (unique) run.  One sort serves all L-1 link
+    windows; no join, no Python.
     """
     base = df.select(*keys, *attr_cols)
     L = len(leaves)
-    w_order = Window.partitionBy(*keys).orderBy(order_by)
-    w_follow = w_order.rowsBetween(1, Window.unboundedFollowing)
+    w_rev = Window.partitionBy(*keys).orderBy(F.col(order_by).desc_nulls_first())
+    w_seen = w_rev.rowsBetween(Window.unboundedPreceding, -1)
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     declared = (
         [str(t) for t in query.schema.keys()] if type_col is not None else None
@@ -217,13 +227,14 @@ def _plan_relaxed_chain(
             fields.append(F.col(tail_col).alias("tail"))
         payload = F.struct(*fields)
         if links[l - 1] == "strict":
-            m = F.lead(payload, 1).over(w_order)
+            m = F.lag(payload, 1).over(w_rev)
         else:
             blocking = is_l
             if declared is not None:
                 blocking = blocking | ~F.col(type_col).isin(declared)
-            # min over (o, …) structs = earliest blocking event.
-            m = F.min(F.when(blocking, payload)).over(w_follow)
+            # Nearest blocking row after this one.  Not ``min`` over the
+            # structs: a NULL ``o`` would sort first there.
+            m = F.last(F.when(blocking, payload), ignorenulls=True).over(w_seen)
         tail_col = f"__m{l}"
         cur = cur.select("*", m.alias(tail_col))
 
@@ -238,7 +249,9 @@ def _plan_relaxed_chain(
     matched = cur.filter(pred)
 
     end_o = paths[-1]["o"]
-    mw = Window.partitionBy(*keys).orderBy(end_o, F.col(order_by))
+    mw = Window.partitionBy(*keys).orderBy(
+        end_o.asc_nulls_last(), F.col(order_by).asc_nulls_last()
+    )
     return matched.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
@@ -314,7 +327,7 @@ def _plan_spat_chain(
 ) -> DataFrame:
     base = df.select(*keys, *attr_cols)
     L = len(chain)
-    w = Window.partitionBy(*keys).orderBy(order_by)
+    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
 
     # Offset j's event attributes live in lead(col, j).
     cols = list(base.columns)
@@ -338,10 +351,9 @@ def _plan_spat_chain(
         return F.struct(*[F.col(f"__l{j}_{c}").alias(c) for c in attr_cols])
 
     end_ord = F.col(order_by) if L == 1 else F.col(f"__l{L - 1}_{order_by}")
-    mw = Window.partitionBy(*keys).orderBy(order_by)
     out = matched.select(
         *keys,
-        (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
+        (F.row_number().over(w) - F.lit(1)).cast("long").alias("match_seq"),
         F.col(order_by).alias("start_ord"),
         end_ord.alias("end_ord"),
         *[
@@ -382,26 +394,27 @@ def _plan_strict_lpat_inf(
 
     base = df.select(*keys, *attr_cols)
     cond = F.expr(_leaf_condition_sql(node, type_col))
-    w = Window.partitionBy(*keys).orderBy(order_by)
+    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
 
     # Islands: adjacency is judged on the FULL per-key stream (strict
     # contiguity), so row-number before filtering; after filtering,
-    # rn - row_number is constant exactly within a maximal run.
+    # rn - row_number is constant exactly within a maximal run.  The
+    # row number also orders each island (NULL stamps last, as the
+    # kernel feeds them).
     qual = base.select(
         *keys,
-        F.col(order_by).alias("__ord"),
         ev.alias("__ev"),
         F.row_number().over(w).alias("__rn"),
         cond.alias("__q"),
     ).filter(F.col("__q"))
-    wq = Window.partitionBy(*keys).orderBy("__ord")
+    wq = Window.partitionBy(*keys).orderBy("__rn")
     islands = (
         qual.withColumn("__grp", F.col("__rn") - F.row_number().over(wq))
         .groupBy(*keys, "__grp")
         .agg(
             F.sort_array(
-                F.collect_list(F.struct(F.col("__ord").alias("o"), F.col("__ev").alias("ev")))
+                F.collect_list(F.struct(F.col("__rn").alias("rn"), F.col("__ev").alias("ev")))
             ).alias("__arr")
         )
         .filter(F.size("__arr") >= n)
@@ -432,7 +445,9 @@ def _plan_strict_lpat_inf(
     )
     start_o = F.element_at("__cap", 1)[order_by]
     end_o = F.element_at("__cap", -1)[order_by]
-    mw = Window.partitionBy(*keys).orderBy(end_o, start_o)
+    mw = Window.partitionBy(*keys).orderBy(
+        end_o.asc_nulls_last(), start_o.asc_nulls_last()
+    )
     return exploded.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
@@ -462,7 +477,7 @@ def _plan_strict_lpat(
     cond = F.expr(_leaf_condition_sql(node, type_col))
     w = (
         Window.partitionBy(*keys)
-        .orderBy(order_by)
+        .orderBy(F.col(order_by).asc_nulls_last())
         .rowsBetween(Window.currentRow, m - 1)
     )
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
@@ -498,7 +513,7 @@ def _plan_strict_lpat(
     )
 
     capture = F.slice(F.transform(F.col("__win"), lambda x: x.ev), 1, F.col("__len"))
-    mw = Window.partitionBy(*keys).orderBy("__ord", "__len")
+    mw = Window.partitionBy(*keys).orderBy(F.col("__ord").asc_nulls_last(), "__len")
     out = lens.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),

@@ -3,6 +3,7 @@ match sets as the NFA kernel (order-insensitive; match_seq excluded for
 the loop fast path where emission order legitimately differs)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern
@@ -233,3 +234,151 @@ def test_fastpath_spat_plan_is_pythonless(spark):
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
     assert "Filter" in plan
+
+
+def _kernel_vs_fast(df, query, **kw):
+    """``(kernel rows, fast-path rows)`` for ``query`` over ``df``."""
+    fast = match_pattern(df, query, allow_fastpath=True, **kw)
+    plan = fast._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, "expected the fast path to be dispatched"
+    slow = match_pattern(df, query, allow_fastpath=False, **kw)
+    return slow.collect(), fast.collect()
+
+
+def test_null_order_value_sorts_last_like_the_kernel(spark):
+    """The kernel feeds a key's NULL ``order_by`` rows last; so must the
+    fast path.  An error with a NULL id completes the funnel opened by
+    the signup and purchase before it."""
+    from reflinkcep_spark.queries.cep_queries import FUNNEL_YAML
+
+    df = spark.createDataFrame(
+        [(1, 1, "signup", 0.0), (1, 2, "purchase", 60.0), (1, None, "error", 0.0)],
+        "user_id long, event_id long, event_type string, value double",
+    )
+    slow, fast = _kernel_vs_fast(
+        df, Query.from_yaml(FUNNEL_YAML), order_by="event_id",
+        partition_by="user_id", type_col="event_type",
+    )
+    for rows in (slow, fast):
+        assert [(r["user_id"], r["match_seq"], r["start_ord"], r["end_ord"])
+                for r in rows] == [(1, 0, 1, None)]
+        assert [e["event_id"] for e in rows[0]["buy"]] == [2]
+
+
+LOOP_TAIL = [(1, 1), (1, 2)]
+CHAIN_TAIL = [(1, 1), (2, 0), (3, 0)]
+
+
+@pytest.mark.parametrize(
+    "qyaml,names,with_seq,tail",
+    [(Q_SPAT, ["a1"], True, LOOP_TAIL), (Q_CHAIN, ["a", "b", "c"], True, CHAIN_TAIL),
+     (Q_LPAT, ["al"], False, LOOP_TAIL), (Q_REL_PAIR, ["a", "b"], True, CHAIN_TAIL),
+     (_chain_yaml(["relaxed", "relaxed"]), ["a", "b", "c"], True, CHAIN_TAIL),
+     (_chain_yaml(["strict", "relaxed"]), ["a", "b", "c"], True, CHAIN_TAIL),
+     (_chain_yaml(["relaxed", "strict"]), ["a", "b", "c"], True, CHAIN_TAIL),
+     (Q_LPAT_INF, ["al"], False, LOOP_TAIL)],
+    ids=["spat", "chain3", "strict-lpat", "relaxed-pair", "relaxed3",
+         "strict-relaxed", "relaxed-strict", "strict-lpat-inf"],
+)
+def test_fastpath_equals_kernel_with_null_order_value(spark, qyaml, names, with_seq, tail):
+    """Every window-based fast path against the kernel when a key's
+    last event has a NULL id: it is listed first in the input, sorts
+    last (the kernel feeds NULL stamps last) and completes a match.
+    The nd-relaxed join cascade is not covered: its range predicate
+    drops NULL ids."""
+    stream = STREAM + tail
+    rows = [
+        (k, i + 1 if i < len(stream) - 1 else None, "e", *stream[i])
+        for k in range(3)
+        for i in [len(stream) - 1, *range(len(stream) - 1)]
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id int, id long, type string, name long, price long"
+    )
+    slow, fast = _kernel_vs_fast(
+        df, Query.from_yaml(qyaml), order_by="id", partition_by="user_id",
+        type_col="type",
+    )
+    assert _canon(fast, names, with_seq) == _canon(slow, names, with_seq)
+    assert any(r["end_ord"] is None for r in slow)
+
+
+LONG_FUNNEL = """
+type: query
+patseq:
+  type: combine
+  contiguity: relaxed
+  left:
+    type: combine
+    contiguity: {l1}
+    left:
+      type: combine
+      contiguity: relaxed
+      left: {{type: spat, name: reg, event: signup, cndt: {{expr: "True"}}}}
+      right: {{type: spat, name: buy, event: purchase, cndt: {{expr: value > 50}}}}
+    right: {{type: spat, name: pay, event: payment, cndt: {{expr: value > 20}}}}
+  right: {{type: spat, name: err, event: error, cndt: {{expr: "True"}}}}
+context:
+  strategy: {strategy}
+  schema: {{signup: [], purchase: [], payment: [], error: [], click: []}}
+"""
+
+
+def _long_keys(n_keys=3, n_events=2000, seed=7):
+    """``n_keys`` keys of ``n_events`` events each; ``crash`` is not in
+    LONG_FUNNEL's schema, so it kills every open run."""
+    import random
+
+    rng = random.Random(seed)
+    types = ["signup", "purchase", "payment", "error", "click", "crash"]
+    weights = [0.15, 0.3, 0.2, 0.12, 0.2, 0.03]
+    return [
+        (k, k * 10_000 + i, rng.choices(types, weights)[0], rng.randint(1, 100))
+        for k in range(n_keys)
+        for i in range(n_events)
+    ]
+
+
+def _replay_long(rows, query, within):
+    """The oracle: one ``MatchEngine`` per key over its rows in id order."""
+    from reflinkcep_spark.cep.compiler import compile_query
+    from reflinkcep_spark.cep.runtime import MatchEngine
+
+    automaton = compile_query(query)
+    out = []
+    for k in sorted({r[0] for r in rows}):
+        recs = [{"id": i, "type": t, "value": v} for kk, i, t, v in rows if kk == k]
+        engine = MatchEngine(automaton, query.strategy, within)
+        for rec in recs:
+            for m in engine.feed(rec["type"], rec, rec["id"]):
+                caps = tuple(tuple(recs[p]["id"] for p in m.captures[n]) for n in query.names)
+                out.append((k, caps[0][0], caps[-1][-1], caps))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("within", [None, 40])
+@pytest.mark.parametrize("strategy", ["NoSkip", "SkipToNext"])
+@pytest.mark.parametrize("l1", ["relaxed", "strict"])
+def test_relaxed_chain_long_keys_equal_replay(spark, l1, strategy, within):
+    """The relaxed-chain planner on keys long enough for a quadratic
+    window frame to show, against a ``MatchEngine`` replay.  ``within``
+    composes with the plan as the span filter ``match_pattern``
+    applies."""
+    query = Query.from_yaml(LONG_FUNNEL.format(l1=l1, strategy=strategy))
+    rows = _long_keys()
+    df = spark.createDataFrame(rows, "user_id long, id long, type string, value long")
+    fast = try_fast_path(
+        df, query, order_by="id", keys=["user_id"], type_col="type",
+        attr_cols=["id", "type", "value"],
+    )
+    assert fast is not None
+    if within is not None:
+        fast = fast.filter(F.col("end_ord") - F.col("start_ord") <= within)
+    got = sorted(
+        (r["user_id"], r["start_ord"], r["end_ord"],
+         tuple(tuple(e["id"] for e in r[n]) for n in query.names))
+        for r in fast.collect()
+    )
+    want = _replay_long(rows, query, within)
+    assert got == want
+    assert len(want) > 50

@@ -1,0 +1,100 @@
+"""Plan guard for the per-key window operators: the fast-path shapes
+and both absence operators.
+
+Spark recomputes a ``(1, unbounded following)`` frame for every row, so
+one in a per-key plan makes it quadratic in the key's length; a running
+frame (``unbounded preceding`` to an offset) is updated per row.  The
+relaxed chain also keeps its shape: one Exchange and one Sort serve
+every link window.
+"""
+
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+from reflinkcep_spark import Query
+from reflinkcep_spark.operators import match_pattern, not_followed_by, not_next
+from tests.test_fastpath import (
+    Q_CHAIN, Q_LPAT, Q_LPAT_INF, Q_LPAT_INF_STN, Q_REL_PAIR, Q_SPAT, STREAM,
+    _chain_yaml, _df,
+)
+
+RELAXED = {
+    "relaxed-pair": Q_REL_PAIR,
+    "relaxed3": _chain_yaml(["relaxed", "relaxed"]),
+    "strict-relaxed": _chain_yaml(["strict", "relaxed"]),
+    "relaxed-strict": _chain_yaml(["relaxed", "strict"]),
+    "relaxed3-skiptonext": _chain_yaml(["relaxed", "relaxed"], "SkipToNext"),
+}
+SHAPES = {
+    "spat": Q_SPAT,
+    "chain3": Q_CHAIN,
+    "strict-lpat": Q_LPAT,
+    "strict-lpat-inf": Q_LPAT_INF,
+    "strict-lpat-inf-skiptonext": Q_LPAT_INF_STN,
+    "ndrelaxed3": _chain_yaml(["nd-relaxed", "nd-relaxed"]),
+    **RELAXED,
+}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _fast_plan(spark, qyaml) -> str:
+    out = match_pattern(
+        _df(spark, STREAM), Query.from_yaml(qyaml), order_by="id",
+        partition_by="user_id", type_col="type",
+    )
+    plan = _plan(out)
+    assert "MapInPandas" not in plan, "expected the fast path to be dispatched"
+    return plan
+
+
+def _absence_plans(spark) -> list[str]:
+    left = spark.createDataFrame([(1, 10, 100)], "k long, id long, t long")
+    right = spark.createDataFrame([(1, 150)], "k long, t long")
+    stream = spark.createDataFrame([(1, 100, "x"), (1, 150, "y")], "k long, t long, kind string")
+    return [
+        _plan(not_followed_by(left, right, on="t", by="k", within=100)),
+        _plan(not_next(left, stream, on="t", by="k", cond=F.col("kind") == "y")),
+    ]
+
+
+def _nodes_bottom_up(plan: str) -> list[tuple[str, str]]:
+    """``(operator, line)`` per plan node, leaves first (the plan is a
+    single chain of operators)."""
+    nodes = []
+    for line in plan.splitlines():
+        m = re.match(r"^[\s:|+\-]*(\w+)", line)
+        if m and m.group(1) != "AdaptiveSparkPlan":
+            nodes.append((m.group(1), line))
+    return nodes[::-1]
+
+
+@pytest.mark.parametrize("qyaml", list(SHAPES.values()), ids=list(SHAPES))
+def test_fastpath_plan_has_no_unbounded_following_frame(spark, qyaml):
+    assert "unboundedfollowing" not in _fast_plan(spark, qyaml).lower()
+
+
+def test_absence_plans_have_no_unbounded_following_frame(spark):
+    for plan in _absence_plans(spark):
+        assert "windowspecdefinition" in plan
+        assert "unboundedfollowing" not in plan.lower()
+
+
+@pytest.mark.parametrize("qyaml", list(RELAXED.values()), ids=list(RELAXED))
+def test_relaxed_chain_link_windows_share_one_exchange_and_sort(spark, qyaml):
+    query = Query.from_yaml(qyaml)
+    nodes = _nodes_bottom_up(_fast_plan(spark, qyaml))
+    links = [
+        i for i, (op, line) in enumerate(nodes)
+        if op == "Window" and ("lag(" in line or "last(" in line)
+    ]
+    assert len(links) == len(query.names) - 1
+    below = [op for op, _ in nodes[: links[-1]] if op in ("Exchange", "Sort")]
+    assert below == ["Exchange", "Sort"]
+    # The only other Sort feeds the match_seq window; no second shuffle.
+    assert [op for op, _ in nodes].count("Exchange") == 1
+    assert [op for op, _ in nodes].count("Sort") == 2
