@@ -7,7 +7,24 @@ same scale-minded defaults:
 * Arrow on (the CEP kernels are ``mapInPandas`` / ``applyInPandasWithState``
   operators — Arrow batches are the JVM↔Python transport),
 * modest shuffle parallelism sized for local[32] test runs; a real
-  cluster deployment overrides via ``extra_conf`` / spark-submit conf.
+  cluster deployment overrides via ``extra_conf`` / spark-submit conf,
+* Python workers started from ``reflinkcep_spark.daemon``
+  (``spark.python.daemon.module``) instead of ``pyspark.daemon``.
+
+Why the daemon: before every task, PySpark's worker calls
+``importlib.invalidate_caches()``, which on CPython 3.11 makes every
+``zipimporter`` on the worker's path re-read its archive: the spark-core
+JAR and ``$SPARK_HOME/python/lib``'s PySpark and py4j zips, 0.18-0.36 s
+per task, paid by every ``mapInPandas`` pass and stream micro-batch.
+The daemon takes those archives off the path (the rule is in its
+docstring) and then runs ``pyspark.daemon`` unchanged.
+
+The setting serves ``get_spark``'s local sessions only.  The daemon
+module must be importable when the worker starts, which the PYTHONPATH
+export below ensures; a cluster that ships the package with
+``--py-files`` makes it importable only per task, after the daemon has
+started.  Sessions that ``ensure_package_shipped`` sets up keep the
+stock daemon.
 """
 
 from __future__ import annotations
@@ -92,6 +109,9 @@ def get_spark(
         # the churn.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
+        # Workers start from reflinkcep_spark/daemon.py, which trims the
+        # import path that PySpark re-scans before every task.
+        .config("spark.python.daemon.module", "reflinkcep_spark.daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
