@@ -21,7 +21,7 @@ last consuming edge was a TAKE (reference DST.py:294-300).
 from __future__ import annotations
 
 from functools import cached_property
-from typing import Callable, Optional
+from typing import Callable, Iterable, Optional
 
 __all__ = ["Automaton", "Edge", "TAKE", "IGNORE", "EPS", "ANY_TYPE"]
 
@@ -68,6 +68,7 @@ class Automaton:
         self.start: int = 0
         self.init_env: dict = {}
         self.names: tuple[str, ...] = ()  # capture names, pattern order
+        self._inert: dict = {}  # inert_types() per declared type set
 
     # -- construction helpers ----------------------------------------
     def new_state(self, output: Optional[dict] = None) -> int:
@@ -156,6 +157,87 @@ class Automaton:
             return rec(start, 1 << start)
 
         return [dig(s) for s in range(len(edges))]
+
+    def _step(self, state: int, mask: int, ev_type) -> list:
+        """The consuming edges a run at ``state`` with ε-guard ``mask``
+        tries on an event of ``ev_type``, in ``MatchEngine.feed``'s
+        exploration order (ε-successors inserted right after their
+        parent).  An ``ev_type`` no edge names selects the wildcard
+        edges, as in the engine."""
+        edges_by_type = self.edges_by_type
+        work = [(state, mask)]
+        out = []
+        i = 0
+        while i < len(work):
+            s, m = work[i]
+            i += 1
+            by_type, wild = edges_by_type[s]
+            for e in by_type.get(ev_type, wild):
+                if e.kind != EPS:
+                    out.append(e)
+                elif not m & (1 << e.dst):
+                    work.insert(i, (e.dst, m | (1 << e.dst)))
+        return out
+
+    def inert_types(self, types: Iterable[str]) -> frozenset:
+        """The declared event types (``types``, the query's schema) that
+        no run can react to: dropping every event of such a type from a
+        key's stream leaves its matches, their order and the live run
+        count at every other event unchanged.
+
+        A type is inert when no fresh run spawns on it and, from every
+        configuration a run can be stored in (the destination of a
+        TAKE or IGNORE edge with its fresh ε-guard, or a ``dig_table``
+        target with its dig mask), the step on it is either exactly
+        one unconditioned IGNORE edge into a state whose step on every
+        type equals the stored one's — the relaxed skip, which changes
+        nothing a later event sees — or, for a dead configuration (no
+        consuming edge on any type), nothing: that run dies on its next
+        event either way.  With a wildcard spawn nothing is inert."""
+        types = frozenset(types)
+        cached = self._inert.get(types)
+        if cached is not None:
+            return cached
+        inert = frozenset()
+        if self.spawn_types is not None:
+            named = {e.ev_type for es in self.edges for e in es} - {None, ANY_TYPE}
+            probe = [None, object(), *named, *types]  # object(): an undeclared type
+
+            sigs: dict = {}
+
+            def signature(state: int, mask: int) -> list:
+                sig = sigs.get((state, mask))
+                if sig is None:
+                    sig = sigs[state, mask] = [
+                        [(e.kind, e.pred, e.dst, e.sink, e.update)
+                         for e in self._step(state, mask, t)]
+                        for t in probe
+                    ]
+                return sig
+
+            stored = {
+                (e.dst, 1 << e.dst) for es in self.edges for e in es if e.kind != EPS
+            }
+            stored |= {hit for hit in self.dig_table if hit is not None}
+
+            def skips(state: int, mask: int, t) -> bool:
+                step = self._step(state, mask, t)
+                if not step:
+                    return not self._step(state, mask, None)  # dead run
+                if len(step) != 1:
+                    return False
+                e = step[0]
+                return (
+                    e.kind == IGNORE and e.pred is _TRUE
+                    and signature(e.dst, 1 << e.dst) == signature(state, mask)
+                )
+
+            inert = frozenset(
+                t for t in types - self.spawn_types
+                if all(skips(s, m, t) for s, m in stored)
+            )
+        self._inert[types] = inert
+        return inert
 
     def dump(self) -> str:  # pragma: no cover - debug aid
         lines = [f"start={self.start} env={self.init_env} names={self.names}"]

@@ -350,6 +350,53 @@ class KeyedPlan:
         # property the plan cannot guarantee, so it is checked per key.
         self.check_stamps = self.within_col is not None and self.within is not None
 
+    def inert_filter(self, schema, *, idle_timeout_ms=None, event_time_col=None):
+        """The row filter both operators apply right after their
+        projection, below the shuffle: drop the rows of the pattern's
+        inert event types (:meth:`Automaton.inert_types`), which no
+        run reacts to.  Undeclared types end relaxed runs and NULL-type
+        rows reach every edge, so both are kept; so is, under
+        ``within``, a row with a NULL or NaN stamp, which prunes every
+        run it meets (its comparisons are false).  ``schema`` is the
+        projected input's; the two stream-only options disable the
+        filter (see below).  None where no row may be dropped:
+
+        * no ``type_col`` (every row is the sole declared type);
+        * ``sql_skip``: SQL anchors and skip arithmetic read row positions;
+        * ``within`` with ``within_col``: every row's stamp is checked;
+        * ``within`` over a stamp column that is not integral or
+          floating — the engine stamps a None with the row's position,
+          which dropped rows shift;
+        * ``idle_timeout_ms``: an inert row refreshes its key's timeout;
+        * ``event_time_col``: any row of a key in a micro-batch makes the
+          call that releases the key's parked rows.
+        """
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import DoubleType, FloatType, IntegralType
+
+        if (
+            self.type_col is None or self.sql_skip is not None
+            or idle_timeout_ms or event_time_col is not None
+        ):
+            return None
+        stamp_type = schema[self.stamp_col].dataType
+        if self.within is not None and (
+            self.within_col is not None
+            or not isinstance(stamp_type, (IntegralType, FloatType, DoubleType))
+        ):
+            return None
+        inert = self.automaton.inert_types(self.query.schema.keys())
+        if not inert:
+            return None
+        t = F.col(self.type_col)
+        keep = t.isNull() | ~t.isin(sorted(inert))
+        if self.within is not None:
+            stamp = F.col(self.stamp_col)
+            keep = keep | stamp.isNull()
+            if not isinstance(stamp_type, IntegralType):
+                keep = keep | F.isnan(stamp)
+        return keep
+
     def events(self, pdf: pd.DataFrame, ordered: bool = False) -> list[tuple]:
         """Rows as ``(event_type, record)`` in ``order_by`` order — the
         input :meth:`KeyMatcher.feed` takes.  ``ordered``: ``pdf`` is

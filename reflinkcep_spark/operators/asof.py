@@ -74,29 +74,23 @@ def asof_join(
             rhs = rhs.withColumn(c, F.lit(None).cast(dict(lhs.dtypes)[c]))
     unioned = lhs.unionByName(rhs, allowMissingColumns=True)
 
-    if direction == "backward":
-        # Right rows sort before left rows at equal `on` (__side 0 < 1),
-        # so `last` sees them — that's the inclusive (>=) as-of
-        # semantics.
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col(on).asc(), F.col("__side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        pick = F.last
-    else:
-        # Forward: left rows sort before right rows at equal `on`
-        # (__side desc: 1 then 0), so the [current, following] frame
-        # includes same-instant rights — inclusive (<=) — and `first`
-        # takes the earliest qualifying right.
-        w = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col(on).asc(), F.col("__side").desc())
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        pick = F.first
+    # One running frame either way: `last(ignorenulls)` carries the
+    # nearest right row seen so far onto each left row.  Right rows
+    # sort before left rows at equal `on` (__side 0 < 1), so `last`
+    # sees same-instant rights — the inclusive as-of semantics.
+    # Forward reads the key in reverse (`on` descending, NULLs last),
+    # so the right seen last is the earliest one at or after the left
+    # row.  A running frame is updated per row; a (current, unbounded
+    # following) frame would be recomputed per row, quadratic in the
+    # key's length.
+    order = F.col(on).asc() if direction == "backward" else F.col(on).desc_nulls_last()
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(order, F.col("__side").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     carried = [
-        pick(F.when(F.col("__side") == 0, F.col(c)), ignorenulls=True)
+        F.last(F.when(F.col("__side") == 0, F.col(c)), ignorenulls=True)
         .over(w)
         .alias(o)
         for c, o in zip(right_cols, out_right)

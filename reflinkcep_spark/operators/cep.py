@@ -27,11 +27,15 @@ sequences), :mod:`reflinkcep_spark.operators.fastpath` avoids Python
 entirely; ``match_pattern(..., allow_fastpath=True)`` dispatches
 automatically.
 
-At 100 TB: the scan prunes columns to key+order+type+referenced attrs
-(we select them explicitly before the shuffle), the shuffle is on the
-match key (unavoidable for any per-key order-sensitive operator — same
-as Flink's keyBy), and state is bounded per key by the automaton's live
-run-set, not by history.  A ``max_active_runs`` guard caps the
+At 100 TB: before the shuffle (and before the fast-path dispatch) the
+operator selects the key columns plus ``attr_cols`` — every non-key
+column unless the caller names fewer — and the order, type and stamp
+columns, and drops the rows of the pattern's inert event types, which
+no run can react to (``KeyedPlan.inert_filter``: under relaxed
+contiguity, a declared type no step names is only ever skipped).  The
+shuffle is on the match key (unavoidable for any per-key
+order-sensitive operator — same as Flink's keyBy), and state is bounded
+per key by the automaton's live run-set, not by history.  A ``max_active_runs`` guard caps the
 combinatorial blowup nd-relaxed patterns can exhibit.
 
 Output: one row per match:
@@ -201,6 +205,20 @@ def match_pattern(
         df.columns, keys, attr_cols, order_by, type_col, within_col
     )
 
+    # Column pruning before the shuffle: ship only what the plan reads,
+    # minus the rows of event types no run reacts to.
+    projected = df.select(*keys, *attr_cols)
+    plan = KeyedPlan(
+        query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
+        within=within, within_col=within_col,
+        max_active_runs=max_active_runs, on_limit=on_limit,
+        sql_skip=sql_skip, sql_prefer=sql_prefer,
+        anchor_start=anchor_start, anchor_end=anchor_end,
+    )
+    keep = plan.inert_filter(projected.schema)
+    if keep is not None:
+        projected = projected.filter(keep)
+
     if allow_fastpath and (
         within is None
         or (query.strategy == "NoSkip" and within_col in (None, order_by))
@@ -208,7 +226,7 @@ def match_pattern(
         from reflinkcep_spark.operators.fastpath import try_fast_path
 
         fast = try_fast_path(
-            df,
+            projected,
             query,
             order_by=order_by,
             keys=keys,
@@ -225,21 +243,12 @@ def match_pattern(
                 )
             return fast
 
-    # Column pruning before the shuffle: ship only what the kernel reads.
-    projected = df.select(*keys, *attr_cols)
     if _POS in projected.columns:
         raise ValueError(f"input column {_POS!r}: the name is reserved for the kernel")
     out_schema = output_schema(
         projected.schema, keys, attr_cols, order_by, query.names
     )
     out_columns = [f.name for f in out_schema.fields]
-    plan = KeyedPlan(
-        query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
-        within=within, within_col=within_col,
-        max_active_runs=max_active_runs, on_limit=on_limit,
-        sql_skip=sql_skip, sql_prefer=sql_prefer,
-        anchor_start=anchor_start, anchor_end=anchor_end,
-    )
 
     def run_group(key_values: dict, events: list) -> list[dict]:
         """One key's complete input → its output rows."""

@@ -21,16 +21,16 @@ Python, no Arrow transfer):
    linear in the key's length, no join.
 5. **All-nd-relaxed ``spat`` chains** (``a ⊙ b ⊙ c``,
    ``followedByAny``) → a cascade of equi-joins on the partition keys
-   with a range predicate per link (every increasing tuple of
-   qualifying events is a match).
+   with a range predicate per link on each row's rank in its key
+   (every increasing tuple of qualifying events is a match).
 
 Output schema matches the kernel's
 (keys | match_seq | start_ord | end_ord | per-name capture arrays), so
-``match_pattern`` can dispatch transparently.  Like the kernel, the
-window plans (shapes 1-4) order a key's rows with NULL ``order_by``
-values last.  Match *sets* are identical to the kernel; emission
-order (hence ``match_seq`` numbering) can differ for shape 3, where
-the kernel orders by completion event and the fast path by start.
+``match_pattern`` can dispatch transparently.  Like the kernel, every
+plan orders a key's rows with NULL ``order_by`` values last.  Match
+*sets* are identical to the kernel; emission order (hence
+``match_seq`` numbering) can differ for shape 3, where the kernel
+orders by completion event and the fast path by start.
 Fast paths decline (return ``None``) whenever after-match skip
 strategies or iterative state would change results — those run in
 the kernel.
@@ -279,39 +279,41 @@ def _plan_nd_chain(
     guarded by ``ANY_TYPE``, reference compile.py:454-472), so the
     match set is every strictly increasing tuple of qualifying events.
     Cascade of equi-joins on the partition keys with a range predicate
-    per link; Catalyst picks broadcast/sort-merge per side sizes.
+    per link; Catalyst picks broadcast/sort-merge per side sizes.  The
+    links compare each row's rank in its key (``row_number``, NULL
+    ``order_by`` values last, as the kernel feeds them), not the raw
+    values: a NULL compares as nothing and would drop its row.
     Emission order differs from the kernel (which orders by run age at
     each completing event); match sets are identical.
     """
-    base = df.select(*keys, *attr_cols)
+    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
+    base = df.select(*keys, *attr_cols, F.row_number().over(w).alias("__rank"))
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     frontier: Optional[DataFrame] = None
     for j, leaf in enumerate(leaves):
         is_j = F.expr(_leaf_condition_sql(leaf, type_col))
         side = base.filter(is_j).select(
-            *keys, F.col(order_by).alias(f"__o{j}"), ev.alias(f"__e{j}")
+            *keys, F.col("__rank").alias(f"__r{j}"), ev.alias(f"__e{j}")
         )
         if frontier is None:
             frontier = side
         elif keys:
             frontier = frontier.join(side, on=list(keys), how="inner").filter(
-                F.col(f"__o{j - 1}") < F.col(f"__o{j}")
+                F.col(f"__r{j - 1}") < F.col(f"__r{j}")
             )
         else:
             frontier = frontier.crossJoin(side).filter(
-                F.col(f"__o{j - 1}") < F.col(f"__o{j}")
+                F.col(f"__r{j - 1}") < F.col(f"__r{j}")
             )
 
     L = len(leaves)
-    end_o = F.col(f"__o{L - 1}")
-    mw = Window.partitionBy(*keys).orderBy(
-        end_o, *[F.col(f"__o{j}") for j in range(L - 1)]
-    )
+    ranks = [F.col(f"__r{j}") for j in range(L)]
+    mw = Window.partitionBy(*keys).orderBy(ranks[-1], *ranks[:-1])
     return frontier.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
-        F.col("__o0").alias("start_ord"),
-        end_o.alias("end_ord"),
+        F.col("__e0")[order_by].alias("start_ord"),
+        F.col(f"__e{L - 1}")[order_by].alias("end_ord"),
         *[F.array(F.col(f"__e{j}")).alias(leaf["name"]) for j, leaf in enumerate(leaves)],
     )
 

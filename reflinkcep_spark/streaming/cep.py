@@ -169,6 +169,13 @@ def match_pattern_stream(
         max_active_runs=max_active_runs,
         sql_skip=sql_skip, sql_prefer=sql_prefer, incremental=True,
     )
+    # Rows of event types no run reacts to never reach the state store.
+    keep = plan.inert_filter(
+        projected.schema, idle_timeout_ms=idle_timeout_ms,
+        event_time_col=event_time_col,
+    )
+    if keep is not None:
+        projected = projected.filter(keep)
     n_keys = len(keys)
     timeout = "ProcessingTimeTimeout" if idle_timeout_ms else "NoTimeout"
 

@@ -1,5 +1,5 @@
-"""Plan guard for the per-key window operators: the fast-path shapes
-and both absence operators.
+"""Plan guard for the per-key window operators: the fast-path shapes,
+both absence operators and the as-of join.
 
 Spark recomputes a ``(1, unbounded following)`` frame for every row, so
 one in a per-key plan makes it quadratic in the key's length; a running
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern, not_followed_by, not_next
+from reflinkcep_spark.operators.asof import asof_join
 from tests.test_fastpath import (
     Q_CHAIN, Q_LPAT, Q_LPAT_INF, Q_LPAT_INF_STN, Q_REL_PAIR, Q_SPAT, STREAM,
     _chain_yaml, _df,
@@ -62,6 +63,15 @@ def _absence_plans(spark) -> list[str]:
     ]
 
 
+def _asof_plans(spark) -> list[str]:
+    left = spark.createDataFrame([(1, 10, "L")], "k long, ts long, lbl string")
+    right = spark.createDataFrame([(1, 5, "R")], "k long, ts long, rlbl string")
+    return [
+        _plan(asof_join(left, right, on="ts", by="k", right_cols=["rlbl"], direction=d))
+        for d in ("backward", "forward")
+    ]
+
+
 def _nodes_bottom_up(plan: str) -> list[tuple[str, str]]:
     """``(operator, line)`` per plan node, leaves first (the plan is a
     single chain of operators)."""
@@ -80,6 +90,12 @@ def test_fastpath_plan_has_no_unbounded_following_frame(spark, qyaml):
 
 def test_absence_plans_have_no_unbounded_following_frame(spark):
     for plan in _absence_plans(spark):
+        assert "windowspecdefinition" in plan
+        assert "unboundedfollowing" not in plan.lower()
+
+
+def test_asof_plans_have_no_unbounded_following_frame(spark):
+    for plan in _asof_plans(spark):
         assert "windowspecdefinition" in plan
         assert "unboundedfollowing" not in plan.lower()
 
