@@ -174,16 +174,13 @@ _BIN_SQL = {
 }
 
 
-def to_sql(expr: str, column_map: Mapping[str, str] | None = None) -> str:
+def to_sql(expr: str) -> str:
     """Translate an accepted expression into an ANSI-SQL boolean expression.
 
-    ``column_map`` renames attribute identifiers to physical column names
-    (e.g. ``{"price": "value"}``).  Mirrors the reference's own
-    and/or/not → Java translation trick (genjava.py:371-379) but targets
-    SQL, so the identical predicate text runs in Spark ``F.expr`` and in
-    the DuckDB oracle.
+    Mirrors the reference's own and/or/not → Java translation trick
+    (genjava.py:371-379) but targets SQL, so the identical predicate
+    text runs in Spark ``F.expr`` and in the DuckDB oracle.
     """
-    column_map = column_map or {}
 
     def emit(node: _pyast.AST) -> str:
         if isinstance(node, _pyast.Expression):
@@ -225,7 +222,7 @@ def to_sql(expr: str, column_map: Mapping[str, str] | None = None) -> str:
                 left = right
             return "(" + " AND ".join(parts) + ")" if len(parts) > 1 else parts[0]
         if isinstance(node, _pyast.Name):
-            return column_map.get(node.id, node.id)
+            return node.id
         if isinstance(node, _pyast.Constant):
             v = node.value
             if v is None:

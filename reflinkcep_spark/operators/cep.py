@@ -22,10 +22,10 @@ framing (one Python call per key) is gone: the cost per key is the
 matcher alone, and Arrow carries each batch across the JVM↔Python
 boundary once in each direction.
 
-For patterns with a pure-Catalyst equivalent (plain filters, strict
-sequences), :mod:`reflinkcep_spark.operators.fastpath` avoids Python
-entirely; ``match_pattern(..., allow_fastpath=True)`` dispatches
-automatically.
+For patterns with a pure-Catalyst equivalent (strict/relaxed and
+nd-relaxed chains of simple events, strict loops),
+:mod:`reflinkcep_spark.operators.fastpath` avoids Python entirely;
+``match_pattern(..., allow_fastpath=True)`` dispatches automatically.
 
 At 100 TB: before the shuffle (and before the fast-path dispatch) the
 operator selects the key columns plus ``attr_cols`` — every non-key

@@ -1,36 +1,35 @@
 """Catalyst fast paths for patterns that don't need the NFA kernel.
 
-Three pattern shapes run entirely JVM-side (whole-stage codegen, no
-Python, no Arrow transfer):
+Three planners run their pattern shapes entirely JVM-side (whole-stage
+codegen, no Python, no Arrow transfer):
 
-1. **Single ``spat``** → a plain ``filter`` — predicate pushdown can
-   reach the parquet scan.
-2. **All-strict chains of ``spat``** (``a · b · c``) → ``lead()``
-   window conjunctions: a match is L consecutive rows each satisfying
-   its leaf condition.
-3. **Strict, non-iterative bounded loops** (``lpat`` with
-   ``contiguity: strict``, no data variables, no until) → a sliding
-   ``collect_list`` window + higher-order functions computing the
-   satisfying-prefix length, exploded into one row per admissible
-   length.
-4. **Mixed strict/relaxed ``spat`` chains** of any length
-   (``a · b ∘ c`` …) → backward propagation of "the first event the
-   automaton cannot skip" as nested structs over the key's rows in
-   reverse order: a running ``last(ignorenulls)`` (relaxed links) or
-   ``lag`` (strict links); one sort shared by every link window, each
-   linear in the key's length, no join.
-5. **All-nd-relaxed ``spat`` chains** (``a ⊙ b ⊙ c``,
-   ``followedByAny``) → a cascade of equi-joins on the partition keys
-   with a range predicate per link on each row's rank in its key
-   (every increasing tuple of qualifying events is a match).
+1. **Strict/relaxed ``spat`` chains** of any length (``a``,
+   ``a · b · c``, ``a · b ∘ c`` …) → ``_plan_chain``: backward
+   propagation of "the first event the automaton cannot skip" as
+   nested structs over the key's rows in reverse order.  A block of
+   strict links reads its leaves at fixed ``lag`` offsets in one
+   window; a relaxed link is a running ``last(ignorenulls)``.  One sort
+   serves every link window, each linear in the key's length, no join.
+   A single ``spat`` is a plain ``filter`` that predicate pushdown can
+   take down to the parquet scan.
+2. **All-nd-relaxed ``spat`` chains** (``a ⊙ b ⊙ c``,
+   ``followedByAny``) → ``_plan_nd_chain``: a cascade of equi-joins on
+   the partition keys with a range predicate per link on each row's
+   rank in its key (every increasing tuple of qualifying events is a
+   match).
+3. **Strict, non-iterative loops**, bounded or not (``lpat`` or
+   ``lpat-inf`` with ``contiguity: strict``, no data variables, no
+   until) → ``_plan_strict_loop``: gaps-and-islands, one aggregation
+   per maximal run of adjacent qualifying rows, exploded into its
+   admissible sub-runs.
 
 Output schema matches the kernel's
 (keys | match_seq | start_ord | end_ord | per-name capture arrays), so
 ``match_pattern`` can dispatch transparently.  Like the kernel, every
 plan orders a key's rows with NULL ``order_by`` values last.  Match
-*sets* are identical to the kernel; emission order (hence
-``match_seq`` numbering) can differ for shape 3, where the kernel
-orders by completion event and the fast path by start.
+sets are identical to the kernel's, and so is emission order (hence
+``match_seq`` numbering) except for nd-relaxed chains, where the
+kernel orders a completing event's matches by run age.
 Fast paths decline (return ``None``) whenever after-match skip
 strategies or iterative state would change results — those run in
 the kernel.
@@ -78,9 +77,11 @@ def _spat_chain(node: Mapping) -> Optional[tuple[list[Mapping], list[str]]]:
     return None
 
 
-def _strict_simple_lpat(node: Mapping) -> Optional[Mapping]:
+def _strict_simple_loop(node: Mapping) -> Optional[Mapping]:
+    """``node`` if it is a strict loop, bounded (``lpat``) or not
+    (``lpat-inf``), with no data variables and no until."""
     if (
-        node["type"] == "lpat"
+        node["type"] in ("lpat", "lpat-inf")
         and node["loop"]["contiguity"] == "strict"
         and not node.get("variables")
         and "until" not in node  # until on finite lpat is a no-op anyway
@@ -89,25 +90,11 @@ def _strict_simple_lpat(node: Mapping) -> Optional[Mapping]:
     return None
 
 
-def _strict_simple_lpat_inf(node: Mapping) -> Optional[Mapping]:
-    if (
-        node["type"] == "lpat-inf"
-        and node["loop"]["contiguity"] == "strict"
-        and not node.get("variables")
-        and "until" not in node
-    ):
-        return node
-    return None
-
-
-def _leaf_condition_sql(
-    leaf: Mapping, type_col: Optional[str], column_map: Mapping[str, str] | None = None
-) -> str:
-    sql = to_sql(str(leaf["cndt"]["expr"]), column_map)
+def _leaf_condition_sql(leaf: Mapping, type_col: Optional[str]) -> str:
+    sql = to_sql(str(leaf["cndt"]["expr"]))
     if type_col is not None:
-        tc = (column_map or {}).get(type_col, type_col)
         ev = str(leaf["event"]).replace("'", "''")
-        sql = f"({tc} = '{ev}') AND ({sql})"
+        sql = f"({type_col} = '{ev}') AND ({sql})"
     return sql
 
 
@@ -128,20 +115,14 @@ def try_fast_path(
             names = [leaf["name"] for leaf in leaves]
             if len(set(names)) != len(names):
                 return None
-            if len(leaves) == 1 or all(c == "strict" for c in links):
-                if len(leaves) > 1 and query.strategy == "SkipPastLastEvent":
-                    return None
-                return _plan_spat_chain(
-                    df, leaves, order_by=order_by, keys=keys,
-                    type_col=type_col, attr_cols=attr_cols,
-                )
-            # SkipToNext is a no-op on strict/relaxed chains: runs are
-            # deterministic, so each start offset emits at most one
-            # match anyway (relaxed links take the FIRST qualifying
-            # event).  SkipPastLastEvent is order-dependent → kernel.
+            # Strict/relaxed runs are deterministic: each start offset
+            # emits at most one match (a relaxed link takes the FIRST
+            # qualifying event), so SkipToNext is a no-op.  The other
+            # skip strategies prune runs by the events earlier matches
+            # took → kernel, unless a match is one event long.
             if all(c in ("strict", "relaxed") for c in links):
-                if query.strategy in ("NoSkip", "SkipToNext"):
-                    return _plan_relaxed_chain(
+                if len(leaves) == 1 or query.strategy in ("NoSkip", "SkipToNext"):
+                    return _plan_chain(
                         df, leaves, links, query, order_by=order_by,
                         keys=keys, type_col=type_col, attr_cols=attr_cols,
                     )
@@ -156,16 +137,13 @@ def try_fast_path(
                     )
                 return None
             return None
-        lpat = _strict_simple_lpat(query.patseq)
-        if lpat is not None and query.strategy == "NoSkip":
-            return _plan_strict_lpat(
-                df, lpat, order_by=order_by, keys=keys,
-                type_col=type_col, attr_cols=attr_cols,
-            )
-        lpi = _strict_simple_lpat_inf(query.patseq)
-        if lpi is not None and query.strategy in ("NoSkip", "SkipToNext"):
-            return _plan_strict_lpat_inf(
-                df, lpi, query.strategy, order_by=order_by, keys=keys,
+        loop = _strict_simple_loop(query.patseq)
+        if loop is not None and (
+            query.strategy == "NoSkip"
+            or (query.strategy == "SkipToNext" and loop["type"] == "lpat-inf")
+        ):
+            return _plan_strict_loop(
+                df, loop, query.strategy, order_by=order_by, keys=keys,
                 type_col=type_col, attr_cols=attr_cols,
             )
     except Exception:
@@ -173,7 +151,7 @@ def try_fast_path(
     return None
 
 
-def _plan_relaxed_chain(
+def _plan_chain(
     df: DataFrame,
     leaves: list[Mapping],
     links: list[str],
@@ -184,7 +162,7 @@ def _plan_relaxed_chain(
     type_col: Optional[str],
     attr_cols: Sequence[str],
 ) -> DataFrame:
-    """Mixed strict/relaxed spat chain (``a · b ∘ c`` …), any length.
+    """Strict/relaxed spat chain (``a · b ∘ c`` …), any length.
 
     Runs are deterministic: after taking leaf ``l``, a relaxed link
     skips events until the FIRST event the automaton cannot ignore —
@@ -193,21 +171,29 @@ def _plan_relaxed_chain(
     from the declared schema, reference compile.py:414-453).  A strict
     link admits only the immediately next row.
 
-    Plan: propagate BACKWARD from the last leaf.  For each leaf
-    ``l ≥ 1`` compute per-row ``__m{l}`` = the resolution of link
-    ``l-1`` seen from this row, as an ``(ord, hit, event, tail)``
-    struct.  Every link window reads the key's rows in REVERSE order
+    Plan: propagate BACKWARD from the last leaf.  Column ``__m{l}``
+    holds, per row, the resolution of leaf ``l`` for a run that took
+    leaf ``l-1`` at this row, as an ``(o, hit, ev, tail)`` struct.
+    Every link window reads the key's rows in REVERSE order
     (``order_by`` descending, NULLs first: the kernel feeds NULL stamps
-    last), so the rows after this one are the rows already seen: a
-    relaxed link is the ``last`` non-null blocking struct over the
-    running frame ``(unbounded preceding, -1)`` — the nearest blocking
-    row after this one — and a strict link is ``lag(…, 1)``.  Spark
-    updates a running frame per row, so each link costs O(n) per key
-    (a ``(1, unbounded following)`` frame is recomputed for every row:
-    O(n²)).  The ``tail`` field carries the already-computed
-    ``__m{l+1}`` of the RESOLVING row, so one chained struct per start
-    row encodes the entire (unique) run.  One sort serves all L-1 link
-    windows; no join, no Python.
+    last), so the rows after this one are the rows already seen:
+
+    * a relaxed link is the ``last`` non-null blocking struct over the
+      running frame ``(unbounded preceding, -1)`` — the nearest
+      blocking row after this one.  Spark updates a running frame per
+      row, so this costs O(n) per key (a ``(1, unbounded following)``
+      frame is recomputed for every row: O(n²));
+    * a maximal block of k strict links after leaf ``i`` reads leaves
+      ``i+1 … i+k`` at the fixed offsets ``1 … k`` in one window: each
+      field is a ``lag`` of a plain column or condition (``ev`` is a
+      struct of per-column lags, not a lagged struct).
+
+    The ``tail`` field carries the resolution of the next leaf seen
+    from the RESOLVING row (for a strict block's last leaf, a ``lag``
+    by k of the column computed before), so one chained struct per
+    start row encodes the entire (unique) run.  One sort serves every
+    link window; no join, no Python.  A single spat has no link: its
+    match starts and ends on its row.
     """
     base = df.select(*keys, *attr_cols)
     L = len(leaves)
@@ -218,37 +204,59 @@ def _plan_relaxed_chain(
         [str(t) for t in query.schema.keys()] if type_col is not None else None
     )
 
+    def is_leaf(l: int):
+        return F.expr(_leaf_condition_sql(leaves[l], type_col))
+
     cur = base
     tail_col: Optional[str] = None
-    for l in range(L - 1, 0, -1):
-        is_l = F.expr(_leaf_condition_sql(leaves[l], type_col))
-        fields = [F.col(order_by).alias("o"), is_l.alias("hit"), ev.alias("ev")]
-        if tail_col is not None:
-            fields.append(F.col(tail_col).alias("tail"))
-        payload = F.struct(*fields)
-        if links[l - 1] == "strict":
-            m = F.lag(payload, 1).over(w_rev)
+    j = L - 1  # the last leaf not yet resolved
+    while j > 0:
+        i = j - 1
+        if links[i] == "strict":
+            while i > 0 and links[i - 1] == "strict":
+                i -= 1
+            # Leaf i+t sits t rows after leaf i; build from the inside.
+            m = None
+            if tail_col is not None:
+                m = F.lag(F.col(tail_col), j - i).over(w_rev)
+            for t in range(j - i, 0, -1):
+                fields = [
+                    F.lag(order_by, t).over(w_rev).alias("o"),
+                    F.lag(is_leaf(i + t), t).over(w_rev).alias("hit"),
+                    F.struct(
+                        *[F.lag(c, t).over(w_rev).alias(c) for c in attr_cols]
+                    ).alias("ev"),
+                ]
+                if m is not None:
+                    fields.append(m.alias("tail"))
+                m = F.struct(*fields)
         else:
-            blocking = is_l
+            is_j = is_leaf(j)
+            fields = [F.col(order_by).alias("o"), is_j.alias("hit"), ev.alias("ev")]
+            if tail_col is not None:
+                fields.append(F.col(tail_col).alias("tail"))
+            payload = F.struct(*fields)
+            blocking = is_j
             if declared is not None:
                 blocking = blocking | ~F.col(type_col).isin(declared)
             # Nearest blocking row after this one.  Not ``min`` over the
             # structs: a NULL ``o`` would sort first there.
             m = F.last(F.when(blocking, payload), ignorenulls=True).over(w_seen)
-        tail_col = f"__m{l}"
+        tail_col = f"__m{i + 1}"
         cur = cur.select("*", m.alias(tail_col))
+        j = i
 
     # Walk the nested struct: paths[j] resolves leaf j+1 for a run
     # starting at this row.  The innermost struct has no "tail".
-    paths = [F.col(tail_col)]
+    paths = [F.col(tail_col)] if L > 1 else []
     for _ in range(2, L):
         paths.append(paths[-1]["tail"])
-    pred = F.expr(_leaf_condition_sql(leaves[0], type_col))
+    pred = is_leaf(0)
     for p in paths:
         pred = pred & p.isNotNull() & p["hit"]
     matched = cur.filter(pred)
 
-    end_o = paths[-1]["o"]
+    end_o = paths[-1]["o"] if paths else F.col(order_by)
     mw = Window.partitionBy(*keys).orderBy(
         end_o.asc_nulls_last(), F.col(order_by).asc_nulls_last()
     )
@@ -318,55 +326,7 @@ def _plan_nd_chain(
     )
 
 
-def _plan_spat_chain(
-    df: DataFrame,
-    chain: list[Mapping],
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
-) -> DataFrame:
-    base = df.select(*keys, *attr_cols)
-    L = len(chain)
-    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
-
-    # Offset j's event attributes live in lead(col, j).
-    cols = list(base.columns)
-    for j in range(1, L):
-        for c in attr_cols:
-            cols.append(F.lead(c, j).over(w).alias(f"__l{j}_{c}"))
-    staged = base.select(*cols)
-
-    conds = [F.expr(_leaf_condition_sql(chain[0], type_col))]
-    for j in range(1, L):
-        cmap = {c: f"__l{j}_{c}" for c in attr_cols}
-        conds.append(F.expr(_leaf_condition_sql(chain[j], type_col, cmap)))
-    pred = conds[0]
-    for c in conds[1:]:
-        pred = pred & c
-    matched = staged.filter(pred)
-
-    def event_struct(j: int):
-        if j == 0:
-            return F.struct(*[F.col(c).alias(c) for c in attr_cols])
-        return F.struct(*[F.col(f"__l{j}_{c}").alias(c) for c in attr_cols])
-
-    end_ord = F.col(order_by) if L == 1 else F.col(f"__l{L - 1}_{order_by}")
-    out = matched.select(
-        *keys,
-        (F.row_number().over(w) - F.lit(1)).cast("long").alias("match_seq"),
-        F.col(order_by).alias("start_ord"),
-        end_ord.alias("end_ord"),
-        *[
-            F.array(event_struct(j)).alias(leaf["name"])
-            for j, leaf in enumerate(chain)
-        ],
-    )
-    return out
-
-
-def _plan_strict_lpat_inf(
+def _plan_strict_loop(
     df: DataFrame,
     node: Mapping,
     strategy: str,
@@ -376,12 +336,14 @@ def _plan_strict_lpat_inf(
     type_col: Optional[str],
     attr_cols: Sequence[str],
 ) -> DataFrame:
-    """Strict unbounded loop (``oneOrMore``/``timesOrMore(n)``,
-    consecutive) via gaps-and-islands.  A maximal run ("island") of
-    adjacent qualifying rows of length M contains every match:
+    """Strict loop, bounded (``times(n, m)``) or not
+    (``oneOrMore``/``timesOrMore(n)``), via gaps-and-islands.  A maximal
+    run ("island") of adjacent qualifying rows of length M contains
+    every match:
 
-    * ``NoSkip`` — every sub-run of length >= n (the automaton may
-      stop accepting at any length);
+    * ``NoSkip`` — every sub-run of an admissible length: from offset
+      ``s``, the lengths ``n … min(m, M-s+1)`` (``m`` = ∞ for an
+      unbounded loop; the automaton may stop accepting at any length);
     * ``SkipToNext`` — exactly the length-``n`` sub-run at each start
       offset: the first acceptance for a start index completes at its
       n-th event, and the strategy then kills that start's remaining
@@ -390,8 +352,10 @@ def _plan_strict_lpat_inf(
     Output size is inherently quadratic in island length under NoSkip
     — identical to the kernel's match set, but produced by one sort +
     one ``(keys, island)`` aggregation instead of per-event run-set
-    bookkeeping in Python."""
+    bookkeeping in Python.  ``match_seq`` numbers matches by (end,
+    start), the order the kernel emits them in."""
     n = max(int(node["loop"]["from"]), 1)
+    m = int(node["loop"]["to"]) if node["type"] == "lpat" else None
     name = node["name"]
 
     base = df.select(*keys, *attr_cols)
@@ -424,11 +388,15 @@ def _plan_strict_lpat_inf(
 
     M = F.size("__arr")
     if strategy == "NoSkip":
+        def longest(s):
+            rest = M - s + 1
+            return rest if m is None else F.least(F.lit(m), rest)
+
         sl = F.flatten(
             F.transform(
                 F.sequence(F.lit(1), M - n + 1),
                 lambda s: F.transform(
-                    F.sequence(F.lit(n), M - s + 1),
+                    F.sequence(F.lit(n), longest(s)),
                     lambda L: F.struct(s.alias("s"), L.alias("L")),
                 ),
             )
@@ -457,70 +425,3 @@ def _plan_strict_lpat_inf(
         end_o.alias("end_ord"),
         F.col("__cap").alias(name),
     )
-
-
-def _plan_strict_lpat(
-    df: DataFrame,
-    node: Mapping,
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
-) -> DataFrame:
-    """Strict {n,m} loop: for every row, look at the next m rows; the
-    length of the satisfying prefix bounds the admissible match
-    lengths, one output row per length in [n, prefix]."""
-    n = max(int(node["loop"]["from"]), 1)
-    m = int(node["loop"]["to"])
-    name = node["name"]
-
-    base = df.select(*keys, *attr_cols)
-    cond = F.expr(_leaf_condition_sql(node, type_col))
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(order_by).asc_nulls_last())
-        .rowsBetween(Window.currentRow, m - 1)
-    )
-    ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
-    staged = base.select(
-        *keys,
-        F.col(order_by).alias("__ord"),
-        cond.alias("__ok"),
-        F.collect_list(F.struct(cond.alias("ok"), ev.alias("ev"))).over(w).alias("__win"),
-    ).filter(F.col("__ok"))
-
-    # Length of the all-satisfying prefix of the m-row window.
-    prefix = F.aggregate(
-        F.col("__win"),
-        F.struct(F.lit(0).alias("n"), F.lit(False).alias("stop")),
-        lambda acc, x: F.struct(
-            F.when(acc.stop | ~x.ok, acc.n).otherwise(acc.n + 1).alias("n"),
-            (acc.stop | ~x.ok).alias("stop"),
-        ),
-    )["n"]
-
-    # Guard prefix >= n: Spark's sequence() would otherwise count DOWN.
-    lens = (
-        staged.withColumn("__prefix", prefix)
-        .filter(F.col("__prefix") >= n)
-        .select(
-            *keys,
-            F.col("__ord"),
-            F.col("__win"),
-            F.explode(
-                F.sequence(F.lit(n), F.least(F.lit(m), F.col("__prefix")))
-            ).alias("__len"),
-        )
-    )
-
-    capture = F.slice(F.transform(F.col("__win"), lambda x: x.ev), 1, F.col("__len"))
-    mw = Window.partitionBy(*keys).orderBy(F.col("__ord").asc_nulls_last(), "__len")
-    out = lens.select(
-        *keys,
-        (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
-        F.col("__ord").alias("start_ord"),
-        F.element_at(capture, -1)[order_by].alias("end_ord"),
-        capture.alias(name),
-    )
-    return out

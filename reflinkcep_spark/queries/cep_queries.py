@@ -617,8 +617,8 @@ def cep_funnel_3step(spark, sf_dir):
     """Signup, then FIRST qualifying purchase after it, then FIRST
     error after that purchase — a left-assoc relaxed spat chain
     (reference compile.py:414-453 ignore-edge semantics).  Dispatches
-    to the generalized first-blocking-event window fast path
-    (operators/fastpath.py `_plan_relaxed_chain`): L-1 window passes
+    to the first-blocking-event window fast path
+    (operators/fastpath.py `_plan_chain`): L-1 window passes
     over one per-user sort, no join, no Python."""
     out = _run(
         spark,
@@ -1003,7 +1003,7 @@ def cep_error_runs(spark, sf_dir):
     """Every sub-run of >= 2 consecutive error events per user (strict
     unbounded loop, NoSkip — reference compile.py:208-372).  Dispatches
     to the gaps-and-islands fast path (operators/fastpath.py
-    `_plan_strict_lpat_inf`): one sort + one island aggregation, no
+    `_plan_strict_loop`): one sort + one island aggregation, no
     Python."""
     out = _run(
         spark,

@@ -12,8 +12,12 @@ def spark():
     from reflinkcep_spark.session import get_spark
 
     spark = get_spark(app_name="reflinkcep-spark-tests", shuffle_partitions=8)
+    jvm = spark.sparkContext._gateway.proc
     yield spark
-    spark.stop()
+    # A test may stop the JVM itself (cepbench's ``stop_session``); a
+    # session whose JVM is gone has nothing left to stop.
+    if jvm.poll() is None:
+        spark.stop()
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -93,11 +93,6 @@ def test_to_sql_translation():
     assert "<>" in to_sql("name != 2") or "!=" in to_sql("name != 2")
 
 
-def test_to_sql_column_map():
-    sql = to_sql("name == 1", {"name": "__l1_name"})
-    assert "__l1_name" in sql
-
-
 def test_to_sql_mod_matches_python_on_negatives():
     """Python % is floored, SQL % truncated; to_sql must emit the
     floored form so kernel (eval) and fast path / oracle (SQL) agree."""

@@ -1,6 +1,7 @@
 """Fast-path ≡ kernel: the pure-Catalyst plans must produce the same
-match sets as the NFA kernel (order-insensitive; match_seq excluded for
-the loop fast path where emission order legitimately differs)."""
+match sets as the NFA kernel, ``match_seq`` included (order-insensitive;
+match_seq excluded for nd-relaxed chains, where emission order
+legitimately differs)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,6 +44,18 @@ patseq:
   event: e
   cndt: {expr: name == 1 and price < 4}
   loop: {contiguity: strict, from: 2, to: 3}
+context:
+  schema: {e: [id, name, price]}
+"""
+
+Q_LPAT_2_4 = """
+type: query
+patseq:
+  type: lpat
+  name: al
+  event: e
+  cndt: {expr: name != 2}
+  loop: {contiguity: strict, from: 2, to: 4}
 context:
   schema: {e: [id, name, price]}
 """
@@ -149,16 +162,17 @@ context:
 @pytest.mark.parametrize(
     "qyaml,names,with_seq",
     [(Q_SPAT, ["a1"], True), (Q_CHAIN, ["a", "b", "c"], True),
-     (Q_LPAT, ["al"], False), (Q_REL_PAIR, ["a", "b"], True),
+     (Q_LPAT, ["al"], True), (Q_LPAT_2_4, ["al"], True),
+     (Q_REL_PAIR, ["a", "b"], True),
      (_chain_yaml(["relaxed", "relaxed"]), ["a", "b", "c"], True),
      (_chain_yaml(["strict", "relaxed"]), ["a", "b", "c"], True),
      (_chain_yaml(["relaxed", "strict"]), ["a", "b", "c"], True),
      (_chain_yaml(["relaxed", "relaxed"], "SkipToNext"), ["a", "b", "c"], True),
      (_chain_yaml(["nd-relaxed", "nd-relaxed"]), ["a", "b", "c"], False),
-     (Q_LPAT_INF, ["al"], False),
-     (Q_LPAT_INF_STN, ["al"], False)],
-    ids=["spat", "chain3", "strict-lpat", "relaxed-pair", "relaxed3",
-         "strict-relaxed", "relaxed-strict", "relaxed3-skiptonext",
+     (Q_LPAT_INF, ["al"], True),
+     (Q_LPAT_INF_STN, ["al"], True)],
+    ids=["spat", "chain3", "strict-lpat", "strict-lpat-2-4", "relaxed-pair",
+         "relaxed3", "strict-relaxed", "relaxed-strict", "relaxed3-skiptonext",
          "ndrelaxed3", "strict-lpat-inf", "strict-lpat-inf-skiptonext"],
 )
 def test_fastpath_equals_kernel(spark, qyaml, names, with_seq):
@@ -178,6 +192,32 @@ def test_fastpath_equals_kernel(spark, qyaml, names, with_seq):
         slow.collect(), names, with_seq
     )
     assert len(fast.collect()) > 0
+
+
+def _strict3_yaml(strategy):
+    """a · b · c, each ``name == 1``."""
+    return _chain_yaml(["strict", "strict"], strategy).replace(
+        "name == 2", "name == 1").replace("name == 3", "name == 1")
+
+
+@pytest.mark.parametrize(
+    "strategy", ["SkipToFirst:c", "SkipToLast:c", "SkipToLast:b", "SkipPastLastEvent"]
+)
+def test_strict_chain_cross_start_skip_equals_kernel(spark, strategy):
+    """A skip strategy whose target event comes after the second leaf
+    prunes runs that started inside the previous match: over five
+    qualifying rows under ``SkipToLast:c`` the kernel gives (1,3),(3,5)
+    but not (2,4).  Such chains must run in the kernel."""
+    df = spark.createDataFrame(
+        [(0, i, "e", 1, 0) for i in range(1, 6)],
+        "user_id int, id long, type string, name long, price long",
+    )
+    query = Query.from_yaml(_strict3_yaml(strategy))
+    kw = dict(order_by="id", partition_by="user_id", type_col="type")
+    slow = match_pattern(df, query, allow_fastpath=False, **kw).collect()
+    fast = match_pattern(df, query, allow_fastpath=True, **kw).collect()
+    assert len(fast) == len(slow) > 0
+    assert _canon(fast, ["a", "b", "c"]) == _canon(slow, ["a", "b", "c"])
 
 
 def test_relaxed_pair_undeclared_type_kills_run(spark):
@@ -272,11 +312,11 @@ CHAIN_TAIL = [(1, 1), (2, 0), (3, 0)]
 @pytest.mark.parametrize(
     "qyaml,names,with_seq,tail",
     [(Q_SPAT, ["a1"], True, LOOP_TAIL), (Q_CHAIN, ["a", "b", "c"], True, CHAIN_TAIL),
-     (Q_LPAT, ["al"], False, LOOP_TAIL), (Q_REL_PAIR, ["a", "b"], True, CHAIN_TAIL),
+     (Q_LPAT, ["al"], True, LOOP_TAIL), (Q_REL_PAIR, ["a", "b"], True, CHAIN_TAIL),
      (_chain_yaml(["relaxed", "relaxed"]), ["a", "b", "c"], True, CHAIN_TAIL),
      (_chain_yaml(["strict", "relaxed"]), ["a", "b", "c"], True, CHAIN_TAIL),
      (_chain_yaml(["relaxed", "strict"]), ["a", "b", "c"], True, CHAIN_TAIL),
-     (Q_LPAT_INF, ["al"], False, LOOP_TAIL),
+     (Q_LPAT_INF, ["al"], True, LOOP_TAIL),
      (_chain_yaml(["nd-relaxed", "nd-relaxed"]), ["a", "b", "c"], False, CHAIN_TAIL)],
     ids=["spat", "chain3", "strict-lpat", "relaxed-pair", "relaxed3",
          "strict-relaxed", "relaxed-strict", "strict-lpat-inf", "ndrelaxed3"],

@@ -5,7 +5,8 @@ Spark recomputes a ``(1, unbounded following)`` frame for every row, so
 one in a per-key plan makes it quadratic in the key's length; a running
 frame (``unbounded preceding`` to an offset) is updated per row.  The
 relaxed chain also keeps its shape: one Exchange and one Sort serve
-every link window.
+every link window.  A block of strict links resolves in one Window, and
+the bounded strict loop reads no rows ahead of the current one.
 """
 
 import re
@@ -17,8 +18,8 @@ from reflinkcep_spark import Query
 from reflinkcep_spark.operators import match_pattern, not_followed_by, not_next
 from reflinkcep_spark.operators.asof import asof_join
 from tests.test_fastpath import (
-    Q_CHAIN, Q_LPAT, Q_LPAT_INF, Q_LPAT_INF_STN, Q_REL_PAIR, Q_SPAT, STREAM,
-    _chain_yaml, _df,
+    Q_CHAIN, Q_LPAT, Q_LPAT_2_4, Q_LPAT_INF, Q_LPAT_INF_STN, Q_REL_PAIR, Q_SPAT,
+    STREAM, _chain_yaml, _df,
 )
 
 RELAXED = {
@@ -32,6 +33,7 @@ SHAPES = {
     "spat": Q_SPAT,
     "chain3": Q_CHAIN,
     "strict-lpat": Q_LPAT,
+    "strict-lpat-2-4": Q_LPAT_2_4,
     "strict-lpat-inf": Q_LPAT_INF,
     "strict-lpat-inf-skiptonext": Q_LPAT_INF_STN,
     "ndrelaxed3": _chain_yaml(["nd-relaxed", "nd-relaxed"]),
@@ -114,3 +116,31 @@ def test_relaxed_chain_link_windows_share_one_exchange_and_sort(spark, qyaml):
     # The only other Sort feeds the match_seq window; no second shuffle.
     assert [op for op, _ in nodes].count("Exchange") == 1
     assert [op for op, _ in nodes].count("Sort") == 2
+
+
+MERGED = {
+    "chain3": Q_CHAIN,
+    "strict-relaxed": _chain_yaml(["strict", "relaxed"]),
+    "strict-lpat-2-4": Q_LPAT_2_4,
+}
+
+
+@pytest.mark.parametrize("qyaml", list(MERGED.values()), ids=list(MERGED))
+def test_strict_shapes_shuffle_once(spark, qyaml):
+    """One Exchange; SHAPES covers the frames of these plans."""
+    nodes = _nodes_bottom_up(_fast_plan(spark, qyaml))
+    assert [op for op, _ in nodes].count("Exchange") == 1
+
+
+def test_bounded_strict_loop_reads_no_following_rows(spark):
+    """No ``rowsBetween(currentRow, m-1)`` frame: a bounded loop is
+    sized per island, not by a window over the next m rows."""
+    plan = _fast_plan(spark, Q_LPAT_2_4)
+    ends = re.findall(r"specifiedwindowframe\(RowFrame, [^,]+, (-?\d+)\)", plan)
+    assert all(int(e) <= 0 for e in ends), ends
+
+
+def test_strict_chain_links_share_one_window(spark):
+    nodes = _nodes_bottom_up(_fast_plan(spark, Q_CHAIN))
+    links = [line for op, line in nodes if op == "Window" and "row_number()" not in line]
+    assert len(links) == 1
