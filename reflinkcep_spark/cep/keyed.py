@@ -29,8 +29,9 @@ from reflinkcep_spark.cep.query import Query
 from reflinkcep_spark.cep.runtime import MatchEngine, _Cfg
 
 __all__ = [
-    "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql", "frame",
-    "output_schema", "records", "resolve_attr_cols", "sole_type",
+    "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql",
+    "flexible_vars", "frame", "output_schema", "records",
+    "resolve_attr_cols", "sole_type",
 ]
 
 
@@ -208,48 +209,51 @@ def _validate_sql_pattern(query, sql_prefer: str = "longest") -> None:
         )
 
 
+def flexible_vars(patseq) -> list:
+    """The variables of a SQL-selection pattern whose capture length
+    varies between candidates, in pattern order: a bounded loop with
+    ``from != to``, an unbounded loop, and every variable under an
+    alternation (it captures nothing when its branch is not taken).
+    The stream emits a start's FIRST-completing candidate, which is
+    SQL's lexicographic-min preference only when at most one variable
+    is flexible."""
+    out: list = []
+
+    def walk(node, under_alt):
+        t = node.get("type")
+        if t in ("combine", "alt"):
+            walk(node["left"], under_alt or t == "alt")
+            walk(node["right"], under_alt or t == "alt")
+        elif under_alt or t == "lpat-inf" or (
+            t == "lpat" and node["loop"]["from"] != node["loop"]["to"]
+        ):
+            out.append(node["name"])
+
+    walk(patseq, False)
+    return out
+
+
 # -- SQL selection ------------------------------------------------------------
 
 
-def _capture_lens(captured, names):
-    """SQL:2016 lexicographic preference key: per-variable capture
-    lengths in PATTERN order.  The ONE definition — the per-start fold
-    in ``KeyMatcher`` and ``_sql_select`` must rank identically."""
-    return tuple(len(captured.get(n) or ()) for n in names)
-
-
-def _sql_select(matches, skip, prefer, names):
+def _sql_select(best_by_start: dict, skip) -> list:
     """SQL:2016 row-pattern match selection: scan candidate starts in
-    row order, keep one match per eligible start — by SQL:2016's
-    LEXICOGRAPHIC quantifier preference: candidates compare on the
-    tuple of per-variable capture lengths in PATTERN order (``names``),
-    maximized for greedy quantifiers, minimized for reluctant, which
-    for the front end's flat concatenation patterns is exactly the
-    standard's leftmost-quantifier-first preferment — then advance
-    the next eligible start per the AFTER MATCH SKIP mode.  This is the semantic layer MATCH_RECOGNIZE adds over the
-    Flink-CEP-style engine, whose own skip strategies act on EMISSION
-    order (first-completing ≈ reluctant) rather than start order.
+    row order, keep each eligible start's preferred match, then advance
+    the next eligible start per the AFTER MATCH SKIP mode.  This is the
+    semantic layer MATCH_RECOGNIZE adds over the Flink-CEP-style
+    engine, whose own skip strategies act on EMISSION order
+    (first-completing ≈ reluctant) rather than start order.
 
-    ``matches`` is ``[(min_pos, max_pos, captures)…]`` in emission
-    order — normally one per start, as ``KeyMatcher`` folds during the
-    feed, but any number per start is handled.
+    ``best_by_start`` maps each start to its preferred candidate
+    ``((min_pos, max_pos, captures), key)``, ranked during the feed
+    by :meth:`KeyMatcher._on_match`.
     """
     mode, var = skip
-    pick = max if prefer == "longest" else min
-    by_start: dict = {}
-    for m in matches:
-        if m[0] is not None:
-            by_start.setdefault(m[0], []).append(m)
-
     out = []
     min_start = 0
-    for s in sorted(by_start):
+    for s, (chosen, _key) in sorted(best_by_start.items()):
         if s < min_start:
             continue
-        # equal length tuples = identical row assignment (contiguous
-        # rows, validated by _validate_sql_pattern); max/min are stable
-        # (first emitted wins a tie), matching the KeyMatcher fold.
-        chosen = pick(by_start[s], key=lambda m: _capture_lens(m[2], names))
         out.append(chosen)
         if mode == "past_last":
             min_start = chosen[1] + 1
@@ -495,10 +499,7 @@ class KeyMatcher:
         plan = self.plan
         rows = []
         if plan.sql_skip is not None and not plan.incremental:
-            chosen = _sql_select(
-                [c for c, _key in self.best_by_start.values()],
-                plan.sql_skip, plan.sql_prefer, plan.names,
-            )
+            chosen = _sql_select(self.best_by_start, plan.sql_skip)
             rows = [self._row(captured, mn, mx) for mn, mx, captured in chosen]
         if self.truncated:
             rows.append(self._row({}, seq=-1))
@@ -552,7 +553,13 @@ class KeyMatcher:
         # ranks anchored candidates only.
         if (plan.anchor_start and mn != 0) or (plan.anchor_end and mx != self.last_pos):
             return
-        key = _capture_lens(captured, plan.names)
+        # SQL:2016 lexicographic preference: per-variable capture
+        # lengths in PATTERN order, maximized for greedy, minimized for
+        # reluctant — for the front end's flat concatenation patterns
+        # exactly the standard's leftmost-quantifier-first preferment.
+        # Equal keys are identical row assignments (contiguous rows,
+        # _validate_sql_pattern); the first emitted wins a tie.
+        key = tuple(len(captured.get(n) or ()) for n in plan.names)
         cur = self.best_by_start.get(mn)
         if cur is None or (
             key > cur[1] if plan.sql_prefer == "longest" else key < cur[1]

@@ -120,15 +120,13 @@ Supported subset
   variable: per-row under ALL ROWS RUNNING, the last row's variable
   under FINAL / ONE ROW PER MATCH), each ``AS``-aliased.
 * ``SUBSET <name> = (<var>, ...)`` (SQL:2016, round 14) — union
-  variables usable in MEASURES: the union's captures are the
-  order-merged member captures (``COUNT`` sums sizes, ``SUM/MIN/MAX``
-  fold the concatenation, ``FIRST/LAST`` pick the extreme
-  (order, pattern-position) element — exact under strict contiguity).
+  variables usable in MEASURES: the union's captures are the member
+  captures concatenated in PATTERN order, which is match order (below).
   Especially useful with alternation (``COUNT(U.*)`` across
   branches).  Union names cannot collide with pattern variables, be
   AFTER-MATCH-SKIP targets, or appear in DEFINE (members only).
   Projected Spark-side from the kernel's capture arrays
-  (``element_at`` / ``size`` / ``aggregate`` — codegen, no Python).
+  (``get`` / ``size`` / ``aggregate`` — codegen, no Python).
 * ``ONE ROW PER MATCH`` (the default) and ``ALL ROWS PER MATCH`` —
   the latter emits one output row per MATCHED INPUT ROW: the
   partition column, ``match_seq``, the implicit ``classifier`` column
@@ -143,11 +141,21 @@ Supported subset
   0 before V's first row; ``RUNNING LAST(V.col)`` is NULL there) —
   and ``FINAL agg(...)`` asks for the completed-match value.  Both
   modes project from the same kernel output: all-rows mode labels
-  each variable's capture array, concatenates, sorts by the order
-  column, and explodes; RUNNING measures aggregate the labeled
-  prefix per element (in-row slice/filter/aggregate algebra,
-  quadratic in match length — bounded by the pattern/``within``, not
-  the partition) — codegen array algebra, no second kernel pass.
+  each variable's capture array, concatenates, and explodes; RUNNING
+  measures aggregate the labeled prefix per element (in-row
+  slice/filter/aggregate algebra, quadratic in match length — bounded
+  by the pattern/``within``, not the partition) — codegen array
+  algebra, no second kernel pass.
+
+  **Match order.** Every measure aggregates captured rows in MATCH
+  order — the order the kernel fed them: ``ORDER BY`` ascending with
+  NULL values last.  Under this front end's patterns (strict
+  contiguity, flat unique variables, one alternation branch taken per
+  match) the variables' captures concatenated in PATTERN order
+  already ARE the match's rows in that order, so no measure sorts:
+  ``FIRST``/``LAST`` over a variable or a SUBSET are the first/last
+  element of that concatenation, and columns that cannot be ordered
+  (e.g. ``map``) work in every measure and in ALL ROWS output.
 * The four ``AFTER MATCH SKIP`` modes above (default ``PAST LAST
   ROW``).  ``SKIP TO FIRST/LAST v`` raises at runtime if ``v``
   captured nothing or resolves to the match's own start row
@@ -1157,18 +1165,6 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
             "greedy (lexicographic-max) selection implements"
         )
 
-    # Selection is exact lexicographic preference since round 14, so
-    # several flexibly-quantified variables are fine in batch; the
-    # STREAMING surface still needs the flexible-variable count (its
-    # first-candidate-wins emission equals lexicographic-min only with
-    # one flexible variable — match_recognize_stream gates on this).
-    # Under alternation EVERY variable is flexible: it captures zero
-    # rows whenever its branch is not taken.
-    if len(branches) > 1:
-        flexible = set(pattern_vars)
-    else:
-        flexible = {e[0] for e in elems if e[2] is None or e[1] != e[2]}
-
     import ast as _pyast
 
     attr_cols = [c for c in columns if c != partition_by]
@@ -1294,7 +1290,6 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
         "rows_per_match": rows_per_match,
         "pattern_vars": pattern_vars,
         "measure_modes": measure_modes,
-        "flexible_vars": sorted(flexible),
         # Flink SQL's time-bounded MATCH_RECOGNIZE: PATTERN (...) WITHIN
         # INTERVAL '<n>' <unit> → first-to-last match span bound in
         # MICROSECONDS; the caller supplies the timestamp column
@@ -1312,8 +1307,8 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
         "anchor_start": anchor_start,
         "anchor_end": anchor_end,
         # SQL:2016 SUBSET unions: {name: [member, ...]} — resolved at
-        # projection time (a union's captures are the order-merged
-        # member captures); pattern matching itself never sees them.
+        # projection time (a union's captures are the member captures
+        # in pattern order); pattern matching itself never sees them.
         "subsets": subsets,
         # PREV/NEXT physical navigation: {col_name: (kind, col, n)} the
         # caller must materialize as lag/lead window columns keyed on
@@ -1378,7 +1373,8 @@ def match_recognize(df: DataFrame, spec: str, **kernel_kwargs) -> DataFrame:
     ``match_seq``, then the MEASURES in declaration order.
     ALL ROWS PER MATCH: partition column, ``match_seq``,
     ``classifier`` (which variable consumed the row), every event
-    column, then the MEASURES (FINAL semantics, repeated per row).
+    column, then the MEASURES (RUNNING by default: over the rows up to
+    this one in match order; ``FINAL`` ones repeat per row).
     With ``on_limit="truncate"`` a hot key that trips
     ``max_active_runs`` keeps its sentinel row in BOTH modes
     (``match_seq = -1``, NULL classifier/event/measure columns).
@@ -1481,12 +1477,46 @@ def _sum_acc_type(schema, col: str) -> str:
     return "double"
 
 
+def _aggregate(kind: str, elems, col, schema):
+    """COUNT / FIRST / LAST / MIN / MAX / SUM over ``elems``, an array
+    of captured events in MATCH order — the one definition every
+    measure (FINAL, SUBSET, RUNNING) uses.  NULL over an empty array
+    (SQL aggregate semantics), except COUNT, which is 0; SUM widens per
+    :func:`_sum_acc_type` (``schema`` is the kernel INPUT schema)."""
+    from pyspark.sql import functions as F
+
+    if kind == "count":
+        return F.size(elems).cast("long")
+    if kind == "first":
+        return F.get(elems, F.lit(0))[col]
+    if kind == "last":
+        return F.get(elems, F.size(elems) - 1)[col]
+    vals = F.transform(elems, lambda e: e[col])
+    if kind == "min":
+        return F.array_min(vals)
+    if kind == "max":
+        return F.array_max(vals)
+    acc = _sum_acc_type(schema, col)  # sum
+    return F.when(
+        F.size(vals) > 0,
+        F.aggregate(vals, F.lit(0).cast(acc), lambda a, x: a + x.cast(acc)),
+    )
+
+
+def _members(t: dict, var: str) -> list:
+    """The pattern variables behind a measure's variable, in PATTERN
+    order: the variable itself, or a SUBSET's members."""
+    members = (t.get("subsets") or {}).get(var, [var])
+    return [v for v in t["pattern_vars"] if v in members]
+
+
 def _measure_columns(t: dict, schema, measures=None) -> list:
     """FINAL MEASURES → codegen column algebra over the kernel's
-    capture arrays (``element_at`` / ``size`` / ``aggregate`` — no
-    Python).  ``schema`` is the kernel INPUT schema (for SUM's
-    widening); ``measures`` restricts to a subset (the ALL ROWS
-    projection computes RUNNING measures separately)."""
+    capture arrays (no Python).  A variable's captures are its array; a
+    SUBSET's are its members' arrays concatenated in pattern order,
+    which is match order (module docstring).  ``measures`` restricts to
+    a subset (the ALL ROWS projection computes RUNNING measures
+    separately)."""
     from pyspark.sql import functions as F
 
     measure_cols = []
@@ -1516,107 +1546,17 @@ def _measure_columns(t: dict, schema, measures=None) -> list:
                     for v in reversed(t["pattern_vars"])
                 ]
             )
-        elif var in (t.get("subsets") or {}):
-            c = _subset_measure(t, schema, kind, var, col)
-        elif kind == "count":
-            # 0 over an empty optional capture (SQL COUNT), but NULL on
-            # the on_limit="truncate" sentinel row (match_seq = -1) —
-            # a truncated key's measures are unknown, not zero.
-            c = F.when(
-                F.col("match_seq") >= 0,
-                F.coalesce(F.size(F.col(var)), F.lit(0)),
-            ).cast("long")
-        elif kind == "first":
-            c = F.element_at(F.col(var), 1)[col]
-        elif kind == "last":
-            c = F.element_at(F.col(var), -1)[col]
-        else:  # sum / min / max — NULL over an empty capture (SQL)
-            vals = F.transform(F.col(var), lambda e: e[col])
-            if kind == "min":
-                c = F.array_min(vals)
-            elif kind == "max":
-                c = F.array_max(vals)
-            else:
-                acc = _sum_acc_type(schema, col)
-                c = F.when(
-                    F.size(F.col(var)) > 0,
-                    F.aggregate(
-                        vals,
-                        F.lit(0).cast(acc),
-                        lambda a, x: a + x.cast(acc),
-                    ),
-                )
+        else:
+            arrs = [F.coalesce(F.col(v), F.array()) for v in _members(t, var)]
+            elems = arrs[0] if len(arrs) == 1 else F.concat(*arrs)
+            c = _aggregate(kind, elems, col, schema)
+            if kind == "count":
+                # NULL, not 0, on the on_limit="truncate" sentinel row
+                # (match_seq = -1): a truncated key's measures are
+                # unknown.
+                c = F.when(F.col("match_seq") >= 0, c)
         measure_cols.append(c.alias(alias))
     return measure_cols
-
-
-def _subset_measure(t: dict, schema, kind: str, uname: str, col):
-    """FINAL measure over a SUBSET union: the union's captures are the
-    order-merged member captures.  COUNT/SUM/MIN/MAX are
-    order-insensitive (sum of sizes / fold over the concatenation);
-    FIRST/LAST pick the member element with the extreme
-    (order value, pattern position) pair — the pattern-position
-    tie-break is exact under strict contiguity (a later variable's
-    rows never precede an earlier one's) and makes duplicated order
-    values across a member boundary harmless."""
-    from pyspark.sql import functions as F
-
-    members = t["subsets"][uname]
-    arrs = {m: F.coalesce(F.col(m), F.array()) for m in members}
-    if kind == "count":
-        total = None
-        for m in members:
-            s = F.size(arrs[m])
-            total = s if total is None else total + s
-        return F.when(F.col("match_seq") >= 0, total).cast("long")
-    if kind in ("min", "max", "sum"):
-        # single-arity closure: a two-parameter lambda would receive
-        # the ARRAY INDEX as its second argument, shadowing a `c=col`
-        # default (the F.transform pitfall)
-        def _extract(arr):
-            return F.transform(arr, lambda e: e[col])
-
-        vals = F.flatten(F.array(*[_extract(arrs[m]) for m in members]))
-        if kind == "min":
-            return F.array_min(vals)
-        if kind == "max":
-            return F.array_max(vals)
-        acc = _sum_acc_type(schema, col)
-        return F.when(
-            F.size(vals) > 0,
-            F.aggregate(vals, F.lit(0).cast(acc), lambda a, x: a + x.cast(acc)),
-        )
-    # first / last: pick the member with the extreme (order value,
-    # pattern position) key, then extract the value SEPARATELY — the
-    # measured column must not ride inside the array_min/array_max
-    # comparison struct, or non-orderable column types (e.g. map)
-    # would fail where plain-variable FIRST/LAST works
-    pos = {m: i for i, m in enumerate(t["pattern_vars"])}
-    idx = 1 if kind == "first" else -1
-    agg = F.array_min if kind == "first" else F.array_max
-    best = agg(
-        F.array(
-            *[
-                F.when(
-                    F.size(arrs[m]) > 0,
-                    F.struct(
-                        F.element_at(arrs[m], idx)[t["order_by"]].alias("o"),
-                        F.lit(pos[m]).alias("i"),
-                    ),
-                )
-                for m in members
-            ]
-        )
-    )
-    # `i` is unique per member, so it alone identifies the winner
-    return F.coalesce(
-        *[
-            F.when(
-                best["i"] == pos[m], F.element_at(arrs[m], idx)[col]
-            )
-            for m in members
-        ]
-    )
 
 
 def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
@@ -1633,22 +1573,20 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
         )
 
     # ALL ROWS PER MATCH: label each variable's capture array with its
-    # CLASSIFIER, concatenate, sort by the order column, explode — one
+    # CLASSIFIER, concatenate in PATTERN order — which is match order
+    # (module docstring), so nothing is sorted — and explode: one
     # output row per matched input row.  FINAL measures project from
     # the capture arrays; RUNNING measures (the SQL:2016 default in
-    # this mode, round 14) aggregate the labeled prefix up to each
-    # row — in-row array algebra (filter/slice/aggregate over the
-    # already-built labeled array), quadratic in MATCH length, which
-    # is bounded by the pattern/within, not the partition.
+    # this mode) aggregate the labeled prefix up to each row — in-row
+    # array algebra (filter/slice/aggregate over the already-built
+    # labeled array), quadratic in MATCH length, which is bounded by
+    # the pattern/within, not the partition.
     modes = t.get("measure_modes") or {
         m[3]: "final" for m in t["measures"]
     }
     final_measures = [m for m in t["measures"] if modes[m[3]] == "final"]
     running_measures = [m for m in t["measures"] if modes[m[3]] == "running"]
     measure_cols = _measure_columns(t, schema, final_measures)
-    order_by = t["order_by"]
-
-    vpos = {v: i for i, v in enumerate(t["pattern_vars"])}
 
     def _labeler(vname):
         # single-arity on purpose: a two-parameter lambda would make
@@ -1656,28 +1594,15 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
         # silently shadowing a `v=v` default (observed: classifier
         # became 0,1,…).
         def lab(e):
-            return F.struct(
-                e[order_by].alias("__o"),
-                # PATTERN-position tie-break: under strict contiguity a
-                # later variable's rows never precede an earlier one's,
-                # so duplicated order values across a variable boundary
-                # sort by pattern order — matching _subset_measure's
-                # FINAL tie-break (an alphabetical classifier tie-break
-                # here made RUNNING FIRST/LAST(U.col) contradict FINAL)
-                F.lit(vpos[vname]).alias("__p"),
-                F.lit(vname).alias("classifier"),
-                e.alias("ev"),
-            )
+            return F.struct(F.lit(vname).alias("classifier"), e.alias("ev"))
 
         return lab
 
-    labeled = F.array_sort(
-        F.concat(
-            *[
-                F.transform(F.coalesce(F.col(v), F.array()), _labeler(v))
-                for v in t["pattern_vars"]
-            ]
-        )
+    labeled = F.concat(
+        *[
+            F.transform(F.coalesce(F.col(v), F.array()), _labeler(v))
+            for v in t["pattern_vars"]
+        ]
     )
     # original columns only: __mr_* navigation columns are internal
     event_cols = [c for c in orig_columns if c != t["partition_by"]]
@@ -1716,32 +1641,12 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
             # RUNNING CLASSIFIER(): the current row's variable — the
             # last element of the prefix IS the current row
             return F.get(prefix, F.size(prefix) - 1)["classifier"]
-        members = (t.get("subsets") or {}).get(var)
-        if members:
-            # SUBSET union: rows mapped to ANY member count
-            flt = F.filter(
-                prefix, lambda x: x["classifier"].isin(*members)
-            )
-        else:
-            flt = F.filter(prefix, lambda x: x["classifier"] == F.lit(var))
-        if kind == "count":
-            return F.size(flt).cast("long")  # 0 before V's first row
-        vals = F.transform(flt, lambda x: x["ev"][col])
-        if kind == "min":
-            return F.array_min(vals)
-        if kind == "max":
-            return F.array_max(vals)
-        if kind == "first":
-            return F.get(vals, F.lit(0))  # NULL while V is unmapped
-        if kind == "last":
-            return F.get(vals, F.size(vals) - 1)
-        acc = _sum_acc_type(schema, col)  # sum
-        return F.when(
-            F.size(vals) > 0,
-            F.aggregate(
-                vals, F.lit(0).cast(acc), lambda a, x: a + x.cast(acc)
-            ),
+        members = _members(t, var)
+        elems = F.transform(
+            F.filter(prefix, lambda x: x["classifier"].isin(*members)),
+            lambda x: x["ev"],
         )
+        return _aggregate(kind, elems, col, schema)
 
     if running_measures:
         # Two-step select so `labeled` is named once (__l) and the
@@ -1838,6 +1743,7 @@ def match_recognize_stream(df: DataFrame, spec: str, **kernel_kwargs) -> DataFra
     numbers by start order — project it away (or renumber) when
     pinning stream ≡ batch equality.
     """
+    from reflinkcep_spark.cep.keyed import flexible_vars
     from reflinkcep_spark.streaming.cep import match_pattern_stream
 
     time_col = kernel_kwargs.pop("time_col", None)
@@ -1869,10 +1775,11 @@ def match_recognize_stream(df: DataFrame, spec: str, **kernel_kwargs) -> DataFra
             "emission is reluctant-only — run alternation patterns "
             "through the batch surface"
         )
-    if len(t["flexible_vars"]) > 1:
+    flexible = flexible_vars(t["query"].patseq)
+    if len(flexible) > 1:
         raise MatchRecognizeError(
             "streaming MATCH_RECOGNIZE supports at most ONE flexibly-"
-            f"quantified variable (got {t['flexible_vars']}): the "
+            f"quantified variable (got {flexible}): the "
             "stream emits a start's FIRST-completing candidate, which "
             "equals SQL's lexicographic preference only when a single "
             "variable's length varies — run multi-quantifier patterns "

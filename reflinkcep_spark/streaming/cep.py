@@ -61,6 +61,7 @@ from reflinkcep_spark.cep.keyed import (
     KeyedPlan,
     KeyMatcher,
     check_sql,
+    flexible_vars,
     frame,
     output_schema,
     resolve_attr_cols,
@@ -103,7 +104,8 @@ def match_pattern_stream(
     * no ``anchor_start`` / ``anchor_end``: ``$`` needs the key's last
       row, which an unbounded stream never has;
     * SQL selection (``sql_skip`` / ``sql_prefer``) only for
-      ``("to_next", None)`` with ``"shortest"`` — see below — and
+      ``("to_next", None)`` with ``"shortest"`` and at most one
+      flexibly-quantified variable — see below — and
       ``match_seq`` is then numbered by completion, where batch
       numbers by start;
     * only here: ``idle_timeout_ms`` drops a key's run-set after that
@@ -135,7 +137,10 @@ def match_pattern_stream(
     arrive in ``(end, emission)`` order, so the first one IS the
     reluctant winner, and TO NEXT ROW makes every start eligible —
     each match emits the moment it completes.  Greedy preference and
-    ordered skip modes raise (they need stream-end finalization).
+    ordered skip modes raise (they need stream-end finalization).  So
+    does a pattern with more than one flexibly-quantified variable
+    (:func:`~reflinkcep_spark.cep.keyed.flexible_vars`): the first
+    candidate to complete is then not always the lexicographic-min one.
     """
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
     if not keys:
@@ -149,6 +154,15 @@ def match_pattern_stream(
                 "preference or ordered skip modes need match finalization "
                 f"an unbounded stream cannot provide (got {sql_skip[0]!r} / "
                 f"{sql_prefer!r}); run those through the batch kernel."
+            )
+        flexible = flexible_vars(query.patseq)
+        if len(flexible) > 1:
+            raise ValueError(
+                "streaming SQL match selection supports at most one "
+                f"flexibly-quantified variable (got {flexible}): the stream "
+                "emits a start's first-completing candidate, which is the "
+                "lexicographic-min preference only when one variable's "
+                "length varies; run those through the batch kernel."
             )
 
     attr_cols = resolve_attr_cols(

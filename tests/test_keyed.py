@@ -240,3 +240,33 @@ def test_sql_to_next_shortest_batch_equals_stream():
     assert batch == [(0, 1, 2, ((1,), (2,))), (1, 4, 5, ((4,), (5,))),
                      (2, 7, 8, ((7,), (8,)))]
     assert sorted(d[1:] for d in stream) == [d[1:] for d in batch]
+
+
+def test_two_flexible_vars_first_completing_is_not_sql_preference():
+    """Why the stream refuses SQL selection over two flexibly-quantified
+    variables (``flexible_vars``): at start 0 batch picks the
+    lexicographic-min lens (1, 3, 1), while the stream emits the first
+    candidate to complete, (3, 1, 1)."""
+    from reflinkcep_spark.cep.keyed import flexible_vars
+    from reflinkcep_spark.cep.match_recognize import translate
+
+    t = translate(
+        "PARTITION BY u ORDER BY e MEASURES COUNT(A.*) AS na "
+        "AFTER MATCH SKIP TO NEXT ROW PATTERN (A{1,3}? B{1,3}? C) "
+        "DEFINE A AS A.v <= 2, B AS B.v >= 2, C AS C.v = 9",
+        ["u", "e", "v"],
+    )
+    q = t["query"]
+    assert flexible_vars(q.patseq) == ["A", "B"]
+    pdf = pd.DataFrame({"e": range(5), "v": [1, 2, 2, 2, 9]})
+
+    def lens_at_start_0(incremental):
+        plan = KeyedPlan(
+            q, order_by="e", type_col=None, attr_cols=["e", "v"],
+            sql_skip=t["skip"], sql_prefer=t["prefer"], incremental=incremental,
+        )
+        row = next(r for r in _batch(plan, pdf) if r["start_ord"] == 0)
+        return tuple(len(row[n]) for n in q.names)
+
+    assert lens_at_start_0(False) == (1, 3, 1)
+    assert lens_at_start_0(True) == (3, 1, 1)

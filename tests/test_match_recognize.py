@@ -683,18 +683,21 @@ def test_round14_parser_rails(spec, msg):
 def test_flexible_vars_reported_and_multi_quantifier_allowed():
     # selection is exact lexicographic since round 14, so measuring a
     # flexibly-quantified variable among several is fine in batch
+    from reflinkcep_spark.cep.keyed import flexible_vars
+
     t = translate(
         "PARTITION BY u ORDER BY e MEASURES COUNT(B.*) AS nb "
         "PATTERN (A B{2,4} C?)",
         ["u", "e", "x"],
     )
-    assert t["flexible_vars"] == ["B", "C"]
+    assert flexible_vars(t["query"].patseq) == ["B", "C"]
     t = translate(
         "PARTITION BY u ORDER BY e MEASURES COUNT(A.*) AS na, "
         "SUM(B.x) AS sb PATTERN (A{2} B{3} C+) DEFINE C AS C.x > 0",
         ["u", "e", "x"],
     )
-    assert t["flexible_vars"] == ["C"]  # fixed extents are deterministic
+    # fixed extents are deterministic
+    assert flexible_vars(t["query"].patseq) == ["C"]
 
 
 # --- round-14: DEFINE navigation — translation -------------------------
@@ -1096,6 +1099,32 @@ def test_streaming_mr_rejects_multiple_flexible_vars(spark):
                AFTER MATCH SKIP TO NEXT ROW
                PATTERN (S G*? P*?)
                DEFINE S AS S.event_type = 'signup'""",
+        )
+
+
+def test_stream_kernel_rejects_two_flexible_vars(spark):
+    """The stream kernel itself refuses SQL selection over two
+    flexibly-quantified variables: its first-completing candidate is
+    not the batch's lexicographic preference (tests/test_keyed.py)."""
+    import __spark_entry__ as entrymod
+    from reflinkcep_spark.streaming.cep import match_pattern_stream
+
+    from tests.conftest import SF_DIR
+
+    stream = entrymod._stream_events(spark, SF_DIR).select(
+        "user_id", "event_id", "value"
+    )
+    t = translate(
+        """PARTITION BY user_id ORDER BY event_id
+           MEASURES COUNT(A.*) AS na AFTER MATCH SKIP TO NEXT ROW
+           PATTERN (A{1,3}? B{1,3}? C)
+           DEFINE A AS A.value <= 2, B AS B.value >= 2, C AS C.value = 9""",
+        ["user_id", "event_id", "value"],
+    )
+    with pytest.raises(ValueError, match=r"flexibly-quantified variable \(got \['A', 'B'\]\)"):
+        match_pattern_stream(
+            stream, t["query"], order_by="event_id", partition_by="user_id",
+            type_col=None, sql_skip=("to_next", None), sql_prefer="shortest",
         )
 
 
@@ -1912,8 +1941,8 @@ def test_subset_review_rails_and_ties(spark):
             COLS,
         )
     # RUNNING FIRST/LAST over a SUBSET agrees with FINAL even when
-    # order values tie across the member boundary (labeled array now
-    # tie-breaks by pattern position, same rule as _subset_measure)
+    # order values tie across the member boundary (both read the
+    # member captures in pattern order, which is match order)
     df = spark.createDataFrame(
         [(1, 7, "z", 10.0), (1, 7, "b", 20.0)],
         "user_id int, event_id int, event_type string, value double",
@@ -1951,6 +1980,94 @@ def test_subset_first_last_on_non_orderable_column(spark):
            DEFINE A AS A.event_type = 'a', B AS B.event_type = 'b'""",
     ).collect()
     assert got[0]["fm"] == {"k": 1.0} and got[0]["lm"] == {"k": 2.0}
+
+
+# --- measures read captures in match order (NULL ORDER BY last) -------
+#
+# The kernel feeds a key's rows by ORDER BY with NULL values last, and
+# every measure reads captures in that order: no measure sorts again.
+
+NULL_LAST_SPEC = """PARTITION BY u ORDER BY e
+   MEASURES {measures}
+   {rows}
+   PATTERN (A B+)
+   {subset}
+   DEFINE A AS A.x < 6, B AS B.x > 6"""
+
+
+def _null_last_df(spark):
+    return spark.createDataFrame(
+        [(1, 1, 5.0), (1, 2, 7.0), (1, None, 9.0)], "u int, e int, x double"
+    )
+
+
+def test_all_rows_running_count_keeps_null_order_value_last(spark):
+    rows = match_recognize(
+        _null_last_df(spark),
+        NULL_LAST_SPEC.format(
+            measures="RUNNING COUNT(A.*) AS na, CLASSIFIER() AS cls",
+            rows="ALL ROWS PER MATCH", subset="",
+        ),
+    ).collect()
+    assert [(r["cls"], r["e"], r["na"]) for r in rows] == [
+        ("A", 1, 1), ("B", 2, 1), ("B", None, 1),
+    ]
+
+
+def test_subset_last_is_the_match_last_row_under_null_order_value(spark):
+    rows = match_recognize(
+        _null_last_df(spark),
+        NULL_LAST_SPEC.format(
+            measures="FIRST(U.x) AS fu, LAST(U.x) AS lu, LAST(B.x) AS lb",
+            rows="", subset="SUBSET U = (A, B)",
+        ),
+    ).collect()
+    assert [(r["fu"], r["lu"], r["lb"]) for r in rows] == [(5.0, 9.0, 9.0)]
+
+
+def test_all_rows_per_match_over_a_map_column(spark):
+    """ALL ROWS output and its measures need no ordering of the event
+    columns, so a column type Spark cannot sort (map) passes through."""
+    from pyspark.sql import functions as F
+
+    df = _null_last_df(spark).withColumn(
+        "m", F.create_map(F.lit("k"), F.col("x"))
+    )
+    rows = match_recognize(
+        df,
+        NULL_LAST_SPEC.format(
+            measures="LAST(U.m) AS lm, FINAL FIRST(U.m) AS fm",
+            rows="ALL ROWS PER MATCH", subset="SUBSET U = (A, B)",
+        ),
+    ).collect()
+    assert [(r["e"], r["m"], r["lm"], r["fm"]) for r in rows] == [
+        (1, {"k": 5.0}, {"k": 5.0}, {"k": 5.0}),
+        (2, {"k": 7.0}, {"k": 7.0}, {"k": 5.0}),
+        (None, {"k": 9.0}, {"k": 9.0}, {"k": 5.0}),
+    ]
+
+
+def test_all_rows_running_subset_plan_has_no_sort_and_one_exchange(spark):
+    import re
+
+    out = match_recognize(
+        _null_last_df(spark),
+        NULL_LAST_SPEC.format(
+            measures="COUNT(U.*) AS nu, FIRST(U.x) AS fu, FINAL LAST(U.x) AS lu",
+            rows="ALL ROWS PER MATCH", subset="SUBSET U = (A, B)",
+        ),
+    )
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "array_sort" not in analyzed, analyzed
+    plan = out._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+    assert [(r["nu"], r["fu"], r["lu"]) for r in out.collect()] == [
+        (1, 5.0, 9.0), (2, 5.0, 9.0), (3, 5.0, 9.0),
+    ]
 
 
 # --- round-14: partition anchors ^ / $ ----------------------------------

@@ -148,7 +148,10 @@ def _case(seed):
     return prefer, skip, quants, conds, values
 
 
-def _spec(prefer, skip, quants, conds):
+def _spec(prefer, skip, quants, conds, measures=None, clauses=""):
+    """The MATCH_RECOGNIZE spec of a case.  ``measures`` replaces the
+    default per-variable COUNT/FIRST/LAST list; ``clauses`` (e.g. ALL
+    ROWS PER MATCH, SUBSET) goes in before AFTER MATCH SKIP."""
     names = [f"V{i}" for i in range(len(quants))]
     pats = []
     for name, (lo, hi) in zip(names, quants):
@@ -162,7 +165,7 @@ def _spec(prefer, skip, quants, conds):
             pats.append(f"{name}{{{lo},{hi}}}")
         if (lo, hi) != (1, 1) and prefer == "shortest":
             pats[-1] += "?"
-    measures = ", ".join(
+    measures = measures or ", ".join(
         f"COUNT({v}.*) AS n_{v.lower()}, FIRST({v}.event_id) AS f_{v.lower()}, "
         f"LAST({v}.event_id) AS l_{v.lower()}"
         for v in names
@@ -188,7 +191,7 @@ def _spec(prefer, skip, quants, conds):
     }[mode]
     spec = (
         f"PARTITION BY user_id ORDER BY event_id MEASURES {measures} "
-        f"{skip_sql} PATTERN ({' '.join(pats)})"
+        f"{clauses} {skip_sql} PATTERN ({' '.join(pats)})"
     )
     if define_parts:
         spec += f" DEFINE {', '.join(define_parts)}"
@@ -301,6 +304,62 @@ def test_sql_selection_matches_backtracking_reference(spark, batch):
         assert got == sorted(want), (
             f"seed {seed}: spec={spec!r} values={values} "
             f"got={got} want={sorted(want)}"
+        )
+
+
+# --- ALL ROWS PER MATCH over a SUBSET, in match order -------------------
+#
+# Per output row: the classifier, RUNNING COUNT(U.*) and FINAL
+# LAST(U.event_id) for U = (first variable, last variable).  In about a
+# third of the cases the key's last row has a NULL event_id: the kernel
+# feeds it last (NULLS LAST), so it stays the last row of any match that
+# takes it, and every measure must read it there.
+
+ALL_ROWS_SEEDS = list(range(3000, 3015))
+
+
+def test_all_rows_subset_measures_follow_match_order(spark):
+    for seed in ALL_ROWS_SEEDS:
+        prefer, skip, quants, conds, values = _case(seed)
+        null_last = random.Random(seed ^ 0x5EED).random() < 1 / 3
+        k = len(quants)
+        spec, _names = _spec(
+            prefer, skip, quants, conds,
+            measures="RUNNING COUNT(U.*) AS nu, "
+            "FINAL LAST(U.event_id) AS lu, CLASSIFIER() AS cls",
+            clauses=f"ALL ROWS PER MATCH SUBSET U = (V0, V{k - 1})",
+        )
+        n = len(values)
+        event_ids = [
+            None if null_last and i == n - 1 else i for i in range(n)
+        ]
+        df = spark.createDataFrame(
+            [(1, e, v) for e, v in zip(event_ids, values)],
+            "user_id int, event_id int, value double",
+        )
+        got = sorted(
+            (tuple(r) for r in match_recognize(df, spec).collect()),
+            key=repr,
+        )
+
+        want = []
+        for seq, (_start, _end, segs) in enumerate(
+            _reference(values, conds, quants, prefer, skip)
+        ):
+            rows = [
+                (r, i) for i, (p, L) in enumerate(segs) for r in range(p, p + L)
+            ]
+            in_u = [r for r, i in rows if i in (0, k - 1)]
+            last_u = event_ids[in_u[-1]] if in_u else None
+            nu = 0
+            for r, i in rows:
+                nu += i in (0, k - 1)
+                want.append(
+                    (1, seq, f"V{i}", event_ids[r], values[r], nu, last_u, f"V{i}")
+                )
+        assert got == sorted(want, key=repr), (
+            f"seed {seed}: spec={spec!r} values={values} "
+            f"event_ids={event_ids} got={got} want={sorted(want, key=repr)}"
         )
 
 
