@@ -3,7 +3,8 @@
 Both Spark kernels feed each partition key's events, in order, through
 a :class:`~reflinkcep_spark.cep.runtime.MatchEngine` and turn its
 matches into rows.  Everything a key needs around the NFA lives here,
-once: the plan-time helpers (``attr_cols``, output schema, sole event
+once: the per-key row order every CEP path reads (:func:`order_cols`),
+the plan-time helpers (``attr_cols``, output schema, sole event
 type, SQL checks), :class:`KeyedPlan` (what every key of one operator
 shares) and :class:`KeyMatcher` (one key's engine, record buffer,
 ``match_seq``, stamp check, run limit, SQL selection, rows and state
@@ -19,7 +20,7 @@ No Spark import at module level, so the matcher runs without a JVM.
 from __future__ import annotations
 
 import pickle
-from dataclasses import dataclass
+from dataclasses import InitVar, dataclass
 from typing import Sequence
 
 import pandas as pd
@@ -30,8 +31,8 @@ from reflinkcep_spark.cep.runtime import MatchEngine, _Cfg
 
 __all__ = [
     "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql",
-    "flexible_vars", "frame", "output_schema", "records",
-    "resolve_attr_cols", "sole_type",
+    "flexible_vars", "frame", "order_cols", "order_key", "output_schema",
+    "records", "resolve_attr_cols", "sort_exprs",
 ]
 
 
@@ -57,6 +58,55 @@ def frame(rows: list[dict], cols: Sequence[str]) -> pd.DataFrame:
     if not rows:
         return pd.DataFrame(columns=list(cols))
     return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+
+
+# -- the per-key row order --------------------------------------------------
+
+
+def order_cols(order_by: str, type_col, attr_cols: Sequence[str], schema=None) -> list[str]:
+    """The per-key row order of every CEP path, as the columns it sorts
+    by: ``order_by``, then the type column, then every other atomic
+    column of ``attr_cols`` in projection order, each ascending with
+    NULLs last (:func:`sort_exprs`, :func:`order_key`).  Rows that tie on
+    ``order_by`` so get one order on every path and input layout; only
+    rows equal in every atomic column keep an arbitrary order.
+    ``schema`` (the projected input's) drops the columns that have no
+    order (array, map, struct, variant); without it every column counts
+    as atomic.  Reserved ``__`` columns never join the rule: the
+    kernel's row position and MATCH_RECOGNIZE's navigation and stamp
+    columns are computed over this very order."""
+    from pyspark.sql.types import AtomicType, VariantType
+
+    def ordered(c):
+        t = AtomicType() if schema is None else schema[c].dataType
+        return isinstance(t, AtomicType) and not isinstance(t, VariantType)
+
+    tail = [c for c in (type_col, *attr_cols) if c and not c.startswith("__") and ordered(c)]
+    return list(dict.fromkeys([order_by, *tail]))
+
+
+def sort_exprs(cols, reverse: bool = False) -> list:
+    """The rule over ``cols`` (names or Columns) as Spark sort keys,
+    each ascending with NULLs last (NaN after every number); ``reverse``
+    is its exact mirror, each descending with NULLs first, for windows
+    that read a key backwards."""
+    from pyspark.sql import functions as F
+
+    key = F.desc_nulls_first if reverse else F.asc_nulls_last
+    return [key(c) for c in cols]
+
+
+def order_key(cols: Sequence[str]):
+    """The rule's Python form: a sort key over a record that orders as
+    :func:`sort_exprs` does in Spark — values, then NaN, then NULL
+    (None).  Python orders strings by code point, which is Spark's UTF-8
+    byte order.  A pandas frame holds a numeric NULL as NaN, so rows
+    read from one rank it with the NaNs, still after every value."""
+    return lambda rec: tuple(_rank(rec[c]) for c in cols)
+
+
+def _rank(v) -> tuple:
+    return (2,) if v is None else (1,) if v != v else (0, v)
 
 
 # -- plan time --------------------------------------------------------------
@@ -97,15 +147,6 @@ def output_schema(schema, keys: Sequence[str], attr_cols: Sequence[str], order_b
         ]
         + [StructField(n, ArrayType(event_struct), True) for n in names]
     )
-
-
-def sole_type(query: Query, type_col: str | None) -> str | None:
-    """Without a type column every row is the pattern's one declared
-    type (None — any type — when it declares several)."""
-    if type_col is not None:
-        return None
-    declared = list(query.schema.keys())
-    return declared[0] if len(declared) == 1 else None
 
 
 def check_sql(query: Query, sql_skip, sql_prefer: str) -> None:
@@ -328,7 +369,8 @@ class KeyedPlan:
     """What every key of one CEP operator shares, built once at plan
     time and shipped inside the task closure.  ``incremental`` is the
     stream: SQL selection is then the emitted-start dedup instead of the
-    batch's per-start fold plus :meth:`KeyMatcher.finish`."""
+    batch's per-start fold plus :meth:`KeyMatcher.finish`.  ``schema``,
+    the projected input's, fixes the per-key order (:func:`order_cols`)."""
 
     query: Query
     order_by: str
@@ -343,11 +385,17 @@ class KeyedPlan:
     anchor_start: bool = False
     anchor_end: bool = False
     incremental: bool = False
+    schema: InitVar[object] = None
 
-    def __post_init__(self):
+    def __post_init__(self, schema):
         self.automaton = compile_query(self.query)
+        self.order_cols = order_cols(self.order_by, self.type_col, self.attr_cols, schema)
+        self.order_key = order_key(self.order_cols)
         self.names = list(self.query.names)
-        self.sole_type = sole_type(self.query, self.type_col)
+        # Without a type column every row is the pattern's one declared
+        # type (None — any type — when it declares several).
+        declared = list(self.query.schema)
+        self.sole_type = declared[0] if len(declared) == 1 and self.type_col is None else None
         self.stamp_col = self.within_col or self.order_by
         # Run pruning (runtime.feed) assumes stamps are non-decreasing
         # in feed order; with a decoupled stamp column that is a DATA
@@ -402,15 +450,16 @@ class KeyedPlan:
         return keep
 
     def events(self, pdf: pd.DataFrame, ordered: bool = False) -> list[tuple]:
-        """Rows as ``(event_type, record)`` in ``order_by`` order — the
+        """Rows as ``(event_type, record)`` in the per-key order — the
         input :meth:`KeyMatcher.feed` takes.  ``ordered``: ``pdf`` is
         already in that order (the batch kernel's input is sorted by
-        Spark), so it is not sorted again."""
-        if not ordered:
-            pdf = pdf.sort_values(self.order_by, kind="mergesort")
+        Spark), so it is not sorted again.  The sort is stable: rows
+        equal in every order column keep their input order."""
         recs = records(pdf, self.attr_cols)
+        if not ordered:
+            recs.sort(key=self.order_key)
         if self.type_col is not None:
-            return list(zip(pdf[self.type_col].tolist(), recs))
+            return [(r[self.type_col], r) for r in recs]
         return [(self.sole_type, r) for r in recs]
 
 

@@ -85,7 +85,10 @@ Supported subset
   the current one in PARTITION order (including rows outside the
   match, e.g. before the match start), exactly Flink SQL's semantics —
   implemented as ``lag``/``lead`` window columns computed before the
-  kernel on the same key partitioning (no extra shuffle).
+  kernel on the same key partitioning and sort (no extra shuffle).
+  Partition order is the kernel's per-key rule (below, "Match
+  order"): rows tied on ``ORDER BY`` are ordered by the other columns,
+  so the row PREV/NEXT read does not depend on the input's layout.
   ``FIRST(V.col [, n])`` / ``LAST(V.col [, n])`` are LOGICAL
   navigation over the rows mapped to ``V`` in the current match
   attempt, implemented as per-run accumulator registers on V's leaf
@@ -148,11 +151,14 @@ Supported subset
   algebra, no second kernel pass.
 
   **Match order.** Every measure aggregates captured rows in MATCH
-  order — the order the kernel fed them: ``ORDER BY`` ascending with
-  NULL values last.  Under this front end's patterns (strict
-  contiguity, flat unique variables, one alternation branch taken per
-  match) the variables' captures concatenated in PATTERN order
-  already ARE the match's rows in that order, so no measure sorts:
+  order — the order the kernel fed them: the per-key order rule
+  (:func:`reflinkcep_spark.cep.keyed.order_cols`), ``ORDER BY``
+  ascending with NULL values last, rows tied on it ordered by every
+  other atomic input column in input order.  Under this front end's
+  patterns (strict contiguity, flat unique variables, one alternation
+  branch taken per match) the variables' captures concatenated in
+  PATTERN order already ARE the match's rows in that order, so no
+  measure sorts:
   ``FIRST``/``LAST`` over a variable or a SUBSET are the first/last
   element of that concatenation, and columns that cannot be ordered
   (e.g. ``map``) work in every measure and in ALL ROWS output.
@@ -1320,8 +1326,8 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
 def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     """Materialize PREV/NEXT physical-navigation columns as lag/lead
     window columns BEFORE the kernel.  Plan shape: the window needs the
-    same hash(partition key) distribution and (key, order) sort as the
-    kernel's own row_number() window, so repartition ONCE here and
+    same hash(partition key) distribution and (key, order rule) sort as
+    the kernel's own row_number() window, so repartition ONCE here and
     assert ``pre_partitioned`` to the kernel — Exchange → Sort → Window
     → MapInPandas, one exchange and one sort total, exactly the
     no-navigation plan's count.  A caller that already asserted
@@ -1333,6 +1339,8 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from reflinkcep_spark.cep.keyed import order_cols, resolve_attr_cols, sort_exprs
+
     kernel_kwargs = dict(kernel_kwargs)
     if not kernel_kwargs.get("pre_partitioned"):
         n_parts = int(
@@ -1340,29 +1348,19 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
         )
         df = df.repartition(n_parts, t["partition_by"])
         kernel_kwargs["pre_partitioned"] = True
-    # The kernel's order (NULLs last), so both windows share one sort.
-    w = Window.partitionBy(t["partition_by"]).orderBy(
-        F.col(t["order_by"]).asc_nulls_last()
+    # The kernel's per-key order rule over the columns it will ship, so
+    # both windows share one sort.  SQL:2016 leaves tied ORDER BY values
+    # implementation-dependent; the rule breaks ties by the other
+    # columns, so PREV/NEXT adjacency is the same on every layout.  The
+    # __mr_ columns made here never join the rule.
+    pb, o = t["partition_by"], t["order_by"]
+    attrs = resolve_attr_cols(
+        df.columns, [pb], kernel_kwargs.get("attr_cols"), o, None, kernel_kwargs.get("within_col")
     )
-    # Tied order values would make PREV/NEXT adjacency nondeterministic:
-    # the window sort (which also feeds the kernel) breaks ties
-    # arbitrarily, so "the previous row" could differ between runs.
-    # SQL:2016 leaves tied ORDER BY implementation-dependent; we raise
-    # instead (in-plan rail folded into the lag evaluation: duplicates
-    # sort adjacent, one comparison per row inside the window
-    # projection already being computed).
-    dup = F.lag(F.col(t["order_by"]), 1).over(w) == F.col(t["order_by"])
-    rail = F.raise_error(
-        F.lit(
-            f"duplicate {t['order_by']!r} value within a "
-            f"{t['partition_by']!r} partition: PREV/NEXT navigation "
-            "needs a total per-key order (tied order values make "
-            "physical adjacency nondeterministic)"
-        )
-    )
+    w = Window.partitionBy(pb).orderBy(*sort_exprs(order_cols(o, None, attrs, df.schema)))
     for name, (kind, col, n) in nav.items():
         fn = F.lag if kind == "prev" else F.lead
-        df = df.withColumn(name, F.when(dup, rail).otherwise(fn(col, n).over(w)))
+        df = df.withColumn(name, fn(col, n).over(w))
     return df, kernel_kwargs
 
 

@@ -78,12 +78,15 @@ def asof_join(
     # nearest right row seen so far onto each left row.  Right rows
     # sort before left rows at equal `on` (__side 0 < 1), so `last`
     # sees same-instant rights — the inclusive as-of semantics.
-    # Forward reads the key in reverse (`on` descending, NULLs last),
-    # so the right seen last is the earliest one at or after the left
-    # row.  A running frame is updated per row; a (current, unbounded
+    # Forward reads the key in reverse (`on` descending), so the right
+    # seen last is the earliest one at or after the left row.  NULL
+    # `on` rows sort last either way, so a NULL right row reaches no
+    # left row with an `on` value (DuckDB's as-of semantics).  A
+    # running frame is updated per row; a (current, unbounded
     # following) frame would be recomputed per row, quadratic in the
     # key's length.
-    order = F.col(on).asc() if direction == "backward" else F.col(on).desc_nulls_last()
+    on_col = F.col(on)
+    order = on_col.asc_nulls_last() if direction == "backward" else on_col.desc_nulls_last()
     w = (
         Window.partitionBy(*keys)
         .orderBy(order, F.col("__side").asc())

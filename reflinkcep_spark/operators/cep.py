@@ -5,14 +5,16 @@ Physical strategy
 The pattern kernel is one sorted pass per partition:
 
     df.repartition(n, keys)
-      .withColumn(pos, row_number() over (partition by keys order by order_by))
+      .withColumn(pos, row_number() over (partition by keys order by <rule>))
       .mapInPandas(kernel, schema)
 
 Each key's substream is matched independently — the one shuffle on the
 partition key is the only data movement, and parallelism scales with
 the number of keys (users/sessions/devices), which is exactly the axis
-that grows with data size.  The Window sorts each partition by (keys,
-order_by) and its ``pos == 1`` marks where a key starts.  The Python
+that grows with data size.  The Window sorts each partition by the keys
+and the per-key order rule (:func:`reflinkcep_spark.cep.keyed.order_cols`:
+``order_by``, then the type and the other atomic columns, NULLs last)
+and its ``pos == 1`` marks where a key starts.  The Python
 side takes one Arrow batch at a time, splits it at key starts and feeds
 each complete key through the NFA run-set engine
 (:mod:`reflinkcep_spark.cep.runtime`) by the per-key matcher the stream
@@ -64,6 +66,7 @@ from reflinkcep_spark.cep.keyed import (
     frame,
     output_schema,
     resolve_attr_cols,
+    sort_exprs,
 )
 from reflinkcep_spark.cep.query import Query
 
@@ -97,8 +100,11 @@ def match_pattern(
     Parameters
     ----------
     order_by:
-        Column defining the total order of each (sub)stream.  Must be
-        unique within a partition key (e.g. ``event_id``).
+        Column ordering each (sub)stream, ascending with NULLs last.
+        Rows that tie on it are ordered by the type column, then by
+        every other atomic column in projection order
+        (``cep.keyed.order_cols``), on every physical path and input
+        layout; only rows equal in all of them keep an arbitrary order.
     partition_by:
         Key column(s); each key is an independent substream (Flink's
         ``keyBy``).  ``None`` = one global stream (single-task — only
@@ -196,11 +202,7 @@ def match_pattern(
             "anchor_start/anchor_end are part of the SQL selection "
             "surface (MATCH_RECOGNIZE ^/$) — pass sql_skip too"
         )
-    keys = (
-        [partition_by]
-        if isinstance(partition_by, str)
-        else list(partition_by or [])
-    )
+    keys = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     attr_cols = resolve_attr_cols(
         df.columns, keys, attr_cols, order_by, type_col, within_col
     )
@@ -214,6 +216,7 @@ def match_pattern(
         max_active_runs=max_active_runs, on_limit=on_limit,
         sql_skip=sql_skip, sql_prefer=sql_prefer,
         anchor_start=anchor_start, anchor_end=anchor_end,
+        schema=projected.schema,
     )
     keep = plan.inert_filter(projected.schema)
     if keep is not None:
@@ -226,11 +229,7 @@ def match_pattern(
         from reflinkcep_spark.operators.fastpath import try_fast_path
 
         fast = try_fast_path(
-            projected,
-            query,
-            order_by=order_by,
-            keys=keys,
-            type_col=type_col,
+            projected, query, order_by=order_by, keys=keys, type_col=type_col,
             attr_cols=attr_cols,
         )
         if fast is not None:
@@ -256,7 +255,7 @@ def match_pattern(
         return matcher.feed(events) + matcher.finish()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One partition's rows, sorted by (keys, order_by); _POS == 1
+        # One partition's rows, sorted by keys and the rule; _POS == 1
         # starts a key.  The open key's events carry across batches and
         # run once the next key starts or the partition ends.
         key_values: dict = {}
@@ -308,12 +307,12 @@ def match_pattern(
         )
     # The Window requires clustering on the keys (a bucketed scan keeps
     # its bucketing, where sortWithinPartitions would have the planner
-    # drop it) and sorts each partition by (keys, order_by), NULLs last
-    # as the per-key sort always did; row_number() marks key starts.
+    # drop it) and sorts each partition by the keys and the per-key
+    # order rule; row_number() marks key starts.
     ordered = projected.withColumn(
         _POS,
         F.row_number().over(
-            Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
+            Window.partitionBy(*keys).orderBy(*sort_exprs(plan.order_cols))
         ),
     )
     return ordered.mapInPandas(kernel, schema=out_schema)

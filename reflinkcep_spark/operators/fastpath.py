@@ -25,11 +25,13 @@ codegen, no Python, no Arrow transfer):
 
 Output schema matches the kernel's
 (keys | match_seq | start_ord | end_ord | per-name capture arrays), so
-``match_pattern`` can dispatch transparently.  Like the kernel, every
-plan orders a key's rows with NULL ``order_by`` values last.  Match
-sets are identical to the kernel's, and so is emission order (hence
-``match_seq`` numbering) except for nd-relaxed chains, where the
-kernel orders a completing event's matches by run age.
+``match_pattern`` can dispatch transparently.  Every plan orders a
+key's rows by the kernel's rule (:func:`reflinkcep_spark.cep.keyed.order_cols`:
+``order_by`` with NULLs last, ties broken by the type and the other
+atomic columns), and numbers matches by that rule, never by raw order
+values.  Match sets are identical to the kernel's, and so is emission
+order (hence ``match_seq`` numbering) except for nd-relaxed chains,
+where the kernel orders a completing event's matches by run age.
 Fast paths decline (return ``None``) whenever after-match skip
 strategies or iterative state would change results — those run in
 the kernel.
@@ -46,6 +48,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from reflinkcep_spark.cep.expr import to_sql
+from reflinkcep_spark.cep.keyed import order_cols, sort_exprs
 from reflinkcep_spark.cep.query import Query
 
 __all__ = ["try_fast_path"]
@@ -173,10 +176,10 @@ def _plan_chain(
 
     Plan: propagate BACKWARD from the last leaf.  Column ``__m{l}``
     holds, per row, the resolution of leaf ``l`` for a run that took
-    leaf ``l-1`` at this row, as an ``(o, hit, ev, tail)`` struct.
-    Every link window reads the key's rows in REVERSE order
-    (``order_by`` descending, NULLs first: the kernel feeds NULL stamps
-    last), so the rows after this one are the rows already seen:
+    leaf ``l-1`` at this row, as a ``(hit, ev, tail)`` struct.
+    Every link window reads the key's rows in REVERSE order (the exact
+    mirror of the kernel's rule: each column descending, NULLs first),
+    so the rows after this one are the rows already seen:
 
     * a relaxed link is the ``last`` non-null blocking struct over the
       running frame ``(unbounded preceding, -1)`` — the nearest
@@ -193,11 +196,14 @@ def _plan_chain(
     by k of the column computed before), so one chained struct per
     start row encodes the entire (unique) run.  One sort serves every
     link window; no join, no Python.  A single spat has no link: its
-    match starts and ends on its row.
+    match starts and ends on its row.  ``match_seq`` numbers matches by
+    the rule's columns of the end row, then of the start row, read from
+    the ``ev`` structs.
     """
+    order = order_cols(order_by, type_col, attr_cols, df.schema)
     base = df.select(*keys, *attr_cols)
     L = len(leaves)
-    w_rev = Window.partitionBy(*keys).orderBy(F.col(order_by).desc_nulls_first())
+    w_rev = Window.partitionBy(*keys).orderBy(*sort_exprs(order, reverse=True))
     w_seen = w_rev.rowsBetween(Window.unboundedPreceding, -1)
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     declared = (
@@ -216,31 +222,25 @@ def _plan_chain(
             while i > 0 and links[i - 1] == "strict":
                 i -= 1
             # Leaf i+t sits t rows after leaf i; build from the inside.
-            m = None
-            if tail_col is not None:
-                m = F.lag(F.col(tail_col), j - i).over(w_rev)
+            m = None if tail_col is None else F.lag(F.col(tail_col), j - i).over(w_rev)
             for t in range(j - i, 0, -1):
                 fields = [
-                    F.lag(order_by, t).over(w_rev).alias("o"),
                     F.lag(is_leaf(i + t), t).over(w_rev).alias("hit"),
-                    F.struct(
-                        *[F.lag(c, t).over(w_rev).alias(c) for c in attr_cols]
-                    ).alias("ev"),
+                    F.struct(*[F.lag(c, t).over(w_rev).alias(c) for c in attr_cols]).alias("ev"),
                 ]
                 if m is not None:
                     fields.append(m.alias("tail"))
                 m = F.struct(*fields)
         else:
             is_j = is_leaf(j)
-            fields = [F.col(order_by).alias("o"), is_j.alias("hit"), ev.alias("ev")]
+            fields = [is_j.alias("hit"), ev.alias("ev")]
             if tail_col is not None:
                 fields.append(F.col(tail_col).alias("tail"))
             payload = F.struct(*fields)
             blocking = is_j
             if declared is not None:
                 blocking = blocking | ~F.col(type_col).isin(declared)
-            # Nearest blocking row after this one.  Not ``min`` over the
-            # structs: a NULL ``o`` would sort first there.
+            # Nearest blocking row after this one, in the rule's order.
             m = F.last(F.when(blocking, payload), ignorenulls=True).over(w_seen)
         tail_col = f"__m{i + 1}"
         cur = cur.select("*", m.alias(tail_col))
@@ -256,15 +256,15 @@ def _plan_chain(
         pred = pred & p.isNotNull() & p["hit"]
     matched = cur.filter(pred)
 
-    end_o = paths[-1]["o"] if paths else F.col(order_by)
+    end_ev = paths[-1]["ev"] if paths else ev
     mw = Window.partitionBy(*keys).orderBy(
-        end_o.asc_nulls_last(), F.col(order_by).asc_nulls_last()
+        *sort_exprs([end_ev[c] for c in order] + order)
     )
     return matched.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
         F.col(order_by).alias("start_ord"),
-        end_o.alias("end_ord"),
+        end_ev[order_by].alias("end_ord"),
         F.array(ev).alias(leaves[0]["name"]),
         *[
             F.array(paths[l - 1]["ev"]).alias(leaves[l]["name"])
@@ -288,13 +288,15 @@ def _plan_nd_chain(
     match set is every strictly increasing tuple of qualifying events.
     Cascade of equi-joins on the partition keys with a range predicate
     per link; Catalyst picks broadcast/sort-merge per side sizes.  The
-    links compare each row's rank in its key (``row_number``, NULL
-    ``order_by`` values last, as the kernel feeds them), not the raw
-    values: a NULL compares as nothing and would drop its row.
+    links compare each row's rank in its key (``row_number`` by the
+    kernel's rule), not the raw ``order_by`` values: a NULL compares as
+    nothing and would drop its row, and tied values would drop a match.
     Emission order differs from the kernel (which orders by run age at
     each completing event); match sets are identical.
     """
-    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
+    w = Window.partitionBy(*keys).orderBy(
+        *sort_exprs(order_cols(order_by, type_col, attr_cols, df.schema))
+    )
     base = df.select(*keys, *attr_cols, F.row_number().over(w).alias("__rank"))
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     frontier: Optional[DataFrame] = None
@@ -305,12 +307,8 @@ def _plan_nd_chain(
         )
         if frontier is None:
             frontier = side
-        elif keys:
-            frontier = frontier.join(side, on=list(keys), how="inner").filter(
-                F.col(f"__r{j - 1}") < F.col(f"__r{j}")
-            )
-        else:
-            frontier = frontier.crossJoin(side).filter(
+        else:  # no keys: an inner join on no columns is a cross join
+            frontier = frontier.join(side, list(keys) or None, "inner").filter(
                 F.col(f"__r{j - 1}") < F.col(f"__r{j}")
             )
 
@@ -352,22 +350,25 @@ def _plan_strict_loop(
     Output size is inherently quadratic in island length under NoSkip
     — identical to the kernel's match set, but produced by one sort +
     one ``(keys, island)`` aggregation instead of per-event run-set
-    bookkeeping in Python.  ``match_seq`` numbers matches by (end,
-    start), the order the kernel emits them in."""
+    bookkeeping in Python.  ``match_seq`` numbers matches by the row
+    numbers of their (end, start) rows, the order the kernel emits them
+    in."""
     n = max(int(node["loop"]["from"]), 1)
     m = int(node["loop"]["to"]) if node["type"] == "lpat" else None
     name = node["name"]
 
     base = df.select(*keys, *attr_cols)
     cond = F.expr(_leaf_condition_sql(node, type_col))
-    w = Window.partitionBy(*keys).orderBy(F.col(order_by).asc_nulls_last())
+    w = Window.partitionBy(*keys).orderBy(
+        *sort_exprs(order_cols(order_by, type_col, attr_cols, df.schema))
+    )
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
 
     # Islands: adjacency is judged on the FULL per-key stream (strict
     # contiguity), so row-number before filtering; after filtering,
     # rn - row_number is constant exactly within a maximal run.  The
-    # row number also orders each island (NULL stamps last, as the
-    # kernel feeds them).
+    # row number, by the kernel's rule, also orders each island and
+    # numbers the matches.
     qual = base.select(
         *keys,
         ev.alias("__ev"),
@@ -407,21 +408,18 @@ def _plan_strict_loop(
             lambda s: F.struct(s.alias("s"), F.lit(n).alias("L")),
         )
 
-    capture = F.transform(
-        F.slice("__arr", F.col("__sl.s"), F.col("__sl.L")), lambda x: x["ev"]
+    s, L = F.col("__sl.s"), F.col("__sl.L")
+    sub = islands.select(*keys, "__arr", F.explode(sl).alias("__sl")).select(
+        *keys,
+        F.transform(F.slice("__arr", s, L), lambda x: x["ev"]).alias("__cap"),
+        F.element_at("__arr", s)["rn"].alias("__s"),
+        F.element_at("__arr", s + L - 1)["rn"].alias("__e"),
     )
-    exploded = islands.select(*keys, "__arr", F.explode(sl).alias("__sl")).select(
-        *keys, capture.alias("__cap")
-    )
-    start_o = F.element_at("__cap", 1)[order_by]
-    end_o = F.element_at("__cap", -1)[order_by]
-    mw = Window.partitionBy(*keys).orderBy(
-        end_o.asc_nulls_last(), start_o.asc_nulls_last()
-    )
-    return exploded.select(
+    mw = Window.partitionBy(*keys).orderBy("__e", "__s")
+    return sub.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
-        start_o.alias("start_ord"),
-        end_o.alias("end_ord"),
+        F.element_at("__cap", 1)[order_by].alias("start_ord"),
+        F.element_at("__cap", -1)[order_by].alias("end_ord"),
         F.col("__cap").alias(name),
     )

@@ -19,15 +19,20 @@ events (state TTL — mandatory hygiene for a 100 TB keyspace).
 
 Ordering contract, two modes:
 
-* **arrival order** (default) — rows are totally ordered per key by
-  ``order_by``; within a micro-batch we sort, across micro-batches the
-  source must deliver each key's rows in order (Kafka per-partition
-  order, file mtime order).  This mirrors the reference, which is
-  explicitly processing-time (reference exp/genjava.py:93-94).
+* **arrival order** (default) — rows are ordered per key by the batch
+  kernel's rule (:func:`~reflinkcep_spark.cep.keyed.order_cols`:
+  ``order_by`` with NULLs last, ties broken by the type and the other
+  atomic columns); within a micro-batch we sort, across micro-batches
+  the source must deliver each key's rows in order (Kafka
+  per-partition order, file mtime order), and rows that tie on
+  ``order_by`` in different micro-batches keep their arrival order.
+  This mirrors the reference, which is explicitly processing-time
+  (reference exp/genjava.py:93-94).
 * **event time** (``event_time_col=...``) — out-of-order arrival is
   repaired with a watermark-gated reorder buffer: incoming rows park in
   state, and on every micro-batch exactly those with event time <= the
-  current watermark are released to the NFA in ``order_by`` order.  The
+  current watermark are released to the NFA in the same per-key order
+  (full ties in arrival order).  The
   caller applies ``df.withWatermark(event_time_col, delay)`` upstream;
   rows later than the delay are dropped by Spark before they reach us.
   Matches are therefore delayed by one watermark lag — the standard
@@ -92,7 +97,9 @@ def match_pattern_stream(
     Same output schema as the batch :func:`match_pattern`:
     ``keys… | match_seq | start_ord | end_ord | <name>: ARRAY<STRUCT>…``.
     ``match_seq`` is a per-key monotone counter that survives across
-    micro-batches.
+    micro-batches.  Each micro-batch is fed in the batch operator's
+    per-key order; rows that tie on ``order_by`` across micro-batches
+    keep their arrival order.
 
     Parameters are the batch operator's, with these differences:
 
@@ -182,6 +189,7 @@ def match_pattern_stream(
         within=within, within_col=within_col,
         max_active_runs=max_active_runs,
         sql_skip=sql_skip, sql_prefer=sql_prefer, incremental=True,
+        schema=projected.schema,
     )
     # Rows of event types no run reacts to never reach the state store.
     keep = plan.inert_filter(
@@ -195,8 +203,8 @@ def match_pattern_stream(
 
     def release(pending: list, wm: int) -> tuple[list, list]:
         """Parked ``(ts_ms, type, record)`` rows at or below the watermark,
-        as ``(type, record)`` in ``order_by`` order, and the rest."""
-        ready = sorted((p for p in pending if p[0] <= wm), key=lambda p: p[2][order_by])
+        as ``(type, record)`` in the per-key order, and the rest."""
+        ready = sorted((p for p in pending if p[0] <= wm), key=lambda p: plan.order_key(p[2]))
         return [(t, r) for _ms, t, r in ready], [p for p in pending if p[0] > wm]
 
     def step(key: tuple, pdf_iter: Iterable[pd.DataFrame], state):

@@ -90,3 +90,38 @@ def test_asof_forward_direction(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         asof_join(left, right, on="t", by="k", right_cols=["tag"], direction="nearest")
+
+
+def test_asof_null_on_right_row_matches_no_left_row(spark):
+    """A right row with a NULL ``on`` precedes and follows no left row
+    with an ``on`` value, in either direction, as in DuckDB's ``ASOF
+    LEFT JOIN`` (the module's oracle).  A NULL-``on`` left row sorts
+    after every right row, and DuckDB pairs it likewise.  The rows are
+    SQL NULLs on both sides: DuckDB would treat a pandas NaN as a
+    value."""
+    import duckdb
+
+    left_rows = "(1, 1, 5), (1, 2, 20), (1, 3, NULL)"
+    right_rows = "(1, NULL, 'rnull'), (1, 10, 'r10')"
+    left = spark.sql(f"SELECT * FROM VALUES {left_rows} AS l(k, id, t)")
+    right = spark.sql(f"SELECT * FROM VALUES {right_rows} AS r(k, t, tag)")
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE l AS SELECT * FROM (VALUES {left_rows}) l(k, id, t)")
+    con.execute(f"CREATE TABLE r AS SELECT * FROM (VALUES {right_rows}) r(k, t, tag)")
+    expected = {
+        "backward": {1: None, 2: "r10", 3: "rnull"},
+        "forward": {1: "r10", 2: None, 3: "rnull"},
+    }
+    for direction, op in (("backward", ">="), ("forward", "<=")):
+        oracle = dict(con.execute(
+            f"SELECT l.id, r.tag FROM l ASOF LEFT JOIN r "
+            f"ON l.k = r.k AND l.t {op} r.t"
+        ).fetchall())
+        got = {
+            r["id"]: r["tag"]
+            for r in asof_join(
+                left, right, on="t", by="k", right_cols=["tag"], direction=direction,
+            ).collect()
+        }
+        assert got == oracle == expected[direction], direction
+    con.close()

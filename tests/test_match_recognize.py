@@ -929,22 +929,28 @@ def test_all_rows_per_match_hides_navigation_columns(spark):
     ]
 
 
-def test_prev_duplicate_order_values_raise(spark):
-    """Tied ORDER BY values make physical adjacency nondeterministic
-    (window sort vs the kernel's stable mergesort) — the in-plan rail
-    raises instead of silently picking an order."""
-    df = spark.createDataFrame(
-        [(1, 0, "row", 1.0), (1, 1, "row", 2.0), (1, 1, "row", 3.0)],
-        "user_id int, event_id int, event_type string, value double",
-    )
-    out = match_recognize(
-        df,
-        """PARTITION BY user_id ORDER BY event_id
-           MEASURES COUNT(B.*) AS n PATTERN (A B+)
-           DEFINE B AS PREV(value) < B.value""",
-    )
-    with pytest.raises(Exception, match="duplicate"):
-        out.collect()
+def test_prev_over_tied_order_values_is_deterministic(spark):
+    """Tied ORDER BY values do not make physical adjacency depend on
+    the input's layout: the per-key order rule breaks the tie by the
+    other columns (here ``value``), in the lag window and the kernel
+    alike, so PREV reads the same row in every layout."""
+    rows = [(1, 0, "row", 1.0), (1, 1, "row", 2.0), (1, 1, "row", 3.0)]
+    ddl = "user_id int, event_id int, event_type string, value double"
+    layouts = [
+        spark.createDataFrame(rows, ddl),
+        spark.createDataFrame(rows[::-1], ddl).repartition(3),
+    ]
+    got = [
+        sorted(tuple(r) for r in match_recognize(
+            df,
+            """PARTITION BY user_id ORDER BY event_id
+               MEASURES COUNT(B.*) AS n PATTERN (A B+)
+               DEFINE B AS PREV(value) < B.value""",
+        ).collect())
+        for df in layouts
+    ]
+    # value 1.0, 2.0, 3.0 in rule order: A, then two rising B rows
+    assert got == [[(1, 0, 2)], [(1, 0, 2)]]
 
 
 def test_reserved_prefix_input_column_rejected_for_register_nav():
@@ -1785,19 +1791,24 @@ def test_final_classifier_immune_to_tied_order_values(spark):
     """FINAL CLASSIFIER() is the last variable with a non-empty capture
     (pattern order), so duplicate order values across the A/B boundary
     cannot misattribute the last row."""
+    ddl = "user_id int, event_id int, event_type string, value double"
+    spec = """PARTITION BY user_id ORDER BY event_id
+              MEASURES CLASSIFIER() AS cls
+              PATTERN (Z B)
+              DEFINE Z AS Z.event_type = '{z}', B AS B.event_type = 'b'"""
     df = spark.createDataFrame(
-        # both rows share event_id = 5: Z's and B's rows tie on order
-        [(1, 5, "z", 1.0), (1, 5, "b", 2.0)],
-        "user_id int, event_id int, event_type string, value double",
+        # both rows share event_id = 5: Z's and B's rows tie on order,
+        # and the order rule puts event_type 'a' before 'b'
+        [(1, 5, "a", 1.0), (1, 5, "b", 2.0)], ddl,
     )
-    got = match_recognize(
-        df,
-        """PARTITION BY user_id ORDER BY event_id
-           MEASURES CLASSIFIER() AS cls
-           PATTERN (Z B)
-           DEFINE Z AS Z.event_type = 'z', B AS B.event_type = 'b'""",
-    ).collect()
+    got = match_recognize(df, spec.format(z="a")).collect()
     assert [r["cls"] for r in got] == ["B"]
+    # The rule decides a tie, not the input order: 'b' sorts before
+    # 'z', so Z B cannot match either way round.
+    tied = [(1, 5, "z", 1.0), (1, 5, "b", 2.0)]
+    for rows in (tied, tied[::-1]):
+        df = spark.createDataFrame(rows, ddl)
+        assert match_recognize(df, spec.format(z="z")).collect() == []
 
 
 # --- round-14: SUBSET union variables -----------------------------------
@@ -1942,9 +1953,10 @@ def test_subset_review_rails_and_ties(spark):
         )
     # RUNNING FIRST/LAST over a SUBSET agrees with FINAL even when
     # order values tie across the member boundary (both read the
-    # member captures in pattern order, which is match order)
+    # member captures in pattern order, which is match order); the
+    # order rule puts event_type 'a' (Z's row) before 'b'
     df = spark.createDataFrame(
-        [(1, 7, "z", 10.0), (1, 7, "b", 20.0)],
+        [(1, 7, "a", 10.0), (1, 7, "b", 20.0)],
         "user_id int, event_id int, event_type string, value double",
     )
     rows = match_recognize(
@@ -1955,7 +1967,7 @@ def test_subset_review_rails_and_ties(spark):
            ALL ROWS PER MATCH
            PATTERN (Z B)
            SUBSET U = (Z, B)
-           DEFINE Z AS Z.event_type = 'z', B AS B.event_type = 'b'""",
+           DEFINE Z AS Z.event_type = 'a', B AS B.event_type = 'b'""",
     ).collect()
     last_row = [r for r in rows if r["classifier"] == "B"][0]
     assert last_row["ff"] == 10.0 and last_row["fl"] == 20.0

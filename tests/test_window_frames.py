@@ -6,7 +6,10 @@ one in a per-key plan makes it quadratic in the key's length; a running
 frame (``unbounded preceding`` to an offset) is updated per row.  The
 relaxed chain also keeps its shape: one Exchange and one Sort serve
 every link window.  A block of strict links resolves in one Window, and
-the bounded strict loop reads no rows ahead of the current one.
+the bounded strict loop reads no rows ahead of the current one.  Every
+per-key Sort, on the kernel, the three fast-path planners and
+MATCH_RECOGNIZE's navigation window, sorts by the one order rule of
+``cep.keyed.order_cols``.
 """
 
 import re
@@ -14,7 +17,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from reflinkcep_spark import Query
+from reflinkcep_spark import Query, match_recognize
 from reflinkcep_spark.operators import match_pattern, not_followed_by, not_next
 from reflinkcep_spark.operators.asof import asof_join
 from tests.test_fastpath import (
@@ -144,3 +147,31 @@ def test_strict_chain_links_share_one_window(spark):
     nodes = _nodes_bottom_up(_fast_plan(spark, Q_CHAIN))
     links = [line for op, line in nodes if op == "Window" and "row_number()" not in line]
     assert len(links) == 1
+
+
+def _per_key_sort(plan: str) -> list[str]:
+    """The keys of the plan's first Sort, the one that orders each key's
+    rows: attribute ids dropped, a reverse read mirrored back."""
+    line = next(line for op, line in _nodes_bottom_up(plan) if op == "Sort")
+    keys = re.search(r"Sort \[(.*)\], (?:true|false)", line).group(1)
+    keys = re.sub(r"#\d+L?", "", keys).replace("DESC NULLS FIRST", "ASC NULLS LAST")
+    return keys.split(", ")
+
+
+def test_every_per_key_sort_reads_the_one_order_rule(spark):
+    kernel = match_pattern(
+        _df(spark, STREAM), Query.from_yaml(Q_CHAIN), order_by="id",
+        partition_by="user_id", type_col="type", allow_fastpath=False,
+    )
+    rule = _per_key_sort(_plan(kernel))
+    assert rule == ["user_id ASC NULLS FIRST"] + [
+        f"{c} ASC NULLS LAST" for c in ("id", "type", "name", "price")
+    ]
+    for qyaml in (Q_CHAIN, Q_REL_PAIR, SHAPES["ndrelaxed3"], Q_LPAT_2_4):
+        assert _per_key_sort(_fast_plan(spark, qyaml)) == rule
+    nav = match_recognize(
+        _df(spark, STREAM),
+        """PARTITION BY user_id ORDER BY id MEASURES COUNT(B.*) AS n
+           PATTERN (A B+) DEFINE B AS PREV(price) < B.price""",
+    )
+    assert _per_key_sort(_plan(nav)) == rule
