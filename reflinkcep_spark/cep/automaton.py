@@ -115,14 +115,15 @@ class Automaton:
     def edges_by_type(self) -> list:
         """Per state: ``({event_type: edges}, wildcard_edges)``, the
         candidate edges for an event of that type in declaration order
-        — EPS, wildcard (``None``/``ANY_TYPE``) and same-type edges;
-        ``wildcard_edges`` serves types no edge names.  The key ``None``
-        (an untyped event, which every type guard admits) holds all of
-        the state's edges."""
+        — EPS, wildcard (``ANY_TYPE``) and same-type edges;
+        ``wildcard_edges`` serves types no edge names.  Every event has
+        a type: ``KeyedPlan`` gives a row with a NULL type the reserved
+        ``UNTYPED`` (``cep/keyed.py``), and to a bare engine ``None`` is
+        one more type no edge names."""
         table = []
         for es in self.edges:
             wild = [e for e in es if e.ev_type is None or e.ev_type == ANY_TYPE]
-            by_type = {None: es}
+            by_type = {}
             for t in {e.ev_type for e in es} - {None, ANY_TYPE}:
                 by_type[t] = [e for e in es if e in wild or e.ev_type == t]
             table.append((by_type, wild))
@@ -201,7 +202,7 @@ class Automaton:
         inert = frozenset()
         if self.spawn_types is not None:
             named = {e.ev_type for es in self.edges for e in es} - {None, ANY_TYPE}
-            probe = [None, object(), *named, *types]  # object(): an undeclared type
+            probe = [object(), *named, *types]  # object(): an undeclared type
 
             sigs: dict = {}
 
@@ -223,7 +224,7 @@ class Automaton:
             def skips(state: int, mask: int, t) -> bool:
                 step = self._step(state, mask, t)
                 if not step:
-                    return not self._step(state, mask, None)  # dead run
+                    return not any(signature(state, mask))  # dead run
                 if len(step) != 1:
                     return False
                 e = step[0]

@@ -30,10 +30,15 @@ from reflinkcep_spark.cep.query import Query
 from reflinkcep_spark.cep.runtime import MatchEngine, _Cfg
 
 __all__ = [
-    "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql",
+    "UNTYPED", "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql",
     "flexible_vars", "frame", "order_cols", "order_key", "output_schema",
     "records", "resolve_attr_cols", "sort_exprs",
 ]
+
+# The event type of a row whose type column is NULL: one more declared
+# type that no step names (KeyedPlan).  A string, because the stream's
+# parked rows carry their type through the pickled state blob.
+UNTYPED = "__untyped__"
 
 
 class MatchLimitExceeded(RuntimeError):
@@ -370,7 +375,15 @@ class KeyedPlan:
     time and shipped inside the task closure.  ``incremental`` is the
     stream: SQL selection is then the emitted-start dedup instead of the
     batch's per-start fold plus :meth:`KeyMatcher.finish`.  ``schema``,
-    the projected input's, fixes the per-key order (:func:`order_cols`)."""
+    the projected input's, fixes the per-key order (:func:`order_cols`).
+
+    Every row gets a type here, before the engine sees it.  With a
+    ``type_col``, a NULL type is :data:`UNTYPED`, which ``query`` (the
+    extended query every path reads, fast path included) declares last
+    with no step naming it: relaxed links skip such a row and strict
+    links break on it, as the fast path's SQL tests, NULL for it,
+    already do.  Without one, every row is the pattern's sole declared
+    type, and a pattern that declares several raises ``ValueError``."""
 
     query: Query
     order_by: str
@@ -388,14 +401,23 @@ class KeyedPlan:
     schema: InitVar[object] = None
 
     def __post_init__(self, schema):
+        declared = list(self.query.schema)
+        if self.type_col is None:
+            if len(declared) != 1:
+                raise ValueError(
+                    "type_col=None makes every row the pattern's sole event "
+                    f"type, but it declares {declared}: pass the type column"
+                )
+            self.sole_type = declared[0]
+        else:
+            # Appended last, the extra type adds edges only: state ids,
+            # and so stream checkpoints, stay as they were.
+            context = {**self.query.context, "schema": {**self.query.schema, UNTYPED: []}}
+            self.query = Query(self.query.patseq, context)
         self.automaton = compile_query(self.query)
         self.order_cols = order_cols(self.order_by, self.type_col, self.attr_cols, schema)
         self.order_key = order_key(self.order_cols)
         self.names = list(self.query.names)
-        # Without a type column every row is the pattern's one declared
-        # type (None — any type — when it declares several).
-        declared = list(self.query.schema)
-        self.sole_type = declared[0] if len(declared) == 1 and self.type_col is None else None
         self.stamp_col = self.within_col or self.order_by
         # Run pruning (runtime.feed) assumes stamps are non-decreasing
         # in feed order; with a decoupled stamp column that is a DATA
@@ -406,10 +428,12 @@ class KeyedPlan:
         """The row filter both operators apply right after their
         projection, below the shuffle: drop the rows of the pattern's
         inert event types (:meth:`Automaton.inert_types`), which no
-        run reacts to.  Undeclared types end relaxed runs and NULL-type
-        rows reach every edge, so both are kept; so is, under
-        ``within``, a row with a NULL or NaN stamp, which prunes every
-        run it meets (its comparisons are false).  ``schema`` is the
+        run reacts to.  Undeclared types end relaxed runs, so they are
+        kept.  A NULL type is :data:`UNTYPED`, which no step takes: it
+        is inert whenever any type is, and ``NOT type IN (…)``, NULL for
+        the row, drops it.  Under ``within``, a row with a NULL or NaN
+        stamp is kept: it prunes every run it meets (its comparisons
+        are false).  ``schema`` is the
         projected input's; the two stream-only options disable the
         filter (see below).  None where no row may be dropped:
 
@@ -441,7 +465,7 @@ class KeyedPlan:
         if not inert:
             return None
         t = F.col(self.type_col)
-        keep = t.isNull() | ~t.isin(sorted(inert))
+        keep = ~t.isin(sorted(inert))
         if self.within is not None:
             stamp = F.col(self.stamp_col)
             keep = keep | stamp.isNull()
@@ -454,13 +478,15 @@ class KeyedPlan:
         input :meth:`KeyMatcher.feed` takes.  ``ordered``: ``pdf`` is
         already in that order (the batch kernel's input is sorted by
         Spark), so it is not sorted again.  The sort is stable: rows
-        equal in every order column keep their input order."""
+        equal in every order column keep their input order.  A NULL type
+        is :data:`UNTYPED`; the record keeps its NULL."""
         recs = records(pdf, self.attr_cols)
         if not ordered:
             recs.sort(key=self.order_key)
-        if self.type_col is not None:
-            return [(r[self.type_col], r) for r in recs]
-        return [(self.sole_type, r) for r in recs]
+        t = self.type_col
+        if t is None:
+            return [(self.sole_type, r) for r in recs]
+        return [(UNTYPED if r[t] is None else r[t], r) for r in recs]
 
 
 class KeyMatcher:

@@ -136,9 +136,7 @@ class MatchEngine:
         self.pos = 0  # 0-based offset of the next event
 
     # -- core ---------------------------------------------------------
-    def feed(
-        self, ev_type: Optional[str], attrs: Mapping, stamp=None
-    ) -> list[Match]:
+    def feed(self, ev_type: str, attrs: Mapping, stamp=None) -> list[Match]:
         aut = self.aut
         edges_by_type = self._edges_by_type
         outputs = aut.outputs
@@ -160,7 +158,7 @@ class MatchEngine:
             ]
         self.runs = next_runs = []
         spawn_types = self._spawn_types
-        if ev_type is None or spawn_types is None or ev_type in spawn_types:
+        if spawn_types is None or ev_type in spawn_types:
             worklist.append(
                 (pos, _Cfg(aut.start, aut.init_env, {}, False, 1 << aut.start))
             )
@@ -295,7 +293,7 @@ class MatchEngine:
 
 def run_pattern(
     query: Query,
-    events: Iterable[tuple[Optional[str], Mapping]],
+    events: Iterable[tuple[str, Mapping]],
     automaton: Automaton | None = None,
     within: Optional[float] = None,
 ) -> list[dict]:

@@ -2,10 +2,11 @@
 before it, per key.
 
 Physical strategy: tag the two inputs, union them, and run ONE ordered
-window pass per key — ``last(right_col, ignorenulls=True)`` over rows
-``unboundedPreceding..current`` carries the latest right values forward
-onto every left row.  Cost = one shuffle on the key + one sort, which
-is the floor for any per-key order-sensitive operator.
+window pass per key — ``last(right_row, ignorenulls=True)`` over rows
+``unboundedPreceding..current``, with each right row's carried columns
+as one struct (non-NULL even where its fields are), carries the latest
+right row forward onto every left row.  Cost = one shuffle on the key +
+one sort, which is the floor for any per-key order-sensitive operator.
 
 The naive alternatives do not survive scale: an inequality
 (``l.ts >= r.ts``) join degenerates to a per-key cross product, and a
@@ -75,8 +76,9 @@ def asof_join(
     unioned = lhs.unionByName(rhs, allowMissingColumns=True)
 
     # One running frame either way: `last(ignorenulls)` carries the
-    # nearest right row seen so far onto each left row.  Right rows
-    # sort before left rows at equal `on` (__side 0 < 1), so `last`
+    # nearest right row seen so far onto each left row, as one struct,
+    # so a right row whose carried values are NULL still counts.  Right
+    # rows sort before left rows at equal `on` (__side 0 < 1), so `last`
     # sees same-instant rights — the inclusive as-of semantics.
     # Forward reads the key in reverse (`on` descending), so the right
     # seen last is the earliest one at or after the left row.  NULL
@@ -92,14 +94,10 @@ def asof_join(
         .orderBy(order, F.col("__side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    carried = [
-        F.last(F.when(F.col("__side") == 0, F.col(c)), ignorenulls=True)
-        .over(w)
-        .alias(o)
-        for c, o in zip(right_cols, out_right)
-    ]
+    row = F.struct(*[F.col(c).alias(o) for c, o in zip(right_cols, out_right)])
+    carried = F.last(F.when(F.col("__side") == 0, row), ignorenulls=True).over(w)
     return (
-        unioned.select(*left.columns, "__side", *carried)
+        unioned.select(*left.columns, "__side", carried.alias("__right"))
         .filter(F.col("__side") == 1)
-        .drop("__side")
+        .select(*left.columns, *[F.col("__right")[o].alias(o) for o in out_right])
     )

@@ -111,8 +111,11 @@ def match_pattern(
         for small inputs or tests).
     type_col:
         Column holding the event type matched against the pattern's
-        ``event`` fields; ``None`` treats every row as the pattern's
-        sole declared type.
+        ``event`` fields.  A row whose type is NULL has a type no step
+        names (``cep.keyed.UNTYPED``): relaxed links skip it, strict
+        links break on it, on every physical path.  ``None`` treats
+        every row as the pattern's sole declared type, and raises
+        ``ValueError`` if the pattern declares several.
     attr_cols:
         Attribute columns visible to conditions; defaults to every
         column except the partition key(s).
@@ -229,8 +232,8 @@ def match_pattern(
         from reflinkcep_spark.operators.fastpath import try_fast_path
 
         fast = try_fast_path(
-            projected, query, order_by=order_by, keys=keys, type_col=type_col,
-            attr_cols=attr_cols,
+            projected, plan.query, order_by=order_by, keys=keys,
+            type_col=type_col, attr_cols=attr_cols,
         )
         if fast is not None:
             if within is not None:

@@ -101,7 +101,9 @@ def match_pattern_stream(
     per-key order; rows that tie on ``order_by`` across micro-batches
     keep their arrival order.
 
-    Parameters are the batch operator's, with these differences:
+    Parameters are the batch operator's, ``type_col`` included (a NULL
+    type is the reserved ``cep.keyed.UNTYPED``; a parked row keeps it
+    in the key's state), with these differences:
 
     * ``partition_by`` is mandatory (streaming state must be keyed);
     * no ``on_limit``: a key whose live run-set exceeds

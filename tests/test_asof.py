@@ -125,3 +125,34 @@ def test_asof_null_on_right_row_matches_no_left_row(spark):
         }
         assert got == oracle == expected[direction], direction
     con.close()
+
+
+def test_asof_right_row_with_null_values_is_still_the_nearest(spark):
+    """A right row whose carried value is NULL is still a right row: the
+    left row it is nearest to gets the NULL, not an older row's value,
+    in either direction, as in DuckDB's ``ASOF LEFT JOIN``."""
+    import duckdb
+
+    left_rows = "(1, 1, 15), (1, 2, 22), (1, 3, 5)"
+    right_rows = "(1, 5, 'r5'), (1, 10, NULL), (1, 20, NULL), (1, 25, 'r25')"
+    left = spark.sql(f"SELECT * FROM VALUES {left_rows} AS l(k, id, t)")
+    right = spark.sql(f"SELECT * FROM VALUES {right_rows} AS r(k, t, tag)")
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE l AS SELECT * FROM (VALUES {left_rows}) l(k, id, t)")
+    con.execute(f"CREATE TABLE r AS SELECT * FROM (VALUES {right_rows}) r(k, t, tag)")
+    expected = {
+        "backward": {1: None, 2: None, 3: "r5"},
+        "forward": {1: None, 2: "r25", 3: "r5"},
+    }
+    for direction, op in (("backward", ">="), ("forward", "<=")):
+        oracle = dict(con.execute(
+            f"SELECT l.id, r.tag FROM l ASOF LEFT JOIN r "
+            f"ON l.k = r.k AND l.t {op} r.t"
+        ).fetchall())
+        out = asof_join(
+            left, right, on="t", by="k", right_cols=["tag"], direction=direction,
+        )
+        assert out.columns == ["k", "id", "t", "tag"]
+        got = {r["id"]: r["tag"] for r in out.collect()}
+        assert got == oracle == expected[direction], direction
+    con.close()

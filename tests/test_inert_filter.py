@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
 from reflinkcep_spark import Query
-from reflinkcep_spark.cep.keyed import KeyedPlan, KeyMatcher
+from reflinkcep_spark.cep.keyed import UNTYPED, KeyedPlan, KeyMatcher
 from reflinkcep_spark.operators import match_pattern
 from reflinkcep_spark.queries.cep_queries import FUNNEL_YAML
 from reflinkcep_spark.sinks import write_bucketed
@@ -46,11 +46,16 @@ context:
   schema: {signup: [], purchase: [], error: [], click: [], view: []}
 """
 SPEND = Query.from_yaml(SPEND_YAML)
+# SPEND over purchases alone: a pattern with one declared type.
+ONE_TYPE = Query.from_yaml(
+    SPEND_YAML.replace("event: signup", "event: purchase")
+    .replace("signup: [], purchase: [], error: [], click: [], view: []", "purchase: []")
+)
 FUNNEL = Query.from_yaml(FUNNEL_YAML)
 INERT_IN = re.compile(r"NOT event_type#\d+ IN \(")
 COLS = ["user_id", "event_id", "event_type", "value"]
 DDL = "user_id long, event_id long, event_type string, value double"
-# crash is undeclared (it ends relaxed runs), None is untyped.
+# crash is undeclared (it ends relaxed runs), None is untyped (UNTYPED).
 TYPES = ["signup", "purchase", "error", "click", "view", "crash", None]
 
 
@@ -130,16 +135,14 @@ def test_kernel_drops_inert_types_below_its_exchange(log_df):
 
 
 def test_fastpath_drops_inert_types_below_its_exchange(log_df):
-    """Typed rows only: the kernel lets an untyped row take any step,
-    which the fast path's type tests do not model."""
     log, df = log_df
     kw = dict(order_by="event_id", partition_by="user_id", type_col="event_type")
-    fast = match_pattern(df.filter("event_type IS NOT NULL"), FUNNEL, **kw)
+    fast = match_pattern(df, FUNNEL, **kw)
     plan = _plan(fast)
     assert "MapInPandas" not in plan
     _filter_below_exchange(plan)
     got = sorted(_digest(fast.collect(), FUNNEL.names))
-    assert got and got == _replay(FUNNEL, log[log["event_type"].notna()])
+    assert got and got == _replay(FUNNEL, log)
 
 
 def test_bucketed_kernel_with_the_filter_stays_shuffle_free(spark, log_df, tmp_path):
@@ -166,7 +169,7 @@ SCHEMA = StructType([
 @pytest.mark.parametrize(
     "kw,stream",
     [
-        (dict(type_col=None), {}),
+        (dict(type_col=None, query=ONE_TYPE), {}),
         (dict(sql_skip=("to_next", None)), {}),
         (dict(within=5, within_col="ts"), {}),
         (dict(within=5, order_by="tag"), {}),
@@ -177,16 +180,36 @@ SCHEMA = StructType([
          "idle-timeout", "event-time"],
 )
 def test_no_filter_where_a_dropped_row_could_matter(spark, kw, stream):
-    args = dict(order_by="event_id", type_col="event_type", attr_cols=list(SCHEMA.names))
+    args = dict(
+        query=SPEND, order_by="event_id", type_col="event_type",
+        attr_cols=list(SCHEMA.names),
+    )
     args.update(kw)
-    assert KeyedPlan(SPEND, **args).inert_filter(SCHEMA, **stream) is None
+    assert KeyedPlan(**args).inert_filter(SCHEMA, **stream) is None
 
 
-def test_filter_keeps_untyped_rows_and_needs_an_inert_type(spark):
+def test_without_a_type_column_several_declared_types_raise(spark, log_df):
+    """Every row would have to be every declared type at once."""
+    _log, df = log_df
+    with pytest.raises(ValueError, match="declares .*'signup', 'purchase'"):
+        KeyedPlan(SPEND, order_by="event_id", type_col=None, attr_cols=COLS[1:])
+    src = df.sparkSession.readStream.schema(df.schema).parquet(
+        df.inputFiles()[0].rsplit("/", 1)[0]
+    )
+    for run, frame in ((match_pattern, df), (match_pattern_stream, src)):
+        with pytest.raises(ValueError, match="pass the type column"):
+            run(frame, SPEND, order_by="event_id", partition_by="user_id", type_col=None)
+
+
+def test_filter_drops_untyped_rows_and_needs_an_inert_type(spark):
+    """The reserved type is inert here, so ``NOT event_type IN (…)``,
+    NULL for an untyped row, drops it with no clause of its own."""
     args = dict(order_by="event_id", type_col="event_type", attr_cols=list(SCHEMA.names))
-    keep = KeyedPlan(SPEND, **args).inert_filter(SCHEMA)
+    plan = KeyedPlan(SPEND, **args)
+    assert UNTYPED in plan.automaton.inert_types(plan.query.schema.keys())
+    keep = plan.inert_filter(SCHEMA)
     assert str(keep) == (
-        "Column<'or(isNull(event_type), !(in(event_type, 'click', 'error', 'view')))'>"
+        f"Column<'!(in(event_type, '{UNTYPED}', 'click', 'error', 'view'))'>"
     )
     # under within, a NULL stamp prunes every run it meets: kept too
     keep = KeyedPlan(SPEND, within=40, **args).inert_filter(SCHEMA)

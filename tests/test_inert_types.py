@@ -6,8 +6,10 @@ unchanged: the same matches in the same order, with positions mapped
 back to the full stream, and the same live runs after every kept row.
 Checked over the whole reference corpus and over seeded random
 multi-type patterns, under every skip strategy, on seeded streams that
-mix declared types with an undeclared one and untyped rows, with and
-without ``within``.
+mix declared types with undeclared ones, with and without ``within``.
+To the bare ``MatchEngine``, ``None`` is just one more undeclared type;
+a row with a NULL type column reaches it as ``KeyedPlan``'s reserved
+``UNTYPED``, which the random patterns declare.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 
 from reflinkcep_spark import Query
 from reflinkcep_spark.cep.compiler import compile_pattern, compile_query
+from reflinkcep_spark.cep.keyed import UNTYPED
 from reflinkcep_spark.cep.runtime import MatchEngine
 from reflinkcep_spark.queries.cep_queries import FUNNEL_YAML
 
@@ -27,7 +30,7 @@ from tests.test_fastpath import Q_CHAIN, Q_LPAT, Q_LPAT_INF
 
 PLAIN_STRATEGIES = ["NoSkip", "SkipToNext", "SkipPastLastEvent"]
 WITHINS = [None, 3, 6]
-TYPES = ["e", "f", "g", None]  # g is undeclared, None untyped
+TYPES = ["e", "f", "g", None]  # g and None are undeclared
 
 
 def _stream(seed: int, n: int = 14) -> list[tuple]:
@@ -127,18 +130,21 @@ def _random_pattern(rng: random.Random, depth: int, names: list) -> dict:
 
 def test_dropping_inert_types_keeps_random_multi_type_patterns():
     """Beyond the corpus's one-type patterns: a type can be taken in
-    some states and skipped in others, and x is declared but unnamed."""
+    some states and skipped in others, and x and the reserved UNTYPED
+    are declared but unnamed.  UNTYPED is inert exactly when x is, and
+    whenever any type is: ``KeyedPlan.inert_filter`` relies on it."""
     rng = random.Random(8)
-    schema = {t: [] for t in "abcx"}
+    schema = {**{t: [] for t in "abcx"}, UNTYPED: []}
     checked = 0
     for _ in range(400):
         ast = _random_pattern(rng, 3, [])
         aut = compile_pattern(ast, schema)
         inert = aut.inert_types(schema)
+        assert (UNTYPED in inert) == ("x" in inert) == bool(inert), (ast, inert)
         if inert:
             checked += 1
             streams = [  # u is undeclared
-                [(rng.choice("abcxu") if rng.random() < 0.9 else None,
+                [(rng.choice("abcxu") if rng.random() < 0.9 else UNTYPED,
                   {"id": i + 1, "v": rng.randint(0, 6)}) for i in range(12)]
                 for _ in range(2)
             ]
