@@ -4,11 +4,11 @@ Both Spark kernels feed each partition key's events, in order, through
 a :class:`~reflinkcep_spark.cep.runtime.MatchEngine` and turn its
 matches into rows.  Everything a key needs around the NFA lives here,
 once: the per-key row order every CEP path reads (:func:`order_cols`),
-the plan-time helpers (``attr_cols``, output schema, sole event
-type, SQL checks), :class:`KeyedPlan` (what every key of one operator
-shares) and :class:`KeyMatcher` (one key's engine, record buffer,
-``match_seq``, stamp check, run limit, SQL selection, rows and state
-blob).  The batch kernel feeds a key once and calls ``finish()``; the
+:class:`KeyedPlan` (every plan-time fact and check of one operator,
+read by every physical path: per-key order, output schema, SQL and
+stream rails, sole event type) and :class:`KeyMatcher` (one key's
+engine, record buffer, ``match_seq``, stamp check, run limit, SQL
+selection, rows and state blob).  The batch kernel feeds a key once and calls ``finish()``; the
 stream kernel restores the matcher from the key's state blob, feeds
 what the watermark released and saves it again — keyed state behind
 one operator definition (Flink, VLDB'17), one query definition for
@@ -30,8 +30,8 @@ from reflinkcep_spark.cep.query import Query
 from reflinkcep_spark.cep.runtime import MatchEngine, _Cfg
 
 __all__ = [
-    "UNTYPED", "KeyMatcher", "KeyedPlan", "MatchLimitExceeded", "check_sql",
-    "flexible_vars", "frame", "order_cols", "order_key", "output_schema",
+    "POS", "UNTYPED", "KeyMatcher", "KeyedPlan", "MatchLimitExceeded",
+    "flexible_vars", "frame", "key_partitioned", "order_cols", "order_key",
     "records", "resolve_attr_cols", "sort_exprs",
 ]
 
@@ -39,6 +39,10 @@ __all__ = [
 # type that no step names (KeyedPlan).  A string, because the stream's
 # parked rows carry their type through the pickled state blob.
 UNTYPED = "__untyped__"
+
+# Each row's 1-based position within its key, in the per-key order:
+# the batch kernel's key-start marker.  No input column may take it.
+POS = "__cep_pos"
 
 
 class MatchLimitExceeded(RuntimeError):
@@ -135,26 +139,19 @@ def resolve_attr_cols(
     return cols
 
 
-def output_schema(schema, keys: Sequence[str], attr_cols: Sequence[str], order_by: str, names):
-    """``keys… | match_seq | start_ord | end_ord | <name>:
-    ARRAY<STRUCT<event>>…`` from the projected input's ``schema``."""
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    field_by_name = {f.name: f for f in schema.fields}
-    event_struct = StructType([field_by_name[c] for c in attr_cols])
-    ord_type = field_by_name[order_by].dataType
-    return StructType(
-        [field_by_name[k] for k in keys]
-        + [
-            StructField("match_seq", LongType(), False),
-            StructField("start_ord", ord_type, True),
-            StructField("end_ord", ord_type, True),
-        ]
-        + [StructField(n, ArrayType(event_struct), True) for n in names]
-    )
+def key_partitioned(df, keys: Sequence[str]):
+    """``df`` hash-partitioned on ``keys`` into exactly
+    ``spark.sql.shuffle.partitions`` parts, the one exchange below a
+    per-key window.  AQE's size-based coalescing sees a few MB of
+    shuffled events and would squash the exchange to 1-2 partitions,
+    serializing the Python NFA onto 1-2 cores (measured 32→2 tasks at
+    sf0.1); an explicit count is exempt, and a window keyed on the same
+    columns reuses the partitioning."""
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return df.repartition(n_parts, *keys)
 
 
-def check_sql(query: Query, sql_skip, sql_prefer: str) -> None:
+def _check_sql(query: Query, sql_skip, sql_prefer: str) -> None:
     """Validate a SQL:2016 selection request (``sql_skip`` /
     ``sql_prefer``) against the query before any kernel runs."""
     if query.strategy != "NoSkip":
@@ -375,7 +372,12 @@ class KeyedPlan:
     time and shipped inside the task closure.  ``incremental`` is the
     stream: SQL selection is then the emitted-start dedup instead of the
     batch's per-start fold plus :meth:`KeyMatcher.finish`.  ``schema``,
-    the projected input's, fixes the per-key order (:func:`order_cols`).
+    the projected input's (``keys`` then ``attr_cols``), fixes the
+    per-key order (:func:`order_cols`) and the output schema
+    (``out_schema``).  Every plan-time rule of the operators is checked
+    here, once, so it holds on every physical path: ``on_limit``, SQL
+    selection (:func:`_check_sql`; anchors need ``sql_skip``), the
+    stream's keys and SQL rails, and the reserved :data:`POS` name.
 
     Every row gets a type here, before the engine sees it.  With a
     ``type_col``, a NULL type is :data:`UNTYPED`, which ``query`` (the
@@ -389,6 +391,7 @@ class KeyedPlan:
     order_by: str
     type_col: str | None
     attr_cols: list
+    keys: Sequence[str] = ()
     within: object = None
     within_col: str | None = None
     max_active_runs: int = 100_000
@@ -401,6 +404,7 @@ class KeyedPlan:
     schema: InitVar[object] = None
 
     def __post_init__(self, schema):
+        self._check()
         declared = list(self.query.schema)
         if self.type_col is None:
             if len(declared) != 1:
@@ -423,6 +427,64 @@ class KeyedPlan:
         # in feed order; with a decoupled stamp column that is a DATA
         # property the plan cannot guarantee, so it is checked per key.
         self.check_stamps = self.within_col is not None and self.within is not None
+        self.out_schema = None if schema is None else self._out_schema(schema)
+
+    def _check(self) -> None:
+        if self.on_limit not in ("raise", "truncate"):
+            raise ValueError(f"on_limit must be 'raise' or 'truncate', got {self.on_limit!r}")
+        if self.incremental and not self.keys:
+            raise ValueError("streaming CEP requires partition_by (keyed state)")
+        if self.sql_skip is not None:
+            _check_sql(self.query, self.sql_skip, self.sql_prefer)
+            if self.incremental:
+                self._check_stream_sql()
+        elif self.anchor_start or self.anchor_end:
+            raise ValueError(
+                "anchor_start/anchor_end are part of the SQL selection "
+                "surface (MATCH_RECOGNIZE ^/$) — pass sql_skip too"
+            )
+        if POS in (*self.keys, *self.attr_cols):
+            raise ValueError(f"input column {POS!r}: the name is reserved for the kernel")
+
+    def _check_stream_sql(self) -> None:
+        """The stream emits each start's first-completing candidate the
+        moment it completes, which is SQL's selection only for TO NEXT
+        ROW with reluctant quantifiers and at most one flexible variable
+        (:func:`flexible_vars`)."""
+        if self.sql_skip[0] != "to_next" or self.sql_prefer != "shortest":
+            raise ValueError(
+                "streaming SQL match selection supports AFTER MATCH SKIP "
+                "TO NEXT ROW with reluctant quantifiers only: greedy "
+                "preference or ordered skip modes need match finalization "
+                f"an unbounded stream cannot provide (got {self.sql_skip[0]!r} / "
+                f"{self.sql_prefer!r}); run those through the batch kernel."
+            )
+        flexible = flexible_vars(self.query.patseq)
+        if len(flexible) > 1:
+            raise ValueError(
+                "streaming SQL match selection supports at most one "
+                f"flexibly-quantified variable (got {flexible}): the stream "
+                "emits a start's first-completing candidate, which is the "
+                "lexicographic-min preference only when one variable's "
+                "length varies; run those through the batch kernel."
+            )
+
+    def _out_schema(self, schema):
+        """``keys… | match_seq | start_ord | end_ord | <name>:
+        ARRAY<STRUCT<event>>…``."""
+        from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+        ord_type = schema[self.order_by].dataType
+        event = StructType([schema[c] for c in self.attr_cols])
+        return StructType(
+            [schema[k] for k in self.keys]
+            + [
+                StructField("match_seq", LongType(), False),
+                StructField("start_ord", ord_type, True),
+                StructField("end_ord", ord_type, True),
+            ]
+            + [StructField(n, ArrayType(event), True) for n in self.names]
+        )
 
     def inert_filter(self, schema, *, idle_timeout_ms=None, event_time_col=None):
         """The row filter both operators apply right after their

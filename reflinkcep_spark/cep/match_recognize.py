@@ -1327,7 +1327,8 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     """Materialize PREV/NEXT physical-navigation columns as lag/lead
     window columns BEFORE the kernel.  Plan shape: the window needs the
     same hash(partition key) distribution and (key, order rule) sort as
-    the kernel's own row_number() window, so repartition ONCE here and
+    the kernel's own row_number() window, so repartition ONCE here, as
+    the kernel would (``cep.keyed.key_partitioned``), and
     assert ``pre_partitioned`` to the kernel — Exchange → Sort → Window
     → MapInPandas, one exchange and one sort total, exactly the
     no-navigation plan's count.  A caller that already asserted
@@ -1339,14 +1340,13 @@ def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from reflinkcep_spark.cep.keyed import order_cols, resolve_attr_cols, sort_exprs
+    from reflinkcep_spark.cep.keyed import (
+        key_partitioned, order_cols, resolve_attr_cols, sort_exprs,
+    )
 
     kernel_kwargs = dict(kernel_kwargs)
     if not kernel_kwargs.get("pre_partitioned"):
-        n_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        df = df.repartition(n_parts, t["partition_by"])
+        df = key_partitioned(df, [t["partition_by"]])
         kernel_kwargs["pre_partitioned"] = True
     # The kernel's per-key order rule over the columns it will ship, so
     # both windows share one sort.  SQL:2016 leaves tied ORDER BY values

@@ -72,10 +72,12 @@ def not_followed_by(
     # Reverse order: the frame (unbounded preceding, -1) holds the rows
     # after this one, the nearest last.  Right rows sort AFTER left rows
     # at equal `on` (__side 1 > 0), so the frame never contains a
-    # same-instant right row — that's the strictly-after contract.
+    # same-instant right row — that's the strictly-after contract.  The
+    # key reads NULLs last forward, so NULL-`on` rows come first here:
+    # a NULL left row has no follower, as in the NOT EXISTS oracle.
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(on).desc(), F.col("__side").desc())
+        .orderBy(F.col(on).desc_nulls_first(), F.col("__side").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     nxt: Column = F.last(
@@ -153,10 +155,12 @@ def not_next(
     # after this one, the nearest last.  Stream rows sort AFTER probe
     # rows at equal `on` (__side 1 > 0): a probe row's own stream twin
     # is never in its frame, so "next" means strictly-after — Flink's
-    # contract between steps.
+    # contract between steps.  The key reads NULLs last forward, as
+    # ``LEAD … ORDER BY on`` does: a NULL-`on` probe has no next event,
+    # and a NULL-`on` event is the next one after the key's last value.
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(on).desc(), F.col("__side").desc())
+        .orderBy(F.col(on).desc_nulls_first(), F.col("__side").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     stream_only = lambda col: F.when(F.col("__side") == 0, col)  # noqa: E731

@@ -27,7 +27,11 @@ boundary once in each direction.
 For patterns with a pure-Catalyst equivalent (strict/relaxed and
 nd-relaxed chains of simple events, strict loops),
 :mod:`reflinkcep_spark.operators.fastpath` avoids Python entirely;
-``match_pattern(..., allow_fastpath=True)`` dispatches automatically.
+``match_pattern(..., allow_fastpath=True)`` offers it the projection
+and the plan first, and :func:`~reflinkcep_spark.operators.fastpath.try_fast_path`
+decides the dispatch.  Every plan-time fact and check the paths share
+(per-key order, output schema, ``on_limit``, SQL selection, the
+reserved ``__cep_pos`` name) is :class:`~reflinkcep_spark.cep.keyed.KeyedPlan`'s.
 
 At 100 TB: before the shuffle (and before the fast-path dispatch) the
 operator selects the key columns plus ``attr_cols`` — every non-key
@@ -59,21 +63,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from reflinkcep_spark.cep.keyed import (
+    POS,
     KeyedPlan,
     KeyMatcher,
     MatchLimitExceeded,
-    check_sql,
     frame,
-    output_schema,
+    key_partitioned,
     resolve_attr_cols,
     sort_exprs,
 )
 from reflinkcep_spark.cep.query import Query
+from reflinkcep_spark.operators.fastpath import try_fast_path
 
 __all__ = ["match_pattern", "MatchLimitExceeded"]
-
-# Each row's 1-based position within its key, in order_by order.
-_POS = "__cep_pos"
 
 
 def match_pattern(
@@ -195,16 +197,6 @@ def match_pattern(
         the input is NOT key-clustered, a key's rows span several
         partitions and each emits its own (wrong) match set.
     """
-    if on_limit not in ("raise", "truncate"):
-        raise ValueError(f"on_limit must be 'raise' or 'truncate', got {on_limit!r}")
-    if sql_skip is not None:
-        check_sql(query, sql_skip, sql_prefer)
-        allow_fastpath = False
-    if (anchor_start or anchor_end) and sql_skip is None:
-        raise ValueError(
-            "anchor_start/anchor_end are part of the SQL selection "
-            "surface (MATCH_RECOGNIZE ^/$) — pass sql_skip too"
-        )
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by or [])
     attr_cols = resolve_attr_cols(
         df.columns, keys, attr_cols, order_by, type_col, within_col
@@ -215,7 +207,7 @@ def match_pattern(
     projected = df.select(*keys, *attr_cols)
     plan = KeyedPlan(
         query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
-        within=within, within_col=within_col,
+        keys=keys, within=within, within_col=within_col,
         max_active_runs=max_active_runs, on_limit=on_limit,
         sql_skip=sql_skip, sql_prefer=sql_prefer,
         anchor_start=anchor_start, anchor_end=anchor_end,
@@ -225,32 +217,10 @@ def match_pattern(
     if keep is not None:
         projected = projected.filter(keep)
 
-    if allow_fastpath and (
-        within is None
-        or (query.strategy == "NoSkip" and within_col in (None, order_by))
-    ):
-        from reflinkcep_spark.operators.fastpath import try_fast_path
+    if allow_fastpath and (fast := try_fast_path(projected, plan)) is not None:
+        return fast
 
-        fast = try_fast_path(
-            projected, plan.query, order_by=order_by, keys=keys,
-            type_col=type_col, attr_cols=attr_cols,
-        )
-        if fast is not None:
-            if within is not None:
-                # NoSkip emission == kernel emission (differentially
-                # pinned), and kernel-with-within == kernel filtered
-                # to span <= within, so the bound composes as a filter.
-                fast = fast.filter(
-                    (F.col("end_ord") - F.col("start_ord")) <= F.lit(within)
-                )
-            return fast
-
-    if _POS in projected.columns:
-        raise ValueError(f"input column {_POS!r}: the name is reserved for the kernel")
-    out_schema = output_schema(
-        projected.schema, keys, attr_cols, order_by, query.names
-    )
-    out_columns = [f.name for f in out_schema.fields]
+    out_columns = plan.out_schema.names
 
     def run_group(key_values: dict, events: list) -> list[dict]:
         """One key's complete input → its output rows."""
@@ -258,7 +228,7 @@ def match_pattern(
         return matcher.feed(events) + matcher.finish()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One partition's rows, sorted by keys and the rule; _POS == 1
+        # One partition's rows, sorted by keys and the rule; POS == 1
         # starts a key.  The open key's events carry across batches and
         # run once the next key starts or the partition ends.
         key_values: dict = {}
@@ -268,7 +238,7 @@ def match_pattern(
             key_cols = [pdf[k].tolist() for k in keys]
             rows: list = []
             done = 0
-            for s in np.flatnonzero(pdf[_POS].to_numpy() == 1).tolist():
+            for s in np.flatnonzero(pdf[POS].to_numpy() == 1).tolist():
                 events += batch[done:s]
                 if events:
                     rows += run_group(key_values, events)
@@ -283,17 +253,10 @@ def match_pattern(
             if rows:
                 yield frame(rows, out_columns)
 
-    # Pin the kernel's parallelism: AQE's size-based partition
-    # coalescing sees a few MB of shuffled events and would squash the
-    # exchange to 1-2 partitions, serializing the Python NFA onto 1-2
-    # cores (measured 32→2 tasks at sf0.1).  An explicit repartition
-    # with a fixed count is exempt from coalescing, and the Window
-    # reuses its hash partitioning, so there is exactly ONE shuffle.
+    # Pin the kernel's parallelism (key_partitioned); the Window reuses
+    # the hash partitioning, so there is exactly ONE shuffle.
     if keys and not pre_partitioned:
-        n_parts = int(
-            projected.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        projected = projected.repartition(n_parts, *keys)
+        projected = key_partitioned(projected, keys)
     elif not keys:
         # Total-order CEP over an unkeyed stream is inherently ONE
         # group = one task = one core, regardless of cluster size.
@@ -313,9 +276,9 @@ def match_pattern(
     # drop it) and sorts each partition by the keys and the per-key
     # order rule; row_number() marks key starts.
     ordered = projected.withColumn(
-        _POS,
+        POS,
         F.row_number().over(
             Window.partitionBy(*keys).orderBy(*sort_exprs(plan.order_cols))
         ),
     )
-    return ordered.mapInPandas(kernel, schema=out_schema)
+    return ordered.mapInPandas(kernel, schema=plan.out_schema)

@@ -32,9 +32,14 @@ atomic columns), and numbers matches by that rule, never by raw order
 values.  Match sets are identical to the kernel's, and so is emission
 order (hence ``match_seq`` numbering) except for nd-relaxed chains,
 where the kernel orders a completing event's matches by run age.
-Fast paths decline (return ``None``) whenever after-match skip
-strategies or iterative state would change results — those run in
-the kernel.
+Every dispatch rule lives in :func:`try_fast_path`, which reads the
+operator's :class:`~reflinkcep_spark.cep.keyed.KeyedPlan` (keys,
+projection, order columns, type column, the query with its reserved
+untyped type) and never works them out again.  It declines (returns
+``None``) under SQL selection, under ``within`` with a skip strategy
+or a separate stamp column, and wherever after-match skip strategies
+or iterative state would change results — those run in the kernel.
+Under NoSkip ``within`` is a span filter over the plan's matches.
 
 Equivalence with the kernel is asserted over the golden corpus in
 tests/test_fastpath.py.
@@ -42,14 +47,13 @@ tests/test_fastpath.py.
 
 from __future__ import annotations
 
-from typing import Mapping, Optional, Sequence
+from typing import Mapping, Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from reflinkcep_spark.cep.expr import to_sql
-from reflinkcep_spark.cep.keyed import order_cols, sort_exprs
-from reflinkcep_spark.cep.query import Query
+from reflinkcep_spark.cep.keyed import KeyedPlan, sort_exprs
 
 __all__ = ["try_fast_path"]
 
@@ -101,16 +105,23 @@ def _leaf_condition_sql(leaf: Mapping, type_col: Optional[str]) -> str:
     return sql
 
 
-def try_fast_path(
-    df: DataFrame,
-    query: Query,
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
-) -> Optional[DataFrame]:
-    """Return a pure-DataFrame plan for ``query`` or ``None``."""
+def try_fast_path(df: DataFrame, plan: KeyedPlan) -> Optional[DataFrame]:
+    """A pure-DataFrame plan for ``plan``'s query over ``df``, the
+    operator's projection (``plan.keys`` then ``plan.attr_cols``), or
+    ``None`` where the kernel must run.  Every dispatch rule lives here."""
+    query = plan.query
+    # SQL selection reduces the kernel's emission per start row; a fast
+    # plan produces the unselected emission only.
+    if plan.sql_skip is not None:
+        return None
+    # Under NoSkip the emission equals the kernel's, so ``within``
+    # composes as a span filter.  Under a skip strategy an over-long
+    # match can change WHICH match is emitted, and a decoupled stamp
+    # column is not in the output: both need the kernel.
+    if plan.within is not None and (
+        query.strategy != "NoSkip" or plan.stamp_col != plan.order_by
+    ):
+        return None
     try:
         chain = _spat_chain(query.patseq)
         if chain is not None:
@@ -123,47 +134,33 @@ def try_fast_path(
             # qualifying event), so SkipToNext is a no-op.  The other
             # skip strategies prune runs by the events earlier matches
             # took → kernel, unless a match is one event long.
-            if all(c in ("strict", "relaxed") for c in links):
-                if len(leaves) == 1 or query.strategy in ("NoSkip", "SkipToNext"):
-                    return _plan_chain(
-                        df, leaves, links, query, order_by=order_by,
-                        keys=keys, type_col=type_col, attr_cols=attr_cols,
-                    )
-                return None
+            if all(c in ("strict", "relaxed") for c in links) and (
+                len(leaves) == 1 or query.strategy in ("NoSkip", "SkipToNext")
+            ):
+                fast = _plan_chain(df, plan, leaves, links)
             # nd-relaxed links branch one run per qualifying event —
             # only NoSkip preserves the plain cross-product semantics.
-            if all(c == "nd-relaxed" for c in links):
-                if query.strategy == "NoSkip":
-                    return _plan_nd_chain(
-                        df, leaves, order_by=order_by, keys=keys,
-                        type_col=type_col, attr_cols=attr_cols,
-                    )
+            elif all(c == "nd-relaxed" for c in links) and query.strategy == "NoSkip":
+                fast = _plan_nd_chain(df, plan, leaves)
+            else:
                 return None
-            return None
-        loop = _strict_simple_loop(query.patseq)
-        if loop is not None and (
-            query.strategy == "NoSkip"
-            or (query.strategy == "SkipToNext" and loop["type"] == "lpat-inf")
-        ):
-            return _plan_strict_loop(
-                df, loop, query.strategy, order_by=order_by, keys=keys,
-                type_col=type_col, attr_cols=attr_cols,
-            )
+        else:
+            loop = _strict_simple_loop(query.patseq)
+            if loop is None or not (
+                query.strategy == "NoSkip"
+                or (query.strategy == "SkipToNext" and loop["type"] == "lpat-inf")
+            ):
+                return None
+            fast = _plan_strict_loop(df, plan, loop)
     except Exception:
         return None  # anything untranslatable falls back to the kernel
-    return None
+    if plan.within is not None:
+        fast = fast.filter((F.col("end_ord") - F.col("start_ord")) <= F.lit(plan.within))
+    return fast
 
 
 def _plan_chain(
-    df: DataFrame,
-    leaves: list[Mapping],
-    links: list[str],
-    query: Query,
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
+    df: DataFrame, plan: KeyedPlan, leaves: list[Mapping], links: list[str]
 ) -> DataFrame:
     """Strict/relaxed spat chain (``a · b ∘ c`` …), any length.
 
@@ -200,20 +197,20 @@ def _plan_chain(
     the rule's columns of the end row, then of the start row, read from
     the ``ev`` structs.
     """
-    order = order_cols(order_by, type_col, attr_cols, df.schema)
-    base = df.select(*keys, *attr_cols)
+    keys, attr_cols, type_col = plan.keys, plan.attr_cols, plan.type_col
+    order, order_by = plan.order_cols, plan.order_by
     L = len(leaves)
     w_rev = Window.partitionBy(*keys).orderBy(*sort_exprs(order, reverse=True))
     w_seen = w_rev.rowsBetween(Window.unboundedPreceding, -1)
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     declared = (
-        [str(t) for t in query.schema.keys()] if type_col is not None else None
+        [str(t) for t in plan.query.schema.keys()] if type_col is not None else None
     )
 
     def is_leaf(l: int):
         return F.expr(_leaf_condition_sql(leaves[l], type_col))
 
-    cur = base
+    cur = df
     tail_col: Optional[str] = None
     j = L - 1  # the last leaf not yet resolved
     while j > 0:
@@ -273,15 +270,7 @@ def _plan_chain(
     )
 
 
-def _plan_nd_chain(
-    df: DataFrame,
-    leaves: list[Mapping],
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
-) -> DataFrame:
+def _plan_nd_chain(df: DataFrame, plan: KeyedPlan, leaves: list[Mapping]) -> DataFrame:
     """All-nd-relaxed spat chain (``followedByAny``): ANY event —
     matching or not, declared or not — may be skipped (ignore edges
     guarded by ``ANY_TYPE``, reference compile.py:454-472), so the
@@ -294,10 +283,9 @@ def _plan_nd_chain(
     Emission order differs from the kernel (which orders by run age at
     each completing event); match sets are identical.
     """
-    w = Window.partitionBy(*keys).orderBy(
-        *sort_exprs(order_cols(order_by, type_col, attr_cols, df.schema))
-    )
-    base = df.select(*keys, *attr_cols, F.row_number().over(w).alias("__rank"))
+    keys, attr_cols, type_col = plan.keys, plan.attr_cols, plan.type_col
+    w = Window.partitionBy(*keys).orderBy(*sort_exprs(plan.order_cols))
+    base = df.select("*", F.row_number().over(w).alias("__rank"))
     ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
     frontier: Optional[DataFrame] = None
     for j, leaf in enumerate(leaves):
@@ -318,22 +306,13 @@ def _plan_nd_chain(
     return frontier.select(
         *keys,
         (F.row_number().over(mw) - F.lit(1)).cast("long").alias("match_seq"),
-        F.col("__e0")[order_by].alias("start_ord"),
-        F.col(f"__e{L - 1}")[order_by].alias("end_ord"),
+        F.col("__e0")[plan.order_by].alias("start_ord"),
+        F.col(f"__e{L - 1}")[plan.order_by].alias("end_ord"),
         *[F.array(F.col(f"__e{j}")).alias(leaf["name"]) for j, leaf in enumerate(leaves)],
     )
 
 
-def _plan_strict_loop(
-    df: DataFrame,
-    node: Mapping,
-    strategy: str,
-    *,
-    order_by: str,
-    keys: Sequence[str],
-    type_col: Optional[str],
-    attr_cols: Sequence[str],
-) -> DataFrame:
+def _plan_strict_loop(df: DataFrame, plan: KeyedPlan, node: Mapping) -> DataFrame:
     """Strict loop, bounded (``times(n, m)``) or not
     (``oneOrMore``/``timesOrMore(n)``), via gaps-and-islands.  A maximal
     run ("island") of adjacent qualifying rows of length M contains
@@ -356,20 +335,18 @@ def _plan_strict_loop(
     n = max(int(node["loop"]["from"]), 1)
     m = int(node["loop"]["to"]) if node["type"] == "lpat" else None
     name = node["name"]
+    keys, order_by = plan.keys, plan.order_by
 
-    base = df.select(*keys, *attr_cols)
-    cond = F.expr(_leaf_condition_sql(node, type_col))
-    w = Window.partitionBy(*keys).orderBy(
-        *sort_exprs(order_cols(order_by, type_col, attr_cols, df.schema))
-    )
-    ev = F.struct(*[F.col(c).alias(c) for c in attr_cols])
+    cond = F.expr(_leaf_condition_sql(node, plan.type_col))
+    w = Window.partitionBy(*keys).orderBy(*sort_exprs(plan.order_cols))
+    ev = F.struct(*[F.col(c).alias(c) for c in plan.attr_cols])
 
     # Islands: adjacency is judged on the FULL per-key stream (strict
     # contiguity), so row-number before filtering; after filtering,
     # rn - row_number is constant exactly within a maximal run.  The
     # row number, by the kernel's rule, also orders each island and
     # numbers the matches.
-    qual = base.select(
+    qual = df.select(
         *keys,
         ev.alias("__ev"),
         F.row_number().over(w).alias("__rn"),
@@ -388,7 +365,7 @@ def _plan_strict_loop(
     )
 
     M = F.size("__arr")
-    if strategy == "NoSkip":
+    if plan.query.strategy == "NoSkip":
         def longest(s):
             rest = M - s + 1
             return rest if m is None else F.least(F.lit(m), rest)

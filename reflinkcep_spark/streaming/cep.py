@@ -41,8 +41,11 @@ Ordering contract, two modes:
 Per-key matching is the batch kernel's
 :class:`~reflinkcep_spark.cep.keyed.KeyMatcher`, persisted as one
 pickled BINARY blob of plain data; only the reorder buffer and the
-idle-timeout flush are stream-only.  The automaton ships once inside
-the task closure, never in the state store.
+idle-timeout flush are stream-only.  The plan-time facts and checks
+are the batch operator's :class:`~reflinkcep_spark.cep.keyed.KeyedPlan`
+with ``incremental=True``, which adds the stream's own rails (keyed
+state, the SQL selection it can finalize).  The automaton ships once
+inside the task closure, never in the state store.
 
 Spark 4's ``transformWithStateInPandas`` would be the successor API
 (typed state, timers, RocksDB); its Python driver worker needs
@@ -62,15 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from reflinkcep_spark.cep.keyed import (
-    KeyedPlan,
-    KeyMatcher,
-    check_sql,
-    flexible_vars,
-    frame,
-    output_schema,
-    resolve_attr_cols,
-)
+from reflinkcep_spark.cep.keyed import KeyedPlan, KeyMatcher, frame, resolve_attr_cols
 from reflinkcep_spark.cep.query import Query
 
 __all__ = ["match_pattern_stream"]
@@ -152,47 +147,21 @@ def match_pattern_stream(
     candidate to complete is then not always the lexicographic-min one.
     """
     keys = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    if not keys:
-        raise ValueError("streaming CEP requires partition_by (keyed state)")
-    if sql_skip is not None:
-        check_sql(query, sql_skip, sql_prefer)
-        if sql_skip[0] != "to_next" or sql_prefer != "shortest":
-            raise ValueError(
-                "streaming SQL match selection supports AFTER MATCH SKIP "
-                "TO NEXT ROW with reluctant quantifiers only: greedy "
-                "preference or ordered skip modes need match finalization "
-                f"an unbounded stream cannot provide (got {sql_skip[0]!r} / "
-                f"{sql_prefer!r}); run those through the batch kernel."
-            )
-        flexible = flexible_vars(query.patseq)
-        if len(flexible) > 1:
-            raise ValueError(
-                "streaming SQL match selection supports at most one "
-                f"flexibly-quantified variable (got {flexible}): the stream "
-                "emits a start's first-completing candidate, which is the "
-                "lexicographic-min preference only when one variable's "
-                "length varies; run those through the batch kernel."
-            )
-
     attr_cols = resolve_attr_cols(
         df.columns, keys, attr_cols, order_by, type_col, within_col,
         event_time_col,
     )
     projected = df.select(*keys, *attr_cols)
-    out_schema = output_schema(
-        projected.schema, keys, attr_cols, order_by, query.names
-    )
-    out_columns = [f.name for f in out_schema.fields]
-    state_schema = StructType([StructField("blob", BinaryType(), True)])
     # The stream has no on_limit option: a hot key raises
     # MatchLimitExceeded, as batch does by default.
     plan = KeyedPlan(
         query, order_by=order_by, type_col=type_col, attr_cols=attr_cols,
-        within=within, within_col=within_col,
+        keys=keys, within=within, within_col=within_col,
         max_active_runs=max_active_runs,
         sql_skip=sql_skip, sql_prefer=sql_prefer, incremental=True,
         schema=projected.schema,
     )
+    out_columns = plan.out_schema.names
     # Rows of event types no run reacts to never reach the state store.
     keep = plan.inert_filter(
         projected.schema, idle_timeout_ms=idle_timeout_ms,
@@ -202,6 +171,7 @@ def match_pattern_stream(
         projected = projected.filter(keep)
     n_keys = len(keys)
     timeout = "ProcessingTimeTimeout" if idle_timeout_ms else "NoTimeout"
+    state_schema = StructType([StructField("blob", BinaryType(), True)])
 
     def release(pending: list, wm: int) -> tuple[list, list]:
         """Parked ``(ts_ms, type, record)`` rows at or below the watermark,
@@ -262,7 +232,7 @@ def match_pattern_stream(
 
     return projected.groupBy(*[F.col(k) for k in keys]).applyInPandasWithState(
         step,
-        outputStructType=out_schema,
+        outputStructType=plan.out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=timeout,

@@ -134,6 +134,57 @@ def test_not_next_rejects_colliding_columns(spark):
         not_next(left, stream, on="id", by="k", cond=F.lit(True))
 
 
+def test_not_followed_by_null_on_left_row_has_no_follower(spark):
+    """A left row with a NULL ``on`` has no right row after it, as in
+    the module's ``NOT EXISTS`` oracle run in DuckDB: it survives at any
+    span, and it does not hide the right row from the rows before."""
+    import duckdb
+
+    left_rows = "(1, 'l5', 5), (1, 'lnull', NULL)"
+    right_rows = "(1, 10)"
+    left = spark.sql(f"SELECT * FROM VALUES {left_rows} AS l(k, id, t)")
+    right = spark.sql(f"SELECT * FROM VALUES {right_rows} AS r(k, t)")
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE l AS SELECT * FROM (VALUES {left_rows}) l(k, id, t)")
+    con.execute(f"CREATE TABLE r AS SELECT * FROM (VALUES {right_rows}) r(k, t)")
+    expected = {None: ["lnull"], 3: ["l5", "lnull"]}
+    for within, want in expected.items():
+        bound = "" if within is None else f" AND r.t <= l.t + {within}"
+        oracle = sorted(i for (i,) in con.execute(
+            "SELECT l.id FROM l WHERE NOT EXISTS (SELECT 1 FROM r "
+            f"WHERE r.k = l.k AND r.t > l.t{bound})"
+        ).fetchall())
+        got = _ids(not_followed_by(left, right, on="t", by="k", within=within))
+        assert got == oracle == want, within
+    con.close()
+
+
+def test_not_next_null_on_event_is_last_in_its_key(spark):
+    """The next event is ``LEAD … ORDER BY on`` with NULLs last, as
+    DuckDB reads it: a NULL-``on`` probe has no next event (it
+    survives), and the ``t = 10`` probe's next event is the negated
+    NULL-``on`` one (it dies)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from reflinkcep_spark.operators import not_next
+
+    rows = "(1, 's5', 5, 'a'), (1, 's10', 10, 'a'), (1, 'snull', NULL, 'err')"
+    stream = spark.sql(f"SELECT * FROM VALUES {rows} AS s(k, id, t, et)")
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE s AS SELECT * FROM (VALUES {rows}) s(k, id, t, et)")
+    oracle = dict(con.execute(
+        "SELECT id, next_on FROM (SELECT id, LEAD(t) OVER w AS next_on, "
+        "LEAD(et) OVER w AS next_et FROM s "
+        "WINDOW w AS (PARTITION BY k ORDER BY t ASC NULLS LAST)) "
+        "WHERE NOT coalesce(next_et = 'err', false)"
+    ).fetchall())
+    out = not_next(stream, stream, on="t", by="k", cond=F.col("et") == "err")
+    got = {r["id"]: r["next_on"] for r in out.collect()}
+    assert got == oracle == {"s5": 10, "snull": None}
+    con.close()
+
+
 def test_sessionize_gap_semantics(spark):
     from reflinkcep_spark.operators import sessionize
 

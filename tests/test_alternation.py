@@ -183,6 +183,7 @@ def test_alt_never_takes_fastpath(spark):
     """allow_fastpath=True with an alt pattern must fall back to the
     kernel (the planner returns None for unknown node types), not
     crash or silently mis-plan."""
+    from reflinkcep_spark.cep.keyed import KeyedPlan
     from reflinkcep_spark.operators import match_pattern
     from reflinkcep_spark.operators.fastpath import try_fast_path
 
@@ -192,11 +193,11 @@ def test_alt_never_takes_fastpath(spark):
         "user_id int, event_id int, event_type string, value double",
     )
     assert (
-        try_fast_path(
-            df, q, order_by="event_id", keys=["user_id"],
+        try_fast_path(df, KeyedPlan(
+            q, order_by="event_id", keys=["user_id"],
             type_col="event_type",
-            attr_cols=["event_id", "event_type", "value"],
-        )
+            attr_cols=["event_id", "event_type", "value"], schema=df.schema,
+        ))
         is None
     )
     out = match_pattern(

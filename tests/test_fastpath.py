@@ -4,9 +4,9 @@ match_seq excluded for nd-relaxed chains, where emission order
 legitimately differs)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from reflinkcep_spark import Query
+from reflinkcep_spark.cep.keyed import KeyedPlan
 from reflinkcep_spark.operators import match_pattern
 from reflinkcep_spark.operators.fastpath import try_fast_path
 
@@ -84,6 +84,15 @@ def _df(spark, pairs, n_keys=3):
     ]
     return spark.createDataFrame(
         rows, "user_id int, id long, type string, name long, price long"
+    )
+
+
+def _plan(df, query, **kw):
+    """The plan ``match_pattern`` builds over ``df``, which is already
+    its projection: the ``user_id`` key, then the attribute columns."""
+    return KeyedPlan(
+        query, order_by="id", type_col="type", keys=["user_id"],
+        attr_cols=df.columns[1:], schema=df.schema, **kw,
     )
 
 
@@ -178,10 +187,7 @@ context:
 def test_fastpath_equals_kernel(spark, qyaml, names, with_seq):
     query = Query.from_yaml(qyaml)
     df = _df(spark, STREAM)
-    fast = try_fast_path(
-        df, query, order_by="id", keys=["user_id"], type_col="type",
-        attr_cols=["id", "type", "name", "price"],
-    )
+    fast = try_fast_path(df, _plan(df, query))
     assert fast is not None, "expected a fast path for this pattern"
     slow = match_pattern(
         df, query, order_by="id", partition_by="user_id", type_col="type",
@@ -237,10 +243,7 @@ def test_relaxed_pair_undeclared_type_kills_run(spark):
         rows, "user_id int, id long, type string, name long, price long"
     )
     query = Query.from_yaml(Q_REL_PAIR)
-    fast = try_fast_path(
-        df, query, order_by="id", keys=["user_id"], type_col="type",
-        attr_cols=["id", "type", "name", "price"],
-    )
+    fast = try_fast_path(df, _plan(df, query))
     assert fast is not None
     slow = match_pattern(
         df, query, order_by="id", partition_by="user_id", type_col="type",
@@ -254,11 +257,46 @@ def test_relaxed_pair_undeclared_type_kills_run(spark):
 def test_fastpath_declines_relaxed(spark):
     query = Query.from_yaml(Q_RELAXED)
     df = _df(spark, STREAM, n_keys=1)
-    fast = try_fast_path(
-        df, query, order_by="id", keys=["user_id"], type_col="type",
-        attr_cols=["id", "type", "name", "price"],
-    )
+    fast = try_fast_path(df, _plan(df, query))
     assert fast is None
+
+
+REPEATED_LEAF = Q_CHAIN.replace("name: b,", "name: a,")
+
+
+@pytest.mark.parametrize(
+    "qyaml,kw",
+    [(Q_CHAIN, dict(sql_skip=("past_last", None))),
+     (_chain_yaml(["relaxed", "relaxed"], "SkipToNext"), dict(within=5)),
+     (Q_CHAIN, dict(within=5, within_col="price")),
+     (REPEATED_LEAF, {}),
+     (_chain_yaml(["nd-relaxed", "nd-relaxed"], "SkipToNext"), {}),
+     (_chain_yaml(["strict", "nd-relaxed"]), {})],
+    ids=["sql-skip", "within-skiptonext", "within-col", "repeated-leaf",
+         "nd-skiptonext", "strict-nd-mix"],
+)
+def test_fast_path_refusals(spark, qyaml, kw):
+    """Each dispatch rule refuses on its own: without ``kw`` the SQL and
+    ``within`` cases plan, and the other shapes plan under another
+    strategy or contiguity (``test_fastpath_equals_kernel``)."""
+    df = _df(spark, STREAM)
+    query = Query.from_yaml(qyaml)
+    assert try_fast_path(df, _plan(df, query, **kw)) is None
+    if kw:
+        assert try_fast_path(df, _plan(df, query)) is not None
+
+
+@pytest.mark.parametrize("allow_fastpath", [True, False])
+def test_reserved_position_column_is_refused_on_every_path(spark, allow_fastpath):
+    """The kernel numbers each key's rows in ``__cep_pos``; an input
+    column of that name is refused by the fast path as by the kernel."""
+    df = _df(spark, STREAM).withColumnRenamed("price", "__cep_pos")
+    with pytest.raises(ValueError, match="__cep_pos"):
+        match_pattern(
+            df, Query.from_yaml(Q_SPAT.replace(" and price < 4", "")),
+            order_by="id", partition_by="user_id", type_col="type",
+            allow_fastpath=allow_fastpath,
+        )
 
 
 def test_fastpath_spat_plan_is_pythonless(spark):
@@ -405,18 +443,21 @@ def _replay_long(rows, query, within):
 def test_relaxed_chain_long_keys_equal_replay(spark, l1, strategy, within):
     """The relaxed-chain planner on keys long enough for a quadratic
     window frame to show, against a ``MatchEngine`` replay.  ``within``
-    composes with the plan as the span filter ``match_pattern``
-    applies."""
+    reaches the plan through ``KeyedPlan``: under NoSkip it composes as
+    the planner's span filter; under SkipToNext the planner refuses it
+    and ``match_pattern`` runs the kernel."""
     query = Query.from_yaml(LONG_FUNNEL.format(l1=l1, strategy=strategy))
     rows = _long_keys()
     df = spark.createDataFrame(rows, "user_id long, id long, type string, value long")
-    fast = try_fast_path(
-        df, query, order_by="id", keys=["user_id"], type_col="type",
-        attr_cols=["id", "type", "value"],
-    )
+    fast = try_fast_path(df, _plan(df, query, within=within))
+    if within is not None and strategy != "NoSkip":
+        # the planner refuses within under a skip strategy: the kernel runs
+        assert fast is None
+        fast = match_pattern(
+            df, query, order_by="id", partition_by="user_id", type_col="type",
+            within=within,
+        )
     assert fast is not None
-    if within is not None:
-        fast = fast.filter(F.col("end_ord") - F.col("start_ord") <= within)
     got = sorted(
         (r["user_id"], r["start_ord"], r["end_ord"],
          tuple(tuple(e["id"] for e in r[n]) for n in query.names))

@@ -51,6 +51,14 @@ ONE_TYPE = Query.from_yaml(
     SPEND_YAML.replace("event: signup", "event: purchase")
     .replace("signup: [], purchase: [], error: [], click: [], view: []", "purchase: []")
 )
+# The signup step alone: SQL selection accepts it (one step, so strict
+# throughout), and the other declared types are inert to it.
+SIGNUP = Query.from_yaml("""
+type: query
+patseq: {type: spat, name: reg, event: signup, cndt: {expr: "True"}}
+context:
+  schema: {signup: [], purchase: [], error: [], click: [], view: []}
+""")
 FUNNEL = Query.from_yaml(FUNNEL_YAML)
 INERT_IN = re.compile(r"NOT event_type#\d+ IN \(")
 COLS = ["user_id", "event_id", "event_type", "value"]
@@ -170,7 +178,7 @@ SCHEMA = StructType([
     "kw,stream",
     [
         (dict(type_col=None, query=ONE_TYPE), {}),
-        (dict(sql_skip=("to_next", None)), {}),
+        (dict(sql_skip=("to_next", None), query=SIGNUP), {}),
         (dict(within=5, within_col="ts"), {}),
         (dict(within=5, order_by="tag"), {}),
         (dict(), dict(idle_timeout_ms=1000)),
@@ -223,7 +231,7 @@ def test_a_null_stamped_inert_row_still_prunes_runs_on_a_stream():
     row prunes every run (NaN comparisons are false), and on a stream
     later micro-batches arrive after it.  Without Spark."""
     plan = KeyedPlan(SPEND, order_by="event_id", type_col="event_type",
-                     attr_cols=COLS[1:], within=40, incremental=True)
+                     attr_cols=COLS[1:], keys=COLS[:1], within=40, incremental=True)
 
     def ev(t, stamp):
         return t, {"event_id": stamp, "event_type": t, "value": 10.0}

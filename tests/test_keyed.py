@@ -42,7 +42,7 @@ def _frame(stream) -> pd.DataFrame:
 
 def _plan(query, incremental, **kw) -> KeyedPlan:
     return KeyedPlan(
-        query, order_by="id", type_col="type", attr_cols=COLS,
+        query, order_by="id", type_col="type", attr_cols=COLS, keys=list(KEY),
         incremental=incremental, **kw,
     )
 
@@ -260,11 +260,17 @@ def test_two_flexible_vars_first_completing_is_not_sql_preference():
     assert flexible_vars(q.patseq) == ["A", "B"]
     pdf = pd.DataFrame({"e": range(5), "v": [1, 2, 2, 2, 9]})
 
+    kw = dict(
+        order_by="e", type_col=None, attr_cols=["e", "v"], keys=["u"],
+        sql_skip=t["skip"], sql_prefer=t["prefer"],
+    )
+    with pytest.raises(ValueError, match="at most one flexibly-quantified"):
+        KeyedPlan(q, incremental=True, **kw)
+
     def lens_at_start_0(incremental):
-        plan = KeyedPlan(
-            q, order_by="e", type_col=None, attr_cols=["e", "v"],
-            sql_skip=t["skip"], sql_prefer=t["prefer"], incremental=incremental,
-        )
+        plan = KeyedPlan(q, **kw)
+        # what the stream would emit if the plan let it run
+        plan.incremental = incremental
         row = next(r for r in _batch(plan, pdf) if r["start_ord"] == 0)
         return tuple(len(row[n]) for n in q.names)
 

@@ -224,6 +224,7 @@ def test_nested_equals_flat_on_random_streams(label, nested, flat):
 def test_fastpath_parity_right_nested_chain(spark):
     """The planner now flattens a right-nested spat chain under a
     non-strict combine; its window plan must match the kernel."""
+    from reflinkcep_spark.cep.keyed import KeyedPlan
     from reflinkcep_spark.operators import match_pattern
     from reflinkcep_spark.operators.fastpath import try_fast_path
 
@@ -250,10 +251,10 @@ def test_fastpath_parity_right_nested_chain(spark):
         for i, n in enumerate([1, 4, 2, 3, 1, 2, 4, 3, 1, 9, 2, 3])
     ]
     df = spark.createDataFrame(rows, "user_id int, id long, type string, name long")
-    fast = try_fast_path(
-        df, query, order_by="id", keys=["user_id"], type_col="type",
-        attr_cols=["id", "type", "name"],
-    )
+    fast = try_fast_path(df, KeyedPlan(
+        query, order_by="id", keys=["user_id"], type_col="type",
+        attr_cols=["id", "type", "name"], schema=df.schema,
+    ))
     assert fast is not None, "planner should accept the right-nested chain now"
     slow = match_pattern(
         df, query, order_by="id", partition_by="user_id", type_col="type",
