@@ -23,18 +23,37 @@ from __future__ import annotations
 from functools import cached_property
 from typing import Callable, Iterable, Optional
 
-__all__ = ["Automaton", "Edge", "TAKE", "IGNORE", "EPS", "ANY_TYPE"]
+__all__ = ["Automaton", "Edge", "TAKE", "IGNORE", "EPS", "ANY_TYPE", "DEAD"]
 
 TAKE, IGNORE, EPS = 0, 1, 2
 ANY_TYPE = "*"
 
 _TRUE = lambda attrs, env: True  # noqa: E731
+_WILD = {None, ANY_TYPE}  # edge types that admit every event type
+
+# The step-table entry of a state no run can consume from again.
+DEAD: tuple = ({}, ())
+
+
+def _same_step(a, b) -> bool:
+    """Whether two step-table entries consume every event type alike:
+    the same edges, compared by content, in the same order."""
+    (by_a, wild_a), (by_b, wild_b) = a, b
+
+    def content(es):
+        return [(e.kind, e.pred, e.dst, e.sink, e.update) for e in es]
+
+    # None: a type no edge names, served by the wildcard edges
+    return all(
+        content(by_a.get(t, wild_a)) == content(by_b.get(t, wild_b))
+        for t in {None, *by_a, *by_b}
+    )
 
 
 class Edge:
     """One transition.  ``pred`` is ``fn(attrs, env) -> truthy``; an
     edge applies to an event when its type guard admits the event's
-    type (see :attr:`Automaton.edges_by_type`) and ``pred`` holds."""
+    type (see :attr:`Automaton.steps`) and ``pred`` holds."""
 
     __slots__ = ("kind", "ev_type", "pred", "dst", "sink", "update")
 
@@ -91,94 +110,74 @@ class Automaton:
     # use and cached, so the MatchEngine of every key only reads them.
 
     @cached_property
-    def spawn_types(self) -> Optional[frozenset]:
-        """Event types a fresh run can consume via a TAKE/IGNORE edge in
-        the start's ε-closure; for any other type the spawn contributes
-        nothing and the engine skips it.  None = wildcard (always spawn)."""
-        seen = {self.start}
-        stack = [self.start]
-        types: set = set()
-        while stack:
-            s = stack.pop()
-            for e in self.edges[s]:
-                if e.kind == EPS:
-                    if e.dst not in seen:
-                        seen.add(e.dst)
-                        stack.append(e.dst)
-                elif e.ev_type is None or e.ev_type == ANY_TYPE:
-                    return None
-                else:
-                    types.add(e.ev_type)
-        return frozenset(types)
+    def steps(self) -> list:
+        """The step table, per state ``s``: the consuming edges a run
+        stored at ``s`` tries on an event, as ``({event_type: edges},
+        wildcard_edges)``; ``wildcard_edges`` serves every type no edge
+        names.  Every event has a type: ``KeyedPlan`` gives a row with a
+        NULL type the reserved ``UNTYPED`` (``cep/keyed.py``), and to a
+        bare engine ``None`` is one more type no edge names.
 
-    @cached_property
-    def edges_by_type(self) -> list:
-        """Per state: ``({event_type: edges}, wildcard_edges)``, the
-        candidate edges for an event of that type in declaration order
-        — EPS, wildcard (``ANY_TYPE``) and same-type edges;
-        ``wildcard_edges`` serves types no edge names.  Every event has
-        a type: ``KeyedPlan`` gives a row with a NULL type the reserved
-        ``UNTYPED`` (``cep/keyed.py``), and to a bare engine ``None`` is
-        one more type no edge names."""
-        table = []
-        for es in self.edges:
-            wild = [e for e in es if e.ev_type is None or e.ev_type == ANY_TYPE]
-            by_type = {}
-            for t in {e.ev_type for e in es} - {None, ANY_TYPE}:
-                by_type[t] = [e for e in es if e in wild or e.ev_type == t]
-            table.append((by_type, wild))
-        return table
+        A run is stored only as the destination of a TAKE or IGNORE
+        edge, and a consuming step resets its ε-guard, so ``s`` alone
+        fixes the entry (:meth:`_step`); the start's entry is the spawn
+        test.  A state with no consuming edge in reach holds
+        :data:`DEAD`: a run there can never consume again, so the engine
+        emits it if it accepts and never stores it.  The compiler gives
+        no accepting state an out-edge, so every accepting state is
+        dead."""
+        assert not any(
+            self.edges[s] for s, out in enumerate(self.outputs) if out is not None
+        ), "an accepting state has an out-edge"
+        return [self._step(s) for s in range(len(self.edges))]
 
     @cached_property
     def dig_table(self) -> list:
-        """Per state: None or (accepting_state, eps_seen_mask), what
-        ``MatchEngine._dig_accept``'s dynamic ε-closure search returns
-        for a just-consumed configuration.  A TAKE resets eps_seen to
-        {state}, so the outcome depends on the state alone."""
+        """Per state: the accepting state a run that TAKEs into it
+        completes at — the state itself when it accepts, else the first
+        accepting state its ε-closure reaches depth-first in edge order
+        (reference find_accepted, DST.py:272-292) — or None."""
         edges = self.edges
         outputs = self.outputs
 
-        def dig(start: int):
-            visited = {start}
-
-            def rec(state: int, mask: int):
-                visited.add(state)
-                for e in edges[state]:
-                    dst = e.dst
-                    if dst in visited or e.kind != EPS or mask & (1 << dst):
-                        continue
-                    nmask = mask | (1 << dst)
-                    if outputs[dst] is not None:
-                        return (dst, nmask)
-                    found = rec(dst, nmask)
+        def dig(state: int, seen: set):
+            if outputs[state] is not None:
+                return state
+            seen.add(state)
+            for e in edges[state]:
+                if e.kind == EPS and e.dst not in seen:
+                    found = dig(e.dst, seen)
                     if found is not None:
                         return found
-                return None
+            return None
 
-            return rec(start, 1 << start)
+        return [dig(s, set()) for s in range(len(edges))]
 
-        return [dig(s) for s in range(len(edges))]
-
-    def _step(self, state: int, mask: int, ev_type) -> list:
-        """The consuming edges a run at ``state`` with ε-guard ``mask``
-        tries on an event of ``ev_type``, in ``MatchEngine.feed``'s
-        exploration order (ε-successors inserted right after their
-        parent).  An ``ev_type`` no edge names selects the wildcard
-        edges, as in the engine."""
-        edges_by_type = self.edges_by_type
-        work = [(state, mask)]
-        out = []
+    def _step(self, state: int):
+        """The table entry of ``state``: walk its ε-closure in the
+        engine's exploration order (depth-first, each ε-successor
+        explored right after its parent's consuming edges, no ε-path
+        entering a state twice) and bucket the consuming edges it meets
+        by the event types they admit.  Every ε-edge admits every type,
+        so one walk serves all types; an edge typed ``None`` or
+        ``ANY_TYPE`` admits every type."""
+        work = [(state, 1 << state)]
+        order = []
         i = 0
         while i < len(work):
-            s, m = work[i]
+            s, mask = work[i]
             i += 1
-            by_type, wild = edges_by_type[s]
-            for e in by_type.get(ev_type, wild):
+            for e in self.edges[s]:
                 if e.kind != EPS:
-                    out.append(e)
-                elif not m & (1 << e.dst):
-                    work.insert(i, (e.dst, m | (1 << e.dst)))
-        return out
+                    order.append(e)
+                elif not mask & (1 << e.dst):
+                    work.insert(i, (e.dst, mask | (1 << e.dst)))
+        if not order:
+            return DEAD
+        wild = [e for e in order if e.ev_type in _WILD]
+        named = {e.ev_type for e in order} - _WILD
+        by_type = {t: [e for e in order if e.ev_type == t or e.ev_type in _WILD] for t in named}
+        return by_type, wild
 
     def inert_types(self, types: Iterable[str]) -> frozenset:
         """The declared event types (``types``, the query's schema) that
@@ -186,56 +185,40 @@ class Automaton:
         key's stream leaves its matches, their order and the live run
         count at every other event unchanged.
 
-        A type is inert when no fresh run spawns on it and, from every
-        configuration a run can be stored in (the destination of a
-        TAKE or IGNORE edge with its fresh ε-guard, or a ``dig_table``
-        target with its dig mask), the step on it is either exactly
-        one unconditioned IGNORE edge into a state whose step on every
-        type equals the stored one's — the relaxed skip, which changes
-        nothing a later event sees — or, for a dead configuration (no
-        consuming edge on any type), nothing: that run dies on its next
-        event either way.  With a wildcard spawn nothing is inert."""
+        A type is inert when no fresh run spawns on it and, at every
+        state a run can be stored in (the destination of a TAKE or
+        IGNORE edge), the step on it is exactly one unconditioned
+        IGNORE edge into a state whose entry consumes every type alike
+        — the relaxed skip, which changes nothing a later event sees.
+        Dead states are never stored.  With a wildcard spawn nothing is
+        inert."""
         types = frozenset(types)
         cached = self._inert.get(types)
         if cached is not None:
             return cached
+        steps = self.steps
+        spawn, spawn_wild = steps[self.start]
         inert = frozenset()
-        if self.spawn_types is not None:
-            named = {e.ev_type for es in self.edges for e in es} - {None, ANY_TYPE}
-            probe = [object(), *named, *types]  # object(): an undeclared type
+        if not spawn_wild:
+            stored = {e.dst for es in self.edges for e in es if e.kind != EPS}
 
-            sigs: dict = {}
-
-            def signature(state: int, mask: int) -> list:
-                sig = sigs.get((state, mask))
-                if sig is None:
-                    sig = sigs[state, mask] = [
-                        [(e.kind, e.pred, e.dst, e.sink, e.update)
-                         for e in self._step(state, mask, t)]
-                        for t in probe
-                    ]
-                return sig
-
-            stored = {
-                (e.dst, 1 << e.dst) for es in self.edges for e in es if e.kind != EPS
-            }
-            stored |= {hit for hit in self.dig_table if hit is not None}
-
-            def skips(state: int, mask: int, t) -> bool:
-                step = self._step(state, mask, t)
-                if not step:
-                    return not any(signature(state, mask))  # dead run
+            def skips(state: int, t) -> bool:
+                entry = steps[state]
+                if entry is DEAD:
+                    return True
+                by_type, wild = entry
+                step = by_type.get(t, wild)
                 if len(step) != 1:
                     return False
                 e = step[0]
                 return (
                     e.kind == IGNORE and e.pred is _TRUE
-                    and signature(e.dst, 1 << e.dst) == signature(state, mask)
+                    and _same_step(steps[e.dst], entry)
                 )
 
             inert = frozenset(
-                t for t in types - self.spawn_types
-                if all(skips(s, m, t) for s, m in stored)
+                t for t in types - spawn.keys()
+                if all(skips(s, t) for s in stored)
             )
         self._inert[types] = inert
         return inert

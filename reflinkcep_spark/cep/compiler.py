@@ -15,9 +15,11 @@ Contiguity (reference ast.py:13-58):
     nd-relaxed  skip anything — emits all combinations
 
 A run whose last consuming step was an ignore can never be accepted;
-this is guaranteed jointly by the ``last_take`` run flag and by routing
-post-ignore loop states through dedicated states with no proceed edges
-(reference compile.py:93-108).
+this is guaranteed jointly by the runtime, which checks acceptance only
+after a TAKE, and by routing post-ignore loop states through dedicated
+states with no proceed edges (reference compile.py:93-108).  No
+accepting state gets an out-edge, so a run that accepts can never
+consume again (asserted by ``Automaton.steps``).
 """
 
 from __future__ import annotations

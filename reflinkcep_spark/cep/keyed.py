@@ -324,10 +324,7 @@ def _save_engine(
     engine: MatchEngine, match_seq: int, buffer: dict, pending: list,
     last_stamp=None, emitted_starts=None,
 ) -> bytes:
-    runs = [
-        (k, (c.state, c.env, c.caps, c.last_take, c.eps_seen, c.first))
-        for k, c in engine.runs
-    ]
+    runs = [(k, (c.state, c.env, c.caps, c.first)) for k, c in engine.runs]
     return pickle.dumps(
         (engine.pos, runs, match_seq, buffer, pending, last_stamp,
          emitted_starts),
@@ -337,30 +334,19 @@ def _save_engine(
 
 def _load_engine(blob: bytes, engine: MatchEngine) -> tuple:
     data = pickle.loads(blob)
-    # pre-round-14 checkpoints have no last_stamp / emitted_starts
-    # elements (same migration contract as _coerce_eps below)
+    # Older checkpoints: no last_stamp / emitted_starts elements, and
+    # runs carry two more fields (a take flag and an ε-guard) before
+    # ``first``, which the step table no longer needs; their dead runs
+    # consume nothing and are gone after the next event.
     pos, runs, match_seq, buffer, pending = data[:5]
     last_stamp = data[5] if len(data) > 5 else None
     emitted_starts = data[6] if len(data) > 6 else None
     engine.pos = pos
     engine.runs = [
-        (k, _Cfg(state, env, caps, last_take, _coerce_eps(eps), first))
-        for k, (state, env, caps, last_take, eps, first) in runs
+        (k, _Cfg(state, env, caps, first))
+        for k, (state, env, caps, *_, first) in runs
     ]
     return match_seq, buffer, pending, last_stamp, emitted_starts
-
-
-def _coerce_eps(eps) -> int:
-    """Migrate pre-bitmask checkpoints: ``eps_seen`` was a tuple of
-    state ids before it became an int bitmask, and a streaming job
-    restored from an old checkpoint would otherwise crash on the first
-    ``eps_seen & (1 << dst)``."""
-    if isinstance(eps, int):
-        return eps
-    mask = 0
-    for s in eps:
-        mask |= 1 << s
-    return mask
 
 
 # -- per key ----------------------------------------------------------------

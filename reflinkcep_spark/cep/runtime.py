@@ -5,13 +5,16 @@ Event-at-a-time semantics equivalent to the reference executor
 
 * a fresh run starts at every event offset (every offset is a potential
   match start),
-* ε-expansion is depth-first via worklist insertion, preserving the
-  exploration order that fixes match emission order,
-* each state is entered by ε at most once per consuming step
-  (ε-cycle guard),
-* after a consuming step, an ε-reachable accepting configuration is
-  emitted immediately ("dig"), and both the consumed and the accepted
-  configuration stay live,
+* ε-moves are resolved once per automaton, not per event: the step
+  table (``Automaton.steps``) lists, per state, the consuming edges a
+  stored run tries on each event type in ε-exploration order, the
+  order that fixes match emission order,
+* a TAKE that lands on an accepting state, or on a state whose
+  ε-closure reaches one (``Automaton.dig_table``), emits the match
+  immediately,
+* only live runs are stored: a run at a state with no consuming edge
+  in reach (every accepting state is one) is emitted if it accepts
+  and then dropped,
 * captures are shared-tail cons lists and data environments are
   copy-on-write dicts — no deep copies anywhere (the reference's main
   hot spot, DST.py:141-166).
@@ -37,28 +40,24 @@ throw-on-miss default.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping, Optional, Sequence
+from typing import Iterable, Mapping, Optional
 
-from reflinkcep_spark.cep.automaton import EPS, TAKE, Automaton
+from reflinkcep_spark.cep.automaton import DEAD, TAKE, Automaton
 from reflinkcep_spark.cep.compiler import compile_query
 from reflinkcep_spark.cep.query import Query
 
 __all__ = ["MatchEngine", "Match", "run_pattern"]
 
-_EMPTY_ATTRS: dict = {}
-
 
 class _Cfg:
     """A live run configuration."""
 
-    __slots__ = ("state", "env", "caps", "last_take", "eps_seen", "first")
+    __slots__ = ("state", "env", "caps", "first")
 
-    def __init__(self, state, env, caps, last_take, eps_seen, first=None):
+    def __init__(self, state, env, caps, first=None):
         self.state = state
         self.env = env  # data-variable environment (copy-on-write)
         self.caps = caps  # {capture_name: cons-list (prev, event_pos)}
-        self.last_take = last_take
-        self.eps_seen = eps_seen  # BITMASK of states entered by ε this consume-step
         self.first = first  # stamp of this run's first TAKEN event
 
 
@@ -126,121 +125,63 @@ class MatchEngine:
             self.skip_target = None
         self.within = within
         # per-automaton tables (cep/automaton.py), built once and shared
-        self._spawn_types = automaton.spawn_types
-        self._edges_by_type = automaton.edges_by_type
+        self._steps = automaton.steps
         self._dig_table = automaton.dig_table
+        self._spawn = _Cfg(automaton.start, automaton.init_env, {})
         self.reset()
 
     def reset(self) -> None:
-        self.runs: list = []  # [(start_offset, _Cfg)]
+        self.runs: list = []  # [(start_offset, _Cfg)], live runs only
         self.pos = 0  # 0-based offset of the next event
 
     # -- core ---------------------------------------------------------
     def feed(self, ev_type: str, attrs: Mapping, stamp=None) -> list[Match]:
-        aut = self.aut
-        edges_by_type = self._edges_by_type
-        outputs = aut.outputs
+        steps = self._steps
+        dig_table = self._dig_table
         pos = self.pos
         self.pos = pos + 1
         if stamp is None:
             stamp = pos
 
-        worklist = self.runs
+        runs = self.runs
         within = self.within
-        if within is not None and worklist:
+        if within is not None and runs:
             # A run whose first take is further back than `within` can
             # never complete in-window again (stamps are monotone), so
             # it is dead state: drop it before it does any work.
-            worklist = [
+            runs = [
                 (k, c)
-                for k, c in worklist
+                for k, c in runs
                 if c.first is None or stamp - c.first <= within
             ]
+        spawn = self._spawn
+        by_type, wild = steps[spawn.state]
+        if by_type.get(ev_type, wild):
+            runs.append((pos, spawn))
         self.runs = next_runs = []
-        spawn_types = self._spawn_types
-        if spawn_types is None or ev_type in spawn_types:
-            worklist.append(
-                (pos, _Cfg(aut.start, aut.init_env, {}, False, 1 << aut.start))
-            )
 
         accepted: list = []
-        i = 0
-        while i < len(worklist):
-            k, cfg = worklist[i]
-            i += 1
+        for k, cfg in runs:
             env = cfg.env
-            by_type, wild = edges_by_type[cfg.state]
+            by_type, wild = steps[cfg.state]
             for e in by_type.get(ev_type, wild):
-                kind = e.kind
-                if kind == EPS:
-                    dst = e.dst
-                    if cfg.eps_seen & (1 << dst):
-                        continue
-                    nc = _Cfg(
-                        dst, env, cfg.caps, cfg.last_take,
-                        cfg.eps_seen | (1 << dst), cfg.first,
-                    )
-                    worklist.insert(i, (k, nc))
-                else:
-                    if not e.pred(attrs, env):
-                        continue
-                    if kind == TAKE:
-                        new_env = e.update(attrs, env) if e.update else env
-                        caps = dict(cfg.caps)
-                        caps[e.sink] = (caps.get(e.sink), pos)
+                if not e.pred(attrs, env):
+                    continue
+                dst = e.dst
+                if e.kind == TAKE:
+                    new_env = e.update(attrs, env) if e.update else env
+                    caps = dict(cfg.caps)
+                    caps[e.sink] = (caps.get(e.sink), pos)
+                    hit = dig_table[dst]
+                    if hit is not None:
+                        accepted.append((k, hit, caps))
+                    if steps[dst] is not DEAD:
                         first = cfg.first if cfg.first is not None else stamp
-                        nc = _Cfg(e.dst, new_env, caps, True, 1 << e.dst, first)
-                        next_runs.append((k, nc))
-                        if outputs[nc.state] is not None:
-                            accepted.append((k, nc))
-                        dug = self._dig_accept(nc)
-                        if dug is not None:
-                            next_runs.append((k, dug))
-                            accepted.append((k, dug))
-                    else:  # IGNORE
-                        nc = _Cfg(
-                            e.dst, env, cfg.caps, False, 1 << e.dst, cfg.first
-                        )
-                        next_runs.append((k, nc))
+                        next_runs.append((k, _Cfg(dst, new_env, caps, first)))
+                elif steps[dst] is not DEAD:  # IGNORE
+                    next_runs.append((k, _Cfg(dst, env, cfg.caps, cfg.first)))
 
         return self._emit(pos, accepted)
-
-    def _dig_accept(self, cfg: _Cfg) -> Optional[_Cfg]:
-        """Search the ε-closure of a just-consumed configuration for an
-        accepting state (reference find_accepted, DST.py:272-292).
-
-        The fresh-mask case (``eps_seen == {state}``, which is how
-        feed() always calls this — a TAKE resets the ε-guard) is served
-        from the automaton's precomputed ``dig_table``; the dynamic search below
-        is kept for arbitrary masks so the method's contract is total."""
-        if not cfg.last_take:
-            return None
-        if cfg.eps_seen == 1 << cfg.state:
-            hit = self._dig_table[cfg.state]
-            if hit is None:
-                return None
-            dst, mask = hit
-            return _Cfg(dst, cfg.env, cfg.caps, cfg.last_take, mask)
-        aut = self.aut
-        edges = aut.edges
-        outputs = aut.outputs
-        visited = set()
-
-        def rec(c: _Cfg) -> Optional[_Cfg]:
-            visited.add(c.state)
-            for e in edges[c.state]:
-                dst = e.dst
-                if dst in visited or e.kind != EPS or c.eps_seen & (1 << dst):
-                    continue
-                nc = _Cfg(dst, c.env, c.caps, c.last_take, c.eps_seen | (1 << dst))
-                if outputs[dst] is not None:
-                    return nc
-                found = rec(nc)
-                if found is not None:
-                    return found
-            return None
-
-        return rec(cfg)
 
     def _emit(self, pos: int, accepted: list) -> list[Match]:
         # ``accepted`` is collected during feed() in next_runs order
@@ -256,10 +197,10 @@ class MatchEngine:
         threshold: Optional[int] = None  # SkipToFirst/SkipToLast ratchet
         strategy = self.strategy
         pick = self.skip_pick
-        for k, cfg in accepted:
+        for k, state, caps in accepted:
             if k in killed or (threshold is not None and k < threshold):
                 continue
-            m = self._materialize(k, pos, cfg)
+            m = self._materialize(k, pos, state, caps)
             out.append(m)
             if strategy == "SkipToNext":
                 killed.add(k)
@@ -281,10 +222,9 @@ class MatchEngine:
             ]
         return out
 
-    def _materialize(self, k: int, pos: int, cfg: _Cfg) -> Match:
+    def _materialize(self, k: int, pos: int, state: int, caps: dict) -> Match:
         captures = {}
-        caps = cfg.caps
-        for key, var in self.aut.outputs[cfg.state].items():
+        for key, var in self.aut.outputs[state].items():
             cell = caps.get(var)
             if cell is not None:
                 captures[key] = _cons_to_list(cell)

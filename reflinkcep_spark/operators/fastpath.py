@@ -36,10 +36,11 @@ Every dispatch rule lives in :func:`try_fast_path`, which reads the
 operator's :class:`~reflinkcep_spark.cep.keyed.KeyedPlan` (keys,
 projection, order columns, type column, the query with its reserved
 untyped type) and never works them out again.  It declines (returns
-``None``) under SQL selection, under ``within`` with a skip strategy
-or a separate stamp column, and wherever after-match skip strategies
-or iterative state would change results — those run in the kernel.
-Under NoSkip ``within`` is a span filter over the plan's matches.
+``None``) under SQL selection, under ``within`` with a separate stamp
+column, and wherever after-match skip strategies or iterative state
+would change results — those run in the kernel.  ``within`` is a span
+filter over the plan's matches: every shape planned under a skip
+strategy emits at most one match per start, or one-event matches.
 
 Equivalence with the kernel is asserted over the golden corpus in
 tests/test_fastpath.py.
@@ -114,13 +115,12 @@ def try_fast_path(df: DataFrame, plan: KeyedPlan) -> Optional[DataFrame]:
     # plan produces the unselected emission only.
     if plan.sql_skip is not None:
         return None
-    # Under NoSkip the emission equals the kernel's, so ``within``
-    # composes as a span filter.  Under a skip strategy an over-long
-    # match can change WHICH match is emitted, and a decoupled stamp
-    # column is not in the output: both need the kernel.
-    if plan.within is not None and (
-        query.strategy != "NoSkip" or plan.stamp_col != plan.order_by
-    ):
+    # ``within`` composes as a span filter over the plan's matches: under
+    # NoSkip the emission equals the kernel's, and under a skip strategy
+    # every shape planned below emits at most one match per start, or
+    # one-event matches, so no over-long match changes which match is
+    # emitted.  A decoupled stamp column is not in the output: kernel.
+    if plan.within is not None and plan.stamp_col != plan.order_by:
         return None
     try:
         chain = _spat_chain(query.patseq)
@@ -155,7 +155,13 @@ def try_fast_path(df: DataFrame, plan: KeyedPlan) -> Optional[DataFrame]:
     except Exception:
         return None  # anything untranslatable falls back to the kernel
     if plan.within is not None:
-        fast = fast.filter((F.col("end_ord") - F.col("start_ord")) <= F.lit(plan.within))
+        # A one-event match has no span to bound, so a NULL order value
+        # (NULL - NULL) keeps it, as the kernel does; a longer match with
+        # one is pruned on both paths.
+        one_event = sum(F.size(n) for n in plan.names) == 1
+        fast = fast.filter(
+            ((F.col("end_ord") - F.col("start_ord")) <= F.lit(plan.within)) | one_event
+        )
     return fast
 
 

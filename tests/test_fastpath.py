@@ -267,12 +267,11 @@ REPEATED_LEAF = Q_CHAIN.replace("name: b,", "name: a,")
 @pytest.mark.parametrize(
     "qyaml,kw",
     [(Q_CHAIN, dict(sql_skip=("past_last", None))),
-     (_chain_yaml(["relaxed", "relaxed"], "SkipToNext"), dict(within=5)),
      (Q_CHAIN, dict(within=5, within_col="price")),
      (REPEATED_LEAF, {}),
      (_chain_yaml(["nd-relaxed", "nd-relaxed"], "SkipToNext"), {}),
      (_chain_yaml(["strict", "nd-relaxed"]), {})],
-    ids=["sql-skip", "within-skiptonext", "within-col", "repeated-leaf",
+    ids=["sql-skip", "within-col", "repeated-leaf",
          "nd-skiptonext", "strict-nd-mix"],
 )
 def test_fast_path_refusals(spark, qyaml, kw):
@@ -321,6 +320,48 @@ def _kernel_vs_fast(df, query, **kw):
     assert "MapInPandas" not in plan, "expected the fast path to be dispatched"
     slow = match_pattern(df, query, allow_fastpath=False, **kw)
     return slow.collect(), fast.collect()
+
+
+Q_RUN_INF = """
+type: query
+patseq:
+  type: lpat-inf
+  name: run
+  event: e
+  cndt: {expr: name == 1}
+  loop: {contiguity: strict, from: 1}
+context:
+  schema: {e: [id, name, price]}
+"""
+
+
+@pytest.mark.parametrize(
+    "qyaml", [Q_SPAT.replace(" and price < 4", ""), Q_RUN_INF], ids=["spat", "strict-loop"]
+)
+def test_within_keeps_one_event_matches_on_a_null_order_value(spark, qyaml):
+    """A one-event match has no span for ``within`` to bound: the kernel
+    keeps one whose order value is NULL, and so must the fast path's
+    span filter.  A longer match over a NULL order value is pruned on
+    both paths."""
+    df = spark.createDataFrame(
+        [(1, 1, "e", 1, 0), (1, 2, "e", 1, 0), (2, None, "e", 1, 0),
+         (3, 4, "e", 1, 0), (3, None, "e", 1, 0)],
+        "user_id long, id long, type string, name long, price long",
+    )
+    query = Query.from_yaml(qyaml)
+    slow, fast = _kernel_vs_fast(
+        df, query, order_by="id", partition_by="user_id", type_col="type", within=5,
+    )
+
+    def canon(rows):
+        return sorted(
+            ((r["user_id"], r["start_ord"], r["end_ord"],
+              sum(len(r[n]) for n in query.names)) for r in rows),
+            key=repr,
+        )
+
+    assert canon(fast) == canon(slow)
+    assert {(2, None, None, 1), (3, None, None, 1)} <= set(canon(slow))
 
 
 def test_null_order_value_sorts_last_like_the_kernel(spark):
@@ -443,20 +484,13 @@ def _replay_long(rows, query, within):
 def test_relaxed_chain_long_keys_equal_replay(spark, l1, strategy, within):
     """The relaxed-chain planner on keys long enough for a quadratic
     window frame to show, against a ``MatchEngine`` replay.  ``within``
-    reaches the plan through ``KeyedPlan``: under NoSkip it composes as
-    the planner's span filter; under SkipToNext the planner refuses it
-    and ``match_pattern`` runs the kernel."""
+    reaches the plan through ``KeyedPlan`` and composes as the planner's
+    span filter under both strategies: under SkipToNext each start
+    emits at most one match."""
     query = Query.from_yaml(LONG_FUNNEL.format(l1=l1, strategy=strategy))
     rows = _long_keys()
     df = spark.createDataFrame(rows, "user_id long, id long, type string, value long")
     fast = try_fast_path(df, _plan(df, query, within=within))
-    if within is not None and strategy != "NoSkip":
-        # the planner refuses within under a skip strategy: the kernel runs
-        assert fast is None
-        fast = match_pattern(
-            df, query, order_by="id", partition_by="user_id", type_col="type",
-            within=within,
-        )
     assert fast is not None
     got = sorted(
         (r["user_id"], r["start_ord"], r["end_ord"],

@@ -16,10 +16,14 @@ the matches found before the limit plus one sentinel row.
 
 from __future__ import annotations
 
+import base64
+import pickle
+
 import pandas as pd
 import pytest
 
 from reflinkcep_spark import Query
+from reflinkcep_spark.cep.automaton import DEAD
 from reflinkcep_spark.cep.compiler import compile_query
 from reflinkcep_spark.cep.keyed import KeyedPlan, KeyMatcher, MatchLimitExceeded
 from reflinkcep_spark.cep.runtime import MatchEngine
@@ -207,6 +211,64 @@ def test_batch_truncate_keeps_prefix_plus_sentinel():
     assert len(got) > 1
     assert got[:-1] == _replay(HOT, pdf)[: len(got) - 1]
     assert got[-1] == (-1, None, None, (None,))
+
+
+def test_engine_stores_live_runs_only():
+    """A run that can never consume again is emitted if it accepts and
+    not stored: HOT's every run spawns one more per event, and its
+    accepting copies are not among them."""
+    aut = compile_query(HOT)
+    engine = MatchEngine(aut, HOT.strategy)
+    live = []
+    for t, attrs in HOT_EVENTS[:8]:
+        engine.feed(t, attrs)
+        live.append(len(engine.runs))
+        assert all(aut.steps[c.state] is not DEAD for _k, c in engine.runs)
+    assert live == [1, 3, 7, 15, 31, 63, 127, 255]
+
+
+# ``a ∘ b`` (NoSkip) over names 1, 1, 2 | 1, 2, saved at the cut by a
+# matcher whose runs carried a take flag and an ε-guard before their
+# first stamp: two dead runs at the accepting state (both matches end
+# on the 2) pin the three buffered rows.
+Q_AB = Query.from_dict({
+    "patseq": {
+        "type": "combine", "contiguity": "relaxed",
+        "left": {"type": "spat", "name": "a", "event": "e", "cndt": {"expr": "name == 1"}},
+        "right": {"type": "spat", "name": "b", "event": "e", "cndt": {"expr": "name == 2"}},
+    },
+    "context": {"schema": {"e": ["id", "name", "price"]}, "strategy": "NoSkip"},
+})
+AB_EVENTS = [("e", {"id": i + 1, "name": n, "price": 0}) for i, n in enumerate([1, 1, 2, 1, 2])]
+AB_OLD_BLOB = base64.b64decode(
+    "gAWVswAAAAAAAAAoSwNdlChLAChLA32UfZQojAFhlE5LAIaUjAFilE5LAoaUdYhLCEsBdJSGlEsB"
+    "KEsDaAF9lChoA05LAYaUaAVOSwKGlHWISwhLAnSUhpRlSwJ9lChLAH2UKIwCaWSUSwGMBHR5cGWU"
+    "jAFllIwEbmFtZZRLAYwFcHJpY2WUSwB1SwF9lChoEEsCaBFoEmgTSwFoFEsAdUsCfZQoaBBLA2gR"
+    "aBJoE0sCaBRLAHV1XZROTnSULg=="
+)
+
+
+def test_old_layout_blob_restores_to_the_same_matches():
+    plan = _plan(Q_AB, True)
+    pdf = _frame(AB_EVENTS)
+    names = list(Q_AB.names)
+    want = _digest(_stream(plan, pdf, n_chunks=1), names)
+    assert want == _replay(Q_AB, pdf) and len(want) == 3
+    pos, runs, _seq, buffer, *_ = pickle.loads(AB_OLD_BLOB)
+    assert pos == 3 and len(buffer) == 3
+    assert [len(r) for _k, r in runs] == [6, 6]
+    assert all(plan.automaton.steps[r[0]] is DEAD for _k, r in runs)
+
+    m, pending = KeyMatcher.from_blob(plan, KEY, AB_OLD_BLOB)
+    assert pending == []
+    rest = m.feed(plan.events(pdf.iloc[3:]))
+    assert _digest(rest, names) == want[2:]
+
+    # Saved now, the same cut holds no run and pins no row.
+    m = KeyMatcher(plan, KEY)
+    assert _digest(m.feed(plan.events(pdf.iloc[:3])), names) == want[:2]
+    _pos, runs, _seq, buffer, *_ = pickle.loads(m.to_blob([]))
+    assert runs == [] and buffer == {}
 
 
 Q_SQL = """

@@ -65,7 +65,7 @@ context:
 
 # Beyond the golden slice, two keys whose end matters: a $-anchored SQL
 # run over 12 events (every key spans batches), and a hot key whose
-# live run-set (95 runs after event 6, 191 after event 7) trips the
+# live run-set (63 runs after event 6, 127 after event 7) trips the
 # limit on its 7th event — the last row of a batch for the first key
 # of each partition; the key's other rows arrive in the next batch.
 BOUNDARY_CASES = [

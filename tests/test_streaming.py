@@ -467,10 +467,11 @@ def test_stream_parameterized_skip_state(spark, tmp_path):
 
 
 def test_load_engine_coerces_legacy_eps_tuple():
-    """Checkpoint-format migration: ``_Cfg.eps_seen`` was a tuple of
-    state ids before it became an int bitmask.  A blob saved in the
-    old format must load cleanly and keep matching identically — the
-    unmigrated state crashed on the first ``eps_seen & (1 << dst)``."""
+    """Checkpoint-format migration: runs once carried a take flag and an
+    ε-guard (``eps_seen``, first a tuple of state ids, later an int
+    bitmask) before their first stamp.  A blob saved in that layout
+    must load cleanly and keep matching identically: the step table
+    needs neither field, so the restore skips them."""
     import pickle
 
     from reflinkcep_spark.cep.compiler import compile_query
@@ -504,24 +505,16 @@ def test_load_engine_coerces_legacy_eps_tuple():
     # 5-tuple layout on purpose
     pos, runs, match_seq, buffer, pending = pickle.loads(blob)[:5]
     legacy_runs = [
-        (
-            k,
-            (
-                state,
-                env,
-                caps,
-                last_take,
-                tuple(b for b in range(eps.bit_length()) if eps >> b & 1),
-                first,
-            ),
-        )
-        for k, (state, env, caps, last_take, eps, first) in runs
+        (k, (state, env, caps, True, (state,), first))
+        for k, (state, env, caps, first) in runs
     ]
     legacy = pickle.dumps((pos, legacy_runs, match_seq, buffer, pending))
 
     eng2 = MatchEngine(aut, q.strategy)
     _load_engine(legacy, eng2)
-    assert all(isinstance(c.eps_seen, int) for _k, c in eng2.runs)
+    assert legacy_runs and [
+        (k, c.state, c.env, c.caps, c.first) for k, c in eng2.runs
+    ] == [(k, c.state, c.env, c.caps, c.first) for k, c in eng.runs]
     rest = []
     for i, (name, price) in enumerate(PAIRS[half:]):
         rest.extend(

@@ -69,7 +69,7 @@ def test_keyed_plan_gives_every_row_a_type():
     plan = KeyedPlan(query, order_by="event_id", type_col="event_type", attr_cols=COLS[1:])
     assert list(plan.query.schema) == [*query.schema, UNTYPED]
     assert plan.automaton.n_states() == compile_query(query).n_states()
-    assert all(None not in by_type for by_type, _wild in plan.automaton.edges_by_type)
+    assert all(None not in by_type for by_type, _wild in plan.automaton.steps)
     events = plan.events(pd.DataFrame(ROWS, columns=COLS, dtype=object))
     assert UNTYPED in {t for t, _r in events} and None not in {t for t, _r in events}
     assert all((t == UNTYPED) == (r["event_type"] is None) for t, r in events)

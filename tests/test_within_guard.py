@@ -103,7 +103,7 @@ def test_save_load_engine_roundtrips_last_stamp():
 def test_load_engine_legacy_blob_defaults_last_stamp_none():
     # pre-round-14 checkpoints are a 5-tuple (no last_stamp) — they
     # must load cleanly with last_stamp None (same migration contract
-    # as the eps_seen bitmask coercion)
+    # as the run fields older checkpoints carry)
     import pickle
 
     from reflinkcep_spark.cep.compiler import compile_query
