@@ -248,7 +248,7 @@ class _Builder:
         return _Frag(chain[0], states)
 
     def _build_alt(self, node: Mapping) -> _Frag:
-        """Ordered alternation (beyond-reference, round 14): a fresh
+        """Ordered alternation (beyond-reference): a fresh
         start state with ε-edges to each branch, declaration order =
         edge priority, so runs explore the LEFT alternative first (the
         runtime's worklist insertion expands ε-siblings in declaration

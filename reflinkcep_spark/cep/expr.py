@@ -16,7 +16,7 @@ these with a builtins-stripped ``eval``; genjava.py:371-379 rewrites
 Only a whitelisted AST subset is accepted: names, int/float/str/bool
 literals, comparisons (incl. chained), ``and/or/not``, unary ``-``,
 ``+ - * / // %`` arithmetic, and the conditional expression
-``a if cond else b`` (→ SQL ``CASE WHEN``; added round 14 for the
+``a if cond else b`` (→ SQL ``CASE WHEN``; used by the
 MATCH_RECOGNIZE DEFINE-navigation registers, whose FIRST(V.col)
 update is inherently conditional).  Anything else (calls, attributes,
 subscripts, lambdas, comprehensions…) is rejected at compile time, which

@@ -35,14 +35,14 @@ Supported subset
   matched segment is consumed by some variable — use an undefined
   filler variable like ``G*`` for gaps), so concatenation translates
   to STRICT combine and quantifiers to STRICT loops.  Exclusions
-  ``{- V ... -}`` (SQL:2016, round 14) mark variables whose rows are
+  ``{- V ... -}`` (SQL:2016) mark variables whose rows are
   omitted from ALL ROWS PER MATCH output while still matching and
   feeding every measure — FINAL by construction and RUNNING because
   the running prefix is computed before the filter (Oracle's
   documented semantics); no effect under ONE ROW PER MATCH, per the
   standard.  Exclusions cannot nest, and excluding every variable of
   a branch is rejected.  Top-level ordered alternation ``A B | C``
-  (SQL:2016, round 14): '|'-separated branches of concatenations,
+  (SQL:2016): '|'-separated branches of concatenations,
   alternatives preferred in WRITTEN order — the selection key's
   per-variable lens tuple implements this exactly under greedy
   preference, because a left-branch candidate's lens dominates every
@@ -50,9 +50,9 @@ Supported subset
   unique across branches (captures are per-variable); measures over a
   non-taken branch see empty captures (COUNT 0, FIRST/LAST/SUM NULL);
   reluctant quantifiers cannot combine with alternation (lexicographic
-  MIN would invert the branch preference — clear error), which also
-  excludes alternation from the streaming surface (it needs
-  reluctant).  Partition anchors (round 14): a leading ``^`` pins
+  MIN would invert the branch preference — the kernel's plan refuses
+  it), which also excludes alternation from the streaming surface (it
+  needs reluctant).  Partition anchors: a leading ``^`` pins
   matches to the key's FIRST row, a trailing ``$`` to its LAST —
   enforced kernel-side by filtering candidates before the per-start
   selection fold, so e.g. ``PATTERN (A+ $)`` keeps only runs that
@@ -68,11 +68,9 @@ Supported subset
   candidates compare LEXICOGRAPHICALLY on their per-variable capture
   lengths in pattern order — maximized for greedy, minimized for
   reluctant — which for this front end's flat concatenation patterns
-  is exactly the standard's leftmost-quantifier-first preferment
-  (round 14; previously a documented longest-overall approximation
-  when several variables were quantified).  Mixing greedy and
-  reluctant quantifiers in one pattern still raises (the per-start
-  preference direction must be uniform).
+  is exactly the standard's leftmost-quantifier-first preferment.
+  Mixing greedy and reluctant quantifiers in one pattern raises (the
+  per-start preference direction must be uniform).
 * ``DEFINE`` — boolean conditions over the CURRENT row's columns,
   written SQL-style (``B.value > 50 AND B.event_type = 'error'``);
   a plain ``var.`` qualifier must be the variable being defined.
@@ -80,7 +78,7 @@ Supported subset
   translated into the engine's expression sub-language and validated
   by its sandbox (:mod:`reflinkcep_spark.cep.expr`).
 
-  **Navigation (round 14)**: ``PREV(col [, n])`` / ``NEXT(col [, n])``
+  **Navigation**: ``PREV(col [, n])`` / ``NEXT(col [, n])``
   are SQL:2016 PHYSICAL navigation — they read the row n before/after
   the current one in PARTITION order (including rows outside the
   match, e.g. before the match start), exactly Flink SQL's semantics —
@@ -122,7 +120,7 @@ Supported subset
   partition ≡ ``match_seq + 1``) and ``CLASSIFIER()`` (the matched
   variable: per-row under ALL ROWS RUNNING, the last row's variable
   under FINAL / ONE ROW PER MATCH), each ``AS``-aliased.
-* ``SUBSET <name> = (<var>, ...)`` (SQL:2016, round 14) — union
+* ``SUBSET <name> = (<var>, ...)`` (SQL:2016) — union
   variables usable in MEASURES: the union's captures are the member
   captures concatenated in PATTERN order, which is match order (below).
   Especially useful with alternation (``COUNT(U.*)`` across
@@ -136,7 +134,7 @@ Supported subset
   (which pattern variable consumed the row — SQL's ``CLASSIFIER()``),
   every event column, then the measures.
 
-  **Measure semantics (SQL:2016, round 14)**: under ONE ROW PER MATCH
+  **Measure semantics (SQL:2016)**: under ONE ROW PER MATCH
   every measure is FINAL (``RUNNING`` is accepted — the two coincide
   when the one output row is the completed match).  Under ALL ROWS
   PER MATCH the DEFAULT is ``RUNNING`` — each output row's aggregate
@@ -167,7 +165,7 @@ Supported subset
   captured nothing or resolves to the match's own start row
   (SQL:2016's infinite-loop rule).
 * ``WITHIN INTERVAL '<n>' SECOND|MINUTE|HOUR|DAY`` after PATTERN
-  (round 14) — Flink SQL's time-bounded MATCH_RECOGNIZE: the match's
+  — Flink SQL's time-bounded MATCH_RECOGNIZE: the match's
   first-to-last EVENT TIME span is bounded, measured on the timestamp
   column the caller names (``match_recognize(df, spec,
   time_col='ts')``), threaded through the kernel's time-based
@@ -177,10 +175,17 @@ Supported subset
   BY order per key — the kernel's runtime monotonicity guard
   enforces it.  Mutually exclusive with explicit within kwargs.
 
-Scale shape: identical to every kernel CEP query — project to the
-referenced columns, ONE exchange on the partition key, Arrow-batched
-``mapInPandas`` over each sorted partition; the measures projection is
-plain column algebra on the kernel's output.
+Batch and stream share one lowering (``_lower``): translate, stamp for
+WITHIN, decide the kernel's columns once (every non-key column), build
+the PREV/NEXT window on batch, run the operator, project.  Every
+selection and stream rule the operator's ``KeyedPlan`` checks is
+refused there, as :class:`MatchRecognizeError`; only PREV/NEXT and
+anchors on a stream are refused here.
+
+Scale shape: identical to every kernel CEP query — ONE exchange on the
+partition key, Arrow-batched ``mapInPandas`` over each sorted
+partition; the measures projection is plain column algebra on the
+kernel's output.
 """
 
 from __future__ import annotations
@@ -768,7 +773,7 @@ _MAX_LAST_CHAIN = 2
 
 
 class _Nav:
-    """Per-spec collector for DEFINE navigation (round 14).
+    """Per-spec collector for DEFINE navigation.
 
     * ``physical``: ``PREV``/``NEXT`` navigate PARTITION rows
       (SQL:2016 physical navigation — including rows before the match
@@ -1160,16 +1165,10 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
             "mixing greedy and reluctant quantifiers in one PATTERN is "
             "not supported (the per-start preference would be ambiguous)"
         )
+    # alternation with reluctant quantifiers is refused by the plan
+    # (keyed._validate_sql_pattern): lexicographic MIN would invert SQL's
+    # written-order branch preferment
     prefer = "shortest" if reluctants == {True} else "longest"
-    if len(branches) > 1 and prefer == "shortest":
-        # the selection key's lexicographic MIN would prefer the RIGHT
-        # alternative, inverting SQL's alternatives-in-written-order
-        # preferment (the kernel boundary enforces this too)
-        raise MatchRecognizeError(
-            "alternation with reluctant quantifiers is not supported: "
-            "SQL prefers alternatives in written order, which only the "
-            "greedy (lexicographic-max) selection implements"
-        )
 
     import ast as _pyast
 
@@ -1306,7 +1305,6 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
         # ALL ROWS PER MATCH output (no effect under ONE ROW PER
         # MATCH, per the standard).
         "excluded_vars": sorted(excluded_vars),
-        "n_branches": len(branches),
         # SQL:2016 partition anchors: ^ pins matches to the key's
         # first row, $ to its last — enforced kernel-side (candidates
         # filtered before the per-start fold)
@@ -1323,47 +1321,6 @@ def translate(spec: str, columns: Sequence[str]) -> dict:
     }
 
 
-def _attach_nav_columns(df: DataFrame, t: dict, kernel_kwargs: dict):
-    """Materialize PREV/NEXT physical-navigation columns as lag/lead
-    window columns BEFORE the kernel.  Plan shape: the window needs the
-    same hash(partition key) distribution and (key, order rule) sort as
-    the kernel's own row_number() window, so repartition ONCE here, as
-    the kernel would (``cep.keyed.key_partitioned``), and
-    assert ``pre_partitioned`` to the kernel — Exchange → Sort → Window
-    → MapInPandas, one exchange and one sort total, exactly the
-    no-navigation plan's count.  A caller that already asserted
-    ``pre_partitioned=True`` (bucketed log) keeps its zero-exchange
-    plan: the window reuses the bucket clustering."""
-    nav = t.get("nav_columns") or {}
-    if not nav:
-        return df, kernel_kwargs
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from reflinkcep_spark.cep.keyed import (
-        key_partitioned, order_cols, resolve_attr_cols, sort_exprs,
-    )
-
-    kernel_kwargs = dict(kernel_kwargs)
-    if not kernel_kwargs.get("pre_partitioned"):
-        df = key_partitioned(df, [t["partition_by"]])
-        kernel_kwargs["pre_partitioned"] = True
-    # The kernel's per-key order rule over the columns it will ship, so
-    # both windows share one sort.  SQL:2016 leaves tied ORDER BY values
-    # implementation-dependent; the rule breaks ties by the other
-    # columns, so PREV/NEXT adjacency is the same on every layout.  The
-    # __mr_ columns made here never join the rule.
-    pb, o = t["partition_by"], t["order_by"]
-    attrs = resolve_attr_cols(
-        df.columns, [pb], kernel_kwargs.get("attr_cols"), o, None, kernel_kwargs.get("within_col")
-    )
-    w = Window.partitionBy(pb).orderBy(*sort_exprs(order_cols(o, None, attrs, df.schema)))
-    for name, (kind, col, n) in nav.items():
-        fn = F.lag if kind == "prev" else F.lead
-        df = df.withColumn(name, fn(col, n).over(w))
-    return df, kernel_kwargs
-
-
 def match_recognize(df: DataFrame, spec: str, **kernel_kwargs) -> DataFrame:
     """Run a SQL ``MATCH_RECOGNIZE`` clause over a DataFrame of rows.
 
@@ -1376,30 +1333,117 @@ def match_recognize(df: DataFrame, spec: str, **kernel_kwargs) -> DataFrame:
     With ``on_limit="truncate"`` a hot key that trips
     ``max_active_runs`` keeps its sentinel row in BOTH modes
     (``match_seq = -1``, NULL classifier/event/measure columns).
-    ``kernel_kwargs`` pass through to
-    :func:`reflinkcep_spark.operators.match_pattern`
-    (``max_active_runs``, ``on_limit``, ``pre_partitioned`` …).
-    """
-    from reflinkcep_spark.operators import match_pattern
 
+    ``time_col`` names the timestamp column of ``WITHIN INTERVAL``.
+    The other ``kernel_kwargs`` pass through to
+    :func:`reflinkcep_spark.operators.match_pattern`:
+    ``max_active_runs``, ``on_limit``, ``within``, ``within_col``,
+    ``pre_partitioned`` and ``allow_fastpath``.  ``attr_cols`` is
+    refused: the kernel ships every non-key column, which PREV/NEXT,
+    DEFINE, MEASURES and ALL ROWS read; ``select`` the input first.
+    """
+    return _lower(df, spec, kernel_kwargs, stream=False)
+
+
+def match_recognize_stream(df: DataFrame, spec: str, **kernel_kwargs) -> DataFrame:
+    """Run a SQL ``MATCH_RECOGNIZE`` clause over a *streaming*
+    DataFrame: the batch surface's lowering onto
+    :func:`reflinkcep_spark.streaming.cep.match_pattern_stream`, whose
+    plan refuses what a stream cannot select (greedy preference,
+    ordered skip modes, more than one flexibly-quantified variable, and
+    so every alternation).  Two more refusals are MATCH_RECOGNIZE's own:
+    ``PREV``/``NEXT`` physical navigation (Spark has no ``lag``/``lead``
+    window on a stream; ``FIRST``/``LAST`` logical navigation works) and
+    anchors (``$`` needs the key's last row).
+
+    ``time_col`` is the batch surface's.  The other ``kernel_kwargs``
+    pass through to ``match_pattern_stream``: ``max_active_runs``,
+    ``idle_timeout_ms``, ``event_time_col``, ``within`` and
+    ``within_col``; ``attr_cols`` is refused as in batch.
+
+    ``match_seq`` is completion-ordered, where the batch surface
+    numbers by start order — project it away (or renumber) when
+    pinning stream ≡ batch equality.
+    """
+    return _lower(df, spec, kernel_kwargs, stream=True)
+
+
+def _lower(df: DataFrame, spec: str, kernel_kwargs: dict, stream: bool) -> DataFrame:
+    """The one lowering of both surfaces: translate, stamp the rows for
+    WITHIN INTERVAL, decide the kernel's attribute columns, build the
+    PREV/NEXT window (batch), run the operator and project.  A plan-time
+    ``ValueError`` of the operator (``KeyedPlan``'s SQL and stream
+    rails) is re-raised as :class:`MatchRecognizeError`."""
+    if "attr_cols" in kernel_kwargs:
+        raise MatchRecognizeError(
+            "attr_cols is not a MATCH_RECOGNIZE option: navigation, DEFINE, "
+            "MEASURES and ALL ROWS read every non-key column — select the "
+            "input's columns before the call instead"
+        )
     time_col = kernel_kwargs.pop("time_col", None)
     t = translate(spec, df.columns)
     orig_columns = list(df.columns)
     df, kernel_kwargs = _attach_within_stamp(df, t, time_col, kernel_kwargs)
-    df, kernel_kwargs = _attach_nav_columns(df, t, kernel_kwargs)
-    out = match_pattern(
-        df,
-        t["query"],
-        order_by=t["order_by"],
-        partition_by=t["partition_by"],
-        type_col=None,
-        sql_skip=t["skip"],
-        sql_prefer=t["prefer"],
-        anchor_start=t["anchor_start"],
-        anchor_end=t["anchor_end"],
+    pb, nav = t["partition_by"], t["nav_columns"]
+    if stream and nav:
+        raise MatchRecognizeError(
+            "PREV/NEXT navigation needs a lag/lead window, which Spark "
+            "does not support on streaming DataFrames — use the batch "
+            "surface (FIRST/LAST logical navigation streams fine)"
+        )
+    if stream and (t["anchor_start"] or t["anchor_end"]):
+        raise MatchRecognizeError(
+            "anchors (^/$) are not supported on the streaming surface: "
+            "'$' needs the partition's LAST row, which an unbounded "
+            "stream never has, and '^' would pin state to stream start "
+            "— run anchored patterns through the batch surface"
+        )
+    # The kernel's columns, decided once: every non-key column, the stamp
+    # and the navigation columns included.
+    attr_cols = [c for c in df.columns if c != pb] + list(nav)
+    kwargs = dict(
+        order_by=t["order_by"], partition_by=pb, type_col=None,
+        attr_cols=attr_cols, sql_skip=t["skip"], sql_prefer=t["prefer"],
         **kernel_kwargs,
     )
+    if stream:
+        from reflinkcep_spark.streaming.cep import match_pattern_stream as run
+    else:
+        from reflinkcep_spark.operators import match_pattern as run
+
+        kwargs.update(anchor_start=t["anchor_start"], anchor_end=t["anchor_end"])
+        if nav:
+            df = _attach_nav_columns(df, t, kwargs)
+    try:
+        out = run(df, t["query"], **kwargs)
+    except ValueError as exc:
+        raise MatchRecognizeError(str(exc)) from exc
     return _project(out, t, df.schema, orig_columns)
+
+
+def _attach_nav_columns(df: DataFrame, t: dict, kwargs: dict) -> DataFrame:
+    """PREV/NEXT as ``lag``/``lead`` window columns below the kernel.
+    The window sorts by the kernel's own order rule over the same
+    ``kwargs["attr_cols"]``, on the kernel's key partitioning: unless
+    the caller asserted ``pre_partitioned`` (a bucketed log, zero
+    exchanges), repartition once here and assert it for the kernel.  So
+    the plan is Exchange → Sort → Window → MapInPandas, one exchange and
+    one sort, as without navigation.  ``kwargs`` is updated in place."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from reflinkcep_spark.cep.keyed import key_partitioned, order_cols, sort_exprs
+
+    pb = t["partition_by"]
+    if not kwargs.get("pre_partitioned"):
+        df = key_partitioned(df, [pb])
+        kwargs["pre_partitioned"] = True
+    order = order_cols(t["order_by"], None, kwargs["attr_cols"], df.schema)
+    w = Window.partitionBy(pb).orderBy(*sort_exprs(order))
+    for name, (kind, col, n) in t["nav_columns"].items():
+        fn = F.lag if kind == "prev" else F.lead
+        df = df.withColumn(name, fn(col, n).over(w))
+    return df
 
 
 def _attach_within_stamp(df, t: dict, time_col, kernel_kwargs: dict):
@@ -1646,17 +1690,18 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
         )
         return _aggregate(kind, elems, col, schema)
 
+    rows = labeled
     if running_measures:
-        # Two-step select so `labeled` is named once (__l) and the
-        # per-element annotation slices IT rather than rebuilding the
-        # concat per measure.
-        base = out.select(
+        # Name `labeled` once (__l), so each element's annotation slices
+        # IT rather than rebuilding the concat per measure.
+        out = out.select(
             F.col(t["partition_by"]),
             F.col("match_seq"),
             *measure_cols,
             labeled.alias("__l"),
         )
-        annotated = F.transform(
+        measure_cols = [F.col(m[3]) for m in final_measures]
+        rows = F.transform(
             F.col("__l"),
             lambda e, i: F.struct(
                 e["classifier"].alias("classifier"),
@@ -1672,32 +1717,7 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
                 ],
             ),
         )
-        running_aliases = {m[3] for m in running_measures}
-        return _guard_all_excluded(
-            base.select(
-                F.col(t["partition_by"]),
-                F.col("match_seq"),
-                *[F.col(m[3]) for m in final_measures],
-                # explode_outer: keep the truncate sentinel (NULL
-                # classifier/event/measure columns), same as below.
-                # Exclusion filters AFTER the running annotation, so
-                # excluded rows still count in RUNNING prefixes.
-                F.explode_outer(_drop_excluded(annotated)).alias("__r"),
-            )
-            .select(
-                F.col(t["partition_by"]),
-                F.col("match_seq"),
-                F.col("__r.classifier").alias("classifier"),
-                *[F.col(f"__r.ev.{c}").alias(c) for c in event_cols],
-                *[
-                    F.col(f"__r.{alias}").alias(alias)
-                    if alias in running_aliases
-                    else F.col(alias)
-                    for _k, _v, _c, alias in t["measures"]
-                ],
-            )
-        )
-
+    running_aliases = {m[3] for m in running_measures}
     return _guard_all_excluded(
         out.select(
             F.col(t["partition_by"]),
@@ -1707,93 +1727,20 @@ def _project(out: DataFrame, t: dict, schema, orig_columns) -> DataFrame:
             # sentinel row has every capture NULL → an EMPTY labeled
             # array — plain explode would silently drop the key's
             # truncation marker, making a partial result look complete.
-            F.explode_outer(_drop_excluded(labeled)).alias("__r"),
+            # Exclusion filters AFTER the running annotation, so
+            # excluded rows still count in RUNNING prefixes.
+            F.explode_outer(_drop_excluded(rows)).alias("__r"),
         )
         .select(
             F.col(t["partition_by"]),
             F.col("match_seq"),
             F.col("__r.classifier").alias("classifier"),
             *[F.col(f"__r.ev.{c}").alias(c) for c in event_cols],
-            *[F.col(alias) for _k, _v, _c, alias in t["measures"]],
+            *[
+                F.col(f"__r.{alias}").alias(alias)
+                if alias in running_aliases
+                else F.col(alias)
+                for _k, _v, _c, alias in t["measures"]
+            ],
         )
     )
-
-
-def match_recognize_stream(df: DataFrame, spec: str, **kernel_kwargs) -> DataFrame:
-    """Run a SQL ``MATCH_RECOGNIZE`` clause over a *streaming*
-    DataFrame — the same translation onto the same kernel the
-    streaming CEP path already runs, so the front end is not
-    batch-only (round 14).
-
-    Restrictions, both with clear errors:
-
-    * only the finalization-free selection combination the streaming
-      kernel supports — ``AFTER MATCH SKIP TO NEXT ROW`` with
-      reluctant quantifiers (see
-      :func:`reflinkcep_spark.streaming.cep.match_pattern_stream`);
-      greedy preference or ordered skip modes need stream-end match
-      finalization an unbounded stream cannot provide;
-    * no ``PREV``/``NEXT`` physical navigation (Spark does not support
-      non-time windows — ``lag``/``lead`` — on streams); ``FIRST`` /
-      ``LAST`` logical navigation works (engine-side registers).
-
-    ``match_seq`` is completion-ordered, where the batch surface
-    numbers by start order — project it away (or renumber) when
-    pinning stream ≡ batch equality.
-    """
-    from reflinkcep_spark.cep.keyed import flexible_vars
-    from reflinkcep_spark.streaming.cep import match_pattern_stream
-
-    time_col = kernel_kwargs.pop("time_col", None)
-    t = translate(spec, df.columns)
-    orig_columns = list(df.columns)
-    df, kernel_kwargs = _attach_within_stamp(df, t, time_col, kernel_kwargs)
-    if t["nav_columns"]:
-        raise MatchRecognizeError(
-            "PREV/NEXT navigation needs a lag/lead window, which Spark "
-            "does not support on streaming DataFrames — use the batch "
-            "surface (FIRST/LAST logical navigation streams fine)"
-        )
-    if t.get("anchor_start") or t.get("anchor_end"):
-        raise MatchRecognizeError(
-            "anchors (^/$) are not supported on the streaming surface: "
-            "'$' needs the partition's LAST row, which an unbounded "
-            "stream never has, and '^' would pin state to stream start "
-            "— run anchored patterns through the batch surface"
-        )
-    if t.get("n_branches", 1) > 1:
-        # its own rail, not the flexible-variable one: alternation is
-        # greedy-only (written-order preferment) while the streaming
-        # kernel is reluctant-only (first-completing finality) — the
-        # two can never meet, independent of quantifiers
-        raise MatchRecognizeError(
-            "alternation is not supported on the streaming surface: "
-            "SQL's written-order branch preferment needs GREEDY "
-            "selection, and the streaming kernel's finalization-free "
-            "emission is reluctant-only — run alternation patterns "
-            "through the batch surface"
-        )
-    flexible = flexible_vars(t["query"].patseq)
-    if len(flexible) > 1:
-        raise MatchRecognizeError(
-            "streaming MATCH_RECOGNIZE supports at most ONE flexibly-"
-            f"quantified variable (got {flexible}): the "
-            "stream emits a start's FIRST-completing candidate, which "
-            "equals SQL's lexicographic preference only when a single "
-            "variable's length varies — run multi-quantifier patterns "
-            "through the batch surface"
-        )
-    out = match_pattern_stream(
-        df,
-        t["query"],
-        order_by=t["order_by"],
-        partition_by=t["partition_by"],
-        type_col=None,
-        sql_skip=t["skip"],
-        sql_prefer=t["prefer"],
-        **kernel_kwargs,
-    )
-    # orig_columns was captured BEFORE _attach_within_stamp so ALL ROWS
-    # PER MATCH never leaks the internal __mr_stamp column (mirrors the
-    # batch surface).
-    return _project(out, t, df.schema, orig_columns)

@@ -7,7 +7,7 @@ The query surface is the reference's exact YAML/dict AST dialect
     node := spat | lpat | lpat-inf | combine | gpat | gpat-times | gpat-inf
           | alt
 
-``alt`` (beyond-reference, round 14) is ordered alternation: the run
+``alt`` (beyond-reference) is ordered alternation: the run
 explores ``left`` then ``right`` (declaration-order edge priority, so
 the left alternative's matches emit first); capture names must be
 unique across branches — a match through one branch leaves the other
@@ -145,7 +145,7 @@ def _validate_node(node: Mapping, where: str = "patseq") -> None:
         _validate_node(node["left"], where + ".left")
         _validate_node(node["right"], where + ".right")
         # Non-strict combine with a NESTED right child is accepted as a
-        # beyond-reference extension since round 8 (the reference reads
+        # beyond-reference extension (the reference reads
         # the right child's leaf fields directly, compile.py:415-419,
         # and raises on anything else).  The compiler derives the gap's
         # skip rule from the right fragment's start-ε-closure take

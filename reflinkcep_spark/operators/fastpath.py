@@ -78,9 +78,9 @@ def _spat_chain(node: Mapping) -> Optional[tuple[list[Mapping], list[str]]]:
         # right's first leaf (the compiler's ε-closure construction
         # degenerates to exactly this for spat chains — the closure of
         # a chain's start holds one take edge, the first leaf's).  The
-        # pre-round-8 leaf-only limit mirrored the reference's refusal;
-        # the kernel now accepts nested rights, and kernel/fast-path
-        # parity is pinned by tests/test_nested_combine.py.
+        # reference refuses nested rights; the kernel accepts them, and
+        # kernel/fast-path parity is pinned by
+        # tests/test_nested_combine.py.
         return left[0] + right[0], left[1] + [node["contiguity"]] + right[1]
     return None
 

@@ -598,12 +598,14 @@ def test_all_rows_truncate_sentinel_survives(spark):
     assert s["ne"] is None
 
 
-def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path):
+@pytest.mark.parametrize("case", ["error-runs", "prev"])
+def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path, case):
     """The 100-TB composition: MATCH_RECOGNIZE over an event log
     bucketed on the partition key runs WITHOUT ANY shuffle — the SQL
     front end inherits the kernel's pre_partitioned path (Scan → Sort →
     Window → MapInPandas), so a standing bucketed log serves SQL row-
-    pattern queries shuffle-free, exactly like the YAML surface."""
+    pattern queries shuffle-free, exactly like the YAML surface.  A
+    PREV/NEXT window reuses the bucket clustering and the kernel's sort."""
     import re
 
     from reflinkcep_spark.sinks import write_bucketed
@@ -613,14 +615,18 @@ def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "user_id int, event_id int, event_type string, value double"
     )
+    define = {
+        "error-runs": "PATTERN (E+) DEFINE E AS E.event_type = 'error'",
+        "prev": "PATTERN (E) DEFINE E AS PREV(event_type) = 'purchase'",
+    }[case]
     write_bucketed(df, "t_mr_bucketed", "user_id", buckets=8,
                    path=str(tmp_path / "mr"))
     try:
         out = match_recognize(
             spark.table("t_mr_bucketed"),
-            """PARTITION BY user_id ORDER BY event_id
+            f"""PARTITION BY user_id ORDER BY event_id
                MEASURES FIRST(E.event_id) AS fe, COUNT(E.*) AS n
-               PATTERN (E+) DEFINE E AS E.event_type = 'error'""",
+               {define}""",
             pre_partitioned=True,
         )
         plan = out._jdf.queryExecution().explainString(
@@ -629,14 +635,20 @@ def test_match_recognize_on_bucketed_table_is_zero_exchange(spark, tmp_path):
             )
         )
         assert len(re.findall(r"(?<!Broadcast)Exchange", plan)) == 0, plan
+        assert len(re.findall(r"^\(\d+\) Sort", plan, re.M)) == 1, plan
         assert "MapInPandas" in plan
-        # and the result is still right: maximal error runs per user
+        # and the result is still right, against a replay per user
         got = sorted(tuple(r) for r in out.collect())
         want = []
         for u in range(8):
             runs, cur = [], []
             for i in range(40):
-                if i % 3:
+                if case == "prev":
+                    # one-row matches right after a purchase; the first
+                    # row has no PREV (NULL), so it never matches
+                    if i and (i - 1) % 3 == 0:
+                        runs.append([i])
+                elif i % 3:
                     cur.append(i)
                 else:
                     if cur: runs.append(cur)
@@ -885,17 +897,27 @@ def test_forward_variable_navigation_is_null(spark):
     assert got == []
 
 
-def test_navigation_plan_has_single_exchange(spark):
+@pytest.mark.parametrize("within", [False, True], ids=["prev", "prev-within"])
+def test_navigation_plan_has_single_exchange(spark, within):
     """The lag window rides the kernel's key partitioning: Exchange →
     Sort → Window → MapInPandas, ONE exchange total — the
-    same count as a navigation-free MATCH_RECOGNIZE."""
+    same count as a navigation-free MATCH_RECOGNIZE.  Under WITHIN
+    INTERVAL the kernel also ships the ``__mr_stamp`` column, and the
+    window and the kernel still sort by one rule."""
     import re as _re
 
+    from pyspark.sql import functions as F
+
+    df, kw, tail = _mk(spark, [5, 3, 4, 6, 2, 7]), {}, ""
+    if within:
+        df = df.withColumn("ts", F.timestamp_seconds("event_id"))
+        kw, tail = {"time_col": "ts"}, " WITHIN INTERVAL '10' SECOND"
     out = match_recognize(
-        _mk(spark, [5, 3, 4, 6, 2, 7]),
-        """PARTITION BY user_id ORDER BY event_id
-           MEASURES COUNT(B.*) AS n PATTERN (A B+)
+        df,
+        f"""PARTITION BY user_id ORDER BY event_id
+           MEASURES COUNT(B.*) AS n PATTERN (A B+){tail}
            DEFINE B AS PREV(value) < B.value""",
+        **kw,
     )
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -1097,7 +1119,7 @@ def test_streaming_mr_rejects_multiple_flexible_vars(spark):
     stream = entrymod._stream_events(spark, SF_DIR).select(
         "user_id", "event_id", "event_type", "value"
     )
-    with pytest.raises(MatchRecognizeError, match="ONE flexibly"):
+    with pytest.raises(MatchRecognizeError, match="at most one flexibly-quantified variable"):
         match_recognize_stream(
             stream,
             """PARTITION BY user_id ORDER BY event_id
@@ -1702,7 +1724,7 @@ def test_alternation_streaming_raises(spark):
             "1.0 as value"
         )
     )
-    with pytest.raises(Exception, match="alternation is not supported on the streaming"):
+    with pytest.raises(Exception, match="TO NEXT ROW with reluctant quantifiers only"):
         match_recognize_stream(
             stream,
             """PARTITION BY user_id ORDER BY event_id
@@ -1710,6 +1732,20 @@ def test_alternation_streaming_raises(spark):
                AFTER MATCH SKIP TO NEXT ROW
                PATTERN (A | B)
                DEFINE A AS A.event_type = 'a', B AS B.event_type = 'b'""",
+        )
+
+
+def test_alternation_with_reluctant_quantifiers_raises(spark):
+    """Lexicographic MIN would prefer the RIGHT alternative, inverting
+    SQL's written-order preferment; the kernel's plan refuses it and
+    the batch surface reports it as a MatchRecognizeError."""
+    with pytest.raises(MatchRecognizeError, match="requires GREEDY selection"):
+        match_recognize(
+            _mk(spark, [1, 2, 3]),
+            """PARTITION BY user_id ORDER BY event_id
+               MEASURES COUNT(A.*) AS n
+               PATTERN (A+? | B)
+               DEFINE A AS A.value > 1, B AS B.value > 2""",
         )
 
 
@@ -2171,4 +2207,45 @@ def test_anchor_rails(spark):
                MEASURES COUNT(E.*) AS n
                AFTER MATCH SKIP TO NEXT ROW
                PATTERN (E+? $) DEFINE E AS E.event_type = 'error'""",
+        )
+
+
+# --- attr_cols: refused on both surfaces ---------------------------------
+
+# Shapes that read columns outside a caller's attr_cols list: PREV/NEXT,
+# a DEFINE column, ALL ROWS PER MATCH and a MEASURES column.  All but
+# PREV are valid stream specs too (reluctant, SKIP TO NEXT ROW), so the
+# stream refuses attr_cols before anything else.
+ATTR_COLS_SPECS = {
+    "prev": """MEASURES COUNT(B.*) AS n AFTER MATCH SKIP TO NEXT ROW
+               PATTERN (A B+?) DEFINE B AS PREV(event_id) < B.event_id""",
+    "define": """MEASURES COUNT(A.*) AS n AFTER MATCH SKIP TO NEXT ROW
+                 PATTERN (A) DEFINE A AS A.value > 1""",
+    "all-rows": """MEASURES COUNT(A.*) AS n ALL ROWS PER MATCH
+                   AFTER MATCH SKIP TO NEXT ROW
+                   PATTERN (A) DEFINE A AS A.event_type = 'row'""",
+    "measures": """MEASURES LAST(A.value) AS v AFTER MATCH SKIP TO NEXT ROW
+                   PATTERN (A) DEFINE A AS A.event_type = 'row'""",
+}
+
+
+@pytest.mark.parametrize("surface", ["batch", "stream"])
+@pytest.mark.parametrize("shape", sorted(ATTR_COLS_SPECS))
+def test_attr_cols_is_refused(spark, shape, surface):
+    from reflinkcep_spark.cep.match_recognize import match_recognize_stream
+
+    if surface == "batch":
+        run, df = match_recognize, _mk(spark, [5, 3, 4])
+    else:
+        run = match_recognize_stream
+        df = (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .selectExpr("1 as user_id", "value as event_id",
+                        "'row' as event_type", "1.0 as value")
+        )
+    with pytest.raises(MatchRecognizeError, match="select the input's columns"):
+        run(
+            df,
+            "PARTITION BY user_id ORDER BY event_id " + ATTR_COLS_SPECS[shape],
+            attr_cols=["event_id", "event_type"],
         )
